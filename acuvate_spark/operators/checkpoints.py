@@ -1,8 +1,8 @@
 """Deterministic release of per-round ``localCheckpoint`` blocks in
 iterative plans (r14).
 
-Every iterative operator here (min-label / star connected components,
-greedy k-center) cuts lineage once per round with ``localCheckpoint``
+Every iterative operator here (min-label connected components, greedy
+k-center) cuts lineage once per round with ``localCheckpoint``
 — without it Catalyst planning cost doubles per iteration. But a
 DataFrame ``localCheckpoint`` has no public release API: the blocks
 of SUPERSEDED rounds stay pinned in the block manager until the
@@ -27,11 +27,11 @@ registers its RDD in that map at creation time; ``df.rdd`` /
 
 Contract: rounds run driver-synchronously in this session (true of
 every registry operator); ids created between ``rotate()`` calls
-belong to the round that just materialized. The final ``keep`` rounds
-are never freed — the last one IS the operator's result. Freeing a
-round only after its successor is materialized keeps the
-``localCheckpoint`` durability contract unchanged (it was already
-non-fault-tolerant to executor loss).
+belong to the round that just materialized. The newest round is never
+freed — it IS the operator's result. Freeing a round only after its
+successor is materialized keeps the ``localCheckpoint`` durability
+contract unchanged (it was already non-fault-tolerant to executor
+loss).
 """
 
 from __future__ import annotations
@@ -39,16 +39,35 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 
+def _persistent_rdds(spark: SparkSession):
+    """The JVM ``id -> RDD`` map of every persisted RDD — the one
+    py4j reach-through this module isolates."""
+    return spark.sparkContext._jsc.getPersistentRDDs()
+
+
 def _persistent_ids(spark: SparkSession) -> set[int]:
     out: set[int] = set()
-    it = spark.sparkContext._jsc.getPersistentRDDs().keySet().iterator()
+    it = _persistent_rdds(spark).keySet().iterator()
     while it.hasNext():
         out.add(it.next())
     return out
 
 
+def unpersist_ids(spark: SparkSession, ids: set[int]) -> None:
+    """Free the persisted RDDs with these ids now (ids no longer
+    persisted are skipped)."""
+    if not ids:
+        return
+    jmap = _persistent_rdds(spark)
+    for rid in ids:
+        jrdd = jmap.get(rid)
+        if jrdd is not None:
+            jrdd.unpersist(False)
+
+
 class CheckpointRing:
-    """Track per-round checkpoint RDDs; free rounds older than ``keep``.
+    """Track per-round checkpoint RDDs; free each round once its
+    successor has materialized.
 
     Usage::
 
@@ -57,32 +76,19 @@ class CheckpointRing:
         for ...:
             frame = (...).localCheckpoint(...)
             <action that materializes frame>
-            ring.rotate()                     # frees rounds beyond keep
-
-    ``keep=1`` suits a plain successor chain; use ``keep=2`` when the
-    convergence check still reads the previous round (star CC's exact
-    set-equality confirm).
+            ring.rotate()                     # frees the previous round
     """
 
-    def __init__(self, spark: SparkSession, keep: int = 1):
+    def __init__(self, spark: SparkSession):
         self._spark = spark
-        self._keep = max(1, keep)
         self._seen = _persistent_ids(spark)
-        self._rounds: list[set[int]] = []
+        self._newest: set[int] = set()
 
     def rotate(self) -> None:
         """Attribute ids persisted since the last call to the round
-        that just materialized, then free every round older than the
-        newest ``keep``."""
+        that just materialized, then free the round before it."""
         now = _persistent_ids(self._spark)
         fresh = now - self._seen
-        self._seen = now
-        self._rounds.append(fresh)
-        while len(self._rounds) > self._keep:
-            stale = self._rounds.pop(0)
-            jmap = self._spark.sparkContext._jsc.getPersistentRDDs()
-            for rid in stale:
-                jrdd = jmap.get(rid)
-                if jrdd is not None:
-                    jrdd.unpersist(False)
-            self._seen -= stale
+        unpersist_ids(self._spark, self._newest)
+        self._seen = now - self._newest
+        self._newest = fresh

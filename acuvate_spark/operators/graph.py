@@ -8,14 +8,6 @@ fixpoint. Converges in O(diameter) rounds; each round is one
 shuffle-colocated join + groupBy. The P&ID graphs this engine targets
 have tiny diameters (lines connect nearby components), so plain
 propagation with an early-exit check is the right default trade.
-
-For long-diameter graphs (web crawls, chain-shaped link graphs at
-100 TB) ``connected_components_star`` provides the
-large-star/small-star CONTRACTION of Kiveris et al. 2014 ("Connected
-Components in MapReduce and Beyond") behind the same interface:
-O(log^2 n) rounds guaranteed, ~log n observed, where min-label needs
-O(diameter). Same output, same determinism; tests pin both the
-equivalence and the round bound on a committed long-chain fixture.
 """
 
 from __future__ import annotations
@@ -23,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpoints import CheckpointRing, _persistent_ids
+from .checkpoints import CheckpointRing, _persistent_ids, unpersist_ids
 
 
 def _broadcast_threshold_bytes(spark) -> int:
@@ -58,7 +50,15 @@ def connected_components(
     propagation hops, so rounds ~ diameter / 2) — the scale-test hook
     pinning that iteration counts track graph diameter, not graph
     size. ``gate_out`` likewise receives whether the pre-partition
-    gate below fired (test hook — ADVICE r14)."""
+    gate below fired (test hook — ADVICE r14).
+
+    NULL contract (the recursive-CTE oracle's, queries/graph.py): a
+    NULL endpoint is a node. It takes the min label of its non-NULL
+    neighbours but never BRIDGES them — the loop join is null-unsafe,
+    as the oracle's ``ue.a = r.n`` never matches NULL — so edges
+    (1, NULL), (NULL, 5) label NULL -> 1 and keep 1 and 5 apart. A NULL
+    node with no non-NULL neighbour, e.g. edge (NULL, NULL), labels
+    itself: (NULL, NULL)."""
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -129,11 +129,7 @@ def connected_components(
             # async ContextCleaner — the dead-snapshot failure mode
             # checkpoints.py documents as a measured 3.5x slowdown, and
             # at scale a transient DOUBLING of edge-set storage.
-            jmap = edges.sparkSession.sparkContext._jsc.getPersistentRDDs()
-            for rid in first_ckpt_ids:
-                jrdd = jmap.get(rid)
-                if jrdd is not None:
-                    jrdd.unpersist(False)
+            unpersist_ids(edges.sparkSession, first_ckpt_ids)
     if gate_out is not None:
         gate_out.append(gate_fired)
     # seed labels: the self-loop rows of the MATERIALIZED edge set are
@@ -213,120 +209,15 @@ def connected_components(
         )
     if rounds_out is not None:
         rounds_out.append(rounds)
-    return labels
-
-
-def _edge_signature(df: DataFrame) -> tuple:
-    """1-row (count, xor-of-hashes) fingerprint of an edge set — the
-    cheap per-round stability probe for :func:`connected_components_star`.
-    A match is only a HINT (64-bit collisions exist); the caller
-    confirms with an exact set-equality job before breaking. Module
-    level so tests can stub it to a constant and prove the exact
-    confirm, not the hash, decides convergence."""
-    row = df.agg(
-        F.count("*").alias("n"),
-        F.expr("bit_xor(xxhash64(u, v))").alias("h"),  # overflow-free fold
-    ).collect()[0]
-    return (row["n"], row["h"])
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 40,
-    rounds_out: list | None = None,
-) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al.
-    2014): same contract as :func:`connected_components` — undirected
-    edges(src,dst) -> (node, component) with component = min reachable
-    id — but the round count is O(log^2 n) worst case / ~log n
-    observed instead of O(diameter), because each round CONTRACTS the
-    graph toward a star forest rather than propagating labels one hop:
-
-    * large-star: every node's strictly-larger neighbors re-attach to
-      the min of its neighborhood (incl. itself);
-    * small-star: every edge is oriented high->low and the high node
-      plus its smaller neighbors re-attach to the smallest of them.
-
-    Each phase is one groupBy + one equi-join over the CURRENT edge
-    set (which only shrinks toward n-1 star edges), with
-    localCheckpoint cutting lineage per round; convergence is
-    edge-set stability, checked by a 1-row (count, hash-sum)
-    signature — no driver-side edge materialization at any point. A
-    signature match is CONFIRMED by one exact set-equality job
-    (both-ways ``exceptAll`` empty) before breaking, so a 64-bit hash
-    collision between different edge sets cannot stop contraction
-    before fixpoint — the exact check runs once per convergence, not
-    once per round."""
-    e0 = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    nodes = (
-        e0.select(F.col("u").alias("node"))
-        .unionByName(e0.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # nodes is loop-invariant (before the ring, never freed); keep=2
-    # because the convergence confirm reads the PREVIOUS round's edge
-    # set (prev.exceptAll(e)) after the new round materializes.
-    ring = CheckpointRing(edges.sparkSession, keep=2)
-    e = e0.where(F.col("u") != F.col("v")).distinct().localCheckpoint(eager=True)
-    ring.rotate()  # round 0: the initial edge set
-
-    rounds = 0
-    sig = _edge_signature(e)
-    prev = e
-    for _ in range(max_iter):
-        rounds += 1
-        # large-star
-        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        m = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mv"))
-            .select("u", F.least("mv", F.col("u")).alias("m"))
-        )
-        e = (
-            sym.join(m, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star over high->low oriented edges
-        o = e.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        m = o.groupBy("u").agg(F.min("v").alias("m"))
-        e = (
-            o.join(m, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(m.select(F.col("u"), F.col("m").alias("v")))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        ring.rotate()  # e materialized (eager): free rounds beyond prev
-        new_sig = _edge_signature(e)
-        if new_sig == sig:
-            # confirm exactly before trusting the 64-bit signature:
-            # both-ways exceptAll is empty iff the multisets (here:
-            # distinct sets) are equal — one job, convergence only
-            diff = prev.exceptAll(e).unionByName(e.exceptAll(prev))
-            if diff.isEmpty():
-                break
-        sig = new_sig
-        prev = e
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge within {max_iter} "
-            "rounds — not expected below ~2^40 nodes; raise max_iter"
-        )
-    if rounds_out is not None:
-        rounds_out.append(rounds)
-    # at fixpoint e is a star forest child->min-root; roots (and
-    # singleton inputs, e.g. self-loop-only nodes) label themselves
-    labels = (
-        nodes.join(e, nodes.node == e.u, "left")
-        .select("node", F.coalesce("v", "node").alias("component"))
-    )
-    return labels
+    # the null-unsafe loop join never reaches a NULL node without a
+    # non-NULL neighbour: add it back with its own label, as the
+    # oracle's seed row does. Both anti-join sides hold at most the one
+    # NULL row, so this adds two tiny exchanges; a left join of every
+    # seed node onto the labels re-shuffled the whole label set
+    # (+0.47 s on the sf0.1 edge set)
+    null_seed = sym.where(F.col("a").isNull() & F.col("b").isNull())
+    null_label = labels.where(F.col("node").isNull())
+    lone_null = null_seed.join(
+        null_label, null_seed.a.eqNullSafe(null_label.node), "left_anti"
+    ).select(F.col("a").alias("node"), F.col("b").alias("component"))
+    return labels.unionByName(lone_null)

@@ -9,9 +9,10 @@ Design rules carried over from the reference:
   the cache is a DataFrame joined by hash, so repeated content is
   computed once per corpus, not once per row.
 * NMS partitions by class and greedily keeps max-confidence boxes
-  (app.py:1685-1714) -> applyInPandas per (document, class) group;
-  groups are detection-sized (hundreds), so the Python kernel is
-  bounded regardless of corpus size.
+  (app.py:1685-1714) -> one greedy pass per (document, class) group
+  inside a single key-sorted mapInPandas; groups are detection-sized
+  (hundreds), so the Python kernel is bounded regardless of corpus
+  size.
 """
 
 from __future__ import annotations
@@ -67,8 +68,32 @@ def nms(detections: DataFrame, iou_threshold: float = 0.5) -> DataFrame:
     and sorted by the group key runs whole Arrow batches through a
     pandas groupby, holding back each batch's trailing group so a
     group split across batch boundaries is processed once, intact.
-    Same shuffle (hash by group key), same per-group greedy kernel,
-    same row set — only the per-group crossing overhead is gone."""
+
+    GRID PRESCREEN (r12 kernel audit, SCALING.md): a plain sweep of
+    each candidate against the whole kept set is quadratic on
+    DISPERSED pages — 20k unit boxes on a large canvas keep
+    everything, 9.0 s for ONE group — while the prescreen runs it in
+    ~0.1 s, and at fixture group sizes (1-50 boxes) the two cost the
+    same (the sort dominates). It is exact, not approximate: cells are
+    sized to the group's max box dimension, so any two INTERSECTING
+    boxes have min-corner anchor cells differing by <= 1 per axis —
+    a candidate's IoU can be non-zero only against kept boxes anchored
+    in its 3x3 cell neighborhood, and greedy decisions depend only on
+    overlap with kept boxes (a zero-overlap pair never suppresses for
+    any ``iou_threshold > 0``). Same sort, same decisions, same rows
+    as the plain sweep (pinned in tests/test_kernels.py).
+
+    OVERSIZED boxes get a second tier (r13 kernel payload-skew audit):
+    with cells sized to the group max, ONE page-border box on a
+    20k-symbol sheet made the cell page-sized and the prescreen
+    degraded to the quadratic scan (tools/kernel_skew_check.py). Boxes
+    wider than 4x the median dimension are held out of the grid: every
+    candidate checks the oversized kept set, and an oversized
+    CANDIDATE sweeps the full kept set — so the cell stays sized to
+    the normal population. Boxes with a NaN or infinite coordinate
+    join that tier too (median and cell come from finite boxes only):
+    their IoU is 0 or NaN against every box, so they suppress nothing
+    and are kept, exactly as the plain sweep keeps them."""
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -76,27 +101,43 @@ def nms(detections: DataFrame, iou_threshold: float = 0.5) -> DataFrame:
         pdf = pdf.sort_values(["conf", "x1", "y1"], ascending=[False, True, True]).reset_index(
             drop=True
         )
-        # vectorized against the kept set: one numpy IoU sweep per
-        # candidate instead of per-(candidate, kept) pandas .loc pairs
         x1 = pdf["x1"].to_numpy()
         y1 = pdf["y1"].to_numpy()
         x2 = pdf["x2"].to_numpy()
         y2 = pdf["y2"].to_numpy()
         areas = np.maximum(0.0, x2 - x1) * np.maximum(0.0, y2 - y1)
+        dims = np.maximum(np.maximum(0.0, x2 - x1), np.maximum(0.0, y2 - y1))
+        finite = np.isfinite(x1) & np.isfinite(y1) & np.isfinite(x2) & np.isfinite(y2)
+        med = float(np.median(dims[finite])) if finite.any() else 0.0
+        big = ~finite | (dims > 4.0 * med)
+        cell = max(float(np.max(dims[~big], initial=0.0)), 1e-9)
+        by_cell: dict[tuple[int, int], list[int]] = {}
+        big_kept: list[int] = []
         kept: list[int] = []
         for i in range(len(pdf)):
-            if kept:
-                k = np.array(kept)
-                ix = np.maximum(
-                    0.0, np.minimum(x2[i], x2[k]) - np.maximum(x1[i], x1[k])
-                )
-                iy = np.maximum(
-                    0.0, np.minimum(y2[i], y2[k]) - np.maximum(y1[i], y1[k])
-                )
+            if big[i]:
+                # an oversized CANDIDATE spans many cells — its 3x3
+                # anchor neighborhood can miss a kept normal box it
+                # overlaps, so it sweeps the full kept set (both tiers)
+                cand: list[int] = list(kept)
+            else:
+                cx, cy = int(x1[i] // cell), int(y1[i] // cell)
+                cand = list(big_kept)
+                for dx in (-1, 0, 1):
+                    for dy in (-1, 0, 1):
+                        cand += by_cell.get((cx + dx, cy + dy), ())
+            if cand:
+                k = np.array(cand)
+                ix = np.maximum(0.0, np.minimum(x2[i], x2[k]) - np.maximum(x1[i], x1[k]))
+                iy = np.maximum(0.0, np.minimum(y2[i], y2[k]) - np.maximum(y1[i], y1[k]))
                 inter = ix * iy
                 union = areas[i] + areas[k] - inter
                 if np.any((union > 0) & (inter / np.maximum(union, 1e-12) >= iou_threshold)):
                     continue
+            if big[i]:
+                big_kept.append(i)
+            else:
+                by_cell.setdefault((cx, cy), []).append(i)
             kept.append(i)
         return pdf.iloc[kept]
 
@@ -133,94 +174,6 @@ def nms(detections: DataFrame, iou_threshold: float = 0.5) -> DataFrame:
     )
     return parted.mapInPandas(batches, schema=NMS_SCHEMA)
 
-
-def nms_grid(detections: DataFrame, iou_threshold: float = 0.5) -> DataFrame:
-    """Greedy per-class NMS with a GRID PRESCREEN — row-identical to
-    :func:`nms` (pinned in tests/test_kernels.py on dispersed,
-    clustered and mixed fixtures) but bounded by local density instead
-    of kept-set size. The r12 kernel audit (SCALING.md) measured the
-    linear-scan form quadratic on DISPERSED pages — 20k unit boxes on
-    a large canvas keep everything, so candidate i sweeps i kept boxes:
-    9.0 s for ONE group, minutes at a 100k-symbol sheet — while this
-    form runs the same group in ~0.1 s.
-
-    Why it is exact, not approximate: cells are sized to the group's
-    max box dimension, so any two INTERSECTING boxes have min-corner
-    anchor cells differing by <= 1 per axis (overlap in x forces
-    |x1a - x1b| < max width <= cell) — a candidate's IoU can be
-    non-zero only against kept boxes anchored in its 3x3 cell
-    neighborhood, and greedy NMS decisions depend only on overlap with
-    kept boxes. Same sort, same decisions, same rows. Kept as a
-    sibling of :func:`nms` (the prefix_windows /
-    connected_components_star pattern): the registered queries'
-    fixture pages are tens of boxes, where the plain vectorized sweep
-    is faster.
-
-    OVERSIZED boxes get a second tier (r13 kernel payload-skew audit):
-    with cells sized to the group max, ONE page-border box on a 20k
-    -symbol sheet made the cell page-sized — every box landed in a
-    handful of cells and the prescreen degraded to the quadratic scan
-    (measured 17.4 s vs 1.0 s without the giant; tools/
-    kernel_skew_check.py). Boxes wider than 4x the median dimension
-    are held out of the grid: every candidate checks the oversized
-    kept set, and an oversized CANDIDATE (spanning many cells) sweeps
-    the full kept set — so the cell stays sized to the normal
-    population. Exactness is preserved: a pair of normal boxes that
-    intersect is still caught by the 3x3 neighborhood (cell >= normal
-    max dim); any pair involving an oversized box is caught by one of
-    the two sweeps. Cost is O(n * (local density + oversized kept) +
-    oversized * kept) — linear again
-    when the oversized tier is a handful, and a page where MOST boxes
-    are 'oversized' just degrades toward the scan as before (e.g. all
-    dims equal -> nothing exceeds 4x median -> single tier)."""
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        pdf = pdf.sort_values(
-            ["conf", "x1", "y1"], ascending=[False, True, True]
-        ).reset_index(drop=True)
-        x1 = pdf["x1"].to_numpy()
-        y1 = pdf["y1"].to_numpy()
-        x2 = pdf["x2"].to_numpy()
-        y2 = pdf["y2"].to_numpy()
-        areas = np.maximum(0.0, x2 - x1) * np.maximum(0.0, y2 - y1)
-        dims = np.maximum(np.maximum(0.0, x2 - x1), np.maximum(0.0, y2 - y1))
-        big = dims > 4.0 * float(np.median(dims)) if len(dims) else dims > 0
-        cell = max(float(np.max(dims[~big], initial=0.0)), 1e-9)
-        by_cell: dict[tuple[int, int], list[int]] = {}
-        big_kept: list[int] = []
-        kept: list[int] = []
-        for i in range(len(pdf)):
-            cx, cy = int(x1[i] // cell), int(y1[i] // cell)
-            if big[i]:
-                # an oversized CANDIDATE spans many cells — its 3x3
-                # anchor neighborhood can miss a kept normal box it
-                # overlaps, so it sweeps the full kept set (both tiers)
-                cand: list[int] = list(kept)
-            else:
-                cand = list(big_kept)
-                for dx in (-1, 0, 1):
-                    for dy in (-1, 0, 1):
-                        cand += by_cell.get((cx + dx, cy + dy), ())
-            if cand:
-                k = np.array(cand)
-                ix = np.maximum(0.0, np.minimum(x2[i], x2[k]) - np.maximum(x1[i], x1[k]))
-                iy = np.maximum(0.0, np.minimum(y2[i], y2[k]) - np.maximum(y1[i], y1[k]))
-                inter = ix * iy
-                union = areas[i] + areas[k] - inter
-                if np.any(
-                    (union > 0) & (inter / np.maximum(union, 1e-12) >= iou_threshold)
-                ):
-                    continue
-            if big[i]:
-                big_kept.append(i)
-            else:
-                by_cell.setdefault((cx, cy), []).append(i)
-            kept.append(i)
-        return pdf.iloc[kept]
-
-    return detections.groupBy("document_id", "cls").applyInPandas(kernel, schema=NMS_SCHEMA)
 
 
 OCR_WORDS_SCHEMA = (

@@ -23,22 +23,6 @@ def test_ring_keeps_exactly_keep_rounds(spark):
     assert cur.count() == 50000  # survivor readable after 8 frees
 
 
-def test_ring_keep2_retains_predecessor(spark):
-    spark.catalog.clearCache()
-    base = len(_persistent_ids(spark))
-    ring = CheckpointRing(spark, keep=2)
-    prev = spark.range(10000).localCheckpoint(eager=True)
-    ring.rotate()
-    frames = [prev]
-    for _ in range(5):
-        nxt = frames[-1].withColumn("id", F.col("id") + 1).localCheckpoint(eager=True)
-        ring.rotate()
-        frames.append(nxt)
-    assert len(_persistent_ids(spark)) - base == 2
-    # the star-CC convergence shape: previous round still fully readable
-    assert frames[-2].count() == 10000 and frames[-1].count() == 10000
-
-
 def test_connected_components_leaves_no_dead_rounds(spark):
     """A multi-round CC run must leave O(1) persistent RDDs, not
     O(rounds): a 64-node path graph forces ~32 min-label rounds."""
@@ -56,16 +40,3 @@ def test_connected_components_leaves_no_dead_rounds(spark):
     # loop-invariant sym + the final labels round; NOT base + rounds
     assert len(_persistent_ids(spark)) - base <= 3
 
-
-def test_star_components_leaves_no_dead_rounds(spark):
-    from acuvate_spark.operators.graph import connected_components_star
-
-    spark.catalog.clearCache()
-    base = len(_persistent_ids(spark))
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(200)], "src long, dst long"
-    )
-    out = connected_components_star(edges)
-    assert out.where(F.col("component") != 0).count() == 0
-    # nodes + last keep=2 edge rounds; NOT O(rounds)
-    assert len(_persistent_ids(spark)) - base <= 4

@@ -165,3 +165,38 @@ def test_family_agrees_on_null_dense_events_and_edges(spark, null_events_dir, na
         return  # rows-only query: evaluating without a crash IS the test
     du = duck_con(null_events_dir).execute(spec.oracle).fetchdf()
     assert not compare(sp, du, name)
+
+
+# ---------------------------------------------------------------------------
+# Connected-components NULL contract (operators.graph.connected_components
+# docstring), pinned on two hand-built edge sets against the registered
+# recursive-CTE oracle with its lineitem edge CTE swapped for VALUES.
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [
+        # isolated NULL node: labels itself (NULL, NULL)
+        [(None, None), (1, 2)],
+        # NULL cut vertex: takes its neighbours' min, never bridges them
+        [(1, None), (None, 5)],
+    ],
+    ids=["isolated_null_node", "null_cut_vertex"],
+)
+def test_connected_components_null_contract_matches_oracle(spark, edges):
+    from acuvate_spark.operators.graph import connected_components
+    from acuvate_spark.queries.graph import _EDGES_SQL
+
+    df = spark.createDataFrame(edges, "src long, dst long")
+    sp = connected_components(df).select("node", "component").toPandas()
+    values = ", ".join(
+        f"({'NULL' if a is None else a}::BIGINT, {'NULL' if b is None else b}::BIGINT)"
+        for a, b in edges
+    )
+    oracle = REGISTRY["graph_connected_components"].oracle.replace(
+        _EDGES_SQL, f"edges(src, dst) AS (SELECT * FROM (VALUES {values}))"
+    )
+    assert oracle != REGISTRY["graph_connected_components"].oracle
+    du = duckdb.connect().execute(oracle).fetchdf()
+    assert not compare(sp, du, "graph_connected_components")

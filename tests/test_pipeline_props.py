@@ -127,15 +127,28 @@ def test_simhash_packed_lanes_match_naive_reference(spark):
     assert got == _simhash_reference(docs)
 
 
-def test_star_cc_matches_label_cc_on_random_graphs(spark):
-    """Star contraction vs min-label propagation on random graphs —
-    both must agree with plain reachability for any topology."""
+def test_cc_matches_union_find_on_random_graphs(spark):
+    """Min-label propagation vs a Python union-find reference on random
+    graphs — component = min reachable id for any topology."""
     import random as _r
 
-    from acuvate_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    from acuvate_spark.operators.graph import connected_components
+
+    def union_find(edges):
+        parent: dict[int, int] = {}
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)  # root = component min
+        return {(n, find(n)) for n in parent}
 
     rng = _r.Random(11)
     for trial in range(3):
@@ -146,15 +159,11 @@ def test_star_cc_matches_label_cc_on_random_graphs(spark):
         ]
         edges = [e for e in edges if e[0] != e[1]] or [(0, 1)]
         df = spark.createDataFrame(edges, "src long, dst long")
-        a = {
+        got = {
             (r["node"], r["component"])
             for r in connected_components(df, max_iter=60).collect()
         }
-        b = {
-            (r["node"], r["component"])
-            for r in connected_components_star(df).collect()
-        }
-        assert a == b, f"trial {trial}: star vs label disagree"
+        assert got == union_find(edges), f"trial {trial}: labels vs union-find disagree"
 
 
 def test_cc_null_endpoints_propagate_like_distinct_seed(spark):

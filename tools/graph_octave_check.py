@@ -8,15 +8,12 @@ Three measurements:
 
 1. **Rounds track diameter** (chain octaves, in-memory edge frames):
    min-label CC on alternating part-supplier chains of diameter
-   8/16/32 must report rounds ~ diameter (the `rounds_out` hook), and
-   star-contraction CC on the same chains must stay ~log — the two
-   ends of the documented trade.
+   8/16/32 must report rounds ~ diameter (the `rounds_out` hook) and
+   label every chain node.
 2. **Long-diameter safety at scale** (chain embedded in a scaled dir):
    a diameter-400 chain is appended to the dir's lineitem projection.
    Min-label must REFUSE (RuntimeError at max_iter=25 — the documented
-   no-silent-partial-labels contract) and star-contraction must
-   converge in ~log rounds with labels EXACTLY matching a Python
-   union-find ground truth over the full edge list.
+   no-silent-partial-labels contract).
 3. **Hub immunity of the fixed-round queries** (power-law twin of the
    scaled dir): one supplier gains HUB_DEG fresh parts; all four
    registry queries are node-keyed join + partial-agg per round, so
@@ -37,7 +34,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
 from pyspark.sql import functions as F
 
 CHAIN_L = 200  # parts in the embedded chain -> diameter 2L
@@ -108,42 +104,6 @@ def build_fixture(spark, src: str, out: str, *, chain: bool, hub: bool) -> str:
     return out
 
 
-def union_find_truth(sf_dir: str) -> dict[int, int]:
-    """Exact min-label components via Python union-find over the full
-    distinct edge list (the cc_scale_check.py technique)."""
-    con = duckdb.connect()
-    edges = con.execute(
-        f"""SELECT DISTINCT l_partkey AS src, -(l_suppkey + 1) AS dst
-            FROM parquet_scan('{sf_dir}/lineitem.parquet/*.parquet')
-            WHERE l_quantity < 3"""
-    ).fetchall()
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:
-            parent[x], x = r, parent[x]
-        return r
-
-    for a, b in edges:
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    members: dict[int, list[int]] = {}
-    for n in parent:
-        members.setdefault(find(n), []).append(n)
-    truth: dict[int, int] = {}
-    for ns in members.values():
-        m = min(ns)
-        for n in ns:
-            truth[n] = m
-    return truth
-
-
 def main() -> None:
     src = (
         sys.argv[sys.argv.index("--dir") + 1]
@@ -155,10 +115,7 @@ def main() -> None:
         if "--out" in sys.argv
         else "/tmp/graph_octave"
     )
-    from acuvate_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    from acuvate_spark.operators.graph import connected_components
     from acuvate_spark.queries import REGISTRY
     from acuvate_spark.session import get_spark
 
@@ -177,28 +134,18 @@ def main() -> None:
         ml = connected_components(e, max_iter=80, rounds_out=ml_rounds)
         n_ml = ml.count()
         ml_s = round(time.perf_counter() - t0, 2)
-        st_rounds: list = []
-        t0 = time.perf_counter()
-        st = connected_components_star(e, rounds_out=st_rounds)
-        n_st = st.count()
-        st_s = round(time.perf_counter() - t0, 2)
-        same = (
-            ml.exceptAll(st).unionByName(st.exceptAll(ml)).isEmpty()
-            and n_ml == n_st == 2 * n_parts - 1
-        )
-        ok = ok and same and abs(ml_rounds[0] - diameter) <= 2
+        labeled = n_ml == 2 * n_parts - 1
+        ok = ok and labeled and abs(ml_rounds[0] - diameter) <= 2
         octaves.append(
             {
                 "diameter": diameter,
                 "minlabel_rounds": ml_rounds[0],
                 "minlabel_s": ml_s,
-                "star_rounds": st_rounds[0],
-                "star_s": st_s,
-                "labels_identical": same,
+                "all_nodes_labeled": labeled,
             }
         )
         print(f"  chain d={diameter}: minlabel {ml_rounds[0]}r/{ml_s}s, "
-              f"star {st_rounds[0]}r/{st_s}s, identical={same}", file=sys.stderr)
+              f"labeled={labeled}", file=sys.stderr)
     result["chain_octaves"] = octaves
 
     # 2. long-diameter chain embedded at scale
@@ -215,25 +162,14 @@ def main() -> None:
     except RuntimeError:
         raised = True
     refuse_s = round(time.perf_counter() - t0, 2)
-    st_rounds = []
-    t0 = time.perf_counter()
-    st = connected_components_star(e, rounds_out=st_rounds)
-    got = {r["node"]: r["component"] for r in st.collect()}
-    star_s = round(time.perf_counter() - t0, 2)
-    truth = union_find_truth(chain_dir)
-    exact = got == truth
-    ok = ok and raised and exact
+    ok = ok and raised
     result["embedded_chain"] = {
         "diameter": 2 * CHAIN_L,
         "minlabel_refused_at_max_iter": raised,
         "minlabel_refuse_s": refuse_s,
-        "star_rounds": st_rounds[0],
-        "star_s": star_s,
-        "star_exact_vs_union_find": exact,
-        "n_nodes": len(truth),
     }
-    print(f"  embedded chain: minlabel refused={raised} ({refuse_s}s), star "
-          f"{st_rounds[0]}r/{star_s}s exact={exact}", file=sys.stderr)
+    print(f"  embedded chain: minlabel refused={raised} ({refuse_s}s)",
+          file=sys.stderr)
 
     # 3. hub immunity of the per-round joins
     hub_dir = build_fixture(

@@ -7,7 +7,7 @@ or one page-border box serializes into a single mapInPandas batch /
 applyInPandas group regardless of partitioning, so the question is
 whether per-group cost is linear in the payload (acceptable: the
 graph_two_hop output-proportional precedent) or super-linear (a
-scale-killer needing a fix or a sibling — the nms_grid precedent).
+scale-killer needing a fix — the NMS grid prescreen precedent).
 
 What this audit measured and what changed (see SCALING.md r13):
 
@@ -16,7 +16,7 @@ What this audit measured and what changed (see SCALING.md r13):
   windows x 32 MB = ~5 TB hashed in one task. Fixed result-identical
   by hashing the payload once and cloning the digest state per window
   (md5(raw || str(i)) either way); sample_frames got the same clone.
-* nms_grid sized cells to the GROUP max box dimension — one
+* the NMS grid prescreen sized cells to the GROUP max box dimension — one
   page-border box made every cell page-sized and the prescreen
   degraded to the quadratic scan. Fixed result-identical with a
   second tier: boxes > 4x median dim are swept globally, the grid
@@ -169,7 +169,7 @@ def _segments(spark, side: int = 450):
 
 
 def _nms_giant_box(spark, n: int = 20_000):
-    """nms_grid: n dispersed unit boxes on a 100k canvas (nothing
+    """kernels.nms: n dispersed unit boxes on a 100k canvas (nothing
     suppresses — the grid's best case) vs the same plus ONE
     page-border box. Pre-r13 the giant sized every cell to the page
     and the prescreen degraded to the quadratic scan."""
@@ -196,11 +196,11 @@ def _nms_giant_box(spark, n: int = 20_000):
         F.lit(100_000.0).alias("x2"), F.lit(100_000.0).alias("y2"),
         F.lit(0.999999).alias("conf"),
     )
-    t_u = _noop_time(kernels.nms_grid(base))
-    t_g = _noop_time(kernels.nms_grid(base.unionByName(giant)))
+    t_u = _noop_time(kernels.nms(base))
+    t_g = _noop_time(kernels.nms(base.unionByName(giant)))
     ratio = round(t_g / t_u, 2)
     print(
-        f"  nms_grid: {n} dispersed {t_u:.2f}s +page-border box {t_g:.2f}s "
+        f"  nms: {n} dispersed {t_u:.2f}s +page-border box {t_g:.2f}s "
         f"ratio {ratio}",
         file=sys.stderr,
     )
@@ -225,9 +225,9 @@ def main() -> None:
     result: dict[str, object] = {"audio_mb": audio_mb}
     result.update(_audio_frames(spark, audio_mb))
     result["extract_segments"] = _segments(spark)
-    result["nms_grid_giant_box"] = _nms_giant_box(spark)
+    result["nms_giant_box"] = _nms_giant_box(spark)
     ok = (
-        result["nms_grid_giant_box"]["ratio"] <= BOUND
+        result["nms_giant_box"]["ratio"] <= BOUND
         # row/byte/pixel-linear kernels serialized into one task: the
         # honest ceiling is ~n_cores (32) vs the parallel uniform run;
         # 40 = that plus transfer overhead. Class check, not wall-clock
