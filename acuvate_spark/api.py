@@ -52,24 +52,7 @@ class TagRegistry:
         return os.path.join(self.root, register.lower())
 
     def _current_path(self, register: str) -> str | None:
-        d = self._versions_dir(register)
-        if not os.path.isdir(d):
-            return None
-        # numeric selection: lexicographic sort would pick a stale
-        # version whenever the digit count changes. A version counts
-        # only with its _SUCCESS marker (crash-invisibility: a writer
-        # killed mid job-commit must not serve a partial register —
-        # the previous committed version stays current instead).
-        versions = [
-            v
-            for v in os.listdir(d)
-            if v.startswith("v")
-            and v[1:].isdigit()
-            and os.path.isfile(os.path.join(d, v, "_SUCCESS"))
-        ]
-        if not versions:
-            return None
-        return os.path.join(d, max(versions, key=lambda v: int(v[1:])))
+        return sinks._current_version(self._versions_dir(register))
 
     def _write_version(self, register: str, df: DataFrame) -> str:
         d = self._versions_dir(register)

@@ -363,6 +363,30 @@ def _has_success(path: str) -> bool:
     return os.path.isfile(os.path.join(path, "_SUCCESS"))
 
 
+def _current_version(root: str, max_num: int | None = None) -> str | None:
+    """Newest COMMITTED ``v<N>`` child dir of ``root`` with N at or
+    below ``max_num`` — the copy-on-write version pick shared by
+    ``api.TagRegistry``, the streaming MERGE sink and the blob-ingest
+    retry state. Selection is numeric: a lexicographic sort would pick
+    a stale version whenever the digit count changes. A version counts
+    only with its ``_SUCCESS`` marker: a writer killed mid job-commit
+    (part files promoted, marker absent) must stay invisible, and the
+    previous committed version stays current instead."""
+    if not os.path.isdir(root):
+        return None
+    versions = [
+        v
+        for v in os.listdir(root)
+        if v.startswith("v")
+        and v[1:].isdigit()
+        and (max_num is None or int(v[1:]) <= max_num)
+        and _has_success(os.path.join(root, v))
+    ]
+    if not versions:
+        return None
+    return os.path.join(root, max(versions, key=lambda v: int(v[1:])))
+
+
 def _raise_if_mid_swap(base_path: str) -> None:
     """Readers call this when the base is INVISIBLE (no committed part
     files): a ``.__pre_compact__`` sibling then means a compaction

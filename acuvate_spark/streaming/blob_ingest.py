@@ -70,7 +70,7 @@ def _write_retry_state(state: DataFrame, retry_dir: str) -> None:
     version."""
     import shutil
 
-    from .merge_sink import _current_version
+    from ..operators.sinks import _current_version
 
     cur = _current_version(retry_dir)
     n = (int(os.path.basename(cur)[1:]) if cur else 0) + 1
@@ -218,7 +218,7 @@ def _retry_pass(
     the same routed/dlq rows from state n and overwrites them in
     place — the pre-r09 ``mode("append")`` dlq write double-DLQ'd a
     blob on exactly that replay."""
-    from .merge_sink import _current_version
+    from ..operators.sinks import _current_version
 
     prev = _load_retry_state(spark, retry_dir)
     if not prev.take(1):

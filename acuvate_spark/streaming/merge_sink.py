@@ -30,27 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _current_version(target_dir: str, max_num: int | None = None) -> str | None:
-    """Newest COMMITTED version at or below ``max_num``. A version dir
-    counts only with its ``_SUCCESS`` marker — a writer killed mid
-    job-commit (part files promoted, marker absent) must stay
-    invisible to readers, the same crash-invisibility rule the move/
-    promote sinks enforce; the next replay overwrites the partial dir
-    (same batch_id -> same target) and commits it properly."""
-    if not os.path.isdir(target_dir):
-        return None
-    versions = [
-        v
-        for v in os.listdir(target_dir)
-        if v.startswith("v")
-        and v[1:].isdigit()
-        and (max_num is None or int(v[1:]) <= max_num)
-        and os.path.isfile(os.path.join(target_dir, v, "_SUCCESS"))
-    ]
-    if not versions:
-        return None
-    return os.path.join(target_dir, max(versions, key=lambda v: int(v[1:])))
+from ..operators.sinks import _current_version
 
 
 def read_current(

@@ -81,6 +81,30 @@ HEADLINE = [
 ]
 
 
+def warm_up(spark, sf_dir: str | None) -> None:
+    """JVM/codegen JIT, parquet reader (skipped for ``sf_dir=None``) and
+    Python-worker warm-up, so the first timed query pays none of them.
+    The first Arrow/mapInPandas stage pays worker fork + Arrow init
+    (VERDICT r13 item 3: 6.51 s cold vs 0.84 s warm on ocr_page_words);
+    one throwaway mapInPandas job over all 32 slots retires that cost."""
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    if sf_dir is not None:
+        spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1).collect()
+    time_noop(lambda: spark.range(32).repartition(32).mapInPandas(lambda it: it, "id long"))
+
+
+def time_noop(build) -> float:
+    """Seconds to build ``build()`` and materialize it with a noop-format
+    write, then clear the cache: queries persist multi-use intermediates,
+    and one run's cache must never pressure (or serve) the next."""
+    t0 = time.perf_counter()
+    df = build()
+    df.write.format("noop").mode("overwrite").save()
+    elapsed = time.perf_counter() - t0
+    df.sparkSession.catalog.clearCache()
+    return elapsed
+
+
 def main() -> None:
     from acuvate_spark.queries import REGISTRY
     from acuvate_spark.session import get_spark
@@ -91,25 +115,13 @@ def main() -> None:
     extended = "--extended" in sys.argv[1:]
     spark = get_spark("acuvate-bench")
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    # JVM/codegen warmup so the first measured query isn't paying JIT cost
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{SF_DIR}/lineitem.parquet").limit(1).collect()
-    # Python-worker warm-up (VERDICT r13 item 3): the session's FIRST
-    # Arrow/mapInPandas stage pays Python-worker fork + Arrow init —
-    # the judge measured 6.51 s cold vs 0.84 s warm on ocr_page_words —
-    # so a kernel query that merely runs first in a min-of-2 tier can
-    # masquerade as an 8x regression. One throwaway mapInPandas job
-    # (all 32 slots) retires that cost before anything is timed.
-    spark.range(32).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_up(spark, SF_DIR)
+
+    def run(name: str) -> float:
+        return round(time_noop(lambda: REGISTRY[name].fn(spark, SF_DIR)), 3)
+
     if extended:
-        rows = []
-        for name in REGISTRY:
-            t0 = time.perf_counter()
-            REGISTRY[name].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            rows.append((round(time.perf_counter() - t0, 3), name))
-            spark.catalog.clearCache()
+        rows = [(run(name), name) for name in REGISTRY]
         for t, name in sorted(rows, reverse=True):
             print(f"  {t:8.3f}s  {name}", file=sys.stderr)
         timings = {n: t for t, n in rows}
@@ -155,17 +167,10 @@ def main() -> None:
     timings: dict[str, float] = {}
     for attempt in range(3):
         for name in HEADLINE:
-            spec = REGISTRY[name]
-            t0 = time.perf_counter()
-            df = spec.fn(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            elapsed = round(time.perf_counter() - t0, 3)
+            elapsed = run(name)
             if name not in timings or elapsed < timings[name]:
                 timings[name] = elapsed
             print(f"  [{attempt}] {name}: {elapsed:.3f}s", file=sys.stderr)
-            # queries persist multi-use intermediates; drop them so one
-            # query's cache never pressures the next measurement
-            spark.catalog.clearCache()
     total = round(sum(timings.values()), 3)
     regressions = _regressions(timings, sf)
     # ---- tier 2: the ~98 non-headline registry queries, min-of-2,
@@ -178,14 +183,9 @@ def main() -> None:
     if full_ran:
         for attempt in range(2):
             for name in rest:
-                t0 = time.perf_counter()
-                REGISTRY[name].fn(spark, SF_DIR).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                elapsed = round(time.perf_counter() - t0, 3)
+                elapsed = run(name)
                 if name not in full or elapsed < full[name]:
                     full[name] = elapsed
-                spark.catalog.clearCache()
             print(
                 f"  [full pass {attempt}] {round(sum(full.values()), 1)}s over "
                 f"{len(rest)} non-headline queries",

@@ -20,7 +20,8 @@ replaced by a ~250k-word payload vs the corpus' ~100-word docs) for
 the per-doc in-row reassembly family (`mlm_span_mask`,
 `line_dedup_docs`). Bound: marginal cost per output ELEMENT within
 ~n_cores of the uniform per-element cost (single buffer vs 32-way),
-same honest formulation as tools/kernel_skew_check.py.
+same honest formulation as tools/kernel_skew_check.py. Wall clocks are
+min-of-2 bench.time_noop runs after bench.warm_up.
 
     python tools/agg_state_skew_check.py [--dir /tmp/scaled_sf/sf0.5]
 """
@@ -30,11 +31,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
+
+from bench import time_noop, warm_up  # noqa: E402
 
 HOT_KEY = 77_777_777
 BOUND_WALL = 3.0
@@ -42,16 +44,7 @@ BOUND_MARGINAL = 40.0
 
 
 def _noop_time(fn, spark, d) -> float:
-    best = None
-    for _ in range(2):
-        t0 = time.perf_counter()
-        fn(spark, d).write.format("noop").mode("overwrite").save()
-        el = time.perf_counter() - t0
-        best = el if best is None or el < best else best
-        # dedup-family queries persist shared frames; without this the
-        # second pass times the cache, not the plan (bench.py protocol)
-        spark.catalog.clearCache()
-    return best
+    return min(time_noop(lambda: fn(spark, d)) for _ in range(2))
 
 
 def build_hot_lineitem(spark, src: str, out: str) -> str:
@@ -107,7 +100,7 @@ def main() -> None:
     from acuvate_spark.tables import load_table
 
     spark = get_spark("agg-state-skew-check")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    warm_up(spark, src)
     result: dict[str, object] = {"dir": src}
 
     # ---- collect_list_per_group on a 30%-hot order key

@@ -19,7 +19,8 @@ centroids drawn from the corpus itself, shuffled mode FORCED. Three
 corpora: uniform (the dir as-is), clustered (80% of vectors pulled
 into one tight cluster around a single direction — distinct vectors,
 one dominant cell population), duplicate (80% of vectors EXACTLY one
-vector — the pathological single-cell case). Passes when each skewed
+vector — the pathological single-cell case). Wall clocks are min-of-2
+bench.time_noop runs after bench.warm_up. Passes when each skewed
 runtime is within 2x of uniform.
 
     python tools/assign_skew_check.py [--dir /tmp/scaled_sf/sf2] [--k 400]
@@ -30,11 +31,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
+
+from bench import time_noop, warm_up  # noqa: E402
 
 
 def _corpora(spark, d):
@@ -80,21 +82,17 @@ def main() -> None:
 
     spark = get_spark("assign-skew-check")
     spark.conf.set(assign._MODE_CONF, "shuffled")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JIT warmup
+    warm_up(spark, d)
     out = {}
     for name, vec in _corpora(spark, d).items():
         vec = vec.localCheckpoint(eager=True)  # time the assign, not the prep
         cent = vec.orderBy("vec_id").limit(k).select(
             F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("ce")
         ).localCheckpoint(eager=True)
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            assign.nearest_centroids(vec, cent, k_hint=k, n_best=1).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            el = time.perf_counter() - t0
-            best = el if best is None or el < best else best
+        best = min(
+            time_noop(lambda: assign.nearest_centroids(vec, cent, k_hint=k, n_best=1))
+            for _ in range(2)
+        )
         out[name] = round(best, 2)
         print(f"  {name}: {best:.2f}s", file=sys.stderr)
         vec.unpersist()

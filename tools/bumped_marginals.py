@@ -3,6 +3,9 @@ bumped queries — time each at $SPARK_GRAFT_SF_DIR (default sf0.1) and
 at the 100x dir (/tmp/scaled_sf/sf10), min-of-N, print ratios. A
 marginal far above the corpus ratio (100x data, 32 local cores) flags
 a driver-side or quadratic bottleneck the small-sf tests can't see.
+Timing is the bench's (bench.warm_up + bench.time_noop); the row count
+comes from a separate, untimed count(), because a timed count() lets
+Catalyst prune unreferenced columns and Window nodes.
 
 Usage: python tools/bumped_marginals.py [query ...] (default: reads
 the names from the committed manifest whose since_round equals the
@@ -13,9 +16,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import time_noop, warm_up  # noqa: E402
 
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 BIG = "/tmp/scaled_sf/sf10"
@@ -34,20 +38,15 @@ def main() -> None:
 
     names = sys.argv[1:] or bumped_names()
     spark = get_spark(cpus=32)
-    # Python-worker warm-up so kernel cold-start doesn't pollute run 1
-    spark.range(1000).toPandas()
+    warm_up(spark, BASE)
     rows = []
     for name in names:
-        spec = REGISTRY[name]
+        fn = REGISTRY[name].fn
         times = {}
         for label, d in (("base", BASE), ("x100", BIG)):
-            best = float("inf")
-            for _ in range(RUNS):
-                t0 = time.monotonic()
-                n = spec.fn(spark, d).count()
-                best = min(best, time.monotonic() - t0)
-                spark.catalog.clearCache()
-            times[label] = (best, n)
+            best = min(time_noop(lambda: fn(spark, d)) for _ in range(RUNS))
+            times[label] = (best, fn(spark, d).count())
+            spark.catalog.clearCache()
         ratio = times["x100"][0] / max(times["base"][0], 1e-9)
         rows.append((name, times["base"][0], times["x100"][0], ratio))
         print(

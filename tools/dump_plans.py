@@ -1,8 +1,16 @@
 #!/usr/bin/env python3
-"""Regenerate PLANS.md: formatted physical plans for the flagship
-queries with scale commentary. Run after changing any flagship query:
+"""Formatted physical plans, with ``localCheckpoint`` stubbed to a
+no-op so eagerly materialized queries show their full lineage.
 
     python tools/dump_plans.py
+        regenerate PLANS.md (flagship queries with scale commentary);
+        run after changing any flagship query
+    python tools/dump_plans.py <round> <tag> <query> [query ...]
+        write plans/<round>/<query>_<tag>.txt — before/after evidence
+        for an optimization round (tag is e.g. ``before`` or ``after``)
+
+Queries whose construction runs driver-side loops (graph CC, k-center)
+execute those loops here; the dump is the plan of the RETURNED frame.
 """
 
 from __future__ import annotations
@@ -10,7 +18,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -163,22 +172,11 @@ COMMENTARY = {
 }
 
 
-def main() -> None:
-    # patch the CONCRETE class — pyspark 4 defines localCheckpoint on
-    # classic.DataFrame, which shadows a base-class patch
-    from pyspark.sql.classic.dataframe import DataFrame
+def _plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
-    from acuvate_spark.queries import REGISTRY
-    from acuvate_spark.session import get_spark
 
-    # Queries that eagerly materialize (localCheckpoint) would dump an
-    # opaque `Scan ExistingRDD`; stub it to a no-op (the
-    # tests/test_plan_audit.py technique) so PLANS.md shows the FULL
-    # lineage the optimizer actually planned (r12 — the minhash and
-    # scanner_tag_etl entries were single-node stubs before).
-    DataFrame.localCheckpoint = lambda self, eager=True: self
-
-    spark = get_spark("plan-dump", cpus=8)
+def write_plans_md(spark, registry) -> None:
     lines = [
         "# PLANS — physical plans of the flagship queries",
         "",
@@ -190,12 +188,48 @@ def main() -> None:
         "",
     ]
     for name, note in COMMENTARY.items():
-        df = REGISTRY[name].fn(spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        plan = _plan(registry[name].fn(spark, SF_DIR))
         lines += [f"## {name}", "", note, "", "```", plan.strip(), "```", ""]
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(lines))
     print("wrote PLANS.md")
+
+
+def write_round_plans(spark, registry, rnd: str, tag: str, names: list[str]) -> None:
+    out = os.path.join(ROOT, "plans", rnd)
+    os.makedirs(out, exist_ok=True)
+    for name in names:
+        plan = _plan(registry[name].fn(spark, SF_DIR))
+        path = os.path.join(out, f"{name}_{tag}.txt")
+        with open(path, "w") as f:
+            f.write(f"== {name} ({tag}) @ {SF_DIR} ==\n\n" + plan)
+        print(f"wrote {path} ({len(plan)} chars)")
+        spark.catalog.clearCache()
+
+
+def main() -> None:
+    args = sys.argv[1:]
+    if 0 < len(args) < 3:
+        sys.exit("usage: dump_plans.py [<round> <tag> <query> [query ...]]")
+    # patch the CONCRETE class — pyspark 4 defines localCheckpoint on
+    # classic.DataFrame, which shadows a base-class patch
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from acuvate_spark.queries import REGISTRY
+    from acuvate_spark.session import get_spark
+
+    # Queries that eagerly materialize (localCheckpoint) would dump an
+    # opaque `Scan ExistingRDD`; stub it to a no-op (the
+    # tests/test_plan_audit.py technique) so the dump shows the FULL
+    # lineage the optimizer actually planned (r12 — the minhash and
+    # scanner_tag_etl entries were single-node stubs before).
+    DataFrame.localCheckpoint = lambda self, eager=True: self
+
+    spark = get_spark("plan-dump", cpus=8)
+    if args:
+        write_round_plans(spark, REGISTRY, args[0], args[1], args[2:])
+    else:
+        write_plans_md(spark, REGISTRY)
     spark.stop()
 
 

@@ -26,10 +26,11 @@ What this audit measured and what changed (see SCALING.md r13):
   documented single-task bound, same class as the uniform corpus.
 
 Fixtures are engine-built (spark.range + exprs, no driver loops over
-payloads); min-of-2 wall clocks; pass = every giant-vs-uniform run
-within BOUND x after accounting for the giant's own output share.
+payloads); wall clocks are min-of-2 bench.time_noop runs after
+bench.warm_up; pass = every giant-vs-uniform run within BOUND x after
+accounting for the giant's own output share.
 
-    python tools/kernel_skew_check.py [--audio-mb 32] [--out-json -]
+    python tools/kernel_skew_check.py [--audio-mb 32]
 """
 
 from __future__ import annotations
@@ -37,23 +38,18 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import time_noop, warm_up  # noqa: E402
+
 BOUND = 3.0
 
 
 def _noop_time(df) -> float:
-    best = None
-    for _ in range(2):
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        el = time.perf_counter() - t0
-        best = el if best is None or el < best else best
-    return best
+    return min(time_noop(lambda: df) for _ in range(2))
 
 
 def _audio_frames(spark, audio_mb: int):
@@ -221,7 +217,7 @@ def main() -> None:
         else 32
     )
     spark = get_spark("kernel-skew-check")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    warm_up(spark, None)
     result: dict[str, object] = {"audio_mb": audio_mb}
     result.update(_audio_frames(spark, audio_mb))
     result["extract_segments"] = _segments(spark)

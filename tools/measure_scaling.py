@@ -2,7 +2,8 @@
 """Measure the scaling exponent of the most expensive registry queries
 (VERDICT r05 item 4): run them at sf0.1 (driver data) and at the
 sf0.2 / sf0.5 scale-ups from tools/make_scaled_sf.py, fit
-log(time) ~ log(sf), and print a JSON line per query.
+log(time) ~ log(sf), and print a JSON line per query. Timing is the
+bench's own: bench.warm_up, then min-of-passes of bench.time_noop.
 
 The 100x design claims in PLANS.md / query docstrings are argued from
 plan shapes (banded LSH, grid equi-joins, two-level prefix sums);
@@ -14,7 +15,9 @@ is either a plan bug or a generator artifact and must be explained in
 SCALING.md.
 
     python tools/make_scaled_sf.py           # once
-    python tools/measure_scaling.py [--passes 2]
+    python tools/measure_scaling.py [--passes 2] [--sf1] [--sf2] [--sf5]
+        [--sf10] [--scales 0.1,1.0] [--queries q1,q2 | --all]
+        [--conf key=value ...]
 """
 
 from __future__ import annotations
@@ -23,9 +26,10 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import time_noop, warm_up  # noqa: E402
 
 QUERIES = [
     "dedup_embedding_cosine",
@@ -87,17 +91,14 @@ def main() -> None:
                 sys.exit("usage: --conf key=value (repeatable)")
             k, v = sys.argv[i + 1].split("=", 1)
             spark.conf.set(k, v)
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JIT warmup
+    warm_up(spark, SF_DIRS[min(SF_DIRS)])
     times: dict[str, dict[float, float]] = {q: {} for q in queries}
     for _ in range(passes):
         for sf, d in SF_DIRS.items():
             for q in queries:
-                t0 = time.perf_counter()
-                REGISTRY[q].fn(spark, d).write.format("noop").mode("overwrite").save()
-                el = time.perf_counter() - t0
+                el = time_noop(lambda: REGISTRY[q].fn(spark, d))
                 if sf not in times[q] or el < times[q][sf]:
                     times[q][sf] = el
-                spark.catalog.clearCache()
                 print(f"  sf{sf} {q}: {el:.2f}s", file=sys.stderr)
     out = []
     for q in queries:

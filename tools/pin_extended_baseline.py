@@ -2,8 +2,8 @@
 """Re-pin EXTENDED_BASELINE.json: min-of-3 sf0.1 wall-clock for EVERY
 registry query (VERDICT r12 item 1 — the full-registry tier of the
 bench regression guard). Run on a QUIET box; the guard rules assume
-pins measured at steady state (per-query min over three passes, cache
-cleared between queries, same noop-write materialization as bench.py).
+pins measured at steady state: bench.warm_up, then per-query min over
+three passes of bench.time_noop (the bench's own timing loop).
 
     python tools/pin_extended_baseline.py [note...]
 """
@@ -12,11 +12,12 @@ from __future__ import annotations
 
 import json
 import sys
-import time
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
+
+from bench import time_noop, warm_up  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
 
@@ -26,19 +27,13 @@ def main() -> None:
     from acuvate_spark.session import get_spark
 
     spark = get_spark("pin-extended-baseline")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{SF_DIR}/lineitem.parquet").limit(1).collect()
+    warm_up(spark, SF_DIR)
     timings: dict[str, float] = {}
     for attempt in range(3):
         for name in REGISTRY:
-            t0 = time.perf_counter()
-            REGISTRY[name].fn(spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            elapsed = round(time.perf_counter() - t0, 3)
+            elapsed = round(time_noop(lambda: REGISTRY[name].fn(spark, SF_DIR)), 3)
             if name not in timings or elapsed < timings[name]:
                 timings[name] = elapsed
-            spark.catalog.clearCache()
         print(
             f"[pass {attempt}] running min total "
             f"{round(sum(timings.values()), 1)}s",

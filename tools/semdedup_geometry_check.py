@@ -23,7 +23,8 @@ crossover, plus a broadcast-FORCED counterfactual at the big scale.
 
 Pass = production ratio <= 2x the data ratio (linear with headroom)
 AND production at the big scale beats the forced-broadcast
-counterfactual (the pruning is visibly doing work).
+counterfactual (the pruning is visibly doing work). Wall clocks are
+min-of-2 bench.time_noop runs after bench.warm_up.
 
     python tools/semdedup_geometry_check.py [--small 25000] [--big 100000]
 """
@@ -35,11 +36,12 @@ import math
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
+
+from bench import time_noop, warm_up  # noqa: E402
 
 DIMS = 64
 META_BLEND = 0.30  # cluster-center spread around its meta-direction
@@ -103,7 +105,7 @@ def main() -> None:
     from acuvate_spark.session import get_spark
 
     spark = get_spark("semdedup-geometry")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JIT warmup
+    warm_up(spark, None)
     dirs = {}
     for n in (small, big):
         d = f"/tmp/semgeo_{n}"
@@ -113,15 +115,8 @@ def main() -> None:
     def timed(d: str, mode: str | None) -> float:
         if mode:
             spark.conf.set(assign._MODE_CONF, mode)
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            REGISTRY["semdedup_clusters"].fn(spark, d).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            el = time.perf_counter() - t0
-            best = el if best is None or el < best else best
-            spark.catalog.clearCache()
+        fn = REGISTRY["semdedup_clusters"].fn
+        best = min(time_noop(lambda: fn(spark, d)) for _ in range(2))
         if mode:
             spark.conf.unset(assign._MODE_CONF)
         print(f"  {d} mode={mode or 'auto'}: {best:.2f}s", file=sys.stderr)

@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
-"""Focused per-query timing with the bench methodology (noop sink,
-min-of-N, clearCache between runs, warm session) — the measurement
-loop for optimization work, so a single query's before/after can be
-read without paying a full bench run.
+"""Focused per-query timing with the bench methodology (bench.warm_up,
+then bench.time_noop min-of-N: noop sink, clearCache between runs) —
+the measurement loop for optimization work, so a single query's
+before/after can be read without paying a full bench run.
 
     python tools/time_queries.py [-nN] query [query ...]
 
@@ -16,11 +16,10 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from bench import SF_DIR, time_noop, warm_up  # noqa: E402
 
 
 def main() -> None:
@@ -33,21 +32,10 @@ def main() -> None:
     from acuvate_spark.session import get_spark
 
     spark = get_spark("time-queries")
-    # same warmups as bench.py
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{SF_DIR}/lineitem.parquet").limit(1).collect()
-    spark.range(32).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_up(spark, SF_DIR)
     for name in args:
-        runs = []
-        for _ in range(n):
-            t0 = time.perf_counter()
-            REGISTRY[name].fn(spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(round(time.perf_counter() - t0, 3))
-            spark.catalog.clearCache()
+        fn = REGISTRY[name].fn
+        runs = [round(time_noop(lambda: fn(spark, SF_DIR)), 3) for _ in range(n)]
         print(
             f"{name}: min={min(runs):.3f}s  runs={runs}  "
             f"loadavg={os.getloadavg()[0]:.2f}",

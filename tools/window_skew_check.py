@@ -15,7 +15,9 @@ of orders to ONE hot customer (``running_totals`` reads orders);
 timestamps/keys otherwise untouched, so row counts are identical and
 only the per-key distribution changes.
 
-Protocol: min-of-2 wall clocks per (query, corpus); uniform = the dir
+Protocol: bench.warm_up, then min-of-2 bench.time_noop wall clocks per
+(query, corpus) — a noop write, NOT count(), which lets Catalyst prune
+the unreferenced Window node and time a bare scan; uniform = the dir
 as-is. Pass: every query within 3x of uniform (single-task sorting of
 a 30% slice costs, but must stay in the same complexity class — a
 blowup past the bound means a plan is doing per-key work that is
@@ -30,11 +32,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
+
+from bench import time_noop, warm_up  # noqa: E402
 
 HOT_USER = 77_777_777
 QUERIES = (
@@ -80,7 +83,7 @@ def main() -> None:
     from acuvate_spark.session import get_spark
 
     spark = get_spark("window-skew-check")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JIT warmup
+    warm_up(spark, src)
     hot_dir = build_hot_fixture(spark, src, os.path.join(out_root, "hot"))
     result: dict[str, object] = {"dir": src, "hot_share": 0.3}
     ok = True
@@ -88,14 +91,7 @@ def main() -> None:
         fn = REGISTRY[name].fn
         times, rows = {}, {}
         for label, d in (("uniform", src), ("hot", hot_dir)):
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                # noop write, NOT count(): count() lets Catalyst prune
-                # the un-referenced Window node and time a bare scan
-                fn(spark, d).write.format("noop").mode("overwrite").save()
-                el = time.perf_counter() - t0
-                best = el if best is None or el < best else best
+            best = min(time_noop(lambda: fn(spark, d)) for _ in range(2))
             rows[label] = fn(spark, d).count()
             times[label] = round(best, 2)
         ratio = round(times["hot"] / times["uniform"], 2)
