@@ -59,8 +59,13 @@ class TagRegistry:
         os.makedirs(d, exist_ok=True)
         # wall-clock ns, zero-padded: survives process restarts
         # (monotonic_ns has an undefined epoch across processes) and
-        # keeps even naive lexicographic ordering correct
-        path = os.path.join(d, f"v{time.time_ns():025d}")
+        # keeps even naive lexicographic ordering correct. Never below
+        # the current version + 1: a backwards clock step (an NTP
+        # correction) would otherwise commit a version that never
+        # becomes current.
+        cur = sinks._current_version(d)
+        floor = int(os.path.basename(cur)[1:]) + 1 if cur else 0
+        path = os.path.join(d, f"v{max(time.time_ns(), floor):025d}")
         df.write.mode("overwrite").parquet(path)
         return path
 
@@ -252,11 +257,7 @@ class TagRegistry:
         for reg in REGISTER_TYPES:
             b = (
                 self.table(reg)
-                .where(
-                    F.coalesce(F.col("modified_date"), F.col("modified_date")).between(
-                        window_start, window_end
-                    )
-                )
+                .where(F.col("modified_date").between(window_start, window_end))
                 .select("tag_no", "description", F.lit(reg).alias("tag_type"))
             )
             out = b if out is None else out.unionByName(b)

@@ -17,7 +17,7 @@ derives from the corpus (K = N/125), so at real corpus scale
 broadcast budget and the N x K multiply is the measured super-linear
 term (9.5x at the 20x point; 162.8x at the r10 100x point). Past
 ``AUTO_SHUFFLE_MIN_K`` (the measured wall-clock crossover — see the
-constant's comment) auto mode swaps to the blas kernel, and past
+constant's comment) the assign swaps to the blas kernel, and past
 ``BROADCAST_MAX_K`` (the capacity bound: the K-row frame no longer
 fits a task, matmul included) to the shuffled form below.
 
@@ -85,7 +85,7 @@ from ..functions import vectors
 # Documented broadcast CAPACITY bound: 64k centroids x 64 float32 +
 # ids ~ 20 MB serialized — comfortably inside executor broadcast
 # budgets; the next octave (128k x 64) is where task-heap pressure
-# starts. Forcing mode=broadcast past this is the caller's risk.
+# starts.
 BROADCAST_MAX_K = 65_536
 
 # Auto-mode crossover (r10 — the 100x full sweep caught semdedup at
@@ -121,25 +121,21 @@ _SLACK = 2.5e-4
 # only ADD candidates (a few extra exact evaluations); it can never
 # change the result.
 _BLAS_MARGIN = 1.5e-4
-# Probe-side block fan-out: centroids replicate once per block
-# (K x blasBlocks rows total), each (block, all-centroids) cogroup is
-# one Arrow batch. Sized so a local[32] 100x-octave corpus block
-# (~200k/64 rows x 260 B) stays a few MB; a cluster deployment sets
-# the conf to ~N/2048 so per-group Arrow memory stays flat.
-_BLAS_BLOCKS_CONF = "spark.acuvate.assign.blasBlocks"
-
 # Probe-chunk budget inside one blas cogroup: chunk x K score doubles
 # per matmul (32 MB at the default). Module-level so the multi-chunk
 # loop is testable at fixture scale (tests/test_assign.py shrinks it).
 _BLAS_CHUNK_DOUBLES = 1 << 22
 
-_MODE_CONF = "spark.acuvate.assign.mode"  # auto | broadcast | shuffled | blas
+
+def _blas_blocks(spark) -> int:
+    """Probe-side block fan-out: centroids replicate once per block
+    (K x blocks rows total), each (block, all-centroids) cogroup is one
+    Arrow batch. Sized so a local[32] 100x-octave corpus block
+    (~200k/64 rows x 260 B) stays a few MB."""
+    return max(64, spark.sparkContext.defaultParallelism * 2)
 
 
-def _resolved_mode(df: DataFrame, k_hint: int) -> str:
-    mode = df.sparkSession.conf.get(_MODE_CONF, "auto")
-    if mode in ("broadcast", "shuffled", "blas"):
-        return mode
+def _resolved_mode(k_hint: int) -> str:
     if k_hint <= AUTO_SHUFFLE_MIN_K:
         return "broadcast"
     # Past the broadcast crossover but under the broadcast CAPACITY
@@ -161,14 +157,14 @@ def nearest_centroids(
     ``(cosine_rounded(embedding, ce, 4) DESC, centroid_id ASC)``.
 
     ``vec_df``: (vec_id, embedding); ``cent_df``: (centroid_id, ce).
-    ``k_hint``: the caller's centroid count (drives the auto mode
-    switch; never affects results). Returns (vec_id, embedding,
+    ``k_hint``: the caller's centroid count (picks the strategy;
+    never affects results). Returns (vec_id, embedding,
     centroid_id, ccos, rn) with rn in 1..n_best — identical rows from
     either strategy. Contract: embeddings and centroids have non-zero
     norm (cosine is defined); a zero-norm row yields NULL cosines and
     the two strategies would rank it differently.
     """
-    mode = _resolved_mode(vec_df, k_hint)
+    mode = _resolved_mode(k_hint)
     if mode == "broadcast":
         # Norms hoisted OUT of the cross (r10): cosine(a, b) folds
         # dot + both norms per crossed row — 3x the arithmetic the
@@ -334,7 +330,7 @@ def _blas_candidates(vec_df: DataFrame, cent_df: DataFrame, *, n_best: int) -> D
     being removed — so this is an Arrow-batched kernel by necessity,
     like ``operators.dedup.hot_bucket_cosine_candidates`` (r11).
 
-    Mechanics: probes hash into ``blasBlocks`` blocks; centroids
+    Mechanics: probes hash into ``_blas_blocks`` blocks; centroids
     replicate once per block (K x blocks rows — small next to N);
     each (block) cogroup sees (probe block, ALL centroids), chunks
     the matmul to bound memory, and emits every centroid within
@@ -350,13 +346,7 @@ def _blas_candidates(vec_df: DataFrame, cent_df: DataFrame, *, n_best: int) -> D
     import numpy as np  # local: keep module import light
     import pandas as pd
 
-    spark = vec_df.sparkSession
-    try:
-        nblocks = int(spark.conf.get(_BLAS_BLOCKS_CONF, ""))
-    except ValueError:
-        nblocks = max(64, spark.sparkContext.defaultParallelism * 2)
-    if nblocks < 1:
-        raise ValueError(f"{_BLAS_BLOCKS_CONF} must be >= 1, got {nblocks}")
+    nblocks = _blas_blocks(vec_df.sparkSession)
     probes = vec_df.select(
         "vec_id",
         "embedding",

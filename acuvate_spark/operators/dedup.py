@@ -189,7 +189,7 @@ _CHUNK_TOKENS = 1 << _CHUNK_SHIFT  # lanes hold counts < 2^16 by construction
 
 
 def simhash_signature(
-    tokens_df: DataFrame, key: str, token_col: str, pos_col: str | None = None
+    tokens_df: DataFrame, key: str, token_col: str, pos_col: str
 ) -> DataFrame:
     """(key, token) rows -> (key, sig) where sig is a 64-char '0'/'1'
     string. Bit i is the sign of the vote sum over tokens: hex digit i
@@ -200,26 +200,17 @@ def simhash_signature(
     bit-identical in any engine (xxhash64 would be ~2x faster per
     token but is Spark-specific).
 
-    Exact for documents of ANY length in BOTH paths: tokens aggregate
-    per (key, chunk) first — bounding every 16-bit lane (and keeping
-    the packed ANSI long sum <= 2^14 * 2^48 = 2^62) — then the tiny
+    Exact for documents of ANY length: tokens aggregate per
+    (key, chunk) first — bounding every 16-bit lane (and keeping the
+    packed ANSI long sum <= 2^14 * 2^48 = 2^62) — then the tiny
     per-chunk rows (64 plain sums over ~n_tokens/16384 rows per doc)
-    fold to the doc totals. The chunk is ``pos_col >> 14`` when the
-    caller has a 0-based token position, else
-    ``monotonically_increasing_id() >> 14``: the chunk SPLIT is
-    arbitrary for vote sums (any partition of a doc's tokens yields
-    the same totals), and ids are unique per row so no chunk group
-    exceeds 16,384 tokens. Because the id is nondeterministic, the
-    stamped frame is MATERIALIZED (eager localCheckpoint) before it
-    becomes a shuffle key: under a partial map-stage retry after a
-    shuffle-fetch failure (the SPARK-38388 class), recomputed
-    partitions could otherwise assign rows to different chunks while
-    other reducers had already fetched old output — double-counting or
-    dropping lane votes near the majority threshold (ADVICE r06).
-    Callers with a real position column pay nothing. (The pre-r06
-    no-pos_col single-pass form silently wrapped its lanes past 65,535
-    tokens — ADVICE r05; the internal chunking removes the limit
-    instead of guarding it.)
+    fold to the doc totals. The chunk is ``pos_col >> 14``, where
+    ``pos_col`` is the caller's 0-based token position: the chunk
+    SPLIT is arbitrary for vote sums (any partition of a doc's tokens
+    yields the same totals), and positions are unique per doc so no
+    chunk group exceeds 16,384 tokens. (The pre-r06 single-pass form
+    silently wrapped its lanes past 65,535 tokens — ADVICE r05; the
+    chunking removes the limit instead of guarding it.)
 
     r14 (guide §1.2 "per-task work" + §7.3 driver cost): the packed
     lanes parse the hex digest with 8 ``conv`` calls of 8 chars each
@@ -246,20 +237,13 @@ def simhash_signature(
     its map side dedupes fully because one doc's exploded tokens never
     split across partitions. Measured on the sf0.1 signature stage:
     1.96 s -> 1.45 s min-of-5, signatures byte-identical."""
-    # integer shift, not float division: a double mantissa cannot hold
-    # the top of the 64-bit id space, so `/ 16384` could blur chunk
-    # boundaries there; >> 14 is exact floor division for any
-    # non-negative long
-    pos = F.col(pos_col) if pos_col is not None else F.monotonically_increasing_id()
+    # integer shift, not float division: >> 14 is exact floor division
+    # for any non-negative long
     base = tokens_df.select(
         F.col(key),
-        F.shiftright(pos.cast("long"), _CHUNK_SHIFT).alias("__chunk"),
+        F.shiftright(F.col(pos_col).cast("long"), _CHUNK_SHIFT).alias("__chunk"),
         F.col(token_col).alias("__tok"),
     )
-    if pos_col is None:
-        # pin the nondeterministic id-derived chunk assignment before
-        # it becomes a shuffle key (see docstring: partial-retry class)
-        base = base.localCheckpoint(eager=True)
     counted = base.groupBy(key, "__chunk", "__tok").agg(F.count("*").alias("__c"))
     counted = counted.withColumn(
         "__h",

@@ -75,41 +75,22 @@ class CompactionInProgressError(RuntimeError):
 _HOSTNAME = os.uname().nodename
 
 
-def _holder_dead(holder: str) -> bool:
-    """Same-host pid-liveness probe (ADVICE r12): a lease whose
-    recorded pid no longer exists on THIS host belongs to a crashed
-    holder — crash-replay of a promote should recover immediately
-    instead of waiting out the TTL. Only a ``host=`` match makes the
-    probe meaningful; unverifiable holders (other host, old format,
-    unparsable) keep the TTL as the sole steal trigger. A recycled
-    pid can make a dead holder look alive — that false negative is
-    exactly what the TTL fallback still covers."""
-    fields = dict(f.split("=", 1) for f in holder.split() if "=" in f)
-    if fields.get("host") != _HOSTNAME or not fields.get("pid", "").isdigit():
-        return False
-    try:
-        os.kill(int(fields["pid"]), 0)
-    except ProcessLookupError:
-        return True
-    except OSError:
-        pass  # EPERM etc.: the pid exists
-    return False
-
-
-def _holder_alive(holder: str) -> bool:
-    """Positive counterpart of :func:`_holder_dead`: the holder is a
-    same-host, parseable pid that EXISTS right now. Used by the TTL
-    branch (ADVICE r13): a holder past the TTL that is verifiably
-    still running (a daily sync longer than 900 s) must NOT be stolen
-    — stealing would re-open the concurrent double-run the lease
-    exists to prevent. Unverifiable holders (other host, old format)
-    return False here AND in ``_holder_dead``, keeping the plain TTL
+def _holder_pid_exists(holder: str) -> bool | None:
+    """Same-host pid-liveness probe for a lease holder: True when the
+    recorded pid exists on THIS host right now, False when it is gone,
+    None when the holder cannot be verified (other host, old format,
+    unparsable). A gone pid is a crashed holder — crash-replay of a
+    promote recovers immediately instead of waiting out the TTL
+    (ADVICE r12). An existing pid past the TTL is a holder still
+    running (a daily sync longer than 900 s) and must NOT be stolen —
+    stealing would re-open the concurrent double-run the lease exists
+    to prevent (ADVICE r13). Unverifiable holders keep the plain TTL
     steal as their only recovery. Residual: a recycled pid can make a
-    crashed holder look alive past the TTL — the error message names
-    the lease file for operator removal, the documented escape."""
+    crashed holder look alive — the error message names the lease file
+    for operator removal, the documented escape."""
     fields = dict(f.split("=", 1) for f in holder.split() if "=" in f)
     if fields.get("host") != _HOSTNAME or not fields.get("pid", "").isdigit():
-        return False
+        return None
     try:
         os.kill(int(fields["pid"]), 0)
     except ProcessLookupError:
@@ -210,10 +191,11 @@ def register_lease(main_path: str, purpose: str):
             except OSError:
                 continue  # holder released between the create and the stat
             age = time.time() - observed.st_mtime
-            if _holder_dead(holder):
+            alive = _holder_pid_exists(holder)
+            if alive is False:
                 _steal_lease(lease, observed)  # on failure, retry re-examines
                 continue
-            if age < LEASE_TTL_S or _holder_alive(holder):
+            if age < LEASE_TTL_S or alive:
                 raise ConcurrentWriterError(
                     f"{root}: another writer holds the register lease "
                     f"({holder}, {age:.0f}s old); registers are "

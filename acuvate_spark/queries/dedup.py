@@ -496,8 +496,6 @@ _EMB_BUCKET_TARGET = 32
 # config therefore STEPS at the threshold (occupancy up to ~256 on
 # the floor -> <= 32 adaptive) by design.
 _EMB_ADAPTIVE_MIN_N = 2 ** (2 * _EMB_BITS)
-_EMB_SIZE_GATE_BYTES = 16 * 1024 * 1024  # skip the count job when the
-# embeddings input is far below _EMB_ADAPTIVE_MIN_N rows on disk
 _EMB_RECALL_MISS = 0.01  # adaptive bands sized for >= 99% recall
 
 
@@ -529,24 +527,6 @@ def _emb_lsh_config(n: int) -> tuple[int, int, list[list[float]]]:
         [round(rng.gauss(0.0, 1.0), 6) for _ in range(64)] for _ in range(bits * bands)
     ]
     return bits, bands, planes
-
-
-def _input_bytes(spark, path: str) -> int | None:
-    """Total on-disk bytes under ``path`` via the ENGINE's Hadoop
-    FileSystem — the same listing machinery the scan itself uses, so
-    the size gate works on every store Spark can read (``file:``,
-    ``hdfs:``, ``s3a:``, ``abfs:``, ...), not just the driver-local
-    filesystem (ADVICE r09: the old ``os.path``/``os.walk`` sizing
-    silently yielded 0 on any non-local URI, pinning the floor LSH
-    config — and its n^2/2^bits candidate term — forever). Returns
-    ``None`` when the listing itself fails; callers MUST then fall
-    back to paying the count job rather than assuming "small"."""
-    try:
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        return int(fs.getContentSummary(jpath).getLength())
-    except Exception:
-        return None
 
 
 def _footer_rows(spark, path: str) -> int | None:
@@ -585,86 +565,24 @@ def _footer_rows(spark, path: str) -> int | None:
         return None
 
 
-def _sampled_bytes_per_row(spark, path: str) -> float | None:
-    """Remote-store calibration (VERDICT r11 item 6): when footers are
-    not directly readable (remote URI) but the filesystem LISTS,
-    derive bytes/row from ONE file — its length from the listing, its
-    row count from a one-file ``count()`` job (parquet count-star is
-    served from footer metadata by the scan, so the job moves no data
-    pages). ``None`` when nothing lists or every listed file is
-    empty; callers then fall back to the assumed-~115 B/row gate."""
-    try:
-        jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        it = fs.listFiles(jpath, True)
-        while it.hasNext():
-            st = it.next()
-            if not st.getPath().getName().endswith(".parquet"):
-                continue
-            if st.getLen() <= 0:
-                continue
-            rows = spark.read.parquet(st.getPath().toString()).count()
-            if rows > 0:
-                return st.getLen() / rows
-        return None
-    except Exception:
-        return None
-
-
-def _corpus_n_gated(
-    raw, sf_dir: str, table: str, gate_bytes: int, count_fn, threshold_rows: int
-) -> int:
+def _corpus_n_gated(raw, sf_dir: str, table: str, count_fn, threshold_rows: int) -> int:
     """Corpus size for an adaptive-LSH config choice, paying a count
     job ONLY when the input could possibly cross the adaptive
-    threshold — verification scales stay zero-extra-jobs. Three
-    probes, most-exact first: parquet-footer row counts (local paths;
-    the corpus is base rows + predicate clones ≤ 2x base rows, so
-    2·rows < threshold PROVES the floor config is right); a ONE-FILE
-    sampled bytes/row when the store lists but footers don't read
-    (r12 — total bytes / sampled bytes-per-row estimates rows, taken
-    with a 25% sampling margin so a short-row corpus can't sneak past
-    an assumed-row-width constant); and last the fixed byte gate
-    (sized at the corpus' measured ~115 B/row with margin). Unknown on
-    every probe (unlistable path) pays the count job: the gate is an
-    optimization and must never silently pin the floor config."""
-    path = f"{sf_dir}/{table}.parquet"
-    rows = _footer_rows(raw.sparkSession, path)
-    if rows is not None:
-        return 0 if 2 * rows < threshold_rows else count_fn(raw)
-    size = _input_bytes(raw.sparkSession, path)
-    if size is None:
-        return count_fn(raw)
-    bpr = _sampled_bytes_per_row(raw.sparkSession, path)
-    if bpr is not None:
-        # the footer branch's 2x-clones shape, times 1.25 for the
-        # sampling error of a single file. ONE sampled file can still
-        # misrepresent the corpus by more than 25% (an atypically
-        # wide or poorly-compressed file understates total rows), so
-        # the skip is trusted only when the estimate is DECISIVELY
-        # below the threshold — anything inside the 2x uncertainty
-        # band pays the count job, keeping the contract that the gate
-        # never silently pins the floor config (ADVICE r12).
-        if 2.5 * (size / bpr) < 0.5 * threshold_rows:
-            return 0
-        return count_fn(raw)
-    if size < gate_bytes:
+    threshold — verification scales stay zero-extra-jobs. The probe is
+    the exact parquet-footer row count (local paths; the corpus is
+    base rows + predicate clones ≤ 2x base rows, so 2·rows < threshold
+    PROVES the floor config is right). Unknown footers (remote store,
+    unreadable path) pay the count job: the gate is an optimization
+    and must never silently pin the floor config."""
+    rows = _footer_rows(raw.sparkSession, f"{sf_dir}/{table}.parquet")
+    if rows is not None and 2 * rows < threshold_rows:
         return 0
     return count_fn(raw)
 
 
-# LAST-RESORT fallback only (local paths take the exact footer-row
-# probe; a store that lists takes the one-file sampled bytes/row —
-# r12): sized from the threshold at the corpus' measured ~115 B/row
-# with the margin under 1 the gate contract requires — 12 MiB ≈ 109k
-# rows, safely below the 131,072 adaptive threshold (ADVICE r10: the
-# old 16 MiB ≈ 146k opened PAST it, so 131k–146k corpora skipped the
-# count job while already over the threshold).
-_DOC_SIZE_GATE_BYTES = 12 * 1024 * 1024
-
-
 def _doc_corpus_n(spark, sf_dir: str) -> int:
     """Document-corpus size (base + clones) for ``simhash_lsh_config``
-    — same footer-rows-then-bytes gate as the embedding config."""
+    — same footer-rows gate as the embedding config."""
     raw = load_table(spark, sf_dir, "documents").select("doc_id")
 
     def count(raw):
@@ -675,12 +593,7 @@ def _doc_corpus_n(spark, sf_dir: str) -> int:
         return int(cnt["n"] + cnt["nc"])
 
     return _corpus_n_gated(
-        raw,
-        sf_dir,
-        "documents",
-        _DOC_SIZE_GATE_BYTES,
-        count,
-        dedup_ops._SIMHASH_ADAPTIVE_MIN_N,
+        raw, sf_dir, "documents", count, dedup_ops._SIMHASH_ADAPTIVE_MIN_N
     )
 
 
@@ -691,9 +604,7 @@ def _emb_corpus_n(raw, sf_dir: str) -> int:
         cnt = _sem_k_agg(raw).first()
         return int(cnt["n"] + cnt["nc"])
 
-    return _corpus_n_gated(
-        raw, sf_dir, "embeddings", _EMB_SIZE_GATE_BYTES, count, _EMB_ADAPTIVE_MIN_N
-    )
+    return _corpus_n_gated(raw, sf_dir, "embeddings", count, _EMB_ADAPTIVE_MIN_N)
 
 
 def _emb_near_dup_pairs(

@@ -80,22 +80,6 @@ def pid_connections(spark, sf_dir):
     polyline crosses few boxes), so expanding its i<j pairs inside
     the row is both cheaper and skew-proof — per-line state is
     O(boxes touched), never O(lines)."""
-    return _pid_connections_plan(spark, sf_dir)
-
-
-def _pid_connections_plan(spark, sf_dir, dense: bool = False, dense_cap: int | None = None):
-    """Shared plan for pid_connections. ``dense=True`` switches the
-    pair expansion from the in-row i<j generator to a per-line
-    SELF-JOIN over the distinct touch pairs — the documented fallback
-    (SCALING.md) for corpora whose per-group touched-box sets outgrow
-    the geometry assumption (symptom: executor GCLocker retries on
-    ~256 MB single allocations in the collect_set stage). The
-    self-join keeps per-row state O(1) at the cost of shuffling the
-    touch pairs twice; results are identical. ``dense_cap`` (dense
-    path only) additionally DROPS lines touching more than that many
-    boxes — an explicit degradation switch for adversarial geometry
-    (a line crossing everything), changing results by construction
-    and therefore never on by default."""
     s = load_table(spark, sf_dir, "supplier")
     p = load_table(spark, sf_dir, "part")
     boxes = synth_boxes(s)
@@ -118,29 +102,19 @@ def _pid_connections_plan(spark, sf_dir, dense: bool = False, dense_cap: int | N
     touched_pairs = grid_containment_join(
         repartition_for_compute(pxy), boxes, margin=1.0, cell=10, keys=("doc_id",)
     )
-    if dense:
-        touch = touched_pairs.select("line_id", "box_id").distinct()
-        if dense_cap is not None:
-            counts = touch.groupBy("line_id").agg(F.count("*").alias("__n"))
-            keep = counts.where(F.col("__n") <= dense_cap).select("line_id")
-            touch = touch.join(keep, "line_id", "left_semi")
-        a = touch.select("line_id", F.col("box_id").alias("box_a"))
-        b = touch.select("line_id", F.col("box_id").alias("box_b"))
-        pairs = a.join(b, "line_id").where(F.col("box_a") < F.col("box_b"))
-    else:
-        touched = touched_pairs.groupBy("line_id").agg(
-            F.sort_array(F.collect_set("box_id")).alias("bs")
-        )
-        # i<j expansion via two codegen-friendly generators (posexplode +
-        # slice + explode) — measured 2.4x faster than the equivalent
-        # higher-order transform/flatten, which is interpreted per element
-        pairs = touched.select(
-            "line_id", "bs", F.posexplode("bs").alias("i", "box_a")
-        ).select(
-            "line_id",
-            "box_a",
-            F.explode(F.expr("slice(bs, i + 2, size(bs))")).alias("box_b"),
-        )
+    touched = touched_pairs.groupBy("line_id").agg(
+        F.sort_array(F.collect_set("box_id")).alias("bs")
+    )
+    # i<j expansion via two codegen-friendly generators (posexplode +
+    # slice + explode) — measured 2.4x faster than the equivalent
+    # higher-order transform/flatten, which is interpreted per element
+    pairs = touched.select(
+        "line_id", "bs", F.posexplode("bs").alias("i", "box_a")
+    ).select(
+        "line_id",
+        "box_a",
+        F.explode(F.expr("slice(bs, i + 2, size(bs))")).alias("box_b"),
+    )
     return pairs.groupBy("box_a", "box_b").agg(
         F.min("line_id").alias("first_line"), F.count("*").alias("n_lines")
     )

@@ -166,3 +166,24 @@ def test_registry_uncommitted_version_is_invisible(spark, tmp_path):
 
     # the partial (empty) newer version is ignored; v1 still serves
     assert reg.table("equip").count() == 1
+
+
+def test_backwards_clock_step_still_serves_latest_write(spark, registry, monkeypatch):
+    """Versions are named by wall-clock ns and the highest committed
+    number is current. A clock that steps BACK between two writes (an
+    NTP correction) must not leave the second, committed write hidden
+    behind the first: the new version is named at least current + 1."""
+    import itertools
+    import time
+
+    clock = itertools.count(2 * 10**18, -(10**9))  # every read is 1 s earlier
+    monkeypatch.setattr(time, "time_ns", lambda: next(clock))
+    registry.upsert_tags(
+        "Equipment", _incoming(spark, [("E17-A_F-1001", "pump A", "DOC-1", "amy@example.com")])
+    )
+    registry.upsert_tags(
+        "Equipment",
+        _incoming(spark, [("E17-A_F-1001", "pump A rev2", "DOC-1", "amy@example.com")]),
+    )
+    monkeypatch.undo()
+    assert [r["description"] for r in registry.table("Equipment").collect()] == ["pump A rev2"]

@@ -18,13 +18,22 @@ from acuvate_spark.queries import REGISTRY
 from acuvate_spark.tables import load_table
 
 
+# (AUTO_SHUFFLE_MIN_K, BROADCAST_MAX_K) that route every k_hint to one
+# strategy
+_FORCED = {
+    "broadcast": (1 << 62, 1 << 62),
+    "blas": (-1, 1 << 62),
+    "shuffled": (-1, -1),
+}
+
+
 @contextlib.contextmanager
-def _mode(spark, mode):
-    spark.conf.set(assign._MODE_CONF, mode)
-    try:
+def _mode(mode):
+    shuffle_min_k, broadcast_max_k = _FORCED[mode]
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(assign, "AUTO_SHUFFLE_MIN_K", shuffle_min_k)
+        mp.setattr(assign, "BROADCAST_MAX_K", broadcast_max_k)
         yield
-    finally:
-        spark.conf.unset(assign._MODE_CONF)
 
 
 def _frames(spark, sf_dir, k):
@@ -44,7 +53,7 @@ def test_shuffled_assign_identical_to_broadcast(spark, sf_dir, k, n_best):
     e, cent = _frames(spark, sf_dir, k)
     got = {}
     for mode in ("broadcast", "shuffled", "blas"):
-        with _mode(spark, mode):
+        with _mode(mode):
             got[mode] = _rows(assign.nearest_centroids(e, cent, k_hint=k, n_best=n_best))
     assert len(got["broadcast"]) > 0
     assert got["broadcast"] == got["shuffled"] == got["blas"]
@@ -55,9 +64,9 @@ def test_shuffled_assign_empty_centroids_matches_broadcast(spark, sf_dir):
     empty_cent = cent.limit(0)
     empty_vec = e.limit(0)
     for mode in ("shuffled", "blas"):
-        with _mode(spark, mode):
+        with _mode(mode):
             assert assign.nearest_centroids(e, empty_cent, k_hint=0).count() == 0
-        with _mode(spark, mode):
+        with _mode(mode):
             assert assign.nearest_centroids(empty_vec, cent, k_hint=5).count() == 0
 
 
@@ -68,7 +77,7 @@ def test_swapped_queries_identical_on_fixture(spark, sf_dir, name):
     for the swap)."""
     got = {}
     for mode in ("broadcast", "shuffled", "blas"):
-        with _mode(spark, mode):
+        with _mode(mode):
             got[mode] = _rows(REGISTRY[name].fn(spark, sf_dir))
     assert len(got["broadcast"]) > 0
     assert got["broadcast"] == got["shuffled"] == got["blas"]
@@ -98,7 +107,7 @@ def test_shuffled_plan_has_no_krow_broadcast_nested_loop(spark, sf_dir):
     sort-merge) on the cell id. In broadcast mode the single nested
     loop IS the K-row cross — the shape the swap removes."""
     e, cent = _frames(spark, sf_dir, 16)
-    with _mode(spark, "shuffled"):
+    with _mode("shuffled"):
         plan = _plan(assign.nearest_centroids(e, cent, k_hint=16))
     assert "CartesianProduct" not in plan
     assert _node_count(plan, "BroadcastNestedLoopJoin") == 3
@@ -108,7 +117,7 @@ def test_shuffled_plan_has_no_krow_broadcast_nested_loop(spark, sf_dir):
     assert any(
         m in plan for m in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
     )
-    with _mode(spark, "broadcast"):
+    with _mode("broadcast"):
         bplan = _plan(assign.nearest_centroids(e, cent, k_hint=16))
     assert _node_count(bplan, "BroadcastNestedLoopJoin") == 1
 
@@ -163,14 +172,14 @@ def test_shuffled_assign_on_skewed_corpus_matches_broadcast(spark, sf_dir):
     )
     got = {}
     for mode in ("broadcast", "shuffled", "blas"):
-        with _mode(spark, mode):
+        with _mode(mode):
             got[mode] = _rows(assign.nearest_centroids(skewed, cent, k_hint=50, n_best=2))
     assert len(got["broadcast"]) > 0
     assert got["broadcast"] == got["shuffled"] == got["blas"]
 
 
 def test_blas_assign_block_count_invariant(spark, sf_dir):
-    """The blasBlocks fan-out is a memory lever, never a result lever:
+    """The blas block fan-out is a memory lever, never a result lever:
     1 block (everything in one cogroup) and 7 blocks (multi-block with
     uneven hash populations) must produce identical rows, and both
     must match broadcast. Pins the margin logic across block
@@ -178,16 +187,13 @@ def test_blas_assign_block_count_invariant(spark, sf_dir):
     centroids would silently drop candidates, which this would catch
     because every block sees ALL centroids by construction."""
     e, cent = _frames(spark, sf_dir, 50)
-    with _mode(spark, "broadcast"):
+    with _mode("broadcast"):
         want = _rows(assign.nearest_centroids(e, cent, k_hint=50, n_best=2))
     got = {}
     for nb in (1, 7):
-        spark.conf.set(assign._BLAS_BLOCKS_CONF, str(nb))
-        try:
-            with _mode(spark, "blas"):
-                got[nb] = _rows(assign.nearest_centroids(e, cent, k_hint=50, n_best=2))
-        finally:
-            spark.conf.unset(assign._BLAS_BLOCKS_CONF)
+        with pytest.MonkeyPatch.context() as mp, _mode("blas"):
+            mp.setattr(assign, "_blas_blocks", lambda spark, nb=nb: nb)
+            got[nb] = _rows(assign.nearest_centroids(e, cent, k_hint=50, n_best=2))
     assert got[1] == got[7] == want
 
 
@@ -197,7 +203,7 @@ def test_blas_plan_shape(spark, sf_dir):
     under the capacity bound by routing), and no nested loop or
     cartesian appears anywhere."""
     e, cent = _frames(spark, sf_dir, 16)
-    with _mode(spark, "blas"):
+    with _mode("blas"):
         plan = _plan(assign.nearest_centroids(e, cent, k_hint=16))
     assert "FlatMapCoGroupsInPandas" in plan
     assert "CartesianProduct" not in plan
@@ -216,7 +222,7 @@ def test_blas_zero_norm_centroid_never_poisons_block(spark, sf_dir):
     bad = spark.createDataFrame(
         [(999_999, [0.0] * 64)], "centroid_id long, ce array<float>"
     )
-    with _mode(spark, "blas"):
+    with _mode("blas"):
         want = _rows(assign.nearest_centroids(e, cent, k_hint=16, n_best=2))
         got = _rows(
             assign.nearest_centroids(e, cent.unionByName(bad), k_hint=17, n_best=2)
@@ -233,25 +239,11 @@ def test_blas_zero_norm_probe_emits_no_candidates(spark, sf_dir):
     bad = spark.createDataFrame(
         [(888_888, [0.0] * 64)], "vec_id long, embedding array<float>"
     )
-    with _mode(spark, "blas"):
+    with _mode("blas"):
         out = assign.nearest_centroids(
             e.unionByName(bad), cent, k_hint=16, n_best=1
         )
         assert out.where(F.col("vec_id") == 888_888).count() == 0
-
-
-def test_blas_block_conf_validated(spark, sf_dir):
-    """ADVICE r11: blasBlocks=0 used to surface as an opaque
-    REMAINDER_BY_ZERO from pmod deep in the plan; now it raises at the
-    conf, naming the key."""
-    e, cent = _frames(spark, sf_dir, 5)
-    spark.conf.set(assign._BLAS_BLOCKS_CONF, "0")
-    try:
-        with _mode(spark, "blas"):
-            with pytest.raises(ValueError, match=assign._BLAS_BLOCKS_CONF):
-                assign.nearest_centroids(e, cent, k_hint=5)
-    finally:
-        spark.conf.unset(assign._BLAS_BLOCKS_CONF)
 
 
 def test_blas_multi_chunk_matches_broadcast(spark, sf_dir, monkeypatch):
@@ -262,8 +254,8 @@ def test_blas_multi_chunk_matches_broadcast(spark, sf_dir, monkeypatch):
     scales every group is a single chunk."""
     monkeypatch.setattr(assign, "_BLAS_CHUNK_DOUBLES", 64)
     e, cent = _frames(spark, sf_dir, 50)
-    with _mode(spark, "broadcast"):
+    with _mode("broadcast"):
         want = _rows(assign.nearest_centroids(e, cent, k_hint=50, n_best=2))
-    with _mode(spark, "blas"):
+    with _mode("blas"):
         got = _rows(assign.nearest_centroids(e, cent, k_hint=50, n_best=2))
     assert got == want

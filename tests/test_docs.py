@@ -201,6 +201,7 @@ def test_coverage_rows_track_rewritten_query_strategies():
         "triangle_count": (["degree-then-id"], ["id-oriented"]),
         "link_prediction_jaccard": (["supplier-PAIR"], ["wedge"]),
         "running_totals": (["two-level"], []),
+        "pid_connections": ([], ["dense fallback"]),
     }
     cov = (ROOT / "COVERAGE.md").read_text()
     for query, (required, forbidden) in _PINS.items():

@@ -170,43 +170,13 @@ def test_minhash_lsh_recall_vs_exact_jaccard(spark, sf_dir):
 # ---------------------------------------------------------------- size gate
 
 
-def test_input_bytes_engine_listing_matches_os(spark, sf_dir):
-    """The adaptive-config size gate sizes its input via the engine's
-    Hadoop FileSystem (ADVICE r09: os.walk returned 0 on any non-local
-    URI, silently pinning the floor LSH config). The listing must agree
-    with the local filesystem on a plain path AND resolve scheme-
-    qualified URIs os.path cannot (file:/... stands in for s3a://...
-    here — the same non-os-visible shape)."""
-    import os
-
-    from acuvate_spark.queries.dedup import _input_bytes
-
-    path = f"{sf_dir}/embeddings.parquet"
-    expected = (
-        os.path.getsize(path)
-        if os.path.isfile(path)
-        else sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, fs in os.walk(path)
-            for f in fs
-        )
-    )
-    assert _input_bytes(spark, path) == expected
-    assert _input_bytes(spark, "file:" + path) == expected
-    # unlistable input -> None, never 0 (0 means "known small")
-    assert _input_bytes(spark, f"{sf_dir}/no_such_table.parquet") is None
-
-
 def test_corpus_gate_pays_count_when_size_unknown(spark, sf_dir, tmp_path):
-    """An unlistable path must fall through to the count job — the
+    """An unreadable footer must fall through to the count job — the
     gate is an optimization, not a correctness gate, so 'size unknown'
     can never be treated as 'small' (that would reinstate the fixed-
     bucket-space cliff on exactly the object stores the adaptive
-    banding targets). Probe order (VERDICT r10 item 1): exact footer
-    row counts decide when readable; the byte heuristic only gates
-    footer-unreadable (remote/non-parquet) inputs."""
-    import os
-
+    banding targets). Exact footer row counts decide when readable
+    (VERDICT r10 item 1); anything else pays the count job."""
     from acuvate_spark.queries.dedup import _corpus_n_gated
     from acuvate_spark.tables import load_table
 
@@ -217,61 +187,48 @@ def test_corpus_gate_pays_count_when_size_unknown(spark, sf_dir, tmp_path):
         calls.append(1)
         return 12345
 
-    # unknown on both probes (bad path) -> count job runs
-    assert _corpus_n_gated(raw, sf_dir, "no_such_table", 1, count, 1) == 12345
+    # unknown footers (bad path) -> count job runs
+    assert _corpus_n_gated(raw, sf_dir, "no_such_table", count, 1) == 12345
     assert calls == [1]
     # footer rows provably below the threshold -> gate short-circuits,
-    # no count job — even with a byte gate that would say "big"
+    # no count job
     calls.clear()
-    assert _corpus_n_gated(raw, sf_dir, "embeddings", 1, count, 1 << 60) == 0
+    assert _corpus_n_gated(raw, sf_dir, "embeddings", count, 1 << 60) == 0
     assert calls == []
-    # footer rows past the threshold -> count job runs even though the
-    # byte gate alone would have said "small" (the r10 silent-floor fix)
+    # footer rows past the threshold -> count job runs
     calls.clear()
-    assert _corpus_n_gated(raw, sf_dir, "embeddings", 1 << 60, count, 1) == 12345
+    assert _corpus_n_gated(raw, sf_dir, "embeddings", count, 1) == 12345
     assert calls == [1]
-    # footer-unreadable but listable (no parquet footers under the
-    # path) -> the storage-agnostic byte gate decides, both directions
+    # footer-unreadable (no parquet footers under the path) -> the
+    # count job runs at either threshold
     fake = tmp_path / "fake.parquet"
     fake.mkdir()
     (fake / "blob.bin").write_bytes(b"x" * 1024)
     calls.clear()
-    assert _corpus_n_gated(raw, str(tmp_path), "fake", 1 << 60, count, 1) == 0
-    assert calls == []
-    assert _corpus_n_gated(raw, str(tmp_path), "fake", 1, count, 1) == 12345
-    assert calls == [1]
+    assert _corpus_n_gated(raw, str(tmp_path), "fake", count, 1 << 60) == 12345
+    assert _corpus_n_gated(raw, str(tmp_path), "fake", count, 1) == 12345
+    assert calls == [1, 1]
 
 
 def test_short_doc_corpus_crosses_threshold_under_byte_gate(spark, tmp_path):
     """VERDICT r10 item 1 / the last silent-floor path: a corpus of
     SHORT rows can cross the n = 131,072 adaptive threshold while its
-    on-disk bytes stay under any plausible byte gate (the old 16 MiB
-    gate assumed ~115 B/row). The footer-row probe must catch it: the
-    gate pays the count job and returns the true corpus size, engaging
-    the adaptive banding the byte heuristic would have silently
-    skipped."""
-    import os
-
+    on-disk bytes stay under any plausible byte gate (a 16 MiB gate
+    assumes ~115 B/row). The footer-row probe must catch it: the gate
+    pays the count job and returns the true corpus size, engaging the
+    adaptive banding a byte heuristic would have silently skipped."""
     from pyspark.sql import functions as F
 
     from acuvate_spark.operators.dedup import (
         _SIMHASH_ADAPTIVE_MIN_N,
         simhash_lsh_config,
     )
-    from acuvate_spark.queries.dedup import (
-        _DOC_SIZE_GATE_BYTES,
-        _doc_corpus_n,
-        _footer_rows,
-        _input_bytes,
-    )
+    from acuvate_spark.queries.dedup import _doc_corpus_n, _footer_rows
 
     n = _SIMHASH_ADAPTIVE_MIN_N  # 131,072 rows, each a handful of bytes
     spark.range(n).select(F.col("id").alias("doc_id")).write.parquet(
         str(tmp_path / "documents.parquet")
     )
-    # the scenario's premise: past the threshold yet under the byte gate
-    size = _input_bytes(spark, f"{tmp_path}/documents.parquet")
-    assert size is not None and size < _DOC_SIZE_GATE_BYTES
     assert _footer_rows(spark, f"{tmp_path}/documents.parquet") == n
 
     got = _doc_corpus_n(spark, str(tmp_path))
@@ -386,9 +343,9 @@ def test_simhash_adaptive_pairs_identical_to_floor(spark, sf_dir):
 
 
 def test_doc_corpus_n_gate(spark, sf_dir):
-    """The simhash count job is byte-gated exactly like the embedding
-    one: fixture scales skip it (return 0 -> floor config), and the
-    gate uses the engine listing so scheme-qualified URIs work."""
+    """The simhash count job is gated exactly like the embedding one:
+    fixture scales skip it (return 0 -> floor config), and the footer
+    probe reads ``file:`` URIs as well as plain paths."""
     from acuvate_spark.queries.dedup import _doc_corpus_n
 
     assert _doc_corpus_n(spark, sf_dir) == 0
@@ -471,78 +428,6 @@ def test_emb_hot_bucket_path_blocks_cover_all_pairs(spark):
         f"{len(want - got)} missing, {len(got - want)} extra; "
         f"missing sample {sorted(want - got)[:5]}"
     )
-
-
-def test_remote_gate_calibrates_bytes_per_row_from_one_file(spark, tmp_path, monkeypatch):
-    """VERDICT r11 item 6: when footers don't read (remote URI) but
-    the store lists, the gate derives bytes/row from ONE sampled file
-    instead of assuming ~115 B/row — so a SHORT-row corpus whose bytes
-    sit under the fixed gate still pays the count job, while a corpus
-    the sample proves small still skips it. The fixed constant stays
-    as last resort (pinned above on a no-parquet dir)."""
-    from pyspark.sql import functions as F
-
-    from acuvate_spark.queries import dedup as qd
-
-    n = 3000
-    spark.range(n).select(F.col("id").alias("doc_id")).repartition(2).write.parquet(
-        str(tmp_path / "tiny.parquet")
-    )
-    # simulate a footer-unreadable store: listing and per-file reads
-    # work, direct pyarrow footer access doesn't
-    monkeypatch.setattr(qd, "_footer_rows", lambda spark, path: None)
-    bpr = qd._sampled_bytes_per_row(spark, f"{tmp_path}/tiny.parquet")
-    assert bpr is not None and 1.0 < bpr < 115.0  # genuinely short rows
-
-    calls = []
-
-    def count(df):
-        calls.append(1)
-        return 54321
-
-    raw = spark.range(1)
-    # short rows + low threshold: the sampled estimate (~n rows) says
-    # "could cross" -> count job, even though bytes << the fixed gate
-    got = qd._corpus_n_gated(raw, str(tmp_path), "tiny", 1 << 60, count, n)
-    assert got == 54321 and calls == [1]
-    # same corpus against a huge threshold: the sample PROVES small ->
-    # no count job, even with a fixed gate that would say "big"
-    calls.clear()
-    got = qd._corpus_n_gated(raw, str(tmp_path), "tiny", 1, count, 1 << 60)
-    assert got == 0 and calls == []
-
-
-def test_remote_gate_band_near_threshold_pays_the_count_job(spark, tmp_path, monkeypatch):
-    """ADVICE r12: the one-file bytes/row sample can misrepresent the
-    corpus by more than its 25% margin, so an estimate that lands
-    inside the 2x uncertainty band below the threshold must fall back
-    to the count job rather than silently pin the floor config. Only
-    a DECISIVE estimate (under half the threshold) skips it."""
-    from pyspark.sql import functions as F
-
-    from acuvate_spark.queries import dedup as qd
-
-    n = 3000
-    spark.range(n).select(F.col("id").alias("doc_id")).repartition(2).write.parquet(
-        str(tmp_path / "tiny.parquet")
-    )
-    monkeypatch.setattr(qd, "_footer_rows", lambda spark, path: None)
-
-    calls = []
-
-    def count(df):
-        calls.append(1)
-        return 54321
-
-    raw = spark.range(1)
-    # estimate ~2.5n sits between 0.5x and 1x of a 3n threshold: the
-    # pre-band rule skipped here; the band routes it to the count job
-    got = qd._corpus_n_gated(raw, str(tmp_path), "tiny", 1 << 60, count, 3 * n)
-    assert got == 54321 and calls == [1]
-    # decisively small (threshold 100x the estimate): still skips
-    calls.clear()
-    got = qd._corpus_n_gated(raw, str(tmp_path), "tiny", 1, count, 250 * n)
-    assert got == 0 and calls == []
 
 
 # ---------------------------------------------------------------------------

@@ -229,63 +229,37 @@ def test_cc_prepartition_gate_result_invariant(spark):
     assert gated == base
 
 
-def test_simhash_no_pos_col_exact_past_lane_limit(spark):
-    """ADVICE r05: without pos_col the old single-pass lanes were only
-    exact to 65,535 tokens per document — past that they silently
-    wrapped (or ANSI-overflowed mid-aggregate). The path now chunks
-    internally on monotonically_increasing_id, so a document LONGER
-    than the old limit must match the naive reference bit for bit —
-    alongside a short document through the same path."""
+def test_simhash_exact_past_lane_limit(spark):
+    """ADVICE r05: the old single-pass lanes were only exact to 65,535
+    tokens per document — past that they silently wrapped (or
+    ANSI-overflowed mid-aggregate). The signature now chunks on the
+    token position, so a document LONGER than the old limit, spread
+    over several partitions, must match the naive reference bit for
+    bit — alongside a short document through the same path."""
     from pyspark.sql import functions as F
 
     from acuvate_spark.operators.dedup import simhash_signature
 
     short = {5: [f"w{i % 40}" for i in range(120)]}
-    rows = [(doc, tok) for doc, toks in short.items() for tok in toks]
-    df = spark.createDataFrame(rows, "doc_id long, token string")
+    rows = [(doc, pos, tok) for doc, toks in short.items() for pos, tok in enumerate(toks)]
+    df = spark.createDataFrame(rows, "doc_id long, pos long, token string")
     got = {
         r["doc_id"]: r["sig"]
-        for r in simhash_signature(df, "doc_id", "token").collect()
+        for r in simhash_signature(df, "doc_id", "token", pos_col="pos").collect()
     }
     assert got == _simhash_reference(short)
 
     n_long = 0x10000 + 7
     long_df = spark.range(n_long).repartition(8).select(
         F.lit(9).alias("doc_id"),
+        F.col("id").alias("pos"),
         (F.col("id") % 50).cast("string").alias("token"),
     )
     got_long = {
         r["doc_id"]: r["sig"]
-        for r in simhash_signature(long_df, "doc_id", "token").collect()
+        for r in simhash_signature(long_df, "doc_id", "token", pos_col="pos").collect()
     }
     expected_long = _simhash_reference(
         {9: [str(i % 50) for i in range(n_long)]}
     )
     assert got_long == expected_long
-
-
-def test_simhash_no_pos_col_pins_chunk_assignment_before_shuffle(spark):
-    """ADVICE r06: the no-pos_col chunk key derives from
-    monotonically_increasing_id — a nondeterministic expression that
-    must NOT feed a shuffle unmaterialized (partial map-stage retries
-    could reassign rows to different chunks while reducers hold old
-    output). Pin that the path materializes: the stamped frame shows
-    up as a checkpointed LogicalRDD scan, while the pos_col path stays
-    a pure parquet-free projection with no checkpoint."""
-    from pyspark.sql import functions as F
-
-    from acuvate_spark.operators.dedup import simhash_signature
-
-    df = spark.range(100).select(
-        F.lit(1).alias("doc_id"), (F.col("id") % 9).cast("string").alias("token")
-    )
-    plan_no_pos = simhash_signature(df, "doc_id", "token")._jdf.queryExecution().toString()
-    assert "LogicalRDD" in plan_no_pos or "Scan ExistingRDD" in plan_no_pos
-
-    with_pos = df.withColumn("pos", F.col("doc_id") * 0 + F.monotonically_increasing_id())
-    plan_pos = (
-        simhash_signature(with_pos, "doc_id", "token", pos_col="pos")
-        ._jdf.queryExecution()
-        .toString()
-    )
-    assert "LogicalRDD" not in plan_pos and "Scan ExistingRDD" not in plan_pos

@@ -171,9 +171,8 @@ def test_semdedup_large_k_plans_no_bnl(spark, sf_dir, tmp_path, monkeypatch):
     # the wrong shape
     assert bnl_count(plan) == 0, f"expected no BNL in blas shape, saw {bnl_count(plan)}"
     assert "FlatMapCoGroupsInPandas" in plan
-    spark.conf.set("spark.acuvate.assign.mode", "broadcast")
-    try:
-        forced = _plan(REGISTRY["semdedup_clusters"].fn(spark, str(tmp_path)))
-    finally:
-        spark.conf.unset("spark.acuvate.assign.mode")
+    from acuvate_spark.operators import assign
+
+    monkeypatch.setattr(assign, "AUTO_SHUFFLE_MIN_K", 1 << 62)
+    forced = _plan(REGISTRY["semdedup_clusters"].fn(spark, str(tmp_path)))
     assert bnl_count(forced) == 3  # the K-row cross, once per inlining

@@ -1,13 +1,11 @@
-"""Document-dimension spatial fixtures (VERDICT r06 item 1) and the
-dense-geometry fallback (item 4).
+"""Document-dimension spatial fixtures (VERDICT r06 item 1).
 
 The r06 sf1 smoke showed the four spatial/benchmark queries going
 super-linear because their synthetic inputs drew all geometry into one
 fixed canvas — corpus scale became density scale. The fixtures now
 carry a per-document id (constant boxes/lines per doc; doc_id joins
-the grid-cell key), so these tests pin (a) the per-document isolation
-invariants, (b) the dense fallback's exact equivalence to the in-row
-expansion, and (c) the cap's explicit degradation semantics.
+the grid-cell key), so these tests pin the per-document isolation
+invariants.
 """
 
 from __future__ import annotations
@@ -15,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from acuvate_spark.queries import REGISTRY
-from acuvate_spark.queries.pid import _LINES_PER_DOC, _pid_connections_plan
+from acuvate_spark.queries.pid import _LINES_PER_DOC
 from acuvate_spark.queries.synth import BOXES_PER_DOC
 
 
@@ -37,11 +35,6 @@ def test_doc_dimension_ratio_assumption_holds_in_fixtures(spark):
         # same number of documents on both sides
         assert -(-n_s // BOXES_PER_DOC) == -(-n_p // _LINES_PER_DOC)
     assert _LINES_PER_DOC == 20 * BOXES_PER_DOC
-
-
-def _frame_set(df):
-    cols = sorted(df.columns)
-    return {tuple(r) for r in df.select(*cols).collect()}
 
 
 def test_grid_containment_join_equals_naive_theta_any_cell(spark):
@@ -118,54 +111,3 @@ def test_distance_dedupe_domination_is_per_document(spark):
     assert len(out) > 0
     multi = out.groupby(["p_type", "cx"])["doc_id"].nunique()
     assert (multi > 1).any(), "expected same-class same-cx survivors in different docs"
-
-
-def test_pid_dense_fallback_matches_inrow_expansion(spark, sf_dir):
-    """The per-cell self-join fallback (SCALING.md's dense-geometry
-    escape hatch) must produce EXACTLY the in-row i<j expansion's
-    result on the normal fixture."""
-    normal = _frame_set(_pid_connections_plan(spark, sf_dir, dense=False))
-    dense = _frame_set(_pid_connections_plan(spark, sf_dir, dense=True))
-    assert normal == dense and len(normal) > 0
-
-
-def test_pid_dense_cap_drops_only_over_cap_lines(spark, sf_dir):
-    """dense_cap=N drops lines touching more than N boxes BEFORE pair
-    expansion: with a cap above the max touched-box count the result
-    is unchanged; with cap=1 no pairs survive (a pair needs >= 2
-    boxes on one line); with an intermediate cap the result is the
-    recomputed truth over only the kept lines."""
-    uncapped = _pid_connections_plan(spark, sf_dir, dense=True)
-    assert _frame_set(_pid_connections_plan(spark, sf_dir, dense=True, dense_cap=10**6)) == _frame_set(uncapped)
-    assert _pid_connections_plan(spark, sf_dir, dense=True, dense_cap=1).count() == 0
-    capped = _frame_set(_pid_connections_plan(spark, sf_dir, dense=True, dense_cap=2))
-    # the capped output is the exact truth over only the kept lines;
-    # recompute it in Python
-    from acuvate_spark.queries.synth import synth_boxes
-    from acuvate_spark.tables import load_table
-
-    boxes = {
-        (r["box_id"], r["doc_id"], r["bx1"], r["by1"], r["bx2"], r["by2"])
-        for r in synth_boxes(load_table(spark, sf_dir, "supplier")).collect()
-    }
-    parts = [r["p_partkey"] for r in load_table(spark, sf_dir, "part").select("p_partkey").collect()]
-    touch: dict[int, set[int]] = {}
-    for line in parts:
-        doc = line // _LINES_PER_DOC
-        for j in range(5):
-            x, y = (line * 3 + j * 7) % 110, (line * 11 + j * 5) % 110
-            for bid, bdoc, bx1, by1, bx2, by2 in boxes:
-                if bdoc == doc and bx1 - 1 <= x <= bx2 + 1 and by1 - 1 <= y <= by2 + 1:
-                    touch.setdefault(line, set()).add(bid)
-    expected: dict[tuple[int, int], list[int]] = {}
-    for line, bs in touch.items():
-        if len(bs) > 2:  # the cap drops these lines
-            continue
-        ordered = sorted(bs)
-        for i, a in enumerate(ordered):
-            for b in ordered[i + 1 :]:
-                expected.setdefault((a, b), []).append(line)
-    want = {
-        (a, b, min(lines), len(lines)) for (a, b), lines in expected.items()
-    }
-    assert capped == want

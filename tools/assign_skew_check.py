@@ -81,7 +81,8 @@ def main() -> None:
     from acuvate_spark.session import get_spark
 
     spark = get_spark("assign-skew-check")
-    spark.conf.set(assign._MODE_CONF, "shuffled")
+    # route every k_hint to the shuffled strategy
+    assign.AUTO_SHUFFLE_MIN_K = assign.BROADCAST_MAX_K = -1
     warm_up(spark, d)
     out = {}
     for name, vec in _corpora(spark, d).items():

@@ -80,8 +80,8 @@ def main() -> None:
     from acuvate_spark.session import get_spark
 
     spark = get_spark("scaling-measure")
-    # extra runtime conf, e.g. spark.acuvate.assign.mode=shuffled to
-    # measure the swapped assign path at scale. Repeatable (--conf a=1
+    # extra runtime conf, e.g. spark.sql.shuffle.partitions=64 to
+    # measure at a different shuffle width. Repeatable (--conf a=1
     # --conf b=2); each os-arg splits on its FIRST '=' only, so
     # comma-valued confs (e.g. extraJavaOptions) pass through intact
     # (ADVICE r09: the old comma-join split mis-parsed those).

@@ -112,19 +112,20 @@ def main() -> None:
         build_hierarchical(spark, n, d)
         dirs[n] = d
 
-    def timed(d: str, mode: str | None) -> float:
-        if mode:
-            spark.conf.set(assign._MODE_CONF, mode)
+    def timed(d: str, force_broadcast: bool = False) -> float:
+        routed = assign.AUTO_SHUFFLE_MIN_K
+        if force_broadcast:
+            assign.AUTO_SHUFFLE_MIN_K = 1 << 62  # every k_hint routes to broadcast
         fn = REGISTRY["semdedup_clusters"].fn
         best = min(time_noop(lambda: fn(spark, d)) for _ in range(2))
-        if mode:
-            spark.conf.unset(assign._MODE_CONF)
-        print(f"  {d} mode={mode or 'auto'}: {best:.2f}s", file=sys.stderr)
+        assign.AUTO_SHUFFLE_MIN_K = routed
+        mode = "broadcast" if force_broadcast else "routed"
+        print(f"  {d} mode={mode}: {best:.2f}s", file=sys.stderr)
         return best
 
-    t_small = timed(dirs[small], None)
-    t_big = timed(dirs[big], None)
-    t_big_bcast = timed(dirs[big], "broadcast")
+    t_small = timed(dirs[small])
+    t_big = timed(dirs[big])
+    t_big_bcast = timed(dirs[big], force_broadcast=True)
     data_ratio = big / small
     out = {
         "small_n": small,
