@@ -38,6 +38,10 @@ from .operators import sinks
 from .session import tune
 
 REGISTER_TYPES = ("Equipment", "Instrument", "Line", "Cable")
+REGISTER_COLUMNS = {
+    "tag_no": "string", "description": "string", "document": "string",
+    "modified_by": "string", "modified_date": "timestamp",
+}
 
 
 class TagRegistry:
@@ -66,17 +70,18 @@ class TagRegistry:
         cur = sinks._current_version(d)
         floor = int(os.path.basename(cur)[1:]) + 1 if cur else 0
         path = os.path.join(d, f"v{max(time.time_ns(), floor):025d}")
-        df.write.mode("overwrite").parquet(path)
+        sinks._write_version(df, path)
         return path
 
     def table(self, register: str) -> DataFrame:
         path = self._current_path(register)
         if path is None:
-            return self.spark.createDataFrame(
-                [], "tag_no string, description string, document string, "
-                "modified_by string, modified_date timestamp"
+            # JVM-only empty relation: an empty createDataFrame still
+            # runs a Python-worker task per partition on every read
+            return self.spark.range(0).select(
+                *[F.lit(None).cast(t).alias(c) for c, t in REGISTER_COLUMNS.items()]
             )
-        return self.spark.read.parquet(path)
+        return sinks._read_version(self.spark, path)
 
     # --- reads -------------------------------------------------------------
 
@@ -179,20 +184,26 @@ class TagRegistry:
         self._write_version(register, merged)
 
     def delete_tags(self, register: str, tag_nos: list[str]) -> int:
-        """DELETE by key via anti-join (reference app.py:5216-5250);
-        returns rows removed."""
+        """DELETE by key (reference app.py:5216-5250); returns rows
+        removed, which equals the row-count difference between the old
+        and the new version. NULL contract: a register row whose
+        ``tag_no`` is NULL survives every delete, ``None`` in
+        ``tag_nos`` removes nothing, and a duplicate or unknown key in
+        ``tag_nos`` removes its rows once or nothing."""
         existing = self.table(register)
-        doomed = self.spark.createDataFrame([(t,) for t in tag_nos], "tag_no string")
-        remaining = existing.join(doomed, "tag_no", "left_anti")
-        before, after = existing.count(), remaining.count()
-        self._write_version(register, remaining)
-        return before - after
+        # an InSet predicate, NULL (no match) folded to false
+        hit = F.coalesce(F.col("tag_no").isin(set(tag_nos)), F.lit(False))
+        removed = existing.where(hit).count()
+        self._write_version(register, existing.where(~hit))
+        return removed
 
     def apply_approvals(self, register: str, history: DataFrame) -> DataFrame:
         """Approval promote (reference app.py:5706-5888): PENDING
         history rows with action Add/Edit apply against the register
         with validation; returns the per-row dispositions and commits
-        the post-state."""
+        the post-state. ``history`` is evaluated once: its deduplicated
+        pending rows are local-checkpointed, and those blocks live as
+        long as the returned frame (approval queues are small)."""
         main = self.table(register)
         # one pending row per tag: duplicates (resubmitted approvals)
         # would fan out through the join and commit duplicate register
@@ -208,6 +219,7 @@ class TagRegistry:
             .withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .drop("rn")
+            .localCheckpoint(eager=True)
         )
         j = main.join(h, main.tag_no == h.h_tag_no, "full_outer")
         disposition = (
@@ -271,14 +283,17 @@ class TagRegistry:
     def import_rows(self, register: str, rows: DataFrame) -> DataFrame:
         """Phase 1 validation: null-normalize tag, require description;
         split Add/Edit vs errors. Phase 2 commit: apply valid rows as
-        an upsert. Returns the validation report."""
+        an upsert. Returns the validation report against the register
+        as it was before the commit. ``rows`` is evaluated once: the
+        normalized rows are local-checkpointed, and those blocks live
+        as long as the returned report (import batches are small)."""
         existing = self.table(register).select(F.col("tag_no").alias("e_tag"))
         v = rows.select(
             tagfn.null_normalize(F.col("tagno")).alias("tag_no"),
             tagfn.null_normalize(F.col("description")).alias("description"),
             F.coalesce(F.col("document"), F.lit("")).alias("document"),
             F.col("modified_by"),
-        )
+        ).localCheckpoint(eager=True)
         report = (
             v.join(existing, v.tag_no == existing.e_tag, "left")
             .select(
@@ -295,7 +310,8 @@ class TagRegistry:
                 .alias("action"),
             )
         )
-        valid = report.where(F.col("action") != "ERROR").drop("error", "action")
+        # validity never depends on the join: upsert straight from v
+        valid = v.where(F.col("tag_no").isNotNull() & F.col("description").isNotNull())
         if valid.take(1):
             self.upsert_tags(register, valid)
         return report

@@ -23,7 +23,8 @@ import os
 import time
 from collections.abc import Callable, Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 # ---------------------------------------------------------------------------
@@ -367,6 +368,37 @@ def _current_version(root: str, max_num: int | None = None) -> str | None:
     if not versions:
         return None
     return os.path.join(root, max(versions, key=lambda v: int(v[1:])))
+
+
+# A committed version directory never changes, so its schema is known
+# once it has been written or read: passing it to ``spark.read.schema``
+# skips the schema-inference job ``spark.read.parquet`` runs on every
+# read. One (version path, schema) entry per versions directory keeps
+# the memo bounded by the number of registers and stream targets. Each
+# entry is a fact about an immutable directory, so callers and threads
+# can share it: a lost update costs one inference. The file source
+# forces a given schema to nullable, as inference does, so both reads
+# yield the same schema.
+_VERSION_SCHEMAS: dict[str, tuple[str, StructType]] = {}
+
+
+def _read_version(spark: SparkSession, path: str) -> DataFrame:
+    """Read the committed version at ``path`` (from
+    :func:`_current_version`), inferring its schema only the first
+    time this process sees that version."""
+    known = _VERSION_SCHEMAS.get(os.path.dirname(path))
+    if known is not None and known[0] == path:
+        return spark.read.schema(known[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _VERSION_SCHEMAS[os.path.dirname(path)] = (path, df.schema)
+    return df
+
+
+def _write_version(df: DataFrame, path: str) -> None:
+    """Write ``df`` as the version directory ``path`` and record its
+    schema for :func:`_read_version`."""
+    df.write.mode("overwrite").parquet(path)
+    _VERSION_SCHEMAS[os.path.dirname(path)] = (path, df.schema)
 
 
 def _raise_if_mid_swap(base_path: str) -> None:

@@ -540,7 +540,7 @@ def _footer_rows(spark, path: str) -> int | None:
     ``operators.storage.scan_stats`` manifests from. Local filesystem
     paths only (``file:`` URIs included); remote URIs and any
     read/listing failure return ``None`` so callers fall back to the
-    storage-agnostic byte gate, then the count job."""
+    count job."""
     import glob as _glob
     import os
 

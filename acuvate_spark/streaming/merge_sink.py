@@ -30,14 +30,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators.sinks import _current_version
+from ..operators.sinks import _current_version, _read_version, _write_version
 
 
 def read_current(
     spark: SparkSession, target_dir: str, max_num: int | None = None
 ) -> DataFrame | None:
     path = _current_version(target_dir, max_num)
-    return None if path is None else spark.read.parquet(path)
+    return None if path is None else _read_version(spark, path)
 
 
 def merge_batch(
@@ -100,8 +100,7 @@ def start_merge_stream(
         # and the overwrite path are always different directories
         current = read_current(spark, target_dir, max_num=batch_id)
         post = merge_batch(current, batch, key, seq_col)
-        out = os.path.join(target_dir, f"v{batch_id + 1:010d}")
-        post.write.mode("overwrite").parquet(out)
+        _write_version(post, os.path.join(target_dir, f"v{batch_id + 1:010d}"))
 
     return (
         stream.writeStream.foreachBatch(_apply)

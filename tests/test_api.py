@@ -6,6 +6,7 @@ switches to this engine' path (SURVEY §3 endpoints end-to-end)."""
 from __future__ import annotations
 
 import datetime
+import itertools
 
 import pytest
 from pyspark.sql import functions as F
@@ -187,3 +188,117 @@ def test_backwards_clock_step_still_serves_latest_write(spark, registry, monkeyp
     )
     monkeypatch.undo()
     assert [r["description"] for r in registry.table("Equipment").collect()] == ["pump A rev2"]
+
+
+# --- work counters ---------------------------------------------------------
+
+_GROUPS = itertools.count()
+
+
+def _work(spark, fn):
+    """Run ``fn()`` under its own job group; returns (result, jobs,
+    tasks run). The listener bus is drained on both sides so the
+    status tracker has seen every job the call ran."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    group = f"test-api-work-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    bus.waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = [tracker.getStageInfo(s) for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    return out, len(jobs), sum(st.numCompletedTasks for st in stages if st is not None)
+
+
+def _three_rows(spark, registry, register="Equipment"):
+    registry.upsert_tags(
+        register,
+        _incoming(spark, [(f"E17-A_F-{i}", f"pump {i}", "DOC-1", "amy@example.com")
+                          for i in (1001, 1002, 1003)]),
+    )
+
+
+def test_empty_register_reads_without_python_tasks(spark, registry):
+    """A register with no committed version is a JVM-only empty
+    relation of the register schema: collecting it runs no task (an
+    empty createDataFrame runs a Python worker per partition)."""
+    rows, _, tasks = _work(spark, lambda: registry.table("Line").collect())
+    assert rows == [] and tasks == 0
+    empty = registry.table("Line").schema
+    _three_rows(spark, registry, "Line")
+    assert registry.table("Line").schema == empty
+
+
+def test_get_data_after_on_a_written_version_runs_one_job(spark, registry):
+    """The writer records the schema of each version it commits, so a
+    read passes it to the file source and runs no schema-inference job."""
+    _three_rows(spark, registry)
+    page, jobs, _ = _work(spark, lambda: registry.get_data_after("Equipment", 2).collect())
+    assert [r["tag_no"] for r in page] == ["E17-A_F-1003", "E17-A_F-1002"]
+    assert jobs == 1
+
+
+def test_delete_tags_null_contract(spark, registry):
+    from acuvate_spark.queries.dedup import _footer_rows
+
+    registry._write_version(
+        "Equipment",
+        spark.createDataFrame(
+            [("A", "a", "", "u", None), ("B", "b", "", "u", None),
+             (None, "no tag", "", "u", None), ("C", "c", "", "u", None)],
+            "tag_no string, description string, document string, "
+            "modified_by string, modified_date timestamp",
+        ),
+    )
+
+    def delete(tag_nos):
+        before = registry._current_path("Equipment")
+        removed, jobs, _ = _work(spark, lambda: registry.delete_tags("Equipment", tag_nos))
+        after = registry._current_path("Equipment")
+        assert removed == _footer_rows(spark, before) - _footer_rows(spark, after)
+        assert jobs <= 3
+        return removed
+
+    # a duplicate counts once, an unknown key and None remove nothing
+    assert delete(["A", "A", "ZZZ", None]) == 1
+    assert delete([None]) == 0
+    assert delete([]) == 0
+    assert delete(["B", "C"]) == 2
+    # the NULL-key row survived every delete
+    assert [(r["tag_no"], r["description"]) for r in registry.table("Equipment").collect()] == [
+        (None, "no tag")
+    ]
+
+
+def test_import_rows_evaluates_caller_rows_once(spark, registry):
+    """Validation, the upsert commit and the returned report all read
+    one local checkpoint of the caller's rows."""
+    _three_rows(spark, registry)
+    data = [
+        ("E17-A_F-1001", "pump A rev2", "DOC-5", "carol@example.com"),
+        ("E17-A_F-2000", "new pump", None, "carol@example.com"),
+        ("nan", "bad row", None, "carol@example.com"),
+        ("E17-A_F-3000", None, None, "carol@example.com"),
+    ]
+    seen = spark.sparkContext.accumulator(0)
+
+    def tally(row):
+        seen.add(1)
+        return row
+
+    rows = spark.createDataFrame(
+        spark.sparkContext.parallelize(data, 2).map(tally),
+        "tagno string, description string, document string, modified_by string",
+    )
+    report, jobs, _ = _work(spark, lambda: registry.import_rows("Equipment", rows).collect())
+    assert sorted((r["tag_no"] or "", r["action"]) for r in report) == [
+        ("", "ERROR"), ("E17-A_F-1001", "Edit"), ("E17-A_F-2000", "Add"), ("E17-A_F-3000", "ERROR"),
+    ]
+    assert seen.value == len(data)
+    assert jobs <= 7
+    assert registry.table("Equipment").count() == 4
