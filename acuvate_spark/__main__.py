@@ -5,7 +5,6 @@
                                         [--out PATH] [--explain]
     python -m acuvate_spark sql "SELECT ..." [--sf-dir DIR] [--limit N]
                                              [--out PATH] [--explain]
-    python -m acuvate_spark compact <main_path> --keys k1,k2
     python -m acuvate_spark schedule <state.json> [--set HH:mm]
     python -m acuvate_spark sync <state.json> [--sf-dir DIR] --out PATH
                                               [--at ISO_DATETIME]
@@ -23,14 +22,6 @@ part orders lineitem events documents embeddings) as a temp view and
 runs one ad-hoc Spark SQL statement over them — the free-form query
 surface for anything not already in the registry; Catalyst plans it
 with the same pushdown/pruning/AQE the named queries get.
-
-``compact`` is the register maintenance pass: it folds committed
-promote deltas into the base (``operators.sinks.compact_promotes``),
-or with ``--moves`` the move deltas / tombstones of a move register
-(``operators.sinks.compact_moves``),
-bounding the merge-on-read amplification that grows with the delta
-chain (measured 9.3x at chain 50; recommended cadence ~10 — reads
-past the cadence warn).
 
 ``schedule``/``sync`` are the reference's /schedule GET+POST and /sync
 endpoints (app.py:6754-6813): ``schedule`` shows or updates the
@@ -56,26 +47,6 @@ def main(argv: list[str] | None = None) -> int:
 
     p_run = sub.add_parser("run", help="run one query")
     p_run.add_argument("query")
-    p_compact = sub.add_parser(
-        "compact",
-        help="maintenance: fold committed promote deltas into a register's base "
-        "(bounds merge-on-read amplification; recommended cadence ~10 deltas)",
-    )
-    p_compact.add_argument("main_path")
-    p_compact.add_argument(
-        "--keys",
-        help="comma-separated entity key columns (required for a promote "
-        "fold and for tombstone retirement in a --moves fold)",
-    )
-    p_compact.add_argument(
-        "--moves",
-        action="store_true",
-        help="fold committed move deltas (and, with --tomb-path/--keys, "
-        "apply+retire tombstones) instead of promote deltas",
-    )
-    p_compact.add_argument(
-        "--tomb-path", help="tombstone root for a --moves source fold"
-    )
     p_sql = sub.add_parser("sql", help="run ad-hoc Spark SQL over the test tables")
     p_sql.add_argument("statement")
     p_sched = sub.add_parser(
@@ -139,31 +110,6 @@ def main(argv: list[str] | None = None) -> int:
         finally:
             spark.stop()
         print("not due" if n is None else f"synced {n} rows to {args.out}")
-        return 0
-
-    if args.cmd == "compact":
-        from acuvate_spark.operators.sinks import compact_moves, compact_promotes
-        from acuvate_spark.session import get_spark
-
-        keys = [k.strip() for k in args.keys.split(",")] if args.keys else None
-        if not args.moves and keys is None:
-            print("compact: --keys is required for a promote fold")
-            return 2
-        spark = get_spark("acuvate-compact")
-        try:
-            if args.moves:
-                n = compact_moves(
-                    spark, args.main_path,
-                    tomb_path=args.tomb_path,
-                    key_cols=keys if args.tomb_path else None,
-                )
-                kind = "move artifact(s)"
-            else:
-                n = compact_promotes(spark, args.main_path, keys)
-                kind = "promote delta version(s)"
-        finally:
-            spark.stop()
-        print(f"folded {n} {kind} into {args.main_path}")
         return 0
 
     from acuvate_spark.queries import REGISTRY

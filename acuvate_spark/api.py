@@ -19,15 +19,20 @@ family; a caller of the reference backend maps 1:1 onto these:
 State lives in parquet register directories (one per tag family, as
 the reference keeps one Snowflake table per family). Mutations are
 copy-on-write: compute the post-state dataflow, write to a new
-version directory, atomically repoint. That gives single-writer
-transactional semantics without a table format; on a deployment with
-Delta/Iceberg the same dataflows feed MERGE/DELETE instead.
+version directory, atomically repoint. Each mutation holds the
+register's writer lease (``sinks.register_lease``, the sibling file
+``<root>/<register>.__lease__``) from the read of the current version
+to the commit, so a second concurrent writer on the register raises
+``sinks.ConcurrentWriterError`` instead of silently dropping an
+update. That gives single-writer transactional semantics without a
+table format; on a deployment with Delta/Iceberg the same dataflows
+feed MERGE/DELETE instead.
 """
 
 from __future__ import annotations
 
+import functools
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,6 +47,19 @@ REGISTER_COLUMNS = {
     "tag_no": "string", "description": "string", "document": "string",
     "modified_by": "string", "modified_date": "timestamp",
 }
+
+
+def _register_write(method):
+    """Run a mutation ``method(self, register, ...)`` under the
+    register's writer lease; a nested call from the same thread
+    re-enters it."""
+
+    @functools.wraps(method)
+    def locked(self, register: str, *args, **kwargs):
+        with sinks.register_lease(self._versions_dir(register), method.__name__):
+            return method(self, register, *args, **kwargs)
+
+    return locked
 
 
 class TagRegistry:
@@ -59,19 +77,7 @@ class TagRegistry:
         return sinks._current_version(self._versions_dir(register))
 
     def _write_version(self, register: str, df: DataFrame) -> str:
-        d = self._versions_dir(register)
-        os.makedirs(d, exist_ok=True)
-        # wall-clock ns, zero-padded: survives process restarts
-        # (monotonic_ns has an undefined epoch across processes) and
-        # keeps even naive lexicographic ordering correct. Never below
-        # the current version + 1: a backwards clock step (an NTP
-        # correction) would otherwise commit a version that never
-        # becomes current.
-        cur = sinks._current_version(d)
-        floor = int(os.path.basename(cur)[1:]) + 1 if cur else 0
-        path = os.path.join(d, f"v{max(time.time_ns(), floor):025d}")
-        sinks._write_version(df, path)
-        return path
+        return sinks._commit_version(df, self._versions_dir(register))
 
     def table(self, register: str) -> DataFrame:
         path = self._current_path(register)
@@ -155,6 +161,7 @@ class TagRegistry:
 
     # --- mutations ---------------------------------------------------------
 
+    @_register_write
     def upsert_tags(self, register: str, incoming: DataFrame) -> None:
         """MERGE: existing rows get updated fields + semicolon-merged
         document column; new rows insert (reference app.py:4544-4690)."""
@@ -183,6 +190,7 @@ class TagRegistry:
         )
         self._write_version(register, merged)
 
+    @_register_write
     def delete_tags(self, register: str, tag_nos: list[str]) -> int:
         """DELETE by key (reference app.py:5216-5250); returns rows
         removed, which equals the row-count difference between the old
@@ -197,6 +205,7 @@ class TagRegistry:
         self._write_version(register, existing.where(~hit))
         return removed
 
+    @_register_write
     def apply_approvals(self, register: str, history: DataFrame) -> DataFrame:
         """Approval promote (reference app.py:5706-5888): PENDING
         history rows with action Add/Edit apply against the register
@@ -280,6 +289,7 @@ class TagRegistry:
 
     # --- Excel import (two-phase, reference app.py:6022-6441) --------------
 
+    @_register_write
     def import_rows(self, register: str, rows: DataFrame) -> DataFrame:
         """Phase 1 validation: null-normalize tag, require description;
         split Add/Edit vs errors. Phase 2 commit: apply valid rows as

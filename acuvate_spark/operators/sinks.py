@@ -13,6 +13,12 @@
 * Ledger (S13): subsumed by the streaming checkpoint
   (streaming/blob_ingest.py); kept here only as an explicit append
   helper for non-streaming callers.
+* Register store (M5 move, M6 approve): every register —
+  ``api.TagRegistry``'s, the streaming MERGE sink's target, and the
+  registers :func:`move_records` / :func:`promote_records` write — is a
+  directory of copy-on-write versions. A write commits a new ``v<N>``
+  directory under the register's writer lease; a reader reads exactly
+  one committed version.
 """
 
 from __future__ import annotations
@@ -20,6 +26,8 @@ from __future__ import annotations
 import contextlib
 import json
 import os
+import shutil
+import threading
 import time
 from collections.abc import Callable, Iterable
 
@@ -28,49 +36,32 @@ from pyspark.sql.types import StructType
 
 
 # ---------------------------------------------------------------------------
-# Writer lease — the mutation layer's concurrency CONTRACT made explicit
-# (VERDICT r11 item 5). The register formats here (promote deltas,
-# staged-swap compaction) are SINGLE-WRITER by design, matching the
-# reference's request-scoped approval semantics: the chaos tests sweep
-# every single-writer crash point, but two concurrent promote_records
-# on one register (or a compaction racing a promote) can interleave
-# their os.replace sequences arbitrarily — no marker ordering protects
-# against that. The lease below makes an accidental second writer fail
-# LOUDLY instead of corrupting silently. It is best-effort local
-# mutual exclusion (O_CREAT|O_EXCL on the shared filesystem), not a
-# fenced distributed lock: a cluster deployment of concurrent writers
-# belongs on a transactional table format (Delta/Iceberg) or an
-# external coordinator, as README.md documents.
+# Writer lease — the register store's concurrency contract made
+# explicit. Every register write reads the current version, computes
+# the post-state and commits it as a new version. Two writers
+# interleaving that sequence on one register would each commit a
+# post-state of the same base, and the later commit would silently
+# drop the earlier one's effect. The lease below makes the second
+# writer fail LOUDLY instead. It is best-effort local mutual exclusion
+# (O_CREAT|O_EXCL on the shared filesystem), not a fenced distributed
+# lock: a cluster deployment of concurrent writers belongs on a
+# transactional table format (Delta/Iceberg) or an external
+# coordinator, as README.md documents.
 # ---------------------------------------------------------------------------
 
 # A holder that died without releasing must not brick the register:
 # leases older than this are presumed crashed and are stolen. Sized
-# far above any single promote/compaction (seconds) and far below
+# far above any single register write (seconds) and far below
 # operator-intervention timescales.
 LEASE_TTL_S = 900
 
-_HELD_LEASES: set[str] = set()  # in-process re-entrancy (promote -> auto compact)
+# lease path -> ident of the thread holding it. Re-entrancy is per
+# thread: another thread of this process is a second writer.
+_HELD_LEASES: dict[str, int] = {}
 
 
 class ConcurrentWriterError(RuntimeError):
     """A second writer touched a single-writer register."""
-
-
-class CompactionInProgressError(RuntimeError):
-    """A reader hit a register in a TORN maintenance state.
-
-    Since the r14 snapshot-pointer commit this is NOT part of any
-    happy path — compactions commit with one atomic manifest replace,
-    so readers racing a compaction always resolve a complete base.
-    The error remains for states only a crash of the PRE-SNAPSHOT
-    staged swap (or out-of-band damage) can produce: an uncommitted
-    legacy base beside a ``.__pre_compact__`` backup (serving it as
-    "no base, winners only" would silently drop every never-promoted
-    base row — r13 reader-vs-maintenance audit), an unparseable
-    snapshot manifest, or a manifest naming a missing generation.
-    Remedy: re-run ``compact_promotes`` (its entry recovery restores
-    legacy backups and GCs orphans); for manifest damage, restore it
-    to point at the newest committed ``.snapshots`` generation."""
 
 
 _HOSTNAME = os.uname().nodename
@@ -165,11 +156,13 @@ def register_lease(main_path: str, purpose: str):
     ``_HELD_LEASES`` and later removed a competitor's live lease).
     Release is token-verified: the lease file is removed only if it
     is still OURS, so an overrun holder whose lease was stolen never
-    deletes the thief's. Re-entrant within the process, so a
-    promote's auto-compaction runs under the promote's lease."""
+    deletes the thief's. Re-entrant within the holding thread
+    (``TagRegistry.import_rows`` commits through ``upsert_tags``);
+    another thread of the same process blocks like any other writer."""
     root = main_path.rstrip("/")
     lease = root + ".__lease__"
-    if lease in _HELD_LEASES:
+    thread = threading.get_ident()
+    if _HELD_LEASES.get(lease) == thread:
         yield
         return
     parent = os.path.dirname(root)
@@ -200,7 +193,7 @@ def register_lease(main_path: str, purpose: str):
                 raise ConcurrentWriterError(
                     f"{root}: another writer holds the register lease "
                     f"({holder}, {age:.0f}s old); registers are "
-                    "single-writer — serialize promotes/compactions, or "
+                    "single-writer — serialize the writers, or "
                     f"remove {lease} if the holder is known dead"
                 ) from None
             _steal_lease(lease, observed)  # stale + unverifiable: TTL rules
@@ -211,11 +204,11 @@ def register_lease(main_path: str, purpose: str):
             "acquiring/releasing faster than this one can claim); "
             "registers are single-writer, serialize the callers"
         )
-    _HELD_LEASES.add(lease)
+    _HELD_LEASES[lease] = thread
     try:
         yield
     finally:
-        _HELD_LEASES.discard(lease)
+        _HELD_LEASES.pop(lease, None)
         with contextlib.suppress(OSError):
             if open(lease).read() == token:  # still ours — see docstring
                 os.remove(lease)
@@ -272,73 +265,15 @@ def export_excel(df: DataFrame, path: str, header_map: dict[str, str] | None = N
         return csv_path
 
 
-def move_records(
-    spark,
-    src_path: str,
-    dst_path: str,
-    tomb_path: str,
-    predicate,
-    key_cols: list[str],
-    move_id: str,
-    on_between: Callable[[], None] | None = None,
-) -> None:
-    """M5/M6 WRITE SIDE — the reference's transactional insert->delete
-    move (app.py:5365-5444; promote-approved is the same shape with a
-    status predicate) re-expressed for a parquet warehouse with no
-    transaction manager. Two ordered commits to DETERMINISTIC targets,
-    each gated on its ``_SUCCESS`` marker so replay is MONOTONE — a
-    replay never deletes durable state, it only finishes what remains:
-
-    1. insert side: matching rows overwrite ``dst/moves/<move_id>`` —
-       computed through :func:`read_with_moves` (other moves'
-       committed tombstones applied), so a row already moved by a
-       previous overlapping move is not copied twice; SKIPPED when the
-       delta's _SUCCESS already exists (a replay must not drop and
-       rewrite a committed delta — the rewrite window would lose the
-       rows if the replay itself crashed);
-    2. delete side: the COMMITTED delta's keys (read back, not
-       recomputed — the two commits cannot diverge) overwrite
-       ``tomb/<move_id>``; readers drop tombstoned keys via
-       :func:`read_with_moves` (merge-on-read, the Delta/Iceberg
-       delete-file pattern), so no src rewrite happens at all.
-
-    If the tombstone's _SUCCESS exists the move is fully committed and
-    the call returns immediately. Crash anywhere: un-marked partial
-    writes are invisible to readers (see ``read_with_moves``) and the
-    next replay converges to exactly-once. Markers are the standard
-    Hadoop committer's; single sequential writer per move_id assumed
-    (the reference's request-scoped mutation semantics).
-
-    The source is read with ``moves_for=src_path``, so a source that
-    is itself a move DESTINATION (chained moves A->B then B->C) sees
-    rows that arrived via committed deltas — a plain base table has no
-    ``moves/`` dir and the parameter is a no-op there.
-
-    Isolation caveat: between the delta commit and the tombstone
-    commit a moved row is visible in BOTH source and destination
-    (read-committed per table, not snapshot across tables). The window
-    closes at the tombstone commit; replay converges it. Readers that
-    need cross-table exactly-once must read the source view only, or
-    anti-join the destination's deltas against the source (what
-    ``read_with_moves`` tombstone handling does after commit 2).
-
-    ``on_between`` is the chaos seam tests use to kill the job between
-    the two commits (tests/test_sinks.py)."""
-    delta = os.path.join(dst_path, "moves", move_id)
-    tomb = os.path.join(tomb_path, move_id)
-    if _has_success(tomb):
-        return  # fully committed: replay is a true no-op
-    if not _has_success(delta):
-        moved = read_with_moves(
-            spark, src_path, moves_for=src_path,
-            tomb_path=tomb_path, key_cols=key_cols,
-        ).where(predicate)
-        moved.write.mode("overwrite").parquet(delta)
-    if on_between is not None:
-        on_between()
-    spark.read.parquet(delta).select(*key_cols).distinct().write.mode(
-        "overwrite"
-    ).parquet(tomb)
+@contextlib.contextmanager
+def _register_leases(paths: Iterable[str], purpose: str):
+    """:func:`register_lease` on every register in ``paths``, taken in
+    sorted path order: of two writers racing over the same registers,
+    one gets every lease instead of each holding some."""
+    with contextlib.ExitStack() as stack:
+        for path in sorted({p.rstrip("/") for p in paths}):
+            stack.enter_context(register_lease(path, purpose))
+        yield
 
 
 def _has_success(path: str) -> bool:
@@ -346,28 +281,36 @@ def _has_success(path: str) -> bool:
     return os.path.isfile(os.path.join(path, "_SUCCESS"))
 
 
+def _version_num(name: str) -> int | None:
+    """N of a version directory named ``v<N>`` or ``v<N>-<request id>``;
+    None for any other name."""
+    num = name[1:].split("-", 1)[0]
+    return int(num) if name.startswith("v") and num.isdigit() else None
+
+
 def _current_version(root: str, max_num: int | None = None) -> str | None:
-    """Newest COMMITTED ``v<N>`` child dir of ``root`` with N at or
-    below ``max_num`` — the copy-on-write version pick shared by
-    ``api.TagRegistry``, the streaming MERGE sink and the blob-ingest
-    retry state. Selection is numeric: a lexicographic sort would pick
-    a stale version whenever the digit count changes. A version counts
-    only with its ``_SUCCESS`` marker: a writer killed mid job-commit
-    (part files promoted, marker absent) must stay invisible, and the
-    previous committed version stays current instead."""
+    """Newest COMMITTED version dir of ``root`` with N at or below
+    ``max_num`` — the copy-on-write version pick shared by
+    ``api.TagRegistry``, the streaming MERGE sink, the move/promote
+    sinks and the blob-ingest retry state. Versions are named ``v<N>``
+    or ``v<N>-<request id>`` and ordered by N alone, numerically: a
+    lexicographic sort would pick a stale version whenever the digit
+    count changes. A version counts only with its ``_SUCCESS`` marker:
+    a writer killed mid job-commit (part files promoted, marker absent)
+    must stay invisible, and the previous committed version stays
+    current instead."""
     if not os.path.isdir(root):
         return None
-    versions = [
-        v
+    versions = {
+        v: n
         for v in os.listdir(root)
-        if v.startswith("v")
-        and v[1:].isdigit()
-        and (max_num is None or int(v[1:]) <= max_num)
+        if (n := _version_num(v)) is not None
+        and (max_num is None or n <= max_num)
         and _has_success(os.path.join(root, v))
-    ]
+    }
     if not versions:
         return None
-    return os.path.join(root, max(versions, key=lambda v: int(v[1:])))
+    return os.path.join(root, max(versions, key=versions.get))
 
 
 # A committed version directory never changes, so its schema is known
@@ -394,6 +337,15 @@ def _read_version(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def read_current(
+    spark: SparkSession, root: str, max_num: int | None = None
+) -> DataFrame | None:
+    """The register's current version (see :func:`_current_version`),
+    or None when it has no committed version."""
+    path = _current_version(root, max_num)
+    return None if path is None else _read_version(spark, path)
+
+
 def _write_version(df: DataFrame, path: str) -> None:
     """Write ``df`` as the version directory ``path`` and record its
     schema for :func:`_read_version`."""
@@ -401,159 +353,47 @@ def _write_version(df: DataFrame, path: str) -> None:
     _VERSION_SCHEMAS[os.path.dirname(path)] = (path, df.schema)
 
 
-def _raise_if_mid_swap(base_path: str) -> None:
-    """Readers call this when the base is INVISIBLE (no committed part
-    files): a ``.__pre_compact__`` sibling then means a compaction
-    swap is in flight (or died mid-way) and the old base lives in the
-    backup — serving the remaining state as "no base" would silently
-    drop the base rows from the merged view. Raise instead (r13
-    reader-vs-maintenance audit); without a backup the shape is the
-    legitimate bootstrap / marker-less-writer case the callers already
-    handle. Both backup spellings are checked (ADVICE r13):
-    :func:`compact_promotes` creates the undotted ``<base>.__pre_compact__``
-    sibling, while :func:`acuvate_spark.operators.storage.compact_path`
-    creates the DOT-PREFIXED ``.<leaf>.__pre_compact__`` (hidden from
-    Spark's listing) — a compact_path swap on a flat register base
-    must not escape detection and serve "no base, deltas only"."""
-    root = base_path.rstrip("/")
-    head, leaf = os.path.split(root)
-    for backup in (root + ".__pre_compact__",
-                   os.path.join(head, "." + leaf + ".__pre_compact__")):
-        if os.path.isdir(backup):
-            raise CompactionInProgressError(
-                f"{base_path}: base is uncommitted while a compaction backup "
-                f"({backup}) exists — a staged swap is in flight or crashed. "
-                "Retry momentarily; if this persists, re-run the compaction "
-                "(its entry recovery restores the backup) before reading"
-            )
+def _commit_version(df: DataFrame, root: str, request_id: str | None = None) -> str:
+    """Commit ``df`` as the next version of the register ``root`` and
+    return its path: ``v<N>``, or ``v<N>-<request_id>`` for a
+    request-scoped commit, with N = max(wall-clock ns, current N + 1).
+    Wall-clock ns survives process restarts (monotonic_ns has an
+    undefined epoch across processes) and, zero-padded, keeps even a
+    naive lexicographic listing in order; the floor keeps a backwards
+    clock step (an NTP correction) from committing a version that never
+    becomes current."""
+    os.makedirs(root, exist_ok=True)
+    cur = _current_version(root)
+    floor = _version_num(os.path.basename(cur)) + 1 if cur else 0
+    name = f"v{max(time.time_ns(), floor):025d}"
+    if request_id is not None:
+        name += f"-{request_id}"
+    path = os.path.join(root, name)
+    _write_version(df, path)
+    return path
 
 
-# ---------------------------------------------------------------------------
-# Snapshot-pointer commit (VERDICT r13 item 1) — the register's base is
-# versioned like a table format's snapshots: each compaction writes a
-# NEW generation directory under ``<root>/.snapshots/gen-NNNNNN`` and
-# commits it with ONE atomic ``os.replace`` of a small JSON manifest
-# (``<root>/.__snapshot__.json``). Readers resolve the manifest first;
-# the legacy top-level-files layout is only consulted when no manifest
-# exists, so pre-snapshot registers keep serving and migrate on their
-# first compaction. Because the commit is a single metadata op, readers
-# racing a compaction NEVER see an uncommitted base —
-# :class:`CompactionInProgressError` is reserved for true torn states
-# (legacy crash shapes, an unreadable manifest, a manifest naming a
-# missing generation). Retention mirrors snapshot expiry: the previous
-# generation, the folded delta dirs, and (after migration) the legacy
-# top-level files are garbage-collected at the START of the NEXT
-# compaction, never at commit time — an in-flight reader that resolved
-# the old manifest keeps a full compaction cycle to finish before its
-# files disappear. The ``.snapshots`` dir and the manifest are
-# dot-prefixed, so Spark's hidden-path filter keeps them out of any
-# legacy root scan, and :func:`acuvate_spark.operators.storage.compact_path`'s
-# recursive glob never descends into generations. This is the
-# two-phase validate/commit discipline of the reference's approval
-# flow (app.py:6105-6395) applied to the maintenance path.
-# ---------------------------------------------------------------------------
-
-_SNAPSHOT_NAME = ".__snapshot__.json"
+def _commit_once(root: str, request_id: str, post: Callable[[], DataFrame]) -> None:
+    """Commit ``post()`` as the version of ``root`` for ``request_id``
+    unless that commit already exists — a replay skips it. Uncommitted
+    attempts a crashed run left behind are removed first."""
+    attempts = [
+        os.path.join(root, v)
+        for v in (os.listdir(root) if os.path.isdir(root) else [])
+        if _version_num(v) is not None and v.split("-", 1)[1:] == [request_id]
+    ]
+    if any(_has_success(p) for p in attempts):
+        return
+    for stale in attempts:
+        shutil.rmtree(stale)
+    _commit_version(post(), root, request_id)
 
 
-def _read_snapshot(main_path: str) -> dict | None:
-    """The committed snapshot manifest, or ``None`` for a legacy
-    (pre-snapshot) register. A manifest that exists but cannot be
-    parsed is a TRUE torn state — the commit protocol (write temp,
-    ``os.replace``) cannot produce one — so it raises loudly instead
-    of silently falling back to the legacy layout (whose top-level
-    files are gone after migration: the fallback would serve "no
-    base, deltas only", the silent row loss this module exists to
-    prevent)."""
-    path = os.path.join(main_path, _SNAPSHOT_NAME)
-    try:
-        raw = open(path).read()
-    except OSError:
-        return None
-    try:
-        return json.loads(raw)
-    except json.JSONDecodeError:
-        raise CompactionInProgressError(
-            f"{main_path}: snapshot manifest {path} exists but is not "
-            "parseable JSON — a torn state the atomic-replace commit "
-            "cannot produce; restore the manifest from the newest "
-            "committed generation under .snapshots/ before reading"
-        ) from None
-
-
-def _resolve_base(spark, main_path: str):
-    """Resolve the register's base: ``(DataFrame | None, manifest)``.
-
-    Manifest present: the committed generation it names is the base
-    (authoritative — legacy top-level files are post-migration garbage
-    awaiting GC); callers read their folded-artifact lists from the
-    returned manifest (``folded`` = promote deltas, ``folded_moves`` /
-    ``folded_tombs`` = move-register artifacts — already inside the
-    generation, retained until the next compaction's GC, so readers
-    must exclude them). Manifest absent (``None``): the legacy layout
-    — committed top-level files, with mid-swap detection for legacy
-    staged-swap crash shapes."""
-    import glob as _glob
-
-    man = _read_snapshot(main_path)
-    if man is not None:
-        gen = os.path.join(main_path, ".snapshots", man["gen"])
-        if not _has_success(gen):
-            raise CompactionInProgressError(
-                f"{main_path}: snapshot manifest names generation "
-                f"{man['gen']!r} but {gen} is missing or uncommitted — "
-                "a torn state (generation deleted out-of-band?); "
-                "re-run the compaction only after restoring it"
-            )
-        return spark.read.parquet(gen), man
-    if _has_success(main_path) and _glob.glob(os.path.join(main_path, "*.parquet")):
-        return spark.read.parquet(main_path), None
-    _raise_if_mid_swap(main_path)
-    return None, None
-
-
-def _warn_unmarked_base(path: str) -> None:
-    """A base dir holding part files WITHOUT ``_SUCCESS`` is treated
-    as uncommitted (crash-invisibility), but the identical shape is
-    produced by a legitimate marker-less writer (non-Spark tools, or
-    ``mapreduce.fileoutputcommitter.marksuccessfuljobs=false``). With
-    no deltas the read fails loudly; when committed deltas ARE being
-    served the base rows would otherwise vanish silently from the
-    merged view — so surface it. Migration note: a pre-existing
-    marker-less base must be seeded with a ``_SUCCESS`` file (after
-    verifying the write completed) before deltas are layered on it.
-    The check globs RECURSIVELY (ADVICE r08): the serving convention
-    is top-level-only, but a hive-partitioned marker-less base is the
-    same silent-loss shape and this warning is diagnostic-only, so it
-    need not mirror the serving glob exactly. The delta namespaces
-    (``promotes/``, ``moves/``) are EXCLUDED — their committed part
-    files live under the same root and are not base files, and
-    counting them would fire the warning on every legitimate
-    delta-only register (e.g. a bootstrapped main)."""
-    import glob as _glob
-    import warnings
-
-    def _is_base_file(p: str) -> bool:
-        rel = os.path.relpath(p, path)
-        parts = rel.split(os.sep)
-        # _temporary/ holds task files of a writer killed mid-write —
-        # _committed_files deliberately classifies that dir as "no part
-        # files at all", so counting them here would fire the warning
-        # on a crash shape the serving path correctly ignores
-        return parts[0] not in ("promotes", "moves") and "_temporary" not in parts
-
-    if not _has_success(path) and any(
-        _is_base_file(p)
-        for p in _glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    ):
-        warnings.warn(
-            f"{path}: base part files present without _SUCCESS are not served "
-            "(crash-invisibility contract) while committed deltas are; if this "
-            "base was completed by a marker-less writer, add a _SUCCESS file "
-            "to make it visible",
-            UserWarning,
-            stacklevel=3,
-        )
+def _require_current(spark: SparkSession, root: str) -> DataFrame:
+    df = read_current(spark, root)
+    if df is None:
+        raise ValueError(f"{root}: no committed version")
+    return df
 
 
 def _committed_files(root: str) -> list[str]:
@@ -572,105 +412,60 @@ def _committed_files(root: str) -> list[str]:
     return out
 
 
-def _warn_long_move_chain(
-    base_path: str, moves_for: str | None, tomb_path: str | None, man: dict | None
+def move_records(
+    spark,
+    src_path: str,
+    dst_path: str,
+    predicate,
+    key_cols: list[str],
+    move_id: str,
+    on_between: Callable[[], None] | None = None,
 ) -> None:
-    """Surface the move register's read tax the way
-    :func:`_warn_long_chain` surfaces the promote one (r14, with
-    compact_moves as the remedy): every merged read pays a union per
-    live delta and an anti-join over the live tombstone set, so a
-    chain past :data:`COMPACT_CADENCE` live artifacts should be
-    folded. Counts only LIVE artifacts — folded names retained for
-    reader grace are already inside the generation."""
-    import glob as _glob
-    import warnings
+    """M5 — the reference's transactional insert->delete record move
+    (app.py:5365-5444) on two copy-on-write registers: the rows of the
+    ``src_path`` register matching ``predicate`` move to the
+    ``dst_path`` register, exactly once per ``move_id``. Three ordered
+    commits, each skipped on replay once its ``_SUCCESS`` exists:
 
-    live = 0
-    if moves_for is not None:
-        folded = set((man or {}).get("folded_moves", [])) if moves_for == base_path \
-            else set((_read_snapshot(moves_for) or {}).get("folded_moves", []))
-        live += sum(
-            1
-            for d in _glob.glob(os.path.join(moves_for, "moves", "*"))
-            if _has_success(d) and os.path.basename(d) not in folded
-        )
-    if tomb_path is not None:
-        folded = set((man or {}).get("folded_tombs", []))
-        live += sum(
-            1
-            for d in _glob.glob(os.path.join(tomb_path, "*"))
-            if _has_success(d) and os.path.basename(d) not in folded
-        )
-    if live > COMPACT_CADENCE:
-        warnings.warn(
-            f"{base_path}: {live} live move deltas/tombstone sets exceed "
-            f"the compaction cadence ({COMPACT_CADENCE}); every merged "
-            "read pays the chain — run compact_moves "
-            "(python -m acuvate_spark compact --moves)",
-            UserWarning,
-            stacklevel=3,
-        )
+    1. the decision: the matching rows of src's current version,
+       written to ``dst/moves/<move_id>`` — read by this move's own
+       replays only, never by a reader;
+    2. dst's version ``v<N>-<move_id>``: dst's current version plus
+       the decided rows (the decided rows alone for a new register);
+    3. src's version ``v<N>-<move_id>``: src's current version minus
+       the decided rows' keys.
 
+    Commits 2 and 3 read the decision back instead of re-evaluating
+    ``predicate``, so a replay never re-decides against a source that
+    changed in between. A crash leaves only uncommitted directories,
+    which readers never see, and the next call with the same
+    ``move_id`` finishes the remaining commits. Between commits 2 and
+    3 a moved row is visible in both registers (read-committed per
+    register, not a snapshot across them); the replay closes that
+    window. ``on_between`` is the chaos seam tests use to kill the
+    move there. The move holds the writer lease of both registers."""
+    record = os.path.join(dst_path, "moves", move_id)
+    with _register_leases((src_path, dst_path), f"move {move_id}"):
+        if not _has_success(record):
+            _require_current(spark, src_path).where(predicate).write.mode(
+                "overwrite"
+            ).parquet(record)
+        moved = spark.read.parquet(record)
 
-def read_with_moves(
-    spark, base_path: str, moves_for: str | None = None, tomb_path: str | None = None,
-    key_cols: list[str] | None = None, _warn_chain: bool = True,
-) -> DataFrame:
-    """Merge-on-read view over :func:`move_records` state: a table's
-    effective rows are its base files (if any — a destination that was
-    only ever written by moves has none), plus every committed
-    ``moves/*`` delta when it is a move DESTINATION (``moves_for`` =
-    its own path), minus committed tombstoned keys when it is a move
-    SOURCE (left-anti join on ``key_cols`` — keys shuffle, full rows
-    never do; at warehouse scale the tombstone side is
-    broadcast-sized).
+        def dst_post() -> DataFrame:
+            dst = read_current(spark, dst_path)
+            return moved if dst is None else dst.unionByName(moved)
 
-    Base files obey the same crash-invisibility contract as deltas and
-    tombstones: they are served only when ``base_path`` carries its
-    ``_SUCCESS`` marker (legacy layout) or is named by a committed
-    snapshot manifest (see :func:`_resolve_base`), so a base writer
-    killed mid job-commit (part files promoted, no marker) is
-    invisible rather than served as complete."""
-    if (tomb_path is None) != (key_cols is None):
-        raise ValueError("tomb_path and key_cols must be passed together")
-    df, man = _resolve_base(spark, base_path)
-    if _warn_chain:
-        _warn_long_move_chain(base_path, moves_for, tomb_path, man)
-    if moves_for is not None:
-        # a folded move delta is already INSIDE the generation; unlike
-        # promote deltas (keyed last-writer-wins, re-application is
-        # idempotent) re-unioning a folded move would DUPLICATE its
-        # rows, so the manifest exclusion is load-bearing here
-        m_man = man if moves_for == base_path else _read_snapshot(moves_for)
-        folded_moves = set(m_man.get("folded_moves", [])) if m_man else set()
-        files = [
-            f
-            for f in _committed_files(os.path.join(moves_for, "moves"))
-            if os.path.basename(os.path.dirname(f)) not in folded_moves
-        ]
-        if files:
-            if df is None:
-                _warn_unmarked_base(base_path)
-            deltas = spark.read.parquet(*files)
-            df = deltas if df is None else df.unionByName(deltas)
-    if df is None:
-        raise ValueError(
-            f"{base_path}: no committed base parquet files and no committed move deltas"
+        _commit_once(dst_path, move_id, dst_post)
+        if on_between is not None:
+            on_between()
+        _commit_once(
+            src_path,
+            move_id,
+            lambda: _require_current(spark, src_path).join(
+                moved.select(*key_cols).distinct(), key_cols, "left_anti"
+            ),
         )
-    if tomb_path is not None:
-        # folded tombstones were applied into the generation (anti-join
-        # re-application would be a no-op, but excluding them keeps the
-        # read from shuffling retired keys)
-        folded_tombs = set(man.get("folded_tombs", [])) if man else set()
-        files = [
-            f
-            for f in _committed_files(tomb_path)
-            if os.path.basename(os.path.dirname(f)) not in folded_tombs
-        ]
-        if files:
-            tombs = spark.read.parquet(*files).select(*key_cols).distinct()
-            df = df.join(tombs, key_cols, "left_anti")
-    return df
 
 
 def promote_records(
@@ -678,7 +473,6 @@ def promote_records(
     staging_path: str,
     main_path: str,
     status_path: str,
-    staging_tomb_path: str,
     predicate,
     key_cols: list[str],
     action_col: str,
@@ -686,114 +480,101 @@ def promote_records(
     staging_key_cols: list[str] | None = None,
     on_between: Callable[[int], None] | None = None,
     bootstrap_ok: bool = False,
-    auto_compact: int | None = None,
 ) -> None:
-    """M6 WRITE SIDE — the reference's approve workflow
-    (approve_tag_equipment app.py:5706-5888): approved staging rows
+    """M6 — the reference's approve workflow (approve_tag_equipment
+    app.py:5706-5888) on copy-on-write registers: approved staging rows
     promote into the main register with Add-vs-Edit validation, a
-    status row is recorded, and the staging rows are deleted — three
-    effects that the reference wraps in one DB transaction. On a
-    parquet warehouse with no transaction manager the same
-    exactly-once outcome comes from THREE ordered commits to
-    DETERMINISTIC targets, each gated on its ``_SUCCESS`` marker
-    (the :func:`move_records` discipline, composed):
+    status row is recorded, and the promoted rows leave staging — three
+    effects the reference wraps in one DB transaction. Here they are
+    four ordered commits, exactly once per ``promote_id``, each skipped
+    on replay once its ``_SUCCESS`` exists:
 
-    1. main delta: VALID approved rows (Edit needs an existing main
-       key, Add a missing one — validated against the merged main
-       view at delta-build time) overwrite
-       ``main/promotes/<promote_id>``, carrying ``action_col`` and an
-       embedded ``__seq`` version = 1 + the max committed delta seq.
-       An Edit is NOT delete-plus-insert here (a tombstone on the key
-       would also kill the replacement row, or — applied base-only —
-       leave stale versions from earlier promotes): the main view in
-       :func:`read_with_promotes` is last-writer-wins per key by
-       ``__seq``, the Delta/Iceberg MoR upsert pattern. The seq is
-       embedded in the committed rows, so replays reuse the committed
-       decision instead of recomputing it against drifted inputs.
-       Invalid rows are rejected (left in staging, like the
-       reference's validation failures).
-    2. status: one disposition row per promoted key (derived from the
-       COMMITTED delta, read back) overwrites ``status/<promote_id>``.
-    3. staging tombstones: ALL promoted keys overwrite
-       ``staging_tombs/<promote_id>`` — committing this last means a
-       crash can leave a promoted row transiently visible in both
-       staging and main (same read-committed-per-table window as
-       move_records), but never lost; replay finishes the remaining
-       commits and converges.
+    1. the decision: the VALID approved rows of staging's current
+       version (an Edit needs an existing main key, an Add a missing
+       one, checked against main's current version), written to
+       ``main/promotes/<promote_id>`` — read by this promote's own
+       replays only. Invalid rows stay in staging, like the
+       reference's validation failures;
+    2. main's version ``v<N>-<promote_id>``: main's current rows whose
+       key was not promoted, plus one promoted row per key in main's
+       columns (staging must carry every main column). A promote that
+       holds several valid submissions of one key keeps a
+       deterministic one — the greatest by the remaining columns —
+       but which carries no meaning, so collapse them before
+       promoting;
+    3. ``status_path/<promote_id>``: one disposition row per promoted
+       row (read the status rows with ``_committed_files``);
+    4. staging's version ``v<N>-<promote_id>``: staging's current
+       version minus the promoted submissions.
 
-    Readers: main = :func:`read_with_promotes`; staging =
-    ``read_with_moves(staging, tomb_path=staging_tombs, ...)``.
-    Single sequential writer assumed (the reference's request-scoped
-    approval semantics) — the ``__seq`` counter is derived from
-    committed state, not caller-supplied ordering. Enforced
-    best-effort by :func:`register_lease` (r12): a second concurrent
-    promote on the same register raises :class:`ConcurrentWriterError`
-    instead of racing ``_next_promote_seq`` to a duplicate ``__seq``
-    (two same-seq deltas would make last-writer-wins ambiguous).
+    Commits 2-4 derive from the decision read back, so a replay never
+    re-validates against inputs that changed in between. A crash
+    leaves only uncommitted directories, and a replay finishes the
+    remaining commits; until it does, a promoted row can be visible in
+    both registers, but never lost.
 
     ``staging_key_cols`` is the staging ROW identity (defaults to
-    ``key_cols``): staging tombstones must key on the submission, not
-    the entity — entity-key tombstones would make a RE-submitted key
-    (edit the same tag again later, the normal approval loop)
-    invisible to every later promote. The reference's history table
-    has exactly this per-request row identity.
-
-    ``on_between(i)`` is the chaos seam: called after commit i
-    (1-2), letting tests kill the job between any two commits.
-
-    ``auto_compact=N`` folds the delta chain via
-    :func:`compact_promotes` once it reaches N committed versions
-    (VERDICT r10 item 6: the cadence was documentation-only before).
-    The fold runs AFTER the promote's three commits — compaction is a
-    maintenance pass over committed state, so a crash between the last
-    commit and the fold loses nothing (the next promote or read just
-    sees a longer chain; compaction replay is itself crash-safe)."""
+    ``key_cols``): commit 4 removes the submission, not the entity —
+    removing by entity key would also drop a later resubmission of the
+    same key (the normal approval loop). ``on_between(i)`` is the chaos
+    seam, called after commit i (1-3). A main register with no
+    committed version is refused unless ``bootstrap_ok=True``, so a
+    mistyped ``main_path`` fails loudly instead of starting a fresh
+    register. The promote holds the writer lease of main and staging."""
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    with register_lease(main_path, "promote"):
-        staging_key_cols = staging_key_cols or key_cols
-        delta = os.path.join(main_path, "promotes", promote_id)
-        status = os.path.join(status_path, promote_id)
-        staging_tomb = os.path.join(staging_tomb_path, promote_id)
-        if _has_success(staging_tomb):
-            if auto_compact is not None and _promote_chain_len(main_path) >= auto_compact:
-                compact_promotes(spark, main_path, key_cols)
-            return  # fully committed: replay is a true no-op
-        if not _has_success(delta):
-            staging = read_with_moves(
-                spark, staging_path, moves_for=staging_path,
-                tomb_path=staging_tomb_path, key_cols=staging_key_cols,
-            ).where(predicate)
-            main_now = read_with_promotes(spark, main_path, key_cols, missing_ok=True)
-            if main_now is None:
-                # brand-new register: explicit opt-in only (ADVICE r08) —
-                # otherwise a mistyped/misconfigured main_path would
-                # silently bootstrap a fresh register instead of failing
-                if not bootstrap_ok:
-                    raise ValueError(
-                        f"{main_path}: no committed base and no committed "
-                        "promotes; pass bootstrap_ok=True to initialize a "
-                        "brand-new register (the guard exists so a mistyped "
-                        "main_path fails loudly instead of bootstrapping)"
-                    )
-                # the main key set is empty, so every staged key is
-                # missing — Adds validate, Edits reject
-                exists = staging.limit(0)
-                missing = staging
+    staging_key_cols = staging_key_cols or key_cols
+    record = os.path.join(main_path, "promotes", promote_id)
+    status = os.path.join(status_path, promote_id)
+    with _register_leases((main_path, staging_path), f"promote {promote_id}"):
+        if not _has_success(record):
+            staged = _require_current(spark, staging_path).where(predicate)
+            main = read_current(spark, main_path)
+            if main is None and not bootstrap_ok:
+                raise ValueError(
+                    f"{main_path}: no committed version; pass bootstrap_ok=True "
+                    "to initialize a brand-new register (the guard exists so a "
+                    "mistyped main_path fails loudly instead of bootstrapping)"
+                )
+            if main is None:
+                valid = staged.where(F.col(action_col) == "Add")
             else:
-                main_keys = main_now.select(*key_cols).distinct()
-                exists = staging.join(main_keys, key_cols, "left_semi")
-                missing = staging.join(main_keys, key_cols, "left_anti")
-            valid = exists.where(F.col(action_col) == "Edit").unionByName(
-                missing.where(F.col(action_col) == "Add")
-            )
-            seq = _next_promote_seq(spark, main_path)
-            valid.withColumn("__seq", F.lit(seq)).write.mode("overwrite").parquet(delta)
+                keys = main.select(*key_cols).distinct()
+                valid = (
+                    staged.join(keys, key_cols, "left_semi")
+                    .where(F.col(action_col) == "Edit")
+                    .unionByName(
+                        staged.join(keys, key_cols, "left_anti").where(
+                            F.col(action_col) == "Add"
+                        )
+                    )
+                )
+            valid.write.mode("overwrite").parquet(record)
         if on_between is not None:
             on_between(1)
-        committed = spark.read.parquet(delta)
+        promoted = spark.read.parquet(record)
+
+        def main_post() -> DataFrame:
+            rest = sorted(c for c in promoted.columns if c not in key_cols)
+            w = Window.partitionBy(*key_cols).orderBy(*[F.col(c).desc() for c in rest])
+            winners = (
+                promoted.withColumn("__rn", F.row_number().over(w))
+                .where(F.col("__rn") == 1)
+                .drop("__rn")
+            )
+            main = read_current(spark, main_path)
+            if main is None:
+                return winners
+            return main.join(winners.select(*key_cols), key_cols, "left_anti").unionByName(
+                winners.select(*main.columns)
+            )
+
+        _commit_once(main_path, promote_id, main_post)
+        if on_between is not None:
+            on_between(2)
         if not _has_success(status):
-            committed.select(
+            promoted.select(
                 *key_cols,
                 F.col(action_col).alias("action"),
                 F.when(F.col(action_col) == "Edit", F.lit("edited"))
@@ -801,432 +582,16 @@ def promote_records(
                 .alias("disposition"),
             ).write.mode("overwrite").parquet(status)
         if on_between is not None:
-            on_between(2)
-        committed.select(*staging_key_cols).distinct().write.mode("overwrite").parquet(
-            staging_tomb
+            on_between(3)
+        _commit_once(
+            staging_path,
+            promote_id,
+            lambda: _require_current(spark, staging_path).join(
+                promoted.select(*staging_key_cols).distinct(),
+                staging_key_cols,
+                "left_anti",
+            ),
         )
-        if auto_compact is not None and _promote_chain_len(main_path) >= auto_compact:
-            compact_promotes(spark, main_path, key_cols)
-
-
-def _next_promote_seq(spark, main_path: str) -> int:
-    """1 + the max ``__seq`` across committed promote deltas (1 for
-    the first promote). Reads only committed state, so a replay that
-    reaches this point before its own delta committed recomputes the
-    same value."""
-    files = _committed_files(os.path.join(main_path, "promotes"))
-    if not files:
-        return 1
-    row = spark.read.parquet(*files).agg({"__seq": "max"}).collect()[0]
-    # max over ONLY-EMPTY committed deltas is NULL (a promote whose
-    # predicate matched nothing, or whose rows all failed validation,
-    # still commits an empty delta) — the counter restarts at 1
-    return 1 if row[0] is None else int(row[0]) + 1
-
-
-# merge-on-read pays ~linearly for the delta chain (winners window +
-# anti-join per read; tools/promote_chain_bench.py measured 9.3x at
-# chain 50, ~3x at 10) — SCALING.md's recommended fold point
-COMPACT_CADENCE = 10
-
-
-def _promote_chain_len(main_path: str) -> int:
-    """Number of LIVE committed promote delta versions under
-    ``main_path`` (the merge-on-read chain length the cadence is
-    measured in). Folded deltas retained for reader grace (see the
-    snapshot-pointer block) are already inside the committed
-    generation — counting them would re-trigger auto-compaction on
-    every promote after a fold."""
-    import glob as _glob
-
-    man = _read_snapshot(main_path)
-    folded = set(man.get("folded", [])) if man else set()
-    return sum(
-        1
-        for d in _glob.glob(os.path.join(main_path, "promotes", "*"))
-        if _has_success(d) and os.path.basename(d) not in folded
-    )
-
-
-def _warn_long_chain(main_path: str, chain: int) -> None:
-    import warnings
-
-    if chain > COMPACT_CADENCE:
-        warnings.warn(
-            f"{main_path}: {chain} committed promote deltas exceed the "
-            f"compaction cadence ({COMPACT_CADENCE}); every merged read "
-            "pays the chain (measured 9.3x at 50) — run compact_promotes "
-            "(python -m acuvate_spark compact) or pass auto_compact= to "
-            "promote_records",
-            UserWarning,
-            stacklevel=3,
-        )
-
-
-def read_with_promotes(
-    spark,
-    main_path: str,
-    key_cols: list[str],
-    missing_ok: bool = False,
-    _warn_chain: bool = True,
-) -> DataFrame | None:
-    """Merge-on-read main view over :func:`promote_records` state:
-    committed base rows overridden by the HIGHEST-``__seq`` committed
-    delta version per key. The window that picks the winner runs over
-    the DELTAS ONLY (the small, recent side — bounded by promote
-    volume since the last compaction); the base table never sorts: it
-    anti-joins the delta key set (keys shuffle — broadcast-sized at
-    warehouse scale — full base rows never do) and unions the
-    winners. Crash-invisibility as everywhere: un-marked part files
-    never serve.
-
-    Schema contract: delta rows must carry every main column
-    (promote_records copies the staging row, so staging must be a
-    superset of main's schema); staging-only columns are dropped from
-    the view when base files exist. One approved row per entity key
-    per promote is the intended usage (the reference approves one
-    history row per tag per request); if a single promote does carry
-    same-key rows, the winner is still DETERMINISTIC — ties on
-    ``__seq`` break on the remaining columns' values — but which
-    submission that is carries no meaning, so collapse multi-pending
-    keys before promoting.
-
-    Reads past :data:`COMPACT_CADENCE` committed deltas emit a
-    UserWarning naming the remedy (VERDICT r10 item 6: nothing
-    surfaced the measured read tax before; ``_warn_chain=False`` is
-    for the compaction pass itself, whose read exists to RETIRE the
-    chain)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    if _warn_chain:
-        _warn_long_chain(main_path, _promote_chain_len(main_path))
-    base, man = _resolve_base(spark, main_path)
-    folded = set(man.get("folded", [])) if man else set()
-    files = [
-        f
-        for f in _committed_files(os.path.join(main_path, "promotes"))
-        # folded deltas are RETAINED until the next compaction's GC
-        # (reader grace — snapshot expiry) but already live in the
-        # generation the manifest names: applying them again would be
-        # value-idempotent, excluding them keeps that a non-theorem
-        if os.path.basename(os.path.dirname(f)) not in folded
-    ]
-    if not files:
-        if base is None:
-            if missing_ok:
-                # bootstrap shape: a brand-new register with nothing
-                # committed yet reads as "no main view" rather than an
-                # error, so a first Add-only promote can seed it
-                return None
-            raise ValueError(
-                f"{main_path}: no committed base parquet files and no committed promote deltas"
-            )
-        return base
-    if base is None:
-        _warn_unmarked_base(main_path)
-    deltas = spark.read.parquet(*files)
-    tiebreak = [
-        F.col(c).desc()
-        for c in sorted(deltas.columns)
-        if c not in (*key_cols, "__seq")
-    ]
-    w = Window.partitionBy(*key_cols).orderBy(F.col("__seq").desc(), *tiebreak)
-    winners = (
-        deltas.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn", "__seq")
-    )
-    if base is None:
-        return winners
-    winners = winners.drop(*[c for c in winners.columns if c not in base.columns])
-    keys = winners.select(*key_cols).distinct()
-    return base.join(keys, key_cols, "left_anti").unionByName(
-        winners, allowMissingColumns=True
-    )
-
-
-def read_status(spark, status_path: str) -> DataFrame:
-    """Committed status rows across all promotes (crash-invisible like
-    every other :func:`promote_records` artifact)."""
-    files = _committed_files(status_path)
-    if not files:
-        raise ValueError(f"{status_path}: no committed status rows")
-    return spark.read.parquet(*files)
-
-
-def compact_promotes(spark, main_path: str, key_cols: list[str]) -> int:
-    """Fold every live committed promote delta into the base — the
-    maintenance pass that bounds :func:`read_with_promotes` read
-    amplification (VERDICT r09 item 7: the merge-on-read view pays a
-    per-read winners window + anti-join that grows with the delta
-    chain; tools/promote_chain_bench.py measures the crossover and
-    SCALING.md records the recommended cadence). Returns the number of
-    delta versions folded (0 = nothing to do).
-
-    Single-maintainer contract (same as :func:`storage.compact_path`):
-    no concurrent promote while compacting — enforced best-effort by
-    :func:`register_lease` (r12; a live concurrent writer raises
-    :class:`ConcurrentWriterError` instead of interleaving commits).
-
-    SNAPSHOT-POINTER COMMIT (VERDICT r13 item 1 — replaces the r09
-    staged swap, whose metadata window made racing readers retry on
-    :class:`CompactionInProgressError`):
-
-    1. GC of the PREVIOUS cycle (safe under the lease: anything
-       removed here was superseded one full compaction ago) — stale
-       generations the manifest no longer names, the delta dirs it
-       lists as folded, and post-migration legacy top-level files;
-       plus recovery of pre-snapshot staged-swap crash shapes left by
-       older runs (restore-then-migrate).
-    2. materialize the merged view to a NEW generation dir
-       ``<root>/.snapshots/gen-NNNNNN`` (dot-prefixed: hidden from
-       every Spark listing; a crash here leaves an orphan the next
-       entry's GC removes — readers never look at an uncommitted
-       generation);
-    3. THE COMMIT: one atomic ``os.replace`` of the JSON manifest
-       ``<root>/.__snapshot__.json`` naming the new generation and the
-       delta dirs it folded. Readers resolve the manifest first
-       (:func:`_resolve_base`), so every read sees either the old
-       snapshot + live deltas or the new snapshot — never a torn
-       base, and never an error on the happy path.
-
-    NOTHING is deleted at commit time: the old generation, the folded
-    deltas, and (on the migration pass) the legacy top-level files all
-    survive until the NEXT compaction's step-1 GC, so an in-flight
-    reader that resolved the old manifest keeps a full maintenance
-    cycle to finish (the table-format snapshot-expiry discipline).
-    Readers exclude folded deltas via the manifest; re-applying them
-    would be value-idempotent anyway (each folded winner equals its
-    generation row). ``__seq`` keeps rising while folded deltas are
-    retained (:func:`_next_promote_seq` reads all committed deltas)
-    and restarts only after their GC — serving stays correct because
-    winners are chosen among LIVE deltas only and ANY delta beats the
-    base on its keys.
-
-    Crash points: before step 3 nothing observable changed (orphan
-    generation GC'd on re-entry); after step 3 the fold is durable and
-    re-entry only re-runs GC. The reference semantics matched is the
-    two-phase validate/commit of its approval flow (app.py:6105-6395,
-    O11): stage everything, commit with one pointer flip."""
-    import glob as _glob
-    import shutil
-
-    with register_lease(main_path, "compact"):
-        root = main_path.rstrip("/")
-        tmp, backup = root + ".__compacting__", root + ".__pre_compact__"
-        sentinel = "__BACKUP_COMPLETE__"
-
-        # ---- recovery of a PRE-SNAPSHOT (r09-r13) crashed staged swap:
-        # restore the legacy layout exactly as the old code did, then
-        # fall through to migrate it onto the snapshot scheme below.
-        if os.path.isdir(backup):
-            if _has_success(main_path):
-                shutil.rmtree(backup)
-            else:
-                if os.path.exists(os.path.join(backup, sentinel)):
-                    # crashed mid-move-in: any top-level file in main is
-                    # a partially-moved NEW file (the complete old set
-                    # is in the backup) — clear them so the restore is
-                    # exact. The snapshot manifest is never a swap
-                    # artifact (no new-code path creates a backup), so
-                    # never treat it as one.
-                    for f in os.listdir(main_path):
-                        p = os.path.join(main_path, f)
-                        if os.path.isfile(p) and f != _SNAPSHOT_NAME:
-                            os.remove(p)
-                # restore with _SUCCESS LAST (r13: a marker restored
-                # before the part files would let a concurrent reader
-                # see a committed main with a partial file set)
-                names = [f for f in os.listdir(backup) if f != sentinel]
-                for f in sorted(names, key=lambda f: (f == "_SUCCESS", f)):
-                    os.replace(os.path.join(backup, f), os.path.join(main_path, f))
-                shutil.rmtree(backup)
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-
-        # ---- step 1: GC of the previous cycle (and of crash orphans)
-        promotes_root = os.path.join(main_path, "promotes")
-        man = _snapshot_gc(main_path)
-        if _committed_files(os.path.join(main_path, "moves")):
-            raise ValueError(
-                f"{main_path}: register holds committed move deltas — a "
-                "promote fold would bake promote winners into the base "
-                "the moves view serves too, silently changing it; "
-                "registers are single-format (use compact_moves)"
-            )
-
-        folded = sorted(
-            d for d in _glob.glob(os.path.join(promotes_root, "*")) if _has_success(d)
-        )
-        if not folded:
-            return 0
-
-        # ---- step 2: materialize the new generation
-        view = read_with_promotes(spark, main_path, key_cols, _warn_chain=False)
-        gen_name = _next_gen_name(man)
-        view.write.mode("overwrite").parquet(
-            os.path.join(main_path, ".snapshots", gen_name)
-        )
-
-        # ---- step 3: the atomic commit
-        _commit_snapshot(
-            main_path,
-            {"gen": gen_name, "folded": [os.path.basename(d) for d in folded]},
-        )
-        return len(folded)
-
-
-def _snapshot_gc(main_path: str, tomb_path: str | None = None) -> dict | None:
-    """Step-1 GC shared by both compaction passes: remove everything
-    the PREVIOUS cycle retained for reader grace — stale generations
-    the manifest no longer names, the folded promote/move delta dirs
-    and (when ``tomb_path`` is given) folded tombstone sets it lists,
-    and post-migration legacy top-level files — plus crash orphans (a
-    ``.snapshots`` tree with no manifest at all). Runs under the
-    caller's lease. Returns the current manifest (or ``None``)."""
-    import glob as _glob
-    import shutil
-
-    snaps = os.path.join(main_path, ".snapshots")
-    man = _read_snapshot(main_path)
-    if man is None:
-        if os.path.isdir(snaps):
-            shutil.rmtree(snaps)  # generation written but never committed
-        return None
-    for d in _glob.glob(os.path.join(snaps, "*")):
-        if os.path.basename(d) != man["gen"]:
-            shutil.rmtree(d)
-    roots = [("folded", os.path.join(main_path, "promotes")),
-             ("folded_moves", os.path.join(main_path, "moves"))]
-    if tomb_path is not None:
-        roots.append(("folded_tombs", tomb_path))
-    for key, root in roots:
-        for name in man.get(key, []):
-            d = os.path.join(root, name)
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-    for f in os.listdir(main_path):  # post-migration legacy files
-        p = os.path.join(main_path, f)
-        if os.path.isfile(p) and f != _SNAPSHOT_NAME:
-            os.remove(p)
-    return man
-
-
-def _next_gen_name(man: dict | None) -> str:
-    return f"gen-{(int(man['gen'].rsplit('-', 1)[1]) + 1) if man else 1:06d}"
-
-
-def _commit_snapshot(main_path: str, man: dict) -> None:
-    """THE commit: one atomic ``os.replace`` of the manifest."""
-    manifest = os.path.join(main_path, _SNAPSHOT_NAME)
-    staged = f"{manifest}.tmp.{os.getpid()}"
-    with open(staged, "w") as fh:
-        json.dump(man, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(staged, manifest)
-
-
-def compact_moves(
-    spark,
-    path: str,
-    tomb_path: str | None = None,
-    key_cols: list[str] | None = None,
-) -> int:
-    """Fold a MOVE register's merge-on-read state into a snapshot
-    generation — the maintenance pass that bounds
-    :func:`read_with_moves` read amplification, symmetric to
-    :func:`compact_promotes` (r14; before this, move-delta and
-    tombstone chains grew unbounded while promote chains had a fold
-    since r10). Committed ``moves/*`` deltas union into the base and,
-    when ``tomb_path``/``key_cols`` are given, committed tombstoned
-    keys are applied (anti-join) and retired. Same snapshot-pointer
-    discipline end to end: one atomic manifest replace is the commit;
-    the old generation, folded artifacts, and post-migration legacy
-    files survive until the NEXT compaction's entry GC (reader
-    grace); a crash before the commit leaves an orphan generation the
-    next entry GCs, a crash after it is durable. Returns the number
-    of artifacts folded (move deltas + tombstone sets; 0 = no-op).
-
-    Two contracts specific to moves:
-
-    * Re-unioning a folded move delta would DUPLICATE rows (unlike
-      promote deltas, whose keyed last-writer-wins re-application is
-      value-idempotent), so read_with_moves' ``folded_moves``
-      exclusion is load-bearing — and the committed manifest carries
-      forward any previously-folded name whose dir still exists, so
-      even a partially-GC'd register can never re-serve a folded
-      delta.
-    * Registers are SINGLE-FORMAT: one generation cannot serve both
-      the promotes view and the moves view (each fold would bake the
-      other family's rows into the shared base), so a register
-      holding committed promote deltas refuses a moves fold and vice
-      versa.
-
-    Tombstone application is orthogonal: a generation folded without
-    ``tomb_path`` still serves correctly — readers keep anti-joining
-    the live tombstones. Replaying a :func:`move_records` whose
-    artifacts were already folded+GC'd is benign: the recompute finds
-    the source rows already retired (empty delta), and re-created
-    artifacts under folded names stay reader-excluded and are GC'd
-    again. Single-maintainer via :func:`register_lease`."""
-    import glob as _glob
-
-    if (tomb_path is None) != (key_cols is None):
-        raise ValueError("tomb_path and key_cols must be passed together")
-    with register_lease(path, "compact-moves"):
-        man = _snapshot_gc(path, tomb_path=tomb_path)
-        if _committed_files(os.path.join(path, "promotes")):
-            raise ValueError(
-                f"{path}: register holds committed promote deltas — a "
-                "moves fold would bake move rows into the base the "
-                "promotes view serves too, silently changing it; "
-                "registers are single-format (use compact_promotes)"
-            )
-        moves_root = os.path.join(path, "moves")
-        folded_moves = sorted(
-            os.path.basename(d)
-            for d in _glob.glob(os.path.join(moves_root, "*"))
-            if _has_success(d)
-        )
-        folded_tombs = []
-        if tomb_path is not None:
-            folded_tombs = sorted(
-                os.path.basename(d)
-                for d in _glob.glob(os.path.join(tomb_path, "*"))
-                if _has_success(d)
-            )
-        if not folded_moves and not folded_tombs:
-            return 0
-        view = read_with_moves(
-            spark, path,
-            moves_for=path if folded_moves else None,
-            tomb_path=tomb_path if folded_tombs else None,
-            key_cols=key_cols if folded_tombs else None,
-            _warn_chain=False,  # this read exists to RETIRE the chain
-        )
-        gen_name = _next_gen_name(man)
-        view.write.mode("overwrite").parquet(
-            os.path.join(path, ".snapshots", gen_name)
-        )
-        # carry forward any folded name whose dir survived a prior
-        # partial GC — see the duplication contract in the docstring
-        def _carry(key, root):
-            prior = (man or {}).get(key, [])
-            return [n for n in prior if os.path.isdir(os.path.join(root, n))]
-
-        _commit_snapshot(
-            path,
-            {
-                "gen": gen_name,
-                "folded": [],
-                "folded_moves": folded_moves + _carry("folded_moves", moves_root),
-                "folded_tombs": folded_tombs
-                + (_carry("folded_tombs", tomb_path) if tomb_path else (man or {}).get("folded_tombs", [])),
-            },
-        )
-        return len(folded_moves) + len(folded_tombs)
 
 
 def append_ledger(entries: list[str], path: str) -> None:

@@ -189,14 +189,13 @@ def compact_path(
     vanished files and fail loudly. POSIX has no atomic directory
     exchange (that is precisely what a table format's snapshot commit
     adds); the window is two metadata ops, and the serving contract
-    for anything stronger is read_with_promotes/read_with_moves —
-    their REGISTER base is snapshot-committed since r14 (versioned
-    generations + one atomic manifest replace, no reader window at
-    all), with mid-swap detection of legacy/torn shapes erroring
-    rather than serving a partial view. The hive-leaf swap here keeps
-    the two-rename window because its readers are arbitrary
-    ``spark.read.parquet(root)`` scans that cannot resolve a
-    manifest.
+    for anything stronger is the copy-on-write register store
+    (:mod:`acuvate_spark.operators.sinks`): each write commits a new
+    version directory and a reader resolves exactly one committed
+    version, so it has no reader window at all. The hive-leaf swap
+    here keeps the two-rename window because its readers are
+    arbitrary ``spark.read.parquet(root)`` scans that cannot resolve a
+    version.
 
     Single-maintainer contract, enforced best-effort by
     :func:`acuvate_spark.operators.sinks.register_lease` (r12): a live

@@ -26,18 +26,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators.sinks import _current_version, _read_version, _write_version
-
-
-def read_current(
-    spark: SparkSession, target_dir: str, max_num: int | None = None
-) -> DataFrame | None:
-    path = _current_version(target_dir, max_num)
-    return None if path is None else _read_version(spark, path)
+from ..operators.sinks import _write_version, read_current
 
 
 def merge_batch(

@@ -190,6 +190,42 @@ def test_backwards_clock_step_still_serves_latest_write(spark, registry, monkeyp
     assert [r["description"] for r in registry.table("Equipment").collect()] == ["pump A rev2"]
 
 
+def test_registry_writes_hold_the_register_lease(spark, registry):
+    """Every mutation runs read -> compute -> commit under the
+    register's writer lease: with a live writer (this host, a live pid)
+    holding ``Line``'s lease, each write raises before it commits."""
+    import os
+
+    from acuvate_spark.operators import sinks
+
+    _three_rows(spark, registry, "Line")
+    before = registry._current_path("Line")
+    lease = registry._versions_dir("Line") + ".__lease__"
+    with open(lease, "w") as fh:
+        fh.write(f"pid={os.getppid()} host={sinks._HOSTNAME} purpose=upsert_tags")
+    history = spark.createDataFrame(
+        [("E17-A_F-1001", "d", "Edit", "PENDING")],
+        "tag_no string, description string, action string, approval_status string",
+    )
+    rows = spark.createDataFrame(
+        [("E17-A_F-1001", "d", None, "u")],
+        "tagno string, description string, document string, modified_by string",
+    )
+    writes = (
+        lambda: registry.upsert_tags("Line", _incoming(spark, [("E17-A_F-1001", "d", "", "u")])),
+        lambda: registry.delete_tags("Line", ["E17-A_F-1001"]),
+        lambda: registry.apply_approvals("Line", history),
+        lambda: registry.import_rows("Line", rows),
+    )
+    try:
+        for write in writes:
+            with pytest.raises(sinks.ConcurrentWriterError, match="single-writer"):
+                write()
+    finally:
+        os.remove(lease)
+    assert registry._current_path("Line") == before
+
+
 # --- work counters ---------------------------------------------------------
 
 _GROUPS = itertools.count()

@@ -1,24 +1,11 @@
-"""Readers racing the maintenance path (VERDICT r12 item 2).
+"""Readers racing the maintenance path of ``storage.compact_path``.
 
 The writer lease serializes WRITERS, and the chaos sweeps cover every
-single-writer crash point — but nothing exercised a READER concurrent
-with the staged swaps. These tests interleave a reader at every file
-move of ``compact_promotes`` (and of its crash recovery), and a
-hive-ROOT reader at every directory rename of ``compact_path``,
-asserting the read is pre- or post-compaction truth or a LOUD error —
-never a silent mix.
-
-What the audit found and fixed (all in this round):
-
-* mid-swap, ``read_with_promotes`` served "no base -> winners only" —
-  every never-promoted base row silently vanished behind a
-  UserWarning. Now: :class:`sinks.CompactionInProgressError`.
-* crash-recovery restored the backup in ``os.listdir`` order — the
-  ``_SUCCESS`` marker could land back in main BEFORE the part files,
-  so a racing reader saw a committed PARTIAL base. Now: marker last.
-* ``compact_path``'s temp/backup siblings were visible to a root
-  scan's listing for the whole rewrite window (duplicate partition
-  rows). Now: dot-prefixed, hidden from Spark's path filter.
+single-writer crash point; these tests interleave a hive-ROOT reader at
+every directory rename of ``compact_path``, asserting the read is pre-
+or post-compaction truth — never a silent mix. The swap's temp and
+backup siblings are dot-prefixed, so Spark's path filter hides them
+from a root scan for the whole rewrite window.
 """
 
 from __future__ import annotations
@@ -26,193 +13,10 @@ from __future__ import annotations
 import os
 import shutil
 
-import pytest
 from pyspark.sql import functions as F
 
-from acuvate_spark.operators import sinks, storage
+from acuvate_spark.operators import storage
 from acuvate_spark.tables import load_table
-
-from .test_sinks import _promote_expected, _promote_setup
-
-
-def _view_rows(spark, main):
-    return sorted(
-        (r["s_suppkey"], r["s_acctbal"])
-        for r in sinks.read_with_promotes(spark, main, ["s_suppkey"]).collect()
-    )
-
-
-def test_reader_at_every_compaction_commit_point_sees_truth_never_errors(
-    spark, sf_dir, tmp_path
-):
-    """Snapshot-pointer commit (VERDICT r13 item 1): interleave a
-    read_with_promotes reader before AND after every os.replace and
-    every GC rmtree across TWO compaction cycles. Every probe must
-    return exactly the served truth — CompactionInProgressError is no
-    longer part of the happy path (it used to fire for the whole
-    staged-swap metadata window; it is now reserved for true torn
-    states, pinned by the tests below)."""
-    sup, paths = _promote_setup(spark, sf_dir, tmp_path)
-    sinks.promote_records(
-        spark, predicate=F.col("approved"), key_cols=["s_suppkey"],
-        staging_key_cols=["s_suppkey", "submission_id"],
-        action_col="action", promote_id="pr-0", **paths,
-    )
-    main = paths["main_path"]
-    truth = _view_rows(spark, main)
-    assert truth == sorted(_promote_expected(sup.collect())[0].items())
-
-    probes = {"n": 0}
-
-    def probe():
-        probes["n"] += 1
-        # must NEVER raise — a failing probe fails the test loudly
-        assert _view_rows(spark, main) == truth
-
-    real_replace, real_rmtree = os.replace, shutil.rmtree
-
-    def observing_replace(src, dst):
-        probe()
-        out = real_replace(src, dst)
-        probe()
-        return out
-
-    def observing_rmtree(path, *a, **kw):
-        probe()
-        out = real_rmtree(path, *a, **kw)
-        probe()
-        return out
-
-    os.replace, shutil.rmtree = observing_replace, observing_rmtree
-    try:
-        # cycle 1: migration fold (legacy base -> gen-000001)
-        assert sinks.compact_promotes(spark, main, ["s_suppkey"]) == 1
-    finally:
-        os.replace, shutil.rmtree = real_replace, real_rmtree
-    assert probes["n"] >= 2, "the commit made no observable metadata ops?"
-    assert _view_rows(spark, main) == truth
-
-    # cycle 2: promote again, then compact — this pass GCs the old
-    # generation, the folded delta, and the legacy top-level files
-    # while readers keep probing
-    sup.where(F.col("s_suppkey") % 4 == 0).select(
-        "s_suppkey", F.lit(77).alias("submission_id"),
-        (F.col("s_acctbal") + 50.0).alias("s_acctbal"),
-        F.lit("Edit").alias("action"), F.lit(True).alias("approved"),
-    ).withColumn(
-        "__seq", F.lit(sinks._next_promote_seq(spark, main))
-    ).write.parquet(os.path.join(main, "promotes", "pr-1"))
-    truth = _view_rows(spark, main)
-    probes["n"] = 0
-    os.replace, shutil.rmtree = observing_replace, observing_rmtree
-    try:
-        assert sinks.compact_promotes(spark, main, ["s_suppkey"]) == 1
-    finally:
-        os.replace, shutil.rmtree = real_replace, real_rmtree
-    assert probes["n"] >= 4  # GC rmtrees + the manifest commit
-    assert _view_rows(spark, main) == truth
-
-
-def _legacy_crash_mid_step3(spark, sf_dir, tmp_path):
-    """A register whose PRE-SNAPSHOT (r09-r13 staged-swap) compaction
-    died at the last move: the complete old file set sits in the
-    ``.__pre_compact__`` backup under the ``__BACKUP_COMPLETE__``
-    sentinel, main is uncommitted and holds partially-moved NEW files.
-    The snapshot-era compaction no longer produces this shape, so it
-    is constructed exactly as the old swap's step-2 left it — entry
-    recovery must still heal registers a pre-r14 run crashed."""
-    sup, paths = _promote_setup(spark, sf_dir, tmp_path)
-    sinks.promote_records(
-        spark, predicate=F.col("approved"), key_cols=["s_suppkey"],
-        staging_key_cols=["s_suppkey", "submission_id"],
-        action_col="action", promote_id="pr-0", **paths,
-    )
-    main2 = paths["main_path"]
-    truth = _view_rows(spark, main2)
-    backup = main2.rstrip("/") + ".__pre_compact__"
-    os.makedirs(backup)
-    # the old swap moved _SUCCESS FIRST, then the part files
-    olds = [
-        f for f in os.listdir(main2) if os.path.isfile(os.path.join(main2, f))
-    ]
-    for f in sorted(olds, key=lambda f: (f != "_SUCCESS", f)):
-        os.replace(os.path.join(main2, f), os.path.join(backup, f))
-    with open(os.path.join(backup, "__BACKUP_COMPLETE__"), "w"):
-        pass
-    # partially-moved NEW files (differently named than the old set)
-    with open(os.path.join(main2, "part-00000-newgen.parquet"), "wb"):
-        pass
-    assert os.path.isdir(backup)
-    assert not os.path.isfile(os.path.join(main2, "_SUCCESS"))
-    return main2, truth
-
-
-def test_recovery_restores_marker_last_and_reader_never_sees_partial(
-    spark, sf_dir, tmp_path
-):
-    """Heal a PRE-SNAPSHOT crashed swap on entry: the backup must be
-    restored with ``_SUCCESS`` LAST (os.listdir order could commit a
-    partial base to racing readers), and a reader probed at every
-    restore move must see truth or CompactionInProgressError — with at
-    least one mid-restore error proving the uncommitted window
-    actually held (this legacy crash shape IS a true torn state, the
-    one place the error remains). The recovery then migrates the
-    register onto the snapshot layout."""
-    main2, truth = _legacy_crash_mid_step3(spark, sf_dir, tmp_path)
-    backup = main2.rstrip("/") + ".__pre_compact__"
-
-    real_replace = os.replace
-    restore_dsts = []
-    outcomes = []
-
-    def observing(src, dst):
-        if src.startswith(backup):
-            try:
-                outcomes.append(("rows", _view_rows(spark, main2)))
-            except sinks.CompactionInProgressError:
-                outcomes.append(("mid-swap", None))
-            restore_dsts.append(os.path.basename(dst))
-        return real_replace(src, dst)
-
-    os.replace = observing
-    try:
-        assert sinks.compact_promotes(spark, main2, ["s_suppkey"]) == 1
-    finally:
-        os.replace = real_replace
-
-    assert restore_dsts, "recovery made no restore moves?"
-    assert restore_dsts[-1] == "_SUCCESS"
-    assert restore_dsts.count("_SUCCESS") == 1
-    for kind, rows in outcomes:
-        if kind == "rows":
-            assert rows == truth
-    assert ("mid-swap", None) in outcomes
-    assert _view_rows(spark, main2) == truth
-
-
-def test_read_with_promotes_raises_while_swap_in_flight(spark, sf_dir, tmp_path):
-    """Unit shape of the guard: uncommitted main beside a backup dir
-    is mid-swap state — raise, don't serve winners-only."""
-    _, paths = _promote_setup(spark, sf_dir, tmp_path)
-    sinks.promote_records(
-        spark, predicate=F.col("approved"), key_cols=["s_suppkey"],
-        staging_key_cols=["s_suppkey", "submission_id"],
-        action_col="action", promote_id="pr-0", **paths,
-    )
-    main = paths["main_path"]
-    os.makedirs(main.rstrip("/") + ".__pre_compact__")
-    os.remove(os.path.join(main, "_SUCCESS"))
-    with pytest.raises(sinks.CompactionInProgressError, match="in flight or crashed"):
-        sinks.read_with_promotes(spark, main, ["s_suppkey"])
-
-
-def test_read_with_moves_raises_while_swap_in_flight(spark, sf_dir, tmp_path):
-    base = str(tmp_path / "base")
-    load_table(spark, sf_dir, "region").write.parquet(base)
-    os.makedirs(base + ".__pre_compact__")
-    os.remove(os.path.join(base, "_SUCCESS"))
-    with pytest.raises(sinks.CompactionInProgressError, match="in flight or crashed"):
-        sinks.read_with_moves(spark, base)
 
 
 # ---------------------------------------------------------------------------
@@ -298,22 +102,3 @@ def test_compact_path_recovers_hidden_scheme_crash_shapes(spark, sf_dir, tmp_pat
     n = storage.compact_path(spark, path, target_file_bytes=1 << 40)
     assert n == 1
     assert spark.read.parquet(path).count() == n_rows
-
-
-def test_mid_swap_detection_covers_dot_prefixed_compact_path_backup(
-    spark, sf_dir, tmp_path
-):
-    """ADVICE r13: compact_path's swap artifacts are DOT-PREFIXED
-    ('.<leaf>.__pre_compact__'), but _raise_if_mid_swap only checked
-    the undotted compact_promotes spelling — a compact_path swap on a
-    flat register base escaped detection and the reader silently
-    served 'no base, deltas only'. Both spellings must now raise."""
-    base = str(tmp_path / "base")
-    load_table(spark, sf_dir, "region").write.parquet(base)
-    hidden = str(tmp_path / (".base" + ".__pre_compact__"))
-    os.makedirs(hidden)
-    os.remove(os.path.join(base, "_SUCCESS"))
-    with pytest.raises(sinks.CompactionInProgressError, match="in flight or crashed"):
-        sinks.read_with_moves(spark, base)
-    with pytest.raises(sinks.CompactionInProgressError, match="in flight or crashed"):
-        sinks.read_with_promotes(spark, base, ["r_regionkey"])

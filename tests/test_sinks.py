@@ -53,22 +53,43 @@ def test_append_ledger(tmp_path):
     assert [json.loads(x)["path"] for x in open(p)] == ["a.pdf", "b.pdf", "c.pdf"]
 
 
+# ---------------------------------------------------------------------------
+# M5 move / M6 promote on copy-on-write registers: every register is a
+# versions directory, set up with an initial committed version and
+# read through its current version.
+# ---------------------------------------------------------------------------
+
+
+def _append(spark, root, df):
+    """Commit the register's current rows plus ``df`` as its next version."""
+    cur = sinks.read_current(spark, root)
+    sinks._commit_version(df if cur is None else cur.unionByName(df), root)
+
+
+def _versions(root):
+    """Committed version dirs of a register, oldest first."""
+    return sorted(
+        v for v in os.listdir(root)
+        if sinks._version_num(v) is not None and sinks._has_success(os.path.join(root, v))
+    )
+
+
 def test_move_records_crash_between_commits_replays_exactly_once(spark, sf_dir, tmp_path):
-    """VERDICT r05 item 6: the move/promote WRITE side under a mid-job
-    crash. Kill the job between the insert-side commit and the
-    delete-side commit, re-run it, and assert exactly-once final
-    state: destination gains each moved row once, source loses exactly
-    the moved rows, and a full second replay after success changes
-    nothing (deterministic commit targets make replay idempotence a
-    structural property, not a cleanup)."""
+    """The move write side under a mid-job crash. Kill the job between
+    the destination commit and the source commit, re-run it, and
+    assert exactly-once final state: destination gains each moved row
+    once, source loses exactly the moved rows, and a full second
+    replay after success commits nothing (one version per register per
+    move id makes replay idempotence a structural property, not a
+    cleanup)."""
+    import pytest
     from pyspark.sql import functions as F
 
     src = str(tmp_path / "active")
     dst = str(tmp_path / "archive")
-    tomb = str(tmp_path / "active_tombstones")
     sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_acctbal")
-    sup.write.parquet(src)
-    sup.limit(0).write.parquet(os.path.join(dst))
+    sinks._commit_version(sup, src)
+    sinks._commit_version(sup.limit(0), dst)
     n_total = sup.count()
     pred = F.col("s_suppkey") % 4 == 0
     n_moved = sup.where(pred).count()
@@ -78,26 +99,20 @@ def test_move_records_crash_between_commits_replays_exactly_once(spark, sf_dir, 
         pass
 
     def crash():
-        raise Boom("killed between insert-side and delete-side commits")
-
-    import pytest
+        raise Boom("killed between the destination and source commits")
 
     with pytest.raises(Boom):
-        sinks.move_records(
-            spark, src, dst, tomb, pred, ["s_suppkey"], "mv-001", on_between=crash
-        )
-    # crashed state: insert side committed, delete side not — the move
-    # is not yet visible as a delete, and nothing was lost
-    src_view = sinks.read_with_moves(spark, src, tomb_path=tomb, key_cols=["s_suppkey"])
-    assert src_view.count() == n_total
+        sinks.move_records(spark, src, dst, pred, ["s_suppkey"], "mv-001", on_between=crash)
+    # crashed state: destination committed, source not — the moved rows
+    # are visible in both registers, and nothing was lost
+    assert sinks.read_current(spark, src).count() == n_total
+    assert sinks.read_current(spark, dst).count() == n_moved
 
     # replay WITHOUT the fault: must converge, not double-insert
-    sinks.move_records(spark, src, dst, tomb, pred, ["s_suppkey"], "mv-001")
+    sinks.move_records(spark, src, dst, pred, ["s_suppkey"], "mv-001")
 
     def final_state():
-        d = sinks.read_with_moves(spark, dst, moves_for=dst)
-        s = sinks.read_with_moves(spark, src, tomb_path=tomb, key_cols=["s_suppkey"])
-        return d, s
+        return sinks.read_current(spark, dst), sinks.read_current(spark, src)
 
     d, s = final_state()
     assert d.count() == d.select("s_suppkey").distinct().count() == n_moved
@@ -107,74 +122,70 @@ def test_move_records_crash_between_commits_replays_exactly_once(spark, sf_dir, 
     merged = {tuple(r) for r in d.unionByName(s).collect()}
     assert merged == {tuple(r) for r in sup.collect()}
 
-    # a full THIRD run after success is a no-op
-    sinks.move_records(spark, src, dst, tomb, pred, ["s_suppkey"], "mv-001")
+    # a full THIRD run after success commits nothing
+    committed = _versions(src), _versions(dst)
+    sinks.move_records(spark, src, dst, pred, ["s_suppkey"], "mv-001")
+    assert (_versions(src), _versions(dst)) == committed
     d2, s2 = final_state()
     assert d2.count() == n_moved and s2.count() == n_total - n_moved
 
 
 def test_move_records_survives_crash_during_insert_write_and_composes(spark, sf_dir, tmp_path):
-    """Hardening cases for the move write side: (1) crash artifacts —
-    a moves/<id> dir with only write-protocol droppings AND a dir with
-    part files but no _SUCCESS (killed mid job-commit) must both be
-    invisible to readers, not fail schema inference or expose a
-    partial move; (2) a destination that was only ever written by
-    moves (no base files) is readable; (3) two moves with OVERLAPPING
+    """Hardening cases for the move write side: (1) crash artifacts — a
+    version dir with only write-protocol droppings AND one with part
+    files but no _SUCCESS (killed mid job-commit) must both be
+    invisible to readers; (2) a destination with no committed version
+    is created by its first move; (3) two moves with OVERLAPPING
     predicates compose exactly-once — the second move must not re-copy
     rows the first already moved — and replaying the first move after
-    the second committed is still a no-op."""
+    the second committed is a no-op. An uncommitted decision and an
+    uncommitted source version left by a crashed run are recomputed,
+    never trusted."""
     import shutil
 
-    import pytest
     from pyspark.sql import functions as F
 
     src = str(tmp_path / "active")
     dst = str(tmp_path / "archive")
-    tomb = str(tmp_path / "active_tombstones")
     sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_acctbal")
-    sup.write.parquet(src)
+    sinks._commit_version(sup, src)
     n_total = sup.count()
-
-    # (1a) killed mid-write: only _temporary, no part files
-    os.makedirs(os.path.join(dst, "moves", "mv-crashed", "_temporary"))
-    # (1b) killed mid job-commit: part files present, no _SUCCESS
     staged = str(tmp_path / "staged")
     sup.limit(3).coalesce(1).write.parquet(staged)
-    partial = os.path.join(dst, "moves", "mv-partial")
-    os.makedirs(partial)
-    for f in os.listdir(staged):
-        if f.endswith(".parquet"):
-            shutil.copy(os.path.join(staged, f), partial)
-    # no committed delta and no base files: the view must refuse
-    # loudly (there is no schema to serve), not guess
-    with pytest.raises(ValueError, match="no committed base parquet"):
-        sinks.read_with_moves(spark, dst, moves_for=dst)
-    assert sinks.read_with_moves(
-        spark, src, tomb_path=tomb, key_cols=["s_suppkey"]
-    ).count() == n_total
 
-    # (3) two committed moves with OVERLAPPING predicates; mv-a also
-    # starts from a crashed-mid-tombstone-write artifact (part file
-    # with bogus keys, no _SUCCESS) which must stay invisible and be
-    # converged over, not trusted
+    def plant_partial(path):
+        """Part files with bogus rows and no _SUCCESS."""
+        os.makedirs(path)
+        for f in os.listdir(staged):
+            if f.endswith(".parquet"):
+                shutil.copy(os.path.join(staged, f), path)
+
+    # (1a) killed mid-write: only _temporary, no part files
+    os.makedirs(os.path.join(dst, f"v{'8' * 25}-mv-crashed", "_temporary"))
+    # (1b) killed mid job-commit: part files present, no _SUCCESS
+    plant_partial(os.path.join(dst, f"v{'9' * 25}-mv-partial"))
+    assert sinks.read_current(spark, dst) is None
+    assert sinks.read_current(spark, src).count() == n_total
+
+    # (3) two moves with OVERLAPPING predicates; mv-a starts from a
+    # crashed run's uncommitted decision and uncommitted source version
     pred_a = F.col("s_suppkey") % 5 == 0
     pred_b = F.col("s_suppkey") % 2 == 0  # overlaps pred_a on % 10 == 0
     n_a = sup.where(pred_a).count()
     n_union = sup.where(pred_a | pred_b).count()
-    bogus = os.path.join(tomb, "mv-a")
-    os.makedirs(bogus)
-    for f in os.listdir(staged):
-        if f.endswith(".parquet"):
-            shutil.copy(os.path.join(staged, f), bogus)
-    sinks.move_records(spark, src, dst, tomb, pred_a, ["s_suppkey"], "mv-a")
-    sinks.move_records(spark, src, dst, tomb, pred_b, ["s_suppkey"], "mv-b")
+    plant_partial(os.path.join(dst, "moves", "mv-a"))
+    stale_src = os.path.join(src, f"v{'9' * 25}-mv-a")
+    plant_partial(stale_src)
+    sinks.move_records(spark, src, dst, pred_a, ["s_suppkey"], "mv-a")
+    assert not os.path.exists(stale_src)  # replaced by the committed attempt
+    sinks.move_records(spark, src, dst, pred_b, ["s_suppkey"], "mv-b")
     # replaying the first move after the second committed: no-op
-    sinks.move_records(spark, src, dst, tomb, pred_a, ["s_suppkey"], "mv-a")
+    sinks.move_records(spark, src, dst, pred_a, ["s_suppkey"], "mv-a")
 
-    # (2) dst has NO base files — the view is deltas-only and the
-    # crash artifacts from (1) stay invisible
-    d = sinks.read_with_moves(spark, dst, moves_for=dst)
-    s = sinks.read_with_moves(spark, src, tomb_path=tomb, key_cols=["s_suppkey"])
+    # (2) dst started with no committed version; the crash artifacts
+    # from (1) stay invisible
+    d = sinks.read_current(spark, dst)
+    s = sinks.read_current(spark, src)
     assert d.count() == d.select("s_suppkey").distinct().count() == n_union
     assert n_a < n_union < n_total
     assert s.count() == n_total - n_union
@@ -184,86 +195,85 @@ def test_move_records_survives_crash_during_insert_write_and_composes(spark, sf_
 
 
 def test_move_records_chained_moves_carry_delta_rows(spark, sf_dir, tmp_path):
-    """ADVICE r06: chained moves A->B then B->C. Rows that arrived in
-    B via a committed move DELTA (never B's base files) must be
-    visible to the second move's source read and travel on to C —
-    the insert side reads its source with ``moves_for=src``."""
-    import pytest
+    """Chained moves A->B then B->C. Rows that arrived in B through the
+    first move must be visible to the second move's source read and
+    travel on to C."""
     from pyspark.sql import functions as F
 
     a = str(tmp_path / "a")
     b = str(tmp_path / "b")
     c = str(tmp_path / "c")
-    tomb_a = str(tmp_path / "tomb_a")
-    tomb_b = str(tmp_path / "tomb_b")
     sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    sup.write.parquet(a)
-    sup.limit(0).write.parquet(b)  # B starts empty: all its rows arrive via the delta
+    sinks._commit_version(sup, a)
+    sinks._commit_version(sup.limit(0), b)  # B starts empty: all its rows arrive by move
 
     pred_ab = F.col("s_suppkey") % 2 == 0  # A -> B: evens
-    pred_bc = F.col("s_suppkey") % 4 == 0  # B -> C: multiples of 4 (all delta-arrived)
+    pred_bc = F.col("s_suppkey") % 4 == 0  # B -> C: multiples of 4 (all moved into B)
     n_ab = sup.where(pred_ab).count()
     n_bc = sup.where(pred_bc).count()
     assert 0 < n_bc < n_ab
 
-    sinks.move_records(spark, a, b, tomb_a, pred_ab, ["s_suppkey"], "mv-ab")
-    sinks.move_records(spark, b, c, tomb_b, pred_bc, ["s_suppkey"], "mv-bc")
+    sinks.move_records(spark, a, b, pred_ab, ["s_suppkey"], "mv-ab")
+    sinks.move_records(spark, b, c, pred_bc, ["s_suppkey"], "mv-bc")
 
-    got_c = {r["s_suppkey"] for r in sinks.read_with_moves(spark, c, moves_for=c).collect()}
+    got_c = {r["s_suppkey"] for r in sinks.read_current(spark, c).collect()}
     assert got_c == {k for k in range(0, 10**6) if k % 4 == 0} & {
         r["s_suppkey"] for r in sup.collect()
     }
     assert len(got_c) == n_bc
-    # B's effective view lost exactly the rows that moved on to C
-    got_b = {
-        r["s_suppkey"]
-        for r in sinks.read_with_moves(
-            spark, b, moves_for=b, tomb_path=tomb_b, key_cols=["s_suppkey"]
-        ).collect()
-    }
+    # B's current version lost exactly the rows that moved on to C
+    got_b = {r["s_suppkey"] for r in sinks.read_current(spark, b).collect()}
     assert got_b == {r["s_suppkey"] for r in sup.where(pred_ab).collect()} - got_c
     # replays of either move after both committed: no-ops
-    sinks.move_records(spark, a, b, tomb_a, pred_ab, ["s_suppkey"], "mv-ab")
-    sinks.move_records(spark, b, c, tomb_b, pred_bc, ["s_suppkey"], "mv-bc")
-    assert sinks.read_with_moves(spark, c, moves_for=c).count() == n_bc
+    sinks.move_records(spark, a, b, pred_ab, ["s_suppkey"], "mv-ab")
+    sinks.move_records(spark, b, c, pred_bc, ["s_suppkey"], "mv-bc")
+    assert sinks.read_current(spark, c).count() == n_bc
 
 
-def test_read_with_moves_uncommitted_base_is_invisible(spark, sf_dir, tmp_path):
-    """ADVICE r06: a base table whose writer was killed mid job-commit
-    (part files present, no _SUCCESS) must NOT be served as complete —
-    the same crash-invisibility contract deltas and tombstones get."""
-    import shutil
+def test_move_records_random_sequences_match_dict_model(spark, sf_dir, tmp_path):
+    """Model check for the move write side: a random sequence of moves
+    with random (overlapping) predicates and randomly interleaved
+    replays must leave dst/src exactly equal to a pure-Python set
+    model where each row moves at most once, at the first move whose
+    predicate selects it among the still-present rows."""
+    import random
 
-    import pytest
     from pyspark.sql import functions as F
 
+    rng = random.Random(20260814)
+    src = str(tmp_path / "active")
+    dst = str(tmp_path / "archive")
     sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    staged = str(tmp_path / "staged")
-    sup.coalesce(1).write.parquet(staged)
+    sinks._commit_version(sup, src)
+    keys = sorted(r["s_suppkey"] for r in sup.select("s_suppkey").collect())
 
-    # base with part files but no _SUCCESS: refuse loudly
-    broken = str(tmp_path / "broken")
-    os.makedirs(broken)
-    for f in os.listdir(staged):
-        if f.endswith(".parquet"):
-            shutil.copy(os.path.join(staged, f), broken)
-    import pytest
+    model_src = set(keys)
+    model_dst: set[int] = set()
+    history: list[tuple[str, int, int]] = []
+    for i in range(6):
+        mod, res = rng.choice([2, 3, 5, 7]), rng.randrange(7)
+        mv = f"mv-{i}"
+        sinks.move_records(
+            spark, src, dst, F.col("s_suppkey") % mod == res, ["s_suppkey"], mv,
+        )
+        hit = {k for k in model_src if k % mod == res}
+        model_src -= hit
+        model_dst |= hit
+        history.append((mv, mod, res))
+        if rng.random() < 0.5:  # replay a random earlier move: commits nothing
+            pmv, pmod, pres = rng.choice(history)
+            committed = _versions(src), _versions(dst)
+            sinks.move_records(
+                spark, src, dst, F.col("s_suppkey") % pmod == pres, ["s_suppkey"], pmv,
+            )
+            assert (_versions(src), _versions(dst)) == committed
 
-    with pytest.raises(ValueError, match="no committed base"):
-        sinks.read_with_moves(spark, broken)
-
-    # ... but committed deltas under the same path still serve (the
-    # destination-only shape), with the uncommitted base still ignored
-    tomb = str(tmp_path / "tomb")
-    src = str(tmp_path / "src")
-    sup.write.parquet(src)
-    sinks.move_records(
-        spark, src, broken, tomb, F.col("s_suppkey") % 3 == 0, ["s_suppkey"], "mv-x"
-    )
-    with pytest.warns(UserWarning, match="without _SUCCESS"):
-        served = sinks.read_with_moves(spark, broken, moves_for=broken)
-    got = {r["s_suppkey"] for r in served.collect()}
-    assert got == {r["s_suppkey"] for r in sup.where(F.col("s_suppkey") % 3 == 0).collect()}
+    got_dst = {r["s_suppkey"] for r in sinks.read_current(spark, dst).collect()}
+    got_src = {r["s_suppkey"] for r in sinks.read_current(spark, src).collect()}
+    n_dst = sinks.read_current(spark, dst).count()
+    assert got_dst == model_dst and len(got_dst) == n_dst  # no duplicate rows
+    assert got_src == model_src
+    assert got_dst | got_src == set(keys) and not (got_dst & got_src)
 
 
 def _promote_setup(spark, sf_dir, tmp_path):
@@ -272,26 +282,24 @@ def _promote_setup(spark, sf_dir, tmp_path):
     staging = str(tmp_path / "staging")
     main = str(tmp_path / "main")
     status = str(tmp_path / "status")
-    staging_tomb = str(tmp_path / "staging_tombs")
     sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_acctbal")
     # main holds keys not divisible by 4; staging proposes evens with
     # +50 balances — action Edit where main has the key, Add where not
     # (plus deliberately INVALID rows: Add on existing, Edit on missing)
-    sup.where(F.col("s_suppkey") % 4 != 0).write.parquet(main)
-    sup.where(F.col("s_suppkey") % 2 == 0).select(
-        "s_suppkey",
-        F.lit(1).alias("submission_id"),
-        (F.col("s_acctbal") + 50.0).alias("s_acctbal"),
-        F.when(F.col("s_suppkey") % 8 == 0, F.lit("Add"))
-        .otherwise(F.lit("Edit"))
-        .alias("action"),
-        F.lit(True).alias("approved"),
-    ).write.parquet(staging)
-    paths = dict(
-        staging_path=staging, main_path=main, status_path=status,
-        staging_tomb_path=staging_tomb,
+    sinks._commit_version(sup.where(F.col("s_suppkey") % 4 != 0), main)
+    sinks._commit_version(
+        sup.where(F.col("s_suppkey") % 2 == 0).select(
+            "s_suppkey",
+            F.lit(1).alias("submission_id"),
+            (F.col("s_acctbal") + 50.0).alias("s_acctbal"),
+            F.when(F.col("s_suppkey") % 8 == 0, F.lit("Add"))
+            .otherwise(F.lit("Edit"))
+            .alias("action"),
+            F.lit(True).alias("approved"),
+        ),
+        staging,
     )
-    return sup, paths
+    return sup, dict(staging_path=staging, main_path=main, status_path=status)
 
 
 def _promote_expected(sup_rows):
@@ -315,20 +323,31 @@ def _promote_expected(sup_rows):
     return final_main, promoted
 
 
+def _main_rows(spark, paths, key="s_suppkey", value="s_acctbal"):
+    return {
+        r[key]: r[value]
+        for r in sinks.read_current(spark, paths["main_path"]).select(key, value).collect()
+    }
+
+
+def _status_rows(spark, status_path):
+    return spark.read.parquet(*sinks._committed_files(status_path)).collect()
+
+
 def test_promote_records_crash_at_every_seam_replays_exactly_once(spark, sf_dir, tmp_path):
-    """VERDICT r06 item 6: the M6 approve workflow's write side under
-    mid-job kills. Kill after EACH interior commit (delta, status),
-    then replay to completion, and assert the composed exactly-once
-    state:
-    main edited/added exactly once, status rows exactly one per
-    promoted key, staging loses exactly the promoted rows, and a full
-    extra replay is a no-op."""
+    """The M6 approve workflow's write side under mid-job kills. Kill
+    after EACH interior commit (decision, main, status), then replay
+    to completion, and assert the composed exactly-once state: main
+    edited/added exactly once, status rows exactly one per promoted
+    key, staging loses exactly the promoted rows, and a full extra
+    replay commits nothing."""
     import pytest
     from pyspark.sql import functions as F
 
     sup, paths = _promote_setup(spark, sf_dir, tmp_path)
     sup_rows = [(r["s_suppkey"], r["s_acctbal"]) for r in sup.collect()]
     expected_main, promoted = _promote_expected(sup_rows)
+    base_main = _main_rows(spark, paths)
     assert any(d == "edited" for d, _ in promoted.values())
     assert any(d == "added" for d, _ in promoted.values())
 
@@ -336,7 +355,7 @@ def test_promote_records_crash_at_every_seam_replays_exactly_once(spark, sf_dir,
         pass
 
     pred = F.col("approved")
-    for seam in (1, 2):
+    for seam in (1, 2, 3):
         def crash(i, seam=seam):
             if i == seam:
                 raise Boom(f"killed after commit {i}")
@@ -349,11 +368,10 @@ def test_promote_records_crash_at_every_seam_replays_exactly_once(spark, sf_dir,
                 **paths,
             )
         # each crash leaves only MORE commits done; nothing is lost:
-        # staging view still serves every unpromoted row
-        staging_view = sinks.read_with_moves(
-            spark, paths["staging_path"],
-            tomb_path=paths["staging_tomb_path"], key_cols=["s_suppkey"],
-        )
+        # main holds the promote once from commit 2 on, and staging
+        # still serves every row until its commit (the last)
+        assert _main_rows(spark, paths) == (base_main if seam == 1 else expected_main)
+        staging_view = sinks.read_current(spark, paths["staging_path"])
         assert staging_view.count() == sup.where(F.col("s_suppkey") % 2 == 0).count()
 
     sinks.promote_records(
@@ -361,29 +379,23 @@ def test_promote_records_crash_at_every_seam_replays_exactly_once(spark, sf_dir,
         staging_key_cols=["s_suppkey", "submission_id"],
         action_col="action", promote_id="pr-1", **paths,
     )
-    sinks.promote_records(  # full replay after success: no-op
+    # every register holds its setup version plus ONE for the promote
+    committed = _versions(paths["main_path"]), _versions(paths["staging_path"])
+    assert [len(v) for v in committed] == [2, 2]
+    sinks.promote_records(  # full replay after success: commits nothing
         spark, predicate=pred, key_cols=["s_suppkey"],
         staging_key_cols=["s_suppkey", "submission_id"],
         action_col="action", promote_id="pr-1", **paths,
     )
-    got_main = {
-        r["s_suppkey"]: r["s_acctbal"]
-        for r in sinks.read_with_promotes(spark, paths["main_path"], ["s_suppkey"])
-        .select("s_suppkey", "s_acctbal")
-        .collect()
-    }
-    assert got_main == expected_main
-    st = sinks.read_status(spark, paths["status_path"]).collect()
+    assert (_versions(paths["main_path"]), _versions(paths["staging_path"])) == committed
+    assert _main_rows(spark, paths) == expected_main
+    st = _status_rows(spark, paths["status_path"])
     assert {(r["s_suppkey"], r["disposition"]) for r in st} == {
         (k, d) for k, (d, _) in promoted.items()
     }
     assert len(st) == len(promoted)  # exactly one status row per key
     got_staging = {
-        r["s_suppkey"]
-        for r in sinks.read_with_moves(
-            spark, paths["staging_path"],
-            tomb_path=paths["staging_tomb_path"], key_cols=["s_suppkey"],
-        ).collect()
+        r["s_suppkey"] for r in sinks.read_current(spark, paths["staging_path"]).collect()
     }
     # invalid rows (rejected) remain in staging; promoted ones are gone
     assert got_staging == {k for k, _ in sup_rows if k % 2 == 0} - set(promoted)
@@ -391,8 +403,8 @@ def test_promote_records_crash_at_every_seam_replays_exactly_once(spark, sf_dir,
 
 def test_promote_records_second_promote_edits_first_promotes_adds(spark, sf_dir, tmp_path):
     """Composition: a second promote whose Edits target keys the FIRST
-    promote Added must see them in the main view (delta-aware read)
-    and replace them exactly once."""
+    promote Added must see them in main's current version and replace
+    them exactly once."""
     from pyspark.sql import functions as F
 
     sup, paths = _promote_setup(spark, sf_dir, tmp_path)
@@ -407,79 +419,24 @@ def test_promote_records_second_promote_edits_first_promotes_adds(spark, sf_dir,
     # stage a second batch: Edit every previously-ADDED key to -1.0
     added = [k for k, (d, _) in promoted.items() if d == "added"]
     assert added
-    batch2 = spark.createDataFrame(
+    _append(spark, paths["staging_path"], spark.createDataFrame(
         [(k, 2, -1.0, "Edit", True) for k in added],
         "s_suppkey long, submission_id int, s_acctbal double, action string, approved boolean",
-    )
-    batch2.write.mode("append").parquet(paths["staging_path"])
+    ))
     sinks.promote_records(
         spark, predicate=pred, key_cols=["s_suppkey"],
         staging_key_cols=["s_suppkey", "submission_id"],
         action_col="action", promote_id="pr-2", **paths,
     )
-    got_main = {
-        r["s_suppkey"]: r["s_acctbal"]
-        for r in sinks.read_with_promotes(spark, paths["main_path"], ["s_suppkey"])
-        .select("s_suppkey", "s_acctbal")
-        .collect()
-    }
     for k in added:
         expected_main[k] = -1.0
-    assert got_main == expected_main
-
-
-def test_move_records_random_sequences_match_dict_model(spark, sf_dir, tmp_path):
-    """Model check for the move write side: a random sequence of moves
-    with random (overlapping) predicates and randomly interleaved
-    replays must leave dst/src exactly equal to a pure-Python set
-    model where each row moves at most once, at the first move whose
-    predicate selects it among the still-present rows."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    rng = random.Random(20260814)
-    src = str(tmp_path / "active")
-    dst = str(tmp_path / "archive")
-    tomb = str(tmp_path / "tombs")
-    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    sup.write.parquet(src)
-    keys = sorted(r["s_suppkey"] for r in sup.select("s_suppkey").collect())
-
-    model_src = set(keys)
-    model_dst: set[int] = set()
-    history: list[tuple[str, int, int]] = []
-    for i in range(6):
-        mod, res = rng.choice([2, 3, 5, 7]), rng.randrange(7)
-        mv = f"mv-{i}"
-        sinks.move_records(
-            spark, src, dst, tomb,
-            F.col("s_suppkey") % mod == res, ["s_suppkey"], mv,
-        )
-        hit = {k for k in model_src if k % mod == res}
-        model_src -= hit
-        model_dst |= hit
-        history.append((mv, mod, res))
-        if rng.random() < 0.5:  # replay a random earlier move: no-op
-            pmv, pmod, pres = rng.choice(history)
-            sinks.move_records(
-                spark, src, dst, tomb,
-                F.col("s_suppkey") % pmod == pres, ["s_suppkey"], pmv,
-            )
-
-    got_dst = {r["s_suppkey"] for r in sinks.read_with_moves(spark, dst, moves_for=dst).collect()}
-    got_src = {r["s_suppkey"] for r in sinks.read_with_moves(
-        spark, src, tomb_path=tomb, key_cols=["s_suppkey"]).collect()}
-    n_dst = sinks.read_with_moves(spark, dst, moves_for=dst).count()
-    assert got_dst == model_dst and len(got_dst) == n_dst  # no duplicate rows
-    assert got_src == model_src
-    assert got_dst | got_src == set(keys) and not (got_dst & got_src)
+    assert _main_rows(spark, paths) == expected_main
 
 
 def test_promote_records_recomputes_uncommitted_delta(spark, sf_dir, tmp_path):
-    """A promote killed mid delta job-commit (part files promoted, no
-    _SUCCESS) must be invisible to readers AND recomputed — never
-    trusted — on replay."""
+    """A promote killed mid job-commit (part files promoted, no
+    _SUCCESS) — of its decision or of its main version — must be
+    invisible to readers AND recomputed, never trusted, on replay."""
     import shutil
 
     from pyspark.sql import functions as F
@@ -488,32 +445,26 @@ def test_promote_records_recomputes_uncommitted_delta(spark, sf_dir, tmp_path):
     sup_rows = [(r["s_suppkey"], r["s_acctbal"]) for r in sup.collect()]
     expected_main, promoted = _promote_expected(sup_rows)
 
-    # plant a bogus partial delta: wrong rows, no marker
+    # plant a bogus partial decision and main version: wrong rows, no marker
     staged = str(tmp_path / "staged")
     sup.limit(3).coalesce(1).write.parquet(staged)
-    partial = os.path.join(paths["main_path"], "promotes", "pr-1")
-    os.makedirs(partial)
-    for f in os.listdir(staged):
-        if f.endswith(".parquet"):
-            shutil.copy(os.path.join(staged, f), partial)
-    # uncommitted delta is invisible: the view is just the base
+    stale_main = os.path.join(paths["main_path"], f"v{'9' * 25}-pr-1")
+    for partial in (os.path.join(paths["main_path"], "promotes", "pr-1"), stale_main):
+        os.makedirs(partial)
+        for f in os.listdir(staged):
+            if f.endswith(".parquet"):
+                shutil.copy(os.path.join(staged, f), partial)
+    # uncommitted attempts are invisible: main is still its setup version
     base_keys = {r["s_suppkey"] for r in sup.where(F.col("s_suppkey") % 4 != 0).collect()}
-    got = {r["s_suppkey"] for r in sinks.read_with_promotes(
-        spark, paths["main_path"], ["s_suppkey"]).collect()}
-    assert got == base_keys
+    assert {r["s_suppkey"] for r in sinks.read_current(spark, paths["main_path"]).collect()} == base_keys
 
     sinks.promote_records(
         spark, predicate=F.col("approved"), key_cols=["s_suppkey"],
         staging_key_cols=["s_suppkey", "submission_id"],
         action_col="action", promote_id="pr-1", **paths,
     )
-    got_main = {
-        r["s_suppkey"]: r["s_acctbal"]
-        for r in sinks.read_with_promotes(spark, paths["main_path"], ["s_suppkey"])
-        .select("s_suppkey", "s_acctbal")
-        .collect()
-    }
-    assert got_main == expected_main
+    assert _main_rows(spark, paths) == expected_main
+    assert not os.path.exists(stale_main)
 
 
 def test_promote_records_random_sequences_match_model(spark, tmp_path):
@@ -527,7 +478,8 @@ def test_promote_records_random_sequences_match_model(spark, tmp_path):
     exactly the applied submissions from staging. Row values derive
     from the key alone, so same-key duplicates within one promote
     (possible when a rejected row is retried beside a resubmission)
-    cannot make the comparison tie-break-sensitive."""
+    cannot make the comparison tie-break-sensitive; main must still
+    hold one row per key."""
     import random
 
     from pyspark.sql import functions as F
@@ -536,15 +488,14 @@ def test_promote_records_random_sequences_match_model(spark, tmp_path):
     staging = str(tmp_path / "staging")
     main = str(tmp_path / "main")
     status = str(tmp_path / "status")
-    stomb = str(tmp_path / "stombs")
 
     def val(k):
         return k * 1.5
 
     base_keys = list(range(0, 12))
-    spark.createDataFrame(
-        [(k, val(k)) for k in base_keys], "k long, v double"
-    ).write.parquet(main)
+    sinks._commit_version(
+        spark.createDataFrame([(k, val(k)) for k in base_keys], "k long, v double"), main
+    )
 
     model_main = {k: val(k) for k in base_keys}
     model_staged: dict[tuple, str] = {}  # (k, sub) -> action, still in staging
@@ -560,13 +511,13 @@ def test_promote_records_random_sequences_match_model(spark, tmp_path):
             action = rng.choice(["Add", "Edit"])
             batch.append((k, sub, val(k), action, True))
             model_staged[(k, sub)] = action
-        spark.createDataFrame(
+        _append(spark, staging, spark.createDataFrame(
             batch, "k long, sub long, v double, action string, approved boolean"
-        ).write.mode("append").parquet(staging)
+        ))
 
         pid = f"pr-{i}"
         sinks.promote_records(
-            spark, staging, main, status, stomb,
+            spark, staging, main, status,
             F.col("approved"), ["k"], "action", pid,
             staging_key_cols=["k", "sub"],
         )
@@ -581,551 +532,88 @@ def test_promote_records_random_sequences_match_model(spark, tmp_path):
         for ks in valid:
             del model_staged[ks]
         model_status += len(valid)
-        if rng.random() < 0.5:  # replay a random earlier promote: no-op
+        if rng.random() < 0.5:  # replay a random earlier promote: commits nothing
+            committed = _versions(main), _versions(staging)
             sinks.promote_records(
-                spark, staging, main, status, stomb,
+                spark, staging, main, status,
                 F.col("approved"), ["k"], "action", rng.choice(history),
                 staging_key_cols=["k", "sub"],
             )
+            assert (_versions(main), _versions(staging)) == committed
 
-    got_main = {
-        r["k"]: r["v"]
-        for r in sinks.read_with_promotes(spark, main, ["k"]).select("k", "v").collect()
-    }
-    assert got_main == model_main
-    got_staged = {
-        (r["k"], r["sub"])
-        for r in sinks.read_with_moves(
-            spark, staging, tomb_path=stomb, key_cols=["k", "sub"]
-        ).collect()
-    }
+    got = sinks.read_current(spark, main).select("k", "v").collect()
+    assert {r["k"]: r["v"] for r in got} == model_main
+    assert len(got) == len(model_main)  # one row per key
+    got_staged = {(r["k"], r["sub"]) for r in sinks.read_current(spark, staging).collect()}
     assert got_staged == set(model_staged)
-    assert sinks.read_status(spark, status).count() == model_status
+    assert len(_status_rows(spark, status)) == model_status
 
 
 def test_promote_seq_survives_empty_committed_deltas(spark, sf_dir, tmp_path):
-    """ADVICE r07 (medium): a promote whose predicate matches nothing
-    commits an EMPTY delta; the next promote's max(__seq) over
-    only-empty deltas is NULL and must restart the counter at 1, not
-    crash with int(None). The later real promote must then fully
-    succeed and read back correctly."""
+    """A promote whose predicate matches nothing commits an EMPTY
+    decision and unchanged versions of main and staging; the next real
+    promote must then fully succeed and read back correctly."""
     from pyspark.sql import functions as F
 
     sup, paths = _promote_setup(spark, sf_dir, tmp_path)
     sup_rows = [(r["s_suppkey"], r["s_acctbal"]) for r in sup.collect()]
     expected_main, promoted = _promote_expected(sup_rows)
 
-    # promote 1: predicate selects nothing -> empty delta commits
+    # promote 1: predicate selects nothing -> empty decision commits
     sinks.promote_records(
         spark, predicate=F.lit(False), key_cols=["s_suppkey"],
         staging_key_cols=["s_suppkey", "submission_id"],
         action_col="action", promote_id="pr-empty", **paths,
     )
-    # promote 2 (previously TypeError in _next_promote_seq)
     sinks.promote_records(
         spark, predicate=F.col("approved"), key_cols=["s_suppkey"],
         staging_key_cols=["s_suppkey", "submission_id"],
         action_col="action", promote_id="pr-real", **paths,
     )
-    got_main = {
-        r["s_suppkey"]: r["s_acctbal"]
-        for r in sinks.read_with_promotes(spark, paths["main_path"], ["s_suppkey"])
-        .select("s_suppkey", "s_acctbal")
-        .collect()
-    }
-    assert got_main == expected_main
+    assert _main_rows(spark, paths) == expected_main
     # the empty promote contributed zero status rows; the real one, all
-    st = sinks.read_status(spark, paths["status_path"]).collect()
-    assert len(st) == len(promoted)
+    assert len(_status_rows(spark, paths["status_path"])) == len(promoted)
 
 
 def test_promote_records_bootstraps_brand_new_main(spark, tmp_path):
-    """ADVICE r07 (low): a first Add-only promote onto a register with
-    NO committed base and NO deltas must treat the main key set as
-    empty (Adds validate, Edits reject) instead of raising — but only
-    under an explicit ``bootstrap_ok=True`` opt-in (ADVICE r08: an
-    unconditional bootstrap would let a mistyped main_path silently
-    initialize a fresh register)."""
-    import pytest as _pytest
+    """A first Add-only promote onto a main register with NO committed
+    version must treat the main key set as empty (Adds validate, Edits
+    reject) instead of raising — but only under an explicit
+    ``bootstrap_ok=True`` opt-in (an unconditional bootstrap would let
+    a mistyped main_path silently initialize a fresh register)."""
+    import pytest
     from pyspark.sql import functions as F
 
     staging = str(tmp_path / "staging")
     main = str(tmp_path / "main")  # never written: brand-new register
-    paths = dict(
-        staging_path=staging, main_path=main,
-        status_path=str(tmp_path / "status"),
-        staging_tomb_path=str(tmp_path / "staging_tombs"),
-    )
-    spark.createDataFrame(
+    paths = dict(staging_path=staging, main_path=main, status_path=str(tmp_path / "status"))
+    sinks._commit_version(spark.createDataFrame(
         [(1, 1, 10.0, "Add", True), (2, 1, 20.0, "Add", True),
          (3, 1, 30.0, "Edit", True)],  # Edit on empty main: invalid
         "s_suppkey long, submission_id int, s_acctbal double, action string, approved boolean",
-    ).write.parquet(staging)
+    ), staging)
     # without the opt-in, a missing main register fails loudly
-    with _pytest.raises(ValueError, match="bootstrap_ok"):
+    with pytest.raises(ValueError, match="bootstrap_ok"):
         sinks.promote_records(
             spark, predicate=F.col("approved"), key_cols=["s_suppkey"],
             staging_key_cols=["s_suppkey", "submission_id"],
             action_col="action", promote_id="pr-boot", **paths,
         )
+    assert sinks.read_current(spark, main) is None
     sinks.promote_records(
         spark, predicate=F.col("approved"), key_cols=["s_suppkey"],
         staging_key_cols=["s_suppkey", "submission_id"],
         action_col="action", promote_id="pr-boot", bootstrap_ok=True, **paths,
     )
-    # a delta-only register's committed promote files must NOT trip
-    # the unmarked-base diagnostic (they live under main/promotes/)
-    import warnings as _warnings
-
-    with _warnings.catch_warnings():
-        _warnings.simplefilter("error")
-        got = {
-            r["s_suppkey"]: r["s_acctbal"]
-            for r in sinks.read_with_promotes(spark, main, ["s_suppkey"])
-            .select("s_suppkey", "s_acctbal")
-            .collect()
-        }
-    assert got == {1: 10.0, 2: 20.0}
+    assert _main_rows(spark, paths) == {1: 10.0, 2: 20.0}
     # the rejected Edit stays staged for resubmission
-    left = {
-        r["s_suppkey"]
-        for r in sinks.read_with_moves(
-            spark, staging, tomb_path=paths["staging_tomb_path"],
-            key_cols=["s_suppkey", "submission_id"],
-        ).collect()
-    }
-    assert left == {3}
-    # and the still-empty-base view stays an error for plain readers
-    import pytest
-
-    probe = str(tmp_path / "never_written")
-    with pytest.raises(ValueError, match="no committed base"):
-        sinks.read_with_promotes(spark, probe, ["s_suppkey"])
-
-
-def test_unmarked_base_under_served_deltas_warns(spark, sf_dir, tmp_path):
-    """ADVICE r07 (low): base part files WITHOUT _SUCCESS while
-    committed deltas are being served must not vanish silently — both
-    merged-view readers emit a UserWarning naming the remedy."""
-    import warnings
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_acctbal")
-
-    # --- moves side ---
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "dst")
-    tomb = str(tmp_path / "tomb")
-    sup.write.parquet(src)
-    sup.limit(5).write.parquet(dst)
-    os.remove(os.path.join(dst, "_SUCCESS"))  # marker-less base
-    sinks.move_records(
-        spark, src, dst, tomb, F.col("s_suppkey") % 5 == 0, ["s_suppkey"], "mv-1"
-    )
-    with pytest.warns(UserWarning, match="without _SUCCESS"):
-        got = sinks.read_with_moves(spark, dst, moves_for=dst)
-    assert got.count() == sup.where(F.col("s_suppkey") % 5 == 0).count()
-
-    # --- promotes side ---
-    staging = str(tmp_path / "staging")
-    main = str(tmp_path / "main")
-    paths = dict(
-        staging_path=staging, main_path=main,
-        status_path=str(tmp_path / "status"),
-        staging_tomb_path=str(tmp_path / "staging_tombs"),
-    )
-    spark.createDataFrame(
-        [(1, 1, 10.0, "Add", True)],
-        "s_suppkey long, submission_id int, s_acctbal double, action string, approved boolean",
-    ).write.parquet(staging)
-    sinks.promote_records(
-        spark, predicate=F.col("approved"), key_cols=["s_suppkey"],
-        staging_key_cols=["s_suppkey", "submission_id"],
-        action_col="action", promote_id="pr-1", bootstrap_ok=True, **paths,
-    )
-    # retro-write an unmarked base under the same main path
-    spark.createDataFrame(
-        [(9, 99.0)], "s_suppkey long, s_acctbal double"
-    ).write.mode("append").parquet(main)
-    os.remove(os.path.join(main, "_SUCCESS"))
-    with pytest.warns(UserWarning, match="without _SUCCESS"):
-        got = sinks.read_with_promotes(spark, main, ["s_suppkey"])
-    assert {r["s_suppkey"] for r in got.collect()} == {1}
-
-    # a marker-less base with NO deltas anywhere stays a loud error,
-    # and a committed base emits no warning
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        clean = str(tmp_path / "clean")
-        sup.write.parquet(clean)
-        assert sinks.read_with_moves(spark, clean).count() == sup.count()
-
-
-def test_unmarked_partitioned_base_under_served_deltas_warns(spark, sf_dir, tmp_path):
-    """ADVICE r08 (low): the unmarked-base diagnostic must also see a
-    hive-partitioned (subdir) base — part files live below the top
-    level, so a top-level-only glob was blind to this shape."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    sup = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_acctbal", (F.col("s_suppkey") % 2).alias("p")
-    )
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "dst")
-    tomb = str(tmp_path / "tomb")
-    sup.drop("p").write.parquet(src)
-    sup.limit(5).write.partitionBy("p").parquet(dst)  # hive-style base
-    os.remove(os.path.join(dst, "_SUCCESS"))
-    sinks.move_records(
-        spark, src, dst, tomb, F.col("s_suppkey") % 5 == 0, ["s_suppkey"], "mv-1"
-    )
-    with pytest.warns(UserWarning, match="without _SUCCESS"):
-        sinks.read_with_moves(spark, dst, moves_for=dst)
-
-
-def test_temporary_only_base_does_not_warn(spark, sf_dir, tmp_path):
-    """ADVICE r09 (low): a base dir whose only part files sit under
-    ``_temporary/`` (a writer killed mid-write, before any task commit)
-    is the crash shape ``_committed_files`` classifies as "no part
-    files at all" — the unmarked-base diagnostic must not fire on it
-    when deltas are served."""
-    import warnings
-
-    from pyspark.sql import functions as F
-
-    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_acctbal")
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "dst")
-    tomb = str(tmp_path / "tomb")
-    sup.write.parquet(src)
-    # base dir holding ONLY an in-flight task file under _temporary/
-    tdir = os.path.join(dst, "_temporary", "0", "task_0")
-    os.makedirs(tdir)
-    with open(os.path.join(tdir, "part-00000.parquet"), "wb") as f:
-        f.write(b"partial")
-    sinks.move_records(
-        spark, src, dst, tomb, F.col("s_suppkey") % 5 == 0, ["s_suppkey"], "mv-1"
-    )
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", UserWarning)
-        sinks.read_with_moves(spark, dst, moves_for=dst)
-
-
-def test_long_promote_chain_warns_and_cli_compact_folds_it(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """VERDICT r10 item 6: the measured chain read-tax must be
-    SURFACED, not just documented. A 15-delta chain (past the
-    COMPACT_CADENCE=10 fold point) makes read_with_promotes warn with
-    the remedy; the `python -m acuvate_spark compact` maintenance
-    subcommand folds it; serving is row-identical and the warning is
-    gone afterward."""
-    import warnings
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_acctbal")
-    main = str(tmp_path / "main")
-    sup.write.parquet(main)
-    # synthesize the committed chain directly (15 promote_records
-    # cycles would test the same read path 10x slower): each delta is
-    # one committed dir carrying __seq, exactly what promote_records
-    # writes
-    n_chain = 15
-    for i in range(1, n_chain + 1):
-        spark.createDataFrame(
-            [(2, float(i), i)], "s_suppkey long, s_acctbal double, __seq int"
-        ).write.parquet(os.path.join(main, "promotes", f"pr-{i:02d}"))
-
-    with pytest.warns(UserWarning, match="compaction cadence"):
-        got = sinks.read_with_promotes(spark, main, ["s_suppkey"])
-    rows_before = sorted(
-        (r["s_suppkey"], r["s_acctbal"]) for r in got.collect()
-    )
-    assert dict(rows_before)[2] == float(n_chain)  # highest __seq wins
-
-    # the CLI maintenance subcommand (session shared with the fixture)
-    from acuvate_spark.__main__ import main as cli_main
-
-    class _NoStop:
-        def __init__(self, s):
-            self._s = s
-
-        def __getattr__(self, a):
-            return getattr(self._s, a)
-
-        def stop(self):
-            pass
-
-    monkeypatch.setattr(
-        "acuvate_spark.session.get_spark", lambda name: _NoStop(spark)
-    )
-    assert cli_main(["compact", main, "--keys", "s_suppkey"]) == 0
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", UserWarning)
-        after = sinks.read_with_promotes(spark, main, ["s_suppkey"])
-        assert (
-            sorted((r["s_suppkey"], r["s_acctbal"]) for r in after.collect())
-            == rows_before
-        )
-    assert sinks._promote_chain_len(main) == 0
-
-
-def test_promote_records_auto_compact_folds_at_threshold(spark, sf_dir, tmp_path):
-    """VERDICT r10 item 6 (write-side hook): promote_records with
-    auto_compact=N folds the chain once it reaches N committed
-    versions, after its own three commits; serving is row-identical to
-    the merged view the chain would have produced."""
-    from pyspark.sql import functions as F
-
-    sup, paths = _promote_setup(spark, sf_dir, tmp_path)
-
-    def promote_cycle(i, **kw):
-        import shutil
-
-        staging = sup.where(F.col("s_suppkey") % 2 == 0).select(
-            "s_suppkey",
-            F.lit(i).alias("submission_id"),
-            (F.col("s_acctbal") + float(i)).alias("s_acctbal"),
-            F.when((F.col("s_suppkey") % 8 == 0) & F.lit(i == 0), F.lit("Add"))
-            .otherwise(F.lit("Edit"))
-            .alias("action"),
-            F.lit(True).alias("approved"),
-        )
-        shutil.rmtree(paths["staging_path"], ignore_errors=True)
-        staging.write.parquet(paths["staging_path"])
-        sinks.promote_records(
-            spark, predicate=F.col("approved"), key_cols=["s_suppkey"],
-            staging_key_cols=["s_suppkey", "submission_id"],
-            action_col="action", promote_id=f"pr-{i}", **kw, **paths,
-        )
-
-    promote_cycle(0, auto_compact=2)
-    assert sinks._promote_chain_len(paths["main_path"]) == 1  # below threshold
-    promote_cycle(1, auto_compact=2)
-    assert sinks._promote_chain_len(paths["main_path"]) == 0  # folded
-    assert os.path.isfile(os.path.join(paths["main_path"], "_SUCCESS"))
-    view = {
-        r["s_suppkey"]: r["s_acctbal"]
-        for r in sinks.read_with_promotes(
-            spark, paths["main_path"], ["s_suppkey"]
-        ).collect()
-    }
-    # membership: base keys (% 4 != 0) plus the cycle-0 Adds (% 8 == 0);
-    # k % 4 == 0 with k % 8 != 0 is Edit-on-missing, rejected both cycles
-    for k, b in ((r["s_suppkey"], r["s_acctbal"]) for r in sup.collect()):
-        if k % 4 != 0 or k % 8 == 0:
-            assert view[k] == (b + 1.0 if k % 2 == 0 else b)
-        else:
-            assert k not in view
-
-
-def test_compact_promotes_crash_at_every_seam_recovers(spark, sf_dir, tmp_path):
-    """Snapshot-pointer commit (VERDICT r13 item 1): crash the
-    compaction at every observable seam and assert re-entry converges
-    to a row-identical served view, with READS NEVER FAILING at any
-    crash shape (the error is reserved for true torn states, which no
-    crash of the snapshot flow can produce):
-
-    * at the manifest ``os.replace`` — generation fully written but
-      never committed (an orphan the next entry GC's away);
-    * a partial generation write — ``.snapshots`` exists, no manifest;
-    * at every GC ``shutil.rmtree`` of the SECOND cycle — the commit
-      is already durable, GC is pure cleanup."""
-    import shutil
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    sup, paths = _promote_setup(spark, sf_dir, tmp_path)
-    sinks.promote_records(
-        spark, predicate=F.col("approved"), key_cols=["s_suppkey"],
-        staging_key_cols=["s_suppkey", "submission_id"],
-        action_col="action", promote_id="pr-0", **paths,
-    )
-    main0 = paths["main_path"]
-
-    def view_rows(main):
-        return sorted(
-            (r["s_suppkey"], r["s_acctbal"])
-            for r in sinks.read_with_promotes(spark, main, ["s_suppkey"]).collect()
-        )
-
-    before = view_rows(main0)
-
-    class Boom(RuntimeError):
-        pass
-
-    real_replace = os.replace
-
-    # ---- seam 1: the manifest commit itself fails
-    main_a = str(tmp_path / "main_crash_commit")
-    shutil.copytree(main0, main_a)
-
-    def exploding(src, dst):
-        raise Boom("killed at the manifest commit")
-
-    os.replace = exploding
-    try:
-        with pytest.raises(Boom):
-            sinks.compact_promotes(spark, main_a, ["s_suppkey"])
-    finally:
-        os.replace = real_replace
-    # generation was written but never committed: readers still serve
-    # the legacy base + live delta — no error, exact truth
-    assert os.path.isdir(os.path.join(main_a, ".snapshots"))
-    assert not os.path.exists(os.path.join(main_a, sinks._SNAPSHOT_NAME))
-    assert view_rows(main_a) == before
-    # re-entry GCs the orphan and folds for real
-    assert sinks.compact_promotes(spark, main_a, ["s_suppkey"]) == 1
-    assert view_rows(main_a) == before
-
-    # ---- seam 2: a partial (uncommitted) generation write
-    main_b = str(tmp_path / "main_crash_genwrite")
-    shutil.copytree(main0, main_b)
-    partial = os.path.join(main_b, ".snapshots", "gen-000001")
-    os.makedirs(partial)
-    with open(os.path.join(partial, "part-00000.parquet"), "wb"):
-        pass  # no _SUCCESS: the write died mid-flight
-    assert view_rows(main_b) == before  # reader never looks at it
-    assert sinks.compact_promotes(spark, main_b, ["s_suppkey"]) == 1
-    assert view_rows(main_b) == before
-
-    # ---- seam 3: crash at every GC rmtree of the SECOND cycle
-    main_c = str(tmp_path / "main_crash_gc")
-    shutil.copytree(main0, main_c)
-    assert sinks.compact_promotes(spark, main_c, ["s_suppkey"]) == 1
-    # second promote so the next compaction has GC (old gen + folded
-    # delta + legacy files) AND a live delta to fold
-    sup.where(F.col("s_suppkey") % 4 == 0).select(
-        "s_suppkey", F.lit(99).alias("submission_id"),
-        (F.col("s_acctbal") + 100.0).alias("s_acctbal"),
-        F.lit("Edit").alias("action"), F.lit(True).alias("approved"),
-    ).withColumn("__seq", F.lit(sinks._next_promote_seq(spark, main_c))).write.parquet(
-        os.path.join(main_c, "promotes", "pr-gc")
-    )
-    truth_c = view_rows(main_c)
-    real_rmtree = shutil.rmtree
-    k = 1
-    crashed_at_least_once = False
-    while True:
-        calls = {"n": 0}
-
-        def exploding_rm(path, *a, _k=k, _calls=calls, **kw):
-            _calls["n"] += 1
-            if _calls["n"] == _k:
-                raise Boom(f"killed at rmtree #{_k}")
-            return real_rmtree(path, *a, **kw)
-
-        shutil.rmtree = exploding_rm
-        try:
-            try:
-                folded = sinks.compact_promotes(spark, main_c, ["s_suppkey"])
-                crashed = False
-            except Boom:
-                crashed = True
-        finally:
-            shutil.rmtree = real_rmtree
-        # reads never fail at ANY GC crash shape and always serve truth
-        assert view_rows(main_c) == truth_c
-        if not crashed:
-            assert folded == 1
-            break
-        crashed_at_least_once = True
-        k += 1
-    assert crashed_at_least_once
-    assert view_rows(main0) == before  # the pristine register was never touched
-
-
-def test_compact_promotes_folds_chain_and_serving_is_unchanged(spark, sf_dir, tmp_path):
-    """VERDICT r09 item 7: compaction of a PROMOTED register. Build a
-    delta chain with real promote_records cycles, compact, and assert:
-    the merged view is row-identical before/after, the chain is gone,
-    a re-compact is a no-op, and a post-compaction promote still wins
-    over the folded base even though the __seq counter restarted."""
-    from pyspark.sql import functions as F
-
-    sup, paths = _promote_setup(spark, sf_dir, tmp_path)
-    pred = F.col("approved")
-
-    def promote_cycle(i):
-        # re-seed staging: every even key proposes balance + i; after
-        # cycle 0 the % 8 == 0 keys exist in main, so action is Edit
-        staging = sup.where(F.col("s_suppkey") % 2 == 0).select(
-            "s_suppkey",
-            F.lit(i).alias("submission_id"),
-            (F.col("s_acctbal") + float(i)).alias("s_acctbal"),
-            F.when((F.col("s_suppkey") % 8 == 0) & F.lit(i == 0), F.lit("Add"))
-            .otherwise(F.lit("Edit"))
-            .alias("action"),
-            F.lit(True).alias("approved"),
-        )
-        import shutil
-
-        shutil.rmtree(paths["staging_path"], ignore_errors=True)
-        staging.write.parquet(paths["staging_path"])
-        sinks.promote_records(
-            spark, predicate=pred, key_cols=["s_suppkey"],
-            staging_key_cols=["s_suppkey", "submission_id"],
-            action_col="action", promote_id=f"pr-{i}", **paths,
-        )
-
-    n_chain = 8
-    for i in range(n_chain):
-        promote_cycle(i)
-    promotes_root = os.path.join(paths["main_path"], "promotes")
-    assert len(os.listdir(promotes_root)) == n_chain
-
-    def view_rows():
-        return sorted(
-            (r["s_suppkey"], r["s_acctbal"])
-            for r in sinks.read_with_promotes(
-                spark, paths["main_path"], ["s_suppkey"]
-            ).collect()
-        )
-
-    before = view_rows()
-    main = paths["main_path"]
-    assert sinks.compact_promotes(spark, main, ["s_suppkey"]) == n_chain
-    assert view_rows() == before
-    # snapshot layout: manifest names a committed generation; the
-    # folded deltas and legacy top-level files are RETAINED for reader
-    # grace (expired at the NEXT compaction's GC) but excluded from
-    # the live chain
-    man = sinks._read_snapshot(main)
-    assert man is not None and len(man["folded"]) == n_chain
-    assert os.path.isfile(
-        os.path.join(main, ".snapshots", man["gen"], "_SUCCESS")
-    )
-    assert len(os.listdir(promotes_root)) == n_chain  # retained
-    assert sinks._promote_chain_len(main) == 0  # ...but not live
-    # idempotent: nothing left to fold — and THIS pass GCs the
-    # previous cycle's leftovers
-    assert sinks.compact_promotes(spark, main, ["s_suppkey"]) == 0
-    assert view_rows() == before
-    assert os.listdir(promotes_root) == []
-    assert not os.path.isfile(os.path.join(main, "_SUCCESS"))  # legacy files expired
-    # the __seq counter restarted; a fresh promote must still beat the
-    # folded base on its keys
-    promote_cycle(n_chain)
-    after = dict(view_rows())
-    for k, b in dict(before).items():
-        if k % 2 == 0:
-            assert after[k] == b + 1.0  # n_chain - (n_chain - 1)
-        else:
-            assert after[k] == b
+    assert {r["s_suppkey"] for r in sinks.read_current(spark, staging).collect()} == {3}
 
 
 # ---------------------------------------------------------------------------
-# Writer-lease contract (VERDICT r11 item 5): registers are
-# single-writer; a live concurrent writer fails LOUDLY, a crashed
-# holder's stale lease never bricks the register, and the promote ->
-# auto-compact path is re-entrant under one lease.
+# Writer-lease contract: registers are single-writer; a live concurrent
+# writer fails LOUDLY, a crashed holder's stale lease never bricks the
+# register, and re-entry is per thread.
 # ---------------------------------------------------------------------------
 
 
@@ -1134,6 +622,7 @@ def test_promote_blocked_by_live_lease_leaves_register_untouched(spark, sf_dir, 
     from pyspark.sql import functions as F
 
     _, paths = _promote_setup(spark, sf_dir, tmp_path)
+    before = _versions(paths["main_path"]), _versions(paths["staging_path"])
     lease = paths["main_path"].rstrip("/") + ".__lease__"
     with open(lease, "w") as fh:
         fh.write("pid=99999 purpose=promote")  # fresh mtime: a live writer
@@ -1143,10 +632,10 @@ def test_promote_blocked_by_live_lease_leaves_register_untouched(spark, sf_dir, 
             action_col="action", promote_id="p1",
             staging_key_cols=["s_suppkey", "submission_id"], **paths,
         )
-    # no partial effect anywhere: no delta, no status, no tombstone
+    # no partial effect anywhere: no decision, no version, no status
     assert not os.path.exists(os.path.join(paths["main_path"], "promotes"))
+    assert (_versions(paths["main_path"]), _versions(paths["staging_path"])) == before
     assert not os.path.exists(paths["status_path"])
-    assert not os.path.exists(paths["staging_tomb_path"])
     os.remove(lease)
     assert os.path.exists(lease) is False
 
@@ -1166,62 +655,8 @@ def test_stale_lease_is_stolen_and_promote_proceeds(spark, sf_dir, tmp_path):
         staging_key_cols=["s_suppkey", "submission_id"], **paths,
     )
     want_main, _ = _promote_expected(sup.collect())
-    got = {
-        r["s_suppkey"]: r["s_acctbal"]
-        for r in sinks.read_with_promotes(
-            spark, paths["main_path"], ["s_suppkey"]
-        ).collect()
-    }
-    assert got == want_main
+    assert _main_rows(spark, paths) == want_main
     assert not os.path.exists(lease)  # released after the steal
-
-
-def test_compact_blocked_by_live_lease(spark, sf_dir, tmp_path):
-    import pytest
-    from pyspark.sql import functions as F
-
-    _, paths = _promote_setup(spark, sf_dir, tmp_path)
-    sinks.promote_records(
-        spark, predicate=F.col("approved"), key_cols=["s_suppkey"],
-        action_col="action", promote_id="p1",
-        staging_key_cols=["s_suppkey", "submission_id"], **paths,
-    )
-    lease = paths["main_path"].rstrip("/") + ".__lease__"
-    with open(lease, "w") as fh:
-        fh.write("pid=99999 purpose=promote")
-    with pytest.raises(sinks.ConcurrentWriterError):
-        sinks.compact_promotes(spark, paths["main_path"], ["s_suppkey"])
-    os.remove(lease)
-    # with the lease gone the same compact folds the chain
-    assert sinks.compact_promotes(spark, paths["main_path"], ["s_suppkey"]) == 1
-
-
-def test_auto_compact_runs_under_promotes_lease(spark, sf_dir, tmp_path):
-    """Re-entrancy: auto_compact=1 triggers compact_promotes INSIDE the
-    promote's lease — a non-re-entrant lease would deadlock/raise
-    here. The lease must also be gone afterwards."""
-    from pyspark.sql import functions as F
-
-    sup, paths = _promote_setup(spark, sf_dir, tmp_path)
-    sinks.promote_records(
-        spark, predicate=F.col("approved"), key_cols=["s_suppkey"],
-        action_col="action", promote_id="p1",
-        staging_key_cols=["s_suppkey", "submission_id"],
-        auto_compact=1, **paths,
-    )
-    assert not os.path.exists(paths["main_path"].rstrip("/") + ".__lease__")
-    # chain was folded by the in-lease compaction (the folded delta
-    # dir is retained for reader grace but no longer live)
-    assert sinks._promote_chain_len(paths["main_path"]) == 0
-    assert sinks._read_snapshot(paths["main_path"]) is not None
-    want_main, _ = _promote_expected(sup.collect())
-    got = {
-        r["s_suppkey"]: r["s_acctbal"]
-        for r in sinks.read_with_promotes(
-            spark, paths["main_path"], ["s_suppkey"]
-        ).collect()
-    }
-    assert got == want_main
 
 
 # ---------------------------------------------------------------------------
@@ -1415,392 +850,38 @@ def test_steal_lease_preserves_displaced_lease_when_restore_fails(
     assert open(steal).read() == "pid=2 purpose=fresh-winner"
 
 
-def test_promote_compact_random_interleave_matches_model(spark, tmp_path):
-    """Snapshot-era composition check: the random promote/replay model
-    above, with compact_promotes RANDOMLY INTERLEAVED — sometimes
-    crashed at the manifest commit (os.replace raises) or at a GC
-    rmtree, then optionally re-entered. Compaction and its crash
-    shapes are serving-invariant, so the model is unchanged; the test
-    pins that multi-cycle folds, retained-then-GC'd deltas, legacy
-    migration, and orphan recovery stay invisible under composition
-    with live writes."""
-    import random
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    rng = random.Random(20260816)
-    staging = str(tmp_path / "staging")
-    main = str(tmp_path / "main")
-    status = str(tmp_path / "status")
-    stomb = str(tmp_path / "stombs")
-
-    def val(k):
-        return k * 1.5
-
-    base_keys = list(range(0, 12))
-    spark.createDataFrame(
-        [(k, val(k)) for k in base_keys], "k long, v double"
-    ).write.parquet(main)
-
-    model_main = {k: val(k) for k in base_keys}
-    model_staged: dict[tuple, str] = {}
-    history = []
-    sub = 0
-
-    class Boom(RuntimeError):
-        pass
-
-    real_replace, real_rmtree = os.replace, shutil.rmtree
-
-    def crashed_compact():
-        """Run a compaction that dies at a random metadata op."""
-        kind = rng.choice(["replace", "rmtree"])
-        target_mod = os if kind == "replace" else shutil
-
-        def exploding(*a, **kw):
-            raise Boom()
-
-        setattr(target_mod, kind, exploding)
-        try:
-            try:
-                sinks.compact_promotes(spark, main, ["k"])
-            except Boom:
-                pass  # rmtree crash may hit nothing to GC: also fine
-        finally:
-            os.replace, shutil.rmtree = real_replace, real_rmtree
-
-    for i in range(6):
-        batch = []
-        for _ in range(rng.randrange(2, 6)):
-            sub += 1
-            k = rng.randrange(0, 30)
-            action = rng.choice(["Add", "Edit"])
-            batch.append((k, sub, val(k), action, True))
-            model_staged[(k, sub)] = action
-        spark.createDataFrame(
-            batch, "k long, sub long, v double, action string, approved boolean"
-        ).write.mode("append").parquet(staging)
-
-        pid = f"pr-{i}"
-        sinks.promote_records(
-            spark, staging, main, status, stomb,
-            F.col("approved"), ["k"], "action", pid,
-            staging_key_cols=["k", "sub"],
-        )
-        history.append(pid)
-        valid = [
-            (k, s) for (k, s), a in model_staged.items()
-            if (a == "Edit") == (k in model_main)
-        ]
-        for k, s in valid:
-            model_main[k] = val(k)
-        for ks in valid:
-            del model_staged[ks]
-        r = rng.random()
-        if r < 0.35:
-            sinks.compact_promotes(spark, main, ["k"])  # clean fold
-        elif r < 0.6:
-            crashed_compact()  # torn fold: next op must converge
-        if rng.random() < 0.4:  # replay a random earlier promote: no-op
-            sinks.promote_records(
-                spark, staging, main, status, stomb,
-                F.col("approved"), ["k"], "action", rng.choice(history),
-                staging_key_cols=["k", "sub"],
-            )
-        # serving truth holds after EVERY interleave step
-        got = {
-            r["k"]: r["v"]
-            for r in sinks.read_with_promotes(spark, main, ["k"])
-            .select("k", "v")
-            .collect()
-        }
-        assert got == model_main, f"cycle {i}"
-
-    sinks.compact_promotes(spark, main, ["k"])  # final fold + GC
-    got_main = {
-        r["k"]: r["v"]
-        for r in sinks.read_with_promotes(spark, main, ["k"]).select("k", "v").collect()
-    }
-    assert got_main == model_main
-    got_staged = {
-        (r["k"], r["sub"])
-        for r in sinks.read_with_moves(
-            spark, staging, tomb_path=stomb, key_cols=["k", "sub"]
-        ).collect()
-    }
-    assert got_staged == set(model_staged)
-
-
-# ---------------------------------------------------------------------------
-# r14: compact_moves — the moves-register fold, symmetric to
-# compact_promotes on the same snapshot-pointer machinery. Move-delta
-# and tombstone chains grew unbounded before this (promote chains had
-# a fold since r10).
-# ---------------------------------------------------------------------------
-
-
-def _moved_register(spark, sf_dir, tmp_path, n_moves=4):
-    """src loses k%4==0 .. via n_moves sequential move_records calls;
-    returns (src, dst, tomb, expected_dst_rows, expected_src_rows)."""
-    from pyspark.sql import functions as F
-
-    src = str(tmp_path / "active")
-    dst = str(tmp_path / "archive")
-    tomb = str(tmp_path / "tombs")
-    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_acctbal")
-    sup.write.parquet(src)
-    sup.limit(0).write.parquet(dst)
-    for i in range(n_moves):
-        sinks.move_records(
-            spark, src, dst, tomb,
-            F.col("s_suppkey") % 17 == i, ["s_suppkey"], f"mv-{i}",
-        )
-    d = {tuple(r) for r in sinks.read_with_moves(spark, dst, moves_for=dst).collect()}
-    s = {
-        tuple(r)
-        for r in sinks.read_with_moves(
-            spark, src, tomb_path=tomb, key_cols=["s_suppkey"]
-        ).collect()
-    }
-    assert d and s and len(d) + len(s) == sup.count()
-    return src, dst, tomb, d, s
-
-
-def test_compact_moves_folds_destination_and_source_serving_unchanged(
-    spark, sf_dir, tmp_path
-):
-    """Fold both sides of a moved register: destination (4 move
-    deltas -> generation) and source (4 tombstone sets applied into a
-    generation). Serving must be row-identical before/after, folded
-    deltas must NOT re-union (the duplication hazard), the second
-    fold is a no-op that GCs the retained artifacts, and the chains
-    read as empty afterwards."""
-    import glob
-
-    src, dst, tomb, d, s = _moved_register(spark, sf_dir, tmp_path)
-
-    assert sinks.compact_moves(spark, dst) == 4  # destination fold
-    got_d = {tuple(r) for r in sinks.read_with_moves(spark, dst, moves_for=dst).collect()}
-    assert got_d == d  # identical — folded deltas not re-unioned
-    man = sinks._read_snapshot(dst)
-    assert sorted(man["folded_moves"]) == [f"mv-{i}" for i in range(4)]
-    assert len(glob.glob(os.path.join(dst, "moves", "*"))) == 4  # retained
-
-    assert sinks.compact_moves(spark, src, tomb_path=tomb, key_cols=["s_suppkey"]) == 4
-    got_s = {
-        tuple(r)
-        for r in sinks.read_with_moves(
-            spark, src, tomb_path=tomb, key_cols=["s_suppkey"]
-        ).collect()
-    }
-    assert got_s == s  # tombstoned keys retired into the generation
-    # second fold: nothing to do, previous cycle GC'd
-    assert sinks.compact_moves(spark, dst) == 0
-    assert glob.glob(os.path.join(dst, "moves", "*")) == []
-    assert sinks.compact_moves(spark, src, tomb_path=tomb, key_cols=["s_suppkey"]) == 0
-    assert glob.glob(os.path.join(tomb, "*")) == []
-    # serving still identical after full GC
-    assert {
-        tuple(r) for r in sinks.read_with_moves(spark, dst, moves_for=dst).collect()
-    } == d
-    assert {
-        tuple(r)
-        for r in sinks.read_with_moves(
-            spark, src, tomb_path=tomb, key_cols=["s_suppkey"]
-        ).collect()
-    } == s
-
-
-def test_compact_moves_crash_seams_recover(spark, sf_dir, tmp_path):
-    """Crash the moves fold at the manifest commit and at GC rmtrees:
-    reads never fail and always serve truth; re-entry converges."""
-    import shutil
+def test_lease_reentrancy_is_per_thread(tmp_path):
+    """The holding thread re-enters its lease; another thread of the
+    same process is a second writer and raises while the lease is
+    held (a threaded server running two register writes at once)."""
+    import threading
 
     import pytest
 
-    src, dst, tomb, d, s = _moved_register(spark, sf_dir, tmp_path)
-
-    class Boom(RuntimeError):
-        pass
-
-    real_replace = os.replace
-
-    def exploding(a, b):
-        raise Boom()
-
-    os.replace = exploding
-    try:
-        with pytest.raises(Boom):
-            sinks.compact_moves(spark, dst)
-    finally:
-        os.replace = real_replace
-    # orphan generation, no manifest: legacy serving, exact truth
-    assert sinks._read_snapshot(dst) is None
-    assert {
-        tuple(r) for r in sinks.read_with_moves(spark, dst, moves_for=dst).collect()
-    } == d
-    assert sinks.compact_moves(spark, dst) == 4  # re-entry GCs + folds
-    assert {
-        tuple(r) for r in sinks.read_with_moves(spark, dst, moves_for=dst).collect()
-    } == d
-
-    # crash the SECOND cycle's GC at every rmtree
-    real_rmtree = shutil.rmtree
-    k = 1
-    while True:
-        calls = {"n": 0}
-
-        def exploding_rm(p, *a, _k=k, _c=calls, **kw):
-            _c["n"] += 1
-            if _c["n"] == _k:
-                raise Boom()
-            return real_rmtree(p, *a, **kw)
-
-        shutil.rmtree = exploding_rm
-        try:
-            try:
-                folded = sinks.compact_moves(spark, dst)
-                crashed = False
-            except Boom:
-                crashed = True
-        finally:
-            shutil.rmtree = real_rmtree
-        assert {
-            tuple(r)
-            for r in sinks.read_with_moves(spark, dst, moves_for=dst).collect()
-        } == d
-        if not crashed:
-            assert folded == 0
-            break
-        k += 1
-    assert k >= 2  # at least one GC deletion was actually crashed
-
-
-def test_compact_single_format_guards(spark, sf_dir, tmp_path):
-    """One register cannot serve both views: a promote fold refuses a
-    register with committed move deltas and vice versa."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    src, dst, tomb, d, s = _moved_register(spark, sf_dir, tmp_path, n_moves=1)
-    # plant a committed promote delta beside the committed move delta
-    spark.range(3).select(
-        F.col("id").alias("s_suppkey"), F.lit("x").alias("s_name"),
-        F.lit(1.0).alias("s_acctbal"), F.lit(1).alias("__seq"),
-    ).write.parquet(os.path.join(dst, "promotes", "p1"))
-    with pytest.raises(ValueError, match="single-format"):
-        sinks.compact_moves(spark, dst)
-    with pytest.raises(ValueError, match="single-format"):
-        sinks.compact_promotes(spark, dst, ["s_suppkey"])
-
-
-def test_move_replay_after_fold_is_benign(spark, sf_dir, tmp_path):
-    """Replaying a move whose artifacts were folded AND GC'd must not
-    duplicate or resurrect rows: the recompute finds the source rows
-    already retired, and recreated artifacts under folded names stay
-    reader-excluded."""
-    from pyspark.sql import functions as F
-
-    src, dst, tomb, d, s = _moved_register(spark, sf_dir, tmp_path)
-    # fold both sides twice: artifacts folded, then GC'd
-    sinks.compact_moves(spark, dst)
-    sinks.compact_moves(spark, src, tomb_path=tomb, key_cols=["s_suppkey"])
-    sinks.compact_moves(spark, dst)
-    sinks.compact_moves(spark, src, tomb_path=tomb, key_cols=["s_suppkey"])
-    # replay an old move end-to-end
-    sinks.move_records(
-        spark, src, dst, tomb, F.col("s_suppkey") % 17 == 0, ["s_suppkey"], "mv-0"
-    )
-    got_d = {tuple(r) for r in sinks.read_with_moves(spark, dst, moves_for=dst).collect()}
-    got_s = {
-        tuple(r)
-        for r in sinks.read_with_moves(
-            spark, src, tomb_path=tomb, key_cols=["s_suppkey"]
-        ).collect()
-    }
-    assert got_d == d and got_s == s
-
-
-def test_cli_compact_moves_folds_both_sides(spark, sf_dir, tmp_path, monkeypatch):
-    """`python -m acuvate_spark compact --moves` drives the r14 moves
-    fold: destination (deltas only) and source (--tomb-path --keys)."""
-    from acuvate_spark.__main__ import main as cli_main
-
-    src, dst, tomb, d, s = _moved_register(spark, sf_dir, tmp_path, n_moves=2)
-
-    class _NoStop:
-        def __init__(self, inner):
-            self._s = inner
-
-        def __getattr__(self, a):
-            return getattr(self._s, a)
-
-        def stop(self):
+    root = str(tmp_path / "reg")
+    lease = root + ".__lease__"
+    with sinks.register_lease(root, "outer"):
+        with sinks.register_lease(root, "inner"):
             pass
+        assert os.path.exists(lease)  # the inner exit kept the outer's lease
+    assert not os.path.exists(lease)
 
-    monkeypatch.setattr(
-        "acuvate_spark.session.get_spark", lambda name: _NoStop(spark)
-    )
-    assert cli_main(["compact", dst, "--moves"]) == 0
-    assert cli_main(
-        ["compact", src, "--moves", "--tomb-path", tomb, "--keys", "s_suppkey"]
-    ) == 0
-    got_d = {tuple(r) for r in sinks.read_with_moves(spark, dst, moves_for=dst).collect()}
-    got_s = {
-        tuple(r)
-        for r in sinks.read_with_moves(
-            spark, src, tomb_path=tomb, key_cols=["s_suppkey"]
-        ).collect()
-    }
-    assert got_d == d and got_s == s
-    # promote fold without --keys is a usage error, not a crash
-    assert cli_main(["compact", dst]) == 2
+    held, release = threading.Event(), threading.Event()
 
+    def holder():
+        with sinks.register_lease(root, "thread-a"):
+            held.set()
+            release.wait(60)
 
-def test_long_move_chain_warns_and_compact_moves_clears_it(spark, sf_dir, tmp_path):
-    """r14: the move register's read tax is SURFACED like the promote
-    one — a chain past COMPACT_CADENCE live deltas warns with
-    compact_moves as the remedy; after the fold the warning is gone
-    and serving is identical. Folded-but-retained artifacts must not
-    re-trigger it."""
-    import warnings
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    src = str(tmp_path / "active")
-    dst = str(tmp_path / "archive")
-    tomb = str(tmp_path / "tombs")
-    sup = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_acctbal")
-    sup.write.parquet(src)
-    sup.limit(0).write.parquet(dst)
-    n = sinks.COMPACT_CADENCE + 2
-    for i in range(n):
-        sinks.move_records(
-            spark, src, dst, tomb,
-            F.col("s_suppkey") % (n + 5) == i, ["s_suppkey"], f"mv-{i:02d}",
-        )
-    with pytest.warns(UserWarning, match="compact_moves"):
-        d = {tuple(r) for r in sinks.read_with_moves(spark, dst, moves_for=dst).collect()}
-    with pytest.warns(UserWarning, match="compact_moves"):
-        s = {
-            tuple(r)
-            for r in sinks.read_with_moves(
-                spark, src, tomb_path=tomb, key_cols=["s_suppkey"]
-            ).collect()
-        }
-    assert sinks.compact_moves(spark, dst) == n
-    assert sinks.compact_moves(spark, src, tomb_path=tomb, key_cols=["s_suppkey"]) == n
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", UserWarning)
-        got_d = {
-            tuple(r) for r in sinks.read_with_moves(spark, dst, moves_for=dst).collect()
-        }
-        got_s = {
-            tuple(r)
-            for r in sinks.read_with_moves(
-                spark, src, tomb_path=tomb, key_cols=["s_suppkey"]
-            ).collect()
-        }
-    assert got_d == d and got_s == s
+    t = threading.Thread(target=holder)
+    t.start()
+    try:
+        assert held.wait(60)
+        with pytest.raises(sinks.ConcurrentWriterError, match="single-writer"):
+            with sinks.register_lease(root, "thread-b"):
+                pass
+        assert os.path.exists(lease)  # still thread A's
+    finally:
+        release.set()
+        t.join()
+    assert not os.path.exists(lease)
