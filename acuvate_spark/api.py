@@ -36,10 +36,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from .functions import tags as tagfn
 from .operators import sinks
+from .operators.merge import approval_disposition, first_per_key, merge, s, t
 from .session import tune
 
 REGISTER_TYPES = ("Equipment", "Instrument", "Line", "Cable")
@@ -152,43 +152,34 @@ class TagRegistry:
         out = branches[0]
         for b in branches[1:]:
             out = out.unionByName(b)
-        # partition-less window is safe here: the input is <= 4 rows by
+        # a key-less pick is safe here: the input is <= 4 rows by
         # construction (at most one exact tag_no match per register)
-        w = Window.orderBy("prio")
-        return out.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1).drop(
-            "rn", "prio"
-        )
+        return first_per_key(out, [], "prio").drop("prio")
 
     # --- mutations ---------------------------------------------------------
 
     @_register_write
     def upsert_tags(self, register: str, incoming: DataFrame) -> None:
         """MERGE: existing rows get updated fields + semicolon-merged
-        document column; new rows insert (reference app.py:4544-4690)."""
-        existing = self.table(register)
-        inc = incoming.select(
-            F.col("tag_no").alias("i_tag_no"),
-            F.col("description").alias("i_description"),
-            F.col("document").alias("i_document"),
-            F.col("modified_by").alias("i_modified_by"),
+        document column; new rows insert (reference app.py:4544-4690).
+        ``incoming`` contributes one row per ``tag_no``: the first by
+        (description, document, modified_by), so a batch that lists a
+        tag twice commits it once — every key lookup (``find_tag``)
+        relies on at most one register row per tag."""
+        inc = first_per_key(
+            incoming.select("tag_no", "description", "document", "modified_by"),
+            ["tag_no"], "description", "document", "modified_by",
         )
-        j = existing.join(inc, existing.tag_no == inc.i_tag_no, "full_outer")
-        merged = j.select(
-            F.coalesce(F.col("tag_no"), F.col("i_tag_no")).alias("tag_no"),
-            F.coalesce(F.col("i_description"), F.col("description")).alias("description"),
-            F.when(
-                F.col("tag_no").isNotNull() & F.col("i_tag_no").isNotNull(),
-                tagfn.merge_semicolon_sorted(F.col("document"), F.col("i_document")),
-            )
-            .otherwise(F.coalesce(F.col("i_document"), F.col("document")))
-            .alias("document"),
-            F.coalesce(F.col("i_modified_by"), F.col("modified_by")).alias("modified_by"),
-            F.when(F.col("i_tag_no").isNotNull(), F.current_timestamp())
-            .otherwise(F.col("modified_date"))
-            .cast("timestamp")
-            .alias("modified_date"),
-        )
-        self._write_version(register, merged)
+        both = t("tag_no").isNotNull() & s("tag_no").isNotNull()
+        self._write_version(register, merge(self.table(register), inc, "tag_no", {
+            "description": F.coalesce(s("description"), t("description")),
+            "document": F.when(both, tagfn.merge_semicolon_sorted(t("document"), s("document")))
+            .otherwise(F.coalesce(s("document"), t("document"))),
+            "modified_by": F.coalesce(s("modified_by"), t("modified_by")),
+            "modified_date": F.when(s("tag_no").isNotNull(), F.current_timestamp())
+            .otherwise(t("modified_date"))
+            .cast("timestamp"),
+        }))
 
     @_register_write
     def delete_tags(self, register: str, tag_nos: list[str]) -> int:
@@ -213,51 +204,29 @@ class TagRegistry:
         the post-state. ``history`` is evaluated once: its deduplicated
         pending rows are local-checkpointed, and those blocks live as
         long as the returned frame (approval queues are small)."""
-        main = self.table(register)
         # one pending row per tag: duplicates (resubmitted approvals)
         # would fan out through the join and commit duplicate register
         # rows; deterministic pick = first by (description, action)
-        w = Window.partitionBy("h_tag_no").orderBy("h_description", "action")
-        h = (
-            history.where(F.col("approval_status") == "PENDING")
-            .select(
-                F.col("tag_no").alias("h_tag_no"),
-                F.col("description").alias("h_description"),
-                F.col("action"),
-            )
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .drop("rn")
-            .localCheckpoint(eager=True)
-        )
-        j = main.join(h, main.tag_no == h.h_tag_no, "full_outer")
-        disposition = (
-            F.when(F.col("h_tag_no").isNull(), F.lit("unchanged"))
-            .when(F.col("tag_no").isNotNull() & (F.col("action") == "Edit"), F.lit("edited"))
-            .when(F.col("tag_no").isNotNull() & (F.col("action") == "Add"), F.lit("rejected_add"))
-            .when(F.col("action") == "Add", F.lit("added"))
-            .otherwise(F.lit("rejected_edit"))
-        )
-        applied = disposition.isin("edited", "added")
-        result = j.select(
-            F.coalesce(F.col("tag_no"), F.col("h_tag_no")).alias("tag_no"),
-            F.when(applied, F.col("h_description")).otherwise(F.col("description")).alias(
-                "description"
+        pending = first_per_key(
+            history.where(F.col("approval_status") == "PENDING").select(
+                "tag_no", "description", "action"
             ),
-            F.coalesce(F.col("document"), F.lit("")).alias("document"),
+            ["tag_no"], "description", "action",
+        ).localCheckpoint(eager=True)
+        disposition = approval_disposition("tag_no", "action")
+        applied = disposition.isin("edited", "added")
+        result = merge(self.table(register), pending, "tag_no", {
+            "description": F.when(applied, s("description")).otherwise(t("description")),
+            "document": F.coalesce(t("document"), F.lit("")),
             # applied rows get the approval stamp (reference stamps the
             # approval time, app.py:4838-4841) — otherwise added rows
             # carry NULLs that the sync window and pagination never see
-            F.when(applied, F.lit("approval")).otherwise(F.col("modified_by")).alias(
-                "modified_by"
-            ),
-            F.when(applied, F.current_timestamp().cast("timestamp"))
-            .otherwise(F.col("modified_date"))
-            .alias("modified_date"),
-            disposition.alias("disposition"),
-        ).where(F.col("disposition") != "rejected_edit")
-        post = result.drop("disposition")
-        self._write_version(register, post)
+            "modified_by": F.when(applied, F.lit("approval")).otherwise(t("modified_by")),
+            "modified_date": F.when(applied, F.current_timestamp().cast("timestamp"))
+            .otherwise(t("modified_date")),
+            "disposition": disposition,
+        }).where(F.col("disposition") != "rejected_edit")
+        self._write_version(register, result.drop("disposition"))
         return result
 
     def soft_delete_user(self, users: DataFrame, email: str) -> DataFrame:

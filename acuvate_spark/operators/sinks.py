@@ -34,6 +34,8 @@ from collections.abc import Callable, Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from .merge import first_per_key
+
 
 # ---------------------------------------------------------------------------
 # Writer lease — the register store's concurrency contract made
@@ -521,7 +523,6 @@ def promote_records(
     committed version is refused unless ``bootstrap_ok=True``, so a
     mistyped ``main_path`` fails loudly instead of starting a fresh
     register. The promote holds the writer lease of main and staging."""
-    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     staging_key_cols = staging_key_cols or key_cols
@@ -557,12 +558,7 @@ def promote_records(
 
         def main_post() -> DataFrame:
             rest = sorted(c for c in promoted.columns if c not in key_cols)
-            w = Window.partitionBy(*key_cols).orderBy(*[F.col(c).desc() for c in rest])
-            winners = (
-                promoted.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
-            )
+            winners = first_per_key(promoted, key_cols, *[F.col(c).desc() for c in rest])
             main = read_current(spark, main_path)
             if main is None:
                 return winners

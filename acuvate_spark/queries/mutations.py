@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.merge import approval_disposition, merge, s, t
 from ..tables import load_table
 from .registry import register
 
@@ -47,20 +48,15 @@ def upsert_orders(spark, sf_dir):
         "o_orderkey", "o_totalprice"
     )
     source = o.where(F.col("o_orderkey") % 2 == 0).select(
-        F.col("o_orderkey").alias("s_orderkey"),
-        (F.col("o_totalprice") + 1000.0).alias("new_price"),
+        "o_orderkey", (F.col("o_totalprice") + 1000.0).alias("new_price")
     )
-    j = target.join(source, target.o_orderkey == source.s_orderkey, "full_outer")
-    return j.select(
-        F.coalesce(F.col("o_orderkey"), F.col("s_orderkey")).alias("o_orderkey"),
-        F.coalesce(F.col("new_price"), F.col("o_totalprice")).alias("price"),
-        F.when(
-            F.col("o_orderkey").isNotNull() & F.col("s_orderkey").isNotNull(), F.lit("updated")
-        )
-        .when(F.col("o_orderkey").isNotNull(), F.lit("kept"))
-        .otherwise(F.lit("inserted"))
-        .alias("disposition"),
-    )
+    matched = t("o_orderkey").isNotNull() & s("o_orderkey").isNotNull()
+    return merge(target, source, "o_orderkey", {
+        "price": F.coalesce(s("new_price"), t("o_totalprice")),
+        "disposition": F.when(matched, F.lit("updated"))
+        .when(t("o_orderkey").isNotNull(), F.lit("kept"))
+        .otherwise(F.lit("inserted")),
+    })
 
 
 # ---------------------------------------------------------------------------
@@ -153,35 +149,19 @@ def promote_approved(spark, sf_dir):
     full-outer join computes every disposition."""
     p = load_table(spark, sf_dir, "part")
     main = p.where(F.col("p_partkey") % 4 != 0).select(
-        F.col("p_partkey").alias("m_key"), F.col("p_retailprice").alias("price")
+        "p_partkey", F.col("p_retailprice").alias("price")
     )
     history = p.where(F.col("p_partkey") % 2 == 0).select(
-        F.col("p_partkey").alias("h_key"),
+        "p_partkey",
         (F.col("p_retailprice") + 50.0).alias("new_price"),
         F.when(F.col("p_partkey") % 8 == 0, F.lit("Add")).otherwise(F.lit("Edit")).alias("action"),
     )
-    j = main.join(history, main.m_key == history.h_key, "full_outer")
-    price = (
-        F.when(F.col("h_key").isNull(), F.col("price"))
-        .when(F.col("m_key").isNotNull() & (F.col("action") == "Edit"), F.col("new_price"))
-        .when(F.col("m_key").isNotNull() & (F.col("action") == "Add"), F.col("price"))
-        .when(F.col("action") == "Add", F.col("new_price"))
-    )
-    disposition = (
-        F.when(F.col("h_key").isNull(), F.lit("unchanged"))
-        .when(F.col("m_key").isNotNull() & (F.col("action") == "Edit"), F.lit("edited"))
-        .when(F.col("m_key").isNotNull() & (F.col("action") == "Add"), F.lit("rejected_add"))
-        .when(F.col("action") == "Add", F.lit("added"))
-        .otherwise(F.lit("rejected_edit"))
-    )
-    return (
-        j.where(~(F.col("m_key").isNull() & (F.col("action") == "Edit")))
-        .select(
-            F.coalesce(F.col("m_key"), F.col("h_key")).alias("p_partkey"),
-            price.alias("price"),
-            disposition.alias("disposition"),
-        )
-    )
+    disposition = approval_disposition("p_partkey", "action")
+    return merge(main, history, "p_partkey", {
+        "price": F.when(disposition.isin("edited", "added"), s("new_price"))
+        .otherwise(t("price")),
+        "disposition": disposition,
+    }).where(F.col("disposition") != "rejected_edit")
 
 
 # ---------------------------------------------------------------------------

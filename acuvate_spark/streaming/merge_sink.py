@@ -28,8 +28,8 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from ..operators.merge import first_per_key, merge, s, t
 from ..operators.sinks import _write_version, read_current
 
 
@@ -41,37 +41,25 @@ def merge_batch(
 ) -> DataFrame:
     """One MERGE step as dataflow: latest-per-key within the batch
     (by ``seq_col`` — micro-batches can carry several updates for one
-    key), then full-outer join against the target; matched keys take
-    the batch values only when the batch row is at least as new
+    key), then ``operators.merge`` against the target; matched keys
+    take the batch values only when the batch row is at least as new
     (``seq_col`` >=) as the target row — the WHEN MATCHED AND
-    condition of a real MERGE INTO. The guard matters beyond replays:
-    the file source can split one logical batch's same-key rows
-    across micro-batches in either order (maxFilesPerTrigger), and an
-    unconditional overwrite would let the stale row win. Pure
-    function of (target, batch) so streaming and batch share it."""
-    w = Window.partitionBy(key).orderBy(F.col(seq_col).desc())
-    latest = (
-        batch.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    condition of a real MERGE INTO — and a new key inserts the batch
+    row whatever its ``seq_col`` (WHEN NOT MATCHED). The guard matters
+    beyond replays: the file source can split one logical batch's
+    same-key rows across micro-batches in either order
+    (maxFilesPerTrigger), and an unconditional overwrite would let
+    the stale row win. Pure function of (target, batch) so streaming
+    and batch share it."""
+    latest = first_per_key(batch, [key], F.col(seq_col).desc())
     if target is None:
         return latest
-    value_cols = [c for c in latest.columns if c != key]
-    src = latest.select(
-        F.col(key).alias("__k"), *[F.col(c).alias(f"__s_{c}") for c in value_cols]
-    )
-    j = target.join(src, target[key] == src["__k"], "full_outer")
-    take_src = F.col(f"__s_{seq_col}").isNotNull() & (
-        F.col(seq_col).isNull() | (F.col(f"__s_{seq_col}") >= F.col(seq_col))
-    )
-    return j.select(
-        F.coalesce(F.col(key), F.col("__k")).alias(key),
-        *[
-            F.when(take_src, F.col(f"__s_{c}")).otherwise(F.col(c)).alias(c)
-            for c in value_cols
-        ],
-    )
+    take_src = (
+        s(seq_col).isNotNull() & (t(seq_col).isNull() | (s(seq_col) >= t(seq_col)))
+    ) | (t(key).isNull() & s(key).isNotNull())
+    return merge(target, latest, key, {
+        c: F.when(take_src, s(c)).otherwise(t(c)) for c in latest.columns if c != key
+    })
 
 
 def start_merge_stream(

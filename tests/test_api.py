@@ -338,3 +338,90 @@ def test_import_rows_evaluates_caller_rows_once(spark, registry):
     assert seen.value == len(data)
     assert jobs <= 7
     assert registry.table("Equipment").count() == 4
+
+
+def test_upsert_and_import_commit_one_row_per_tag(spark, registry):
+    """A batch that lists a tag twice commits one register row for it,
+    the first by (description, document, modified_by); re-upserting
+    the batch still leaves one."""
+    batch = [("T-1", "b", "DOC-2", "u"), ("T-1", "a", "DOC-1", "u")]
+    for _ in range(2):
+        registry.upsert_tags("Equipment", _incoming(spark, batch))
+        assert [(r["tag_no"], r["description"]) for r in registry.table("Equipment").collect()] == [
+            ("T-1", "a")
+        ]
+    rows = spark.createDataFrame(
+        [("T-2", "x", None, "u"), ("T-2", "y", None, "u")],
+        "tagno string, description string, document string, modified_by string",
+    )
+    report = registry.import_rows("Equipment", rows).collect()
+    assert sorted((r["tag_no"], r["action"]) for r in report) == [("T-2", "Add"), ("T-2", "Add")]
+    assert sorted(r["tag_no"] for r in registry.table("Equipment").collect()) == ["T-1", "T-2"]
+
+
+def test_merge_sites_keep_a_null_key_target_row(spark, registry):
+    """NULL-key contract of operators.merge at every MERGE site: a NULL
+    key matches nothing, so a NULL-key target row comes through once
+    with its values unchanged."""
+    from acuvate_spark.streaming import merge_sink
+
+    stamp = datetime.datetime(2024, 1, 2, 3, 4, 5)
+    orphan = (None, "no tag", "DOC-0", "u", stamp)
+    registry._write_version(
+        "Equipment",
+        spark.createDataFrame(
+            [orphan, ("A", "a", "DOC-1", "u", stamp)],
+            "tag_no string, description string, document string, "
+            "modified_by string, modified_date timestamp",
+        ),
+    )
+
+    def orphans():
+        return [tuple(r) for r in registry.table("Equipment").collect() if r["tag_no"] is None]
+
+    registry.upsert_tags("Equipment", _incoming(spark, [("A", "a2", "DOC-2", "v"),
+                                                       ("B", "b", "DOC-3", "v")]))
+    assert orphans() == [orphan]
+    registry.import_rows("Equipment", spark.createDataFrame(
+        [("A", "a3", None, "w"), ("nan", "bad", None, "w")],
+        "tagno string, description string, document string, modified_by string",
+    ))
+    assert orphans() == [orphan]
+    registry.apply_approvals("Equipment", spark.createDataFrame(
+        [("A", "a4", "Edit", "PENDING"), ("C", "c", "Add", "PENDING"), ("D", "d", "Edit", "PENDING")],
+        "tag_no string, description string, action string, approval_status string",
+    ))
+    assert orphans() == [orphan]
+    assert sorted(r["tag_no"] or "" for r in registry.table("Equipment").collect()) == [
+        "", "A", "B", "C"
+    ]
+
+    target = spark.createDataFrame([(None, 7, 1), (1, 10, 5)], "key long, val long, seq long")
+    batch = spark.createDataFrame([(1, 11, 6), (2, 20, 1)], "key long, val long, seq long")
+    got = merge_sink.merge_batch(target, batch, key="key", seq_col="seq").collect()
+    assert sorted(tuple(r) for r in got if r["key"] is not None) == [(1, 11, 6), (2, 20, 1)]
+    assert [tuple(r) for r in got if r["key"] is None] == [(None, 7, 1)]
+
+
+def test_upsert_and_approvals_job_counts_on_a_committed_register(spark, registry):
+    """Work pins for the two MERGE writes on a register that already
+    has a committed version."""
+    _three_rows(spark, registry)
+    _, jobs, _ = _work(spark, lambda: registry.upsert_tags(
+        "Equipment", _incoming(spark, [("E17-A_F-1001", "pump A rev2", "DOC-5", "carol@example.com"),
+                                       ("E17-A_F-2000", "new pump", "DOC-6", "carol@example.com")]),
+    ))
+    assert jobs <= 3
+    history = spark.createDataFrame(
+        [("E17-A_F-1002", "pump B rev2", "Edit", "PENDING"),
+         ("E17-A_F-3000", "new pump", "Add", "PENDING"),
+         ("E17-A_F-1003", "dup add", "Add", "PENDING")],
+        "tag_no string, description string, action string, approval_status string",
+    )
+    result, jobs, _ = _work(
+        spark, lambda: registry.apply_approvals("Equipment", history).collect()
+    )
+    assert jobs <= 8
+    assert sorted(r["disposition"] for r in result if r["disposition"] != "unchanged") == [
+        "added", "edited", "rejected_add"
+    ]

@@ -875,7 +875,8 @@ def test_merge_batch_matches_dict_reference_on_random_sequences(spark):
     upsert sequences (hypothesis, derandomized): whatever order keys
     and seqs arrive in, applying batches one at a time must equal the
     last-writer-wins-by-seq model — the invariant the chaos-replay
-    test's idempotency claim rests on."""
+    test's idempotency claim rests on. A NULL seq ranks below every
+    seq, and a new key inserts whatever its seq."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -885,7 +886,7 @@ def test_merge_batch_matches_dict_reference_on_random_sequences(spark):
         st.tuples(
             st.integers(min_value=1, max_value=5),     # key
             st.integers(min_value=0, max_value=9),     # val id
-            st.integers(min_value=0, max_value=20),    # seq
+            st.none() | st.integers(min_value=0, max_value=20),  # seq
         ),
         min_size=1,
         max_size=8,
@@ -897,17 +898,19 @@ def test_merge_batch_matches_dict_reference_on_random_sequences(spark):
         model: dict = {}
         target = None
         for batch in batches:
-            # within-batch dedupe keeps the max-seq row (first-listed
-            # among equal seqs, mirroring row_number's stable order);
-            # the merge takes it iff seq >= the target row's seq
+            # within-batch dedupe keeps the max-seq row, NULL last
+            # (first-listed among equal seqs, mirroring row_number's
+            # stable order); a new key inserts it, an existing key takes
+            # it iff its seq is non-NULL and >= the target row's seq
+            # (or the target's is NULL)
             best: dict = {}
             for k, v, s in batch:
-                if k not in best or s > best[k][1]:
+                if k not in best or (s is not None and (best[k][1] is None or s > best[k][1])):
                     best[k] = (v, s)
             df = spark.createDataFrame(batch, "key long, val long, seq long")
             target = merge_sink.merge_batch(target, df, key="key", seq_col="seq")
             for k, (v, s) in best.items():
-                if k not in model or s >= model[k][1]:
+                if k not in model or (s is not None and (model[k][1] is None or s >= model[k][1])):
                     model[k] = (v, s)
         got = {r["key"]: (r["val"], r["seq"]) for r in target.collect()}
         assert got == model
