@@ -9,6 +9,7 @@ analysis, multimodal plumbing) such an engine needs at 100 TB scale.
 
 Layout:
     session.py    — SparkSession bootstrap + driver-session compatibility tuning
+    pydaemon.py   — Python worker daemon that keeps zip importers' directories
     tables.py     — canonical loaders for the synthetic test tables
     functions/    — column-expression libraries (tag grammar, text, vectors)
     operators/    — reusable DataFrame->DataFrame operators (joins, dedup, graph...)

@@ -21,6 +21,12 @@ Why these settings:
 * AQE on — runtime coalescing + skew-join handling is a core part of
   the 100 TB story (SURVEY.md §4); local runs keep the same plan shape
   the cluster would use.
+* ``spark.python.daemon.module`` (``get_spark`` only) — on CPython < 3.12
+  PySpark's per-task ``importlib.invalidate_caches()`` re-reads the directory
+  of ``pyspark.zip`` once per zip importer, ~0.2 CPU-s a task;
+  ``acuvate_spark.pydaemon`` skips unchanged archives. The conf is static, so
+  ``tune()`` cannot apply it: externally owned sessions keep the stock daemon.
+  ``spark.executorEnv.PYTHONPATH`` lets workers import it from any cwd.
 """
 
 from __future__ import annotations
@@ -28,6 +34,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Settings safe (and necessary) to apply to an externally-owned session.
 _RUNTIME_CONFS = {
@@ -79,5 +87,7 @@ def get_spark(app_name: str = "acuvate-spark", cpus: int | None = None) -> Spark
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "acuvate_spark.pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     return tune(builder.getOrCreate())
