@@ -178,44 +178,3 @@ def sample_audio_windows(
             )
 
     return df.mapInPandas(batches, schema=AUDIO_SCHEMA)
-
-
-RASTER_SCHEMA = "doc_id long, width int, height int, channels int, pixels binary"
-
-
-def attach_raster(
-    df: DataFrame,
-    text_col: str = "text",
-    width: int = 16,
-    height: int = 12,
-    channels: int = 3,
-) -> DataFrame:
-    """Fixture adapter for the S12 image sink: a deterministic 8-bit
-    raster per row, the md5 keystream of the text tiled to
-    ``width*height*channels`` bytes (the test tables carry no real
-    overlays). The PIXELS are fake; the PNG encode downstream
-    (:mod:`.image_sink`) is real."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        need = width * height * channels
-        for pdf in it:
-            rasters = []
-            for text in pdf[text_col]:
-                seed = (text or "").encode()
-                buf = bytearray()
-                counter = 0
-                while len(buf) < need:
-                    buf += hashlib.md5(seed + str(counter).encode()).digest()
-                    counter += 1
-                rasters.append(bytes(buf[:need]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": width,
-                    "height": height,
-                    "channels": channels,
-                    "pixels": rasters,
-                }
-            )
-
-    return df.select("doc_id", text_col).mapInPandas(batches, schema=RASTER_SCHEMA)

@@ -11,10 +11,6 @@ owns its layout. Two primitives matter at scale:
   exchange — at 100 TB, removing the fact-fact shuffle is the single
   biggest win available (tests/test_storage.py asserts the plan has no
   Exchange on the bucketed join).
-
-Bucket/partition sizing rule of thumb encoded in `suggest_buckets`:
-target ~128-512 MB per bucket file, power-of-two bucket counts so
-AQE coalescing stays aligned.
 """
 
 from __future__ import annotations
@@ -41,19 +37,6 @@ def write_bucketed(
     if sort_col:
         writer = writer.sortBy(sort_col)
     writer.format("parquet").saveAsTable(table)
-
-
-def suggest_buckets(total_bytes: int, target_bucket_bytes: int = 256 * 1024 * 1024) -> int:
-    """Power-of-two bucket count targeting ~256 MB per bucket."""
-    n = max(1, total_bytes // target_bucket_bytes)
-    p = 1
-    while p < n:
-        p *= 2
-    return p
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
 
 
 def zorder_key(cols: list[Column], bits: int = 8) -> Column:
@@ -132,165 +115,6 @@ def write_zordered(
         .select(*df.columns)
     )
     out.write.mode(mode).parquet(path)
-
-
-def overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) -> None:
-    """Dynamic partition overwrite: only the partitions present in
-    ``df`` are rewritten; untouched partitions survive. This is the
-    partition-level MERGE/replace primitive (SURVEY §4 O11's
-    validate-then-commit lands on it: recompute a day/type partition,
-    swap it atomically-per-partition) without requiring a table
-    format."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def compact_path(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 256 * 1024 * 1024,
-) -> int:
-    """Small-file compaction — the maintenance pass every long-running
-    ingest needs (streaming micro-batches and dynamic-partition
-    appends strand thousands of tiny parquet files; at 100 TB the
-    scan's task-per-file overhead and NameNode/listing pressure
-    dominate before a single row is read).
-
-    Hive-partitioned layouts are compacted PER LEAF PARTITION
-    DIRECTORY, preserving the ``key=value`` structure (and hence
-    partition pruning and ``overwrite_partitions`` compatibility) —
-    per-partition sizing is also the right granularity for the
-    rewrite. Each leaf is rewritten to ceil(leaf_bytes / target) files
-    via ``coalesce`` (a NARROW repartitioning, no shuffle), staged to
-    a sibling temp dir, then directory-swapped. The swap is
-    SELF-HEALING across crashes: a leftover ``.__compacting__`` temp
-    (incomplete rewrite) is discarded, a leftover ``.__pre_compact__``
-    backup restores the original if the swap died mid-way and is
-    discarded if the swap completed. On an object store this commit
-    step is what a table format (Delta/Iceberg rewrite-files action)
-    provides — the dataflow half is identical. Returns the resulting
-    file count across all leaves; leaves already at/under target are
-    left untouched.
-
-    Readers racing the maintenance pass (r13 audit): the temp and
-    backup siblings are DOT-PREFIXED, so Spark's hidden-path filter
-    keeps them out of any concurrent root scan's listing — without
-    that, a reader scanning the hive root during the (long) rewrite
-    window listed the temp as a data dir and during the swap saw the
-    backup beside the new leaf: duplicate rows either way. What
-    remains is the unavoidable instant between the two renames where
-    the leaf is briefly absent: a root listing in that window misses
-    that leaf's rows, and a reader that listed earlier may hit
-    vanished files and fail loudly. POSIX has no atomic directory
-    exchange (that is precisely what a table format's snapshot commit
-    adds); the window is two metadata ops, and the serving contract
-    for anything stronger is the copy-on-write register store
-    (:mod:`acuvate_spark.operators.sinks`): each write commits a new
-    version directory and a reader resolves exactly one committed
-    version, so it has no reader window at all. The hive-leaf swap
-    here keeps the two-rename window because its readers are
-    arbitrary ``spark.read.parquet(root)`` scans that cannot resolve a
-    version.
-
-    Single-maintainer contract, enforced best-effort by
-    :func:`acuvate_spark.operators.sinks.register_lease` (r12): a live
-    concurrent writer on the same path raises ConcurrentWriterError
-    instead of interleaving directory swaps."""
-    import glob
-    import math
-    import os
-    import shutil
-
-    from .sinks import register_lease
-
-    with register_lease(path, "compact-path"):
-        def _sibs(p: str, marker: str) -> list[str]:
-            """Candidate sibling names for a swap artifact: the
-            DOT-PREFIXED name new swaps create (hidden from Spark's
-            path filter, so a reader scanning the hive ROOT during a
-            leaf rewrite/swap never lists the temp or backup as a
-            data dir — the r13 reader-vs-maintenance audit found the
-            unhidden sibling served DUPLICATE partition rows for the
-            whole rewrite window), plus the pre-r13 unhidden name so
-            recovery still heals crash shapes left by older runs."""
-            d, b = os.path.split(p.rstrip("/"))
-            return [os.path.join(d, "." + b + marker), os.path.join(d, b + marker)]
-
-        def _recover(p: str) -> None:
-            for backup in _sibs(p, ".__pre_compact__"):
-                if os.path.isdir(backup):
-                    if os.path.isdir(p):
-                        shutil.rmtree(backup)  # swap completed; stale backup
-                    else:
-                        os.rename(backup, p)  # died between renames; restore
-            for tmp in _sibs(p, ".__compacting__"):
-                if os.path.isdir(tmp):
-                    shutil.rmtree(tmp)  # incomplete rewrite; discard
-
-        def _compact_leaf(leaf: str) -> int:
-            _recover(leaf)
-            files = [
-                e.path
-                for e in os.scandir(leaf)
-                if e.is_file() and e.name.endswith(".parquet")
-            ]
-            if not files:
-                return 0
-            total = sum(os.path.getsize(f) for f in files)
-            n_target = max(1, math.ceil(total / target_file_bytes))
-            if n_target >= len(files):
-                return len(files)
-            df = spark.read.parquet(leaf)
-            tmp = _sibs(leaf, ".__compacting__")[0]
-            df.coalesce(n_target).write.mode("overwrite").parquet(tmp)
-            backup = _sibs(leaf, ".__pre_compact__")[0]
-            os.rename(leaf, backup)
-            os.rename(tmp, leaf)
-            shutil.rmtree(backup)
-            # count what the rewrite actually produced: coalesce(n) writes
-            # FEWER files when the leaf frame has fewer input partitions
-            # than n, so returning n_target would over-report
-            return sum(
-                1
-                for e in os.scandir(leaf)
-                if e.is_file() and e.name.endswith(".parquet")
-            )
-
-        _MARKERS = (".__compacting__", ".__pre_compact__")
-
-        def _sweep_interrupted(root: str) -> None:
-            """Recover interrupted swaps ANYWHERE in the tree: a leftover
-            ``<leaf>.__pre_compact__`` would otherwise be globbed as a data
-            leaf and compacted in place — duplicating the partition while
-            the real leaf stays missing (silent corruption)."""
-            for dirpath, dirnames, _ in list(os.walk(root, topdown=False)):
-                for d in dirnames:
-                    for marker in _MARKERS:
-                        if d.endswith(marker):
-                            stem = d[: -len(marker)]
-                            if stem.startswith("."):  # hidden (r13) scheme
-                                stem = stem[1:]
-                            _recover(os.path.join(dirpath, stem))
-
-        _recover(path)
-        if os.path.isdir(path):
-            _sweep_interrupted(path)
-        if not os.path.isdir(path):
-            raise FileNotFoundError(f"compact_path: no such directory {path!r}")
-        all_files = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if not all_files:
-            return 0
-        leaves = sorted(
-            leaf
-            for leaf in {os.path.dirname(f) for f in all_files}
-            if not any(part.endswith(m) for m in _MARKERS for part in leaf.split(os.sep))
-        )
-        return sum(_compact_leaf(leaf) for leaf in leaves)
 
 
 def write_sharded(

@@ -47,6 +47,13 @@ def route(path: Column) -> Column:
     )
 
 
+def _empty(spark: SparkSession, **types: str) -> DataFrame:
+    """An empty frame of the given column types, planned in the JVM:
+    reading it runs no task (an empty ``createDataFrame`` runs a Python
+    worker per partition)."""
+    return spark.range(0).select(*[F.lit(None).cast(t).alias(c) for c, t in types.items()])
+
+
 def _load_retry_state(spark: SparkSession, retry_dir: str) -> DataFrame:
     """Newest COMMITTED retry-state version (the merge-sink version
     scheme). The pre-r07 form overwrote ``retry_dir`` in place: Spark
@@ -54,11 +61,11 @@ def _load_retry_state(spark: SparkSession, retry_dir: str) -> DataFrame:
     lost every pending retry counter — and since the checkpointed
     file source never redelivers, those blobs would have been lost
     for good, a silent-data-loss window no retry budget can fix."""
-    from .merge_sink import read_current
+    from ..operators.sinks import read_current
 
     cur = read_current(spark, retry_dir)
     if cur is None:
-        return spark.createDataFrame([], "path string, attempts int")
+        return _empty(spark, path="string", attempts="int")
     return cur
 
 
@@ -70,11 +77,11 @@ def _write_retry_state(state: DataFrame, retry_dir: str) -> None:
     version."""
     import shutil
 
-    from ..operators.sinks import _current_version
+    from ..operators.sinks import _current_version, _version_num, _write_version
 
     cur = _current_version(retry_dir)
-    n = (int(os.path.basename(cur)[1:]) if cur else 0) + 1
-    state.write.mode("overwrite").parquet(os.path.join(retry_dir, f"v{n:010d}"))
+    n = (_version_num(os.path.basename(cur)) if cur else 0) + 1
+    _write_version(state, os.path.join(retry_dir, f"v{n:010d}"))
     if cur is not None:
         shutil.rmtree(cur, ignore_errors=True)
 
@@ -93,7 +100,7 @@ def routed_files(spark: SparkSession, out_dir: str) -> DataFrame:
     blob per successful attempt, whatever the crash history."""
     got = _committed_union(spark, os.path.join(out_dir, "routed"))
     if got is None:
-        return spark.createDataFrame([], "path string, route string")
+        return _empty(spark, path="string", route="string")
     return got
 
 
@@ -102,7 +109,7 @@ def dead_letters(spark: SparkSession, out_dir: str) -> DataFrame:
     exactly once per blob, whatever the crash history."""
     got = _committed_union(spark, os.path.join(out_dir, "dlq"))
     if got is None:
-        return spark.createDataFrame([], "path string, attempts int")
+        return _empty(spark, path="string", attempts="int")
     return got
 
 
@@ -218,13 +225,13 @@ def _retry_pass(
     the same routed/dlq rows from state n and overwrites them in
     place — the pre-r09 ``mode("append")`` dlq write double-DLQ'd a
     blob on exactly that replay."""
-    from ..operators.sinks import _current_version
+    from ..operators.sinks import _current_version, _version_num
 
     prev = _load_retry_state(spark, retry_dir)
     if not prev.take(1):
         return
     cur = _current_version(retry_dir)
-    n = int(os.path.basename(cur)[1:]) if cur else 0
+    n = _version_num(os.path.basename(cur)) if cur else 0
     attempt = prev.withColumn("route", route(F.col("path"))).withColumn(
         "failed", F.col("path").contains(fail_marker)
     )

@@ -1,6 +1,6 @@
 """Canonical loaders for the synthetic test tables (TESTDATA.md).
 
-All queries go through ``load_table``/``load_tables`` so that:
+All queries go through ``load_table`` so that:
 
 * the nanosecond-timestamp compatibility conversion happens in exactly
   one place (``events.ts`` arrives as INT64 nanos; Spark reads it as a
@@ -14,8 +14,6 @@ All queries go through ``load_table``/``load_tables`` so that:
 """
 
 from __future__ import annotations
-
-from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,11 +52,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # value-preserving under the UTC session timezone.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> SimpleNamespace:
-    """All tables as attributes: ``t = load_tables(...); t.orders``."""
-    return SimpleNamespace(**{name: load_table(spark, sf_dir, name) for name in TABLES})
 
 
 def load_embeddings(spark: SparkSession, sf_dir: str, *extra_cols: str) -> DataFrame:

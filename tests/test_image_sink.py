@@ -6,13 +6,16 @@ torn or miscomputed blob fails loudly rather than "decoding anyway"."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 import struct
 import zlib
+from collections.abc import Iterator
 
+import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
 
-from acuvate_spark.operators import multimodal
 from acuvate_spark.operators.image_sink import (
     PNG_SIGNATURE,
     encode_png,
@@ -21,6 +24,46 @@ from acuvate_spark.operators.image_sink import (
 )
 
 _CHANNELS_BY_COLOR_TYPE = {0: 1, 2: 3, 6: 4}
+
+RASTER_SCHEMA = "doc_id long, width int, height int, channels int, pixels binary"
+
+
+def attach_raster(
+    df: DataFrame,
+    text_col: str = "text",
+    width: int = 16,
+    height: int = 12,
+    channels: int = 3,
+) -> DataFrame:
+    """Fixture adapter for the S12 image sink: a deterministic 8-bit
+    raster per row, the md5 keystream of the text tiled to
+    ``width*height*channels`` bytes (the test tables carry no real
+    overlays). The PIXELS are fake; the PNG encode downstream
+    (:mod:`acuvate_spark.operators.image_sink`) is real."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        need = width * height * channels
+        for pdf in it:
+            rasters = []
+            for text in pdf[text_col]:
+                seed = (text or "").encode()
+                buf = bytearray()
+                counter = 0
+                while len(buf) < need:
+                    buf += hashlib.md5(seed + str(counter).encode()).digest()
+                    counter += 1
+                rasters.append(bytes(buf[:need]))
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "width": width,
+                    "height": height,
+                    "channels": channels,
+                    "pixels": rasters,
+                }
+            )
+
+    return df.select("doc_id", text_col).mapInPandas(batches, schema=RASTER_SCHEMA)
 
 
 def png_decode(blob: bytes) -> tuple[int, int, int, bytes]:
@@ -80,7 +123,7 @@ def test_png_encode_rejects_bad_input():
 
 def test_encode_png_dataframe_matches_local_codec(spark, sf_dir):
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).limit(20)
-    rasters = multimodal.attach_raster(docs, width=8, height=6, channels=3)
+    rasters = attach_raster(docs, width=8, height=6, channels=3)
     local = {r["doc_id"]: bytes(r["pixels"]) for r in rasters.collect()}
     encoded = {r["id"]: (bytes(r["png"]), r["png_len"]) for r in encode_png(rasters).collect()}
     assert encoded.keys() == local.keys() and len(encoded) == 20
@@ -92,7 +135,7 @@ def test_encode_png_dataframe_matches_local_codec(spark, sf_dir):
 def test_write_png_files_one_file_per_row(spark, sf_dir, tmp_path):
     out = str(tmp_path / "pngs")
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).limit(7)
-    rasters = multimodal.attach_raster(docs, width=4, height=4, channels=1)
+    rasters = attach_raster(docs, width=4, height=4, channels=1)
     write_png_files(encode_png(rasters), out)
     names = sorted(os.listdir(out))
     assert len(names) == 7 and all(n.endswith(".png") for n in names)
@@ -106,7 +149,7 @@ def test_parquet_blob_sink_roundtrip(spark, sf_dir, tmp_path):
 
     path = str(tmp_path / "png_blobs")
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).limit(5)
-    encoded = encode_png(multimodal.attach_raster(docs))
+    encoded = encode_png(attach_raster(docs))
     append_parquet(encoded, path)
     back = spark.read.parquet(path).collect()
     assert len(back) == 5

@@ -1,0 +1,138 @@
+"""Every public callable in ``acuvate_spark/`` is reached from an entry
+point or implements a COVERAGE.md row.
+
+A public callable is a top-level ``def`` or ``class`` whose name does
+not start with ``_``. The roots are:
+
+* every decorated top-level function under ``acuvate_spark/queries/``
+  (the ``@register`` queries);
+* ``TagRegistry``;
+* every module-level statement of the package that is not a ``def`` or
+  ``class``;
+* the entry-point files ``acuvate_spark/__main__.py``, ``bench.py``,
+  ``__spark_entry__.py`` and ``perfbench/**/*.py``.
+
+``tools/`` and ``tests/`` are not roots. From the roots the closure
+follows every ``ast.Name`` id and ``ast.Attribute`` attr to the
+top-level definitions of that name; strings and comments do not count.
+Matching is by name alone, so a name that two modules define reaches
+both. The check can therefore only miss an unreached callable; it never
+flags reached code.
+
+The allowlist is the names in backticks in COVERAGE.md: a callable that
+implements a capability row stays even when no entry point calls it.
+Every module-qualified name there (``storage.write_zordered``,
+``operators/sinks.rest_sink``) must resolve to a top-level name of its
+module, so a row cannot keep a deleted callable allowed.
+
+AST only: these tests start no Spark.
+"""
+
+from __future__ import annotations
+
+import ast
+import re
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PKG = ROOT / "acuvate_spark"
+ENTRY_FILES = [
+    ROOT / "bench.py",
+    ROOT / "__spark_entry__.py",
+    *sorted((ROOT / "perfbench").rglob("*.py")),
+]
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _modules() -> dict[Path, ast.Module]:
+    return {p: ast.parse(p.read_text()) for p in sorted(PKG.rglob("*.py"))}
+
+
+def _is_root(path: Path, stmt: ast.stmt) -> bool:
+    if path == PKG / "__main__.py" or not isinstance(stmt, _DEFS):
+        return True
+    return stmt.name == "TagRegistry" or (
+        path.parent == PKG / "queries" and bool(stmt.decorator_list)
+    )
+
+
+def _reached(modules: dict[Path, ast.Module]) -> set[int]:
+    """ids of every top-level package statement the roots reach."""
+    defs: dict[str, list[ast.stmt]] = {}
+    todo: list[ast.AST] = [ast.parse(p.read_text()) for p in ENTRY_FILES]
+    for path, tree in modules.items():
+        for stmt in tree.body:
+            if isinstance(stmt, _DEFS):
+                defs.setdefault(stmt.name, []).append(stmt)
+            if _is_root(path, stmt):
+                todo.append(stmt)
+    seen: set[int] = set()
+    while todo:
+        node = todo.pop()
+        if id(node) in seen:
+            continue
+        seen.add(id(node))
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                todo.extend(defs.get(n.id, ()))
+            elif isinstance(n, ast.Attribute):
+                todo.extend(defs.get(n.attr, ()))
+    return seen
+
+
+def _coverage_spans() -> list[tuple[int, str]]:
+    """(line, text) of every backtick span in COVERAGE.md."""
+    lines = (ROOT / "COVERAGE.md").read_text().splitlines()
+    return [(i, span) for i, line in enumerate(lines, 1) for span in re.findall(r"`([^`]+)`", line)]
+
+
+def _top_level_names(tree: ast.Module) -> set[str]:
+    names: set[str] = set()
+    for stmt in tree.body:
+        if isinstance(stmt, _DEFS):
+            names.add(stmt.name)
+        elif isinstance(stmt, (ast.Import, ast.ImportFrom)):
+            names.update((a.asname or a.name).partition(".")[0] for a in stmt.names)
+        else:
+            names.update(
+                n.id
+                for n in ast.walk(stmt)
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+            )
+    return names
+
+
+def test_every_public_callable_is_reached_or_covered():
+    modules = _modules()
+    reached = _reached(modules)
+    covered = {name for _, span in _coverage_spans() for name in re.findall(r"[A-Za-z_]\w*", span)}
+    offenders = [
+        f"{path.relative_to(ROOT)}:{stmt.lineno} {stmt.name}"
+        for path, tree in modules.items()
+        for stmt in tree.body
+        if isinstance(stmt, _DEFS)
+        and not stmt.name.startswith("_")
+        and id(stmt) not in reached
+        and stmt.name not in covered
+    ]
+    assert not offenders, (
+        "public callables no entry point reaches and no COVERAGE.md row names "
+        "(delete them, or name the row they implement):\n" + "\n".join(offenders)
+    )
+
+
+def test_coverage_module_qualified_names_resolve():
+    names_by_module: dict[str, set[str]] = {}
+    for path, tree in _modules().items():
+        module = path.relative_to(PKG).with_suffix("").as_posix().removesuffix("/__init__")
+        names_by_module[module] = _top_level_names(tree)
+    stale = []
+    for line, span in _coverage_spans():
+        m = re.match(r"([\w/]+)\.(\w+)", span)
+        if m is None:
+            continue
+        module, name = m.groups()
+        homes = [k for k in names_by_module if k == module or k.endswith("/" + module)]
+        if homes and not any(name in names_by_module[k] for k in homes):
+            stale.append(f"COVERAGE.md:{line} {module}.{name}")
+    assert not stale, "COVERAGE.md names callables its modules do not define:\n" + "\n".join(stale)

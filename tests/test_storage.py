@@ -62,134 +62,6 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     assert back.count() == o.where(F.col("o_orderstatus") == "O").count()
 
 
-def test_suggest_buckets_power_of_two():
-    assert storage.suggest_buckets(10 * 2**30) == 64  # 10 GiB / 256 MiB = 40 -> 64
-    assert storage.suggest_buckets(100) == 1
-
-
-def test_dynamic_partition_overwrite_touches_only_written_partitions(spark, sf_dir, tmp_path):
-    o = load_table(spark, sf_dir, "orders").withColumn("status", F.col("o_orderstatus"))
-    path = str(tmp_path / "orders_dyn")
-    storage.write_partitioned(o, path, ["status"])
-    before_f = spark.read.parquet(path).where("status = 'F'").count()
-
-    # rewrite ONLY the O partition with a filtered slice
-    slim_o = o.where("status = 'O' AND o_orderkey % 2 = 0")
-    storage.overwrite_partitions(slim_o, path, ["status"])
-
-    back = spark.read.parquet(path)
-    assert back.where("status = 'F'").count() == before_f  # untouched survives
-    assert back.where("status = 'O'").count() == slim_o.count()  # replaced
-
-
-def test_compact_path_merges_small_files(spark, sf_dir, tmp_path):
-    """64 stranded micro-batch files compact to the byte-target count
-    with no data change; re-running is a no-op."""
-    import glob
-    import os
-
-    from acuvate_spark.operators import storage
-    from acuvate_spark.tables import load_table
-
-    events = load_table(spark, sf_dir, "events")
-    path = str(tmp_path / "events_small_files")
-    events.repartition(64).write.parquet(path)
-    before_files = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    assert len(before_files) == 64
-    before_rows = spark.read.parquet(path).count()
-    # integer checksum: float sums are partition-order dependent
-    before_sum = spark.read.parquet(path).agg({"event_id": "sum"}).collect()[0][0]
-
-    total = sum(os.path.getsize(f) for f in before_files)
-    target = total // 4  # force ~4-5 output files
-    n = storage.compact_path(spark, path, target_file_bytes=target)
-    after_files = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    assert len(after_files) == n <= 6
-    assert spark.read.parquet(path).count() == before_rows
-    assert spark.read.parquet(path).agg({"event_id": "sum"}).collect()[0][0] == before_sum
-    # repeated runs converge: better compression in the merged files can
-    # shrink total bytes and allow one further merge, after which the
-    # layout is a fixpoint (n_target >= file count -> no rewrite)
-    n2 = storage.compact_path(spark, path, target_file_bytes=target)
-    assert n2 <= n
-    assert storage.compact_path(spark, path, target_file_bytes=target) == n2
-    assert spark.read.parquet(path).count() == before_rows
-
-
-def test_compact_path_preserves_partition_layout(spark, sf_dir, tmp_path):
-    """Partitioned layouts compact per leaf dir: key=value structure,
-    partition pruning, and overwrite_partitions compatibility survive."""
-    import glob
-    import os
-
-    from acuvate_spark.operators import storage
-    from acuvate_spark.tables import load_table
-
-    o = load_table(spark, sf_dir, "orders").withColumn("status", F.col("o_orderstatus"))
-    path = str(tmp_path / "orders_compact_part")
-    o.repartition(16).write.partitionBy("status").parquet(path)
-    before_rows = spark.read.parquet(path).count()
-    per_leaf_before = len(glob.glob(os.path.join(path, "status=O", "*.parquet")))
-    assert per_leaf_before >= 8
-
-    storage.compact_path(spark, path, target_file_bytes=1 << 40)  # huge target -> 1 file/leaf
-    leaves = sorted(os.path.basename(p) for p in glob.glob(os.path.join(path, "status=*")))
-    assert leaves == ["status=F", "status=O", "status=P"]
-    assert len(glob.glob(os.path.join(path, "status=O", "*.parquet"))) == 1
-    back = spark.read.parquet(path)
-    assert back.count() == before_rows
-    assert "status" in back.columns  # partition column still derived from layout
-    # dynamic-partition overwrite still works on the compacted layout
-    slim = o.where("status = 'O' AND o_orderkey % 2 = 0")
-    storage.overwrite_partitions(slim, path, ["status"])
-    assert spark.read.parquet(path).where("status = 'O'").count() == slim.count()
-
-
-def test_compact_path_recovers_from_interrupted_swap(spark, sf_dir, tmp_path):
-    """A crash between the two renames leaves only the backup dir; the
-    next call restores it and proceeds instead of reporting 0 files."""
-    import os
-
-    from acuvate_spark.operators import storage
-    from acuvate_spark.tables import load_table
-
-    events = load_table(spark, sf_dir, "events")
-    path = str(tmp_path / "events_crash")
-    events.repartition(8).write.parquet(path)
-    n_rows = spark.read.parquet(path).count()
-    # simulate the crash window: path renamed away, new data never landed
-    os.rename(path, path + ".__pre_compact__")
-    n = storage.compact_path(spark, path, target_file_bytes=1 << 40)
-    assert n == 1  # restored, then compacted to one file
-    assert spark.read.parquet(path).count() == n_rows
-
-
-def test_compact_path_recovers_interrupted_partition_swap(spark, sf_dir, tmp_path):
-    """A crash mid-swap inside ONE partition leaf must be healed on the
-    next run — the leftover backup dir restores the missing leaf and is
-    never treated as a data leaf itself."""
-    import glob
-    import os
-
-    from acuvate_spark.operators import storage
-    from acuvate_spark.tables import load_table
-
-    o = load_table(spark, sf_dir, "orders").withColumn("status", F.col("o_orderstatus"))
-    path = str(tmp_path / "orders_crash_part")
-    o.repartition(8).write.partitionBy("status").parquet(path)
-    before = spark.read.parquet(path).count()
-    leaf = os.path.join(path, "status=O")
-    # crash window: leaf renamed to backup, replacement never landed;
-    # plus a stale half-written temp for another leaf
-    os.rename(leaf, leaf + ".__pre_compact__")
-    os.makedirs(os.path.join(path, "status=F.__compacting__"))
-
-    storage.compact_path(spark, path, target_file_bytes=1 << 40)
-    leaves = sorted(os.path.basename(p) for p in glob.glob(os.path.join(path, "status=*")))
-    assert leaves == ["status=F", "status=O", "status=P"]  # healed, no junk dirs
-    assert spark.read.parquet(path).count() == before
-
-
 def test_zorder_key_interleaves_bits(spark):
     # x=3 (bits 0,1 -> out 0,2), y=1 (bit 0 -> out 1): z = 1+4+2 = 7
     df = spark.range(1).select(
@@ -433,27 +305,3 @@ def test_pruning_audit_exact_for_int64_past_double_mantissa(spark, tmp_path):
         if r["file"] not in set(audit["files_pruned"])
     ]
     assert spark.read.parquet(*kept).where(F.col("v") >= big).count() == 1
-
-
-def test_compact_path_blocked_by_live_lease(spark, sf_dir, tmp_path):
-    """compact_path shares the register single-maintainer contract
-    (r12): a live lease on the path blocks it with zero effect; with
-    the lease gone the same call compacts."""
-    import os
-
-    import pytest
-
-    from acuvate_spark.operators import sinks, storage
-    from acuvate_spark.tables import load_table
-
-    path = str(tmp_path / "smallfiles")
-    load_table(spark, sf_dir, "nation").repartition(8).write.parquet(path)
-    n_before = len([f for f in os.listdir(path) if f.endswith(".parquet")])
-    lease = path.rstrip("/") + ".__lease__"
-    with open(lease, "w") as fh:
-        fh.write("pid=99999 purpose=compact-path")
-    with pytest.raises(sinks.ConcurrentWriterError):
-        storage.compact_path(spark, path)
-    assert len([f for f in os.listdir(path) if f.endswith(".parquet")]) == n_before
-    os.remove(lease)
-    assert storage.compact_path(spark, path) == 1

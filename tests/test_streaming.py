@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from acuvate_spark.streaming import blob_ingest, windows
+from tests.test_api import _work
 
 
 def _touch(path: str, content: bytes = b"x") -> None:
@@ -1078,3 +1079,19 @@ def test_retry_state_survives_crashed_rewrite(spark, tmp_path):
     assert len(committed) == 1
     got3 = {tuple(r) for r in blob_ingest._load_retry_state(spark, retry_dir).collect()}
     assert got3 == {("a.pdf", 3)}
+
+
+def test_retry_state_reads_run_no_empty_tasks_and_no_schema_job(spark, tmp_path):
+    """An empty retry state is planned in the JVM, so the ``take(1)``
+    every ingest pass runs on it starts no task. A committed state is
+    read back with the schema its writer recorded, so collecting it
+    runs one job and no schema-inference job."""
+    retry_dir = str(tmp_path / "retry_state")
+    os.makedirs(retry_dir)
+    rows, _, tasks = _work(spark, lambda: blob_ingest._load_retry_state(spark, retry_dir).take(1))
+    assert rows == [] and tasks == 0
+
+    state = spark.createDataFrame([("a.pdf", 2)], "path string, attempts int")
+    blob_ingest._write_retry_state(state, retry_dir)
+    rows, jobs, _ = _work(spark, lambda: blob_ingest._load_retry_state(spark, retry_dir).collect())
+    assert [tuple(r) for r in rows] == [("a.pdf", 2)] and jobs == 1
