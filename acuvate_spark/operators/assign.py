@@ -97,7 +97,7 @@ BROADCAST_MAX_K = 65_536
 # never loses above it — so auto swaps at the midpoint. Two regimes
 # above the crossover: on clusterable data (SemDeDup's premise) the
 # triangle-inequality pruning holds candidates near-constant and the
-# shuffled form is ~linear in N (tools/semdedup_geometry_check.py);
+# shuffled form is ~linear in N (tools/skew_audit.py semdedup_geometry);
 # on isotropic-random data NO exact method beats N x K (all super
 # cosines ~ 0, radii ~ sqrt(2), nothing prunes — the curse of
 # dimensionality, measured: both modes within 0.1% at the 100x dir),

@@ -17,7 +17,7 @@ from ..tables import load_table, materialize_and_release, repartition_for_comput
 from .registry import register
 
 
-# running_totals hot-key crossover (r12, tools/window_skew_check.py):
+# running_totals hot-key crossover (r12, tools/skew_audit.py window_skew):
 # below this max-per-key row count the classic single window wins (the
 # two-level form's offsets join measured ~4x uniform overhead at the
 # 100x dir); past it a single task's sort+cumsum of the hot key

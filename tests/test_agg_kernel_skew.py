@@ -2,7 +2,7 @@
 word_shingles zip_with rebuild, the line_dedup_docs tokenize-once
 projection, and the sample_audio_windows md5-state clone must be
 value-identical to their pre-fix forms (throughput halves live in
-SCALING.md via tools/kernel_skew_check.py + agg_state_skew_check.py).
+SCALING.md via tools/skew_audit.py kernel_skew / agg_state_skew).
 """
 
 from __future__ import annotations
@@ -58,7 +58,7 @@ def test_line_dedup_docs_oracle_holds_on_a_giant_doc(spark, tmp_path):
     """The tokenize-once projection is exercised where it matters — a
     document orders of magnitude longer than the corpus norm — and
     still matches the DuckDB oracle value-for-value."""
-    from agg_state_skew_check import build_giant_doc
+    from skew_audit import build_giant_doc
 
     from .oracle_harness import compare, duck_con
 
@@ -103,7 +103,7 @@ def test_audio_window_hashes_equal_per_window_recompute(spark):
 
 
 def test_agg_state_fixtures_are_deterministic_and_hot(spark, tmp_path):
-    from agg_state_skew_check import HOT_KEY, build_hot_lineitem
+    from skew_audit import HOT_KEY, build_hot_lineitem
 
     from acuvate_spark.tables import load_table
 

@@ -156,7 +156,7 @@ def test_shuffled_assign_on_skewed_corpus_matches_broadcast(spark, sf_dir):
     vectors are one tight cluster (exact duplicates of a single
     direction — the worst case, every probe hits ONE cell) must still
     produce rows identical to the broadcast form. The throughput half
-    is measured by tools/assign_skew_check.py (SCALING.md)."""
+    is measured by tools/skew_audit.py assign_skew (SCALING.md)."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     dom = (
         e.orderBy("vec_id")

@@ -2,7 +2,7 @@
 candidate generation are PLAN levers, never result levers. Both r12
 rewrites are pinned result-identical to their pre-r12 shapes on a hub
 fixture built by the same generator the throughput audit uses
-(tools/graph_skew_check.py, shrunk constants — the 20x-scale wall
+(tools/skew_audit.py graph_skew, shrunk sizes — the 20x-scale wall
 clocks live in SCALING.md, correctness identity lives here).
 """
 
@@ -26,25 +26,22 @@ def hub_dir(tmp_path_factory):
     """Tiny twin of the audit fixture off sf0.001: a mid-id triangle
     hub (deg 60 -> 900 wedges at one pivot) and a hot supplier
     (deg 80 -> 3160 doomed candidate pairs)."""
-    import graph_skew_check as g
+    import skew_audit as g
 
     from acuvate_spark.session import get_spark
 
     spark = get_spark("acuvate-tests")
     out = str(tmp_path_factory.mktemp("graph_hub"))
-    saved = (g.HUB_DEG, g.HOT_SUPP_DEG)
-    g.HUB_DEG, g.HOT_SUPP_DEG = 60, 80
-    try:
-        return g.build_hub_fixture(spark, "/root/testdata/sf0.001", out)
-    finally:
-        g.HUB_DEG, g.HOT_SUPP_DEG = saved
+    return g.build_hub_fixture(
+        spark, "/root/testdata/sf0.001", out, hub_deg=60, hot_supp_deg=80
+    )
 
 
 def test_triangle_degree_orientation_identity_on_hub(spark, hub_dir):
     """Degree-then-id orientation counts EXACTLY the triangles the
     id-oriented (oracle-shaped) wedge join counts, on a fixture where
     the hub makes the two plans maximally different."""
-    import graph_skew_check as g
+    import skew_audit as g
 
     got = REGISTRY["triangle_count"].fn(spark, hub_dir).collect()[0].asDict()
     n_edges, n_tri = g.brute_triangles(spark, hub_dir)

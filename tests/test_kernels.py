@@ -171,6 +171,41 @@ def test_connected_components_rounds_track_diameter_not_size(spark):
     assert rounds[0] <= 12, f"rounds {rounds[0]} should track diameter (~10), not size"
 
 
+def _chain_edges(spark, n_parts: int):
+    """Alternating part-supplier chain p0-s0-p1-s1-...-p_{n-1} of
+    diameter 2 (n_parts - 1), suppliers negative as in the graph
+    queries' edges: the min label is the last supplier, one hop from
+    the far end, so it must travel diameter - 1 hops."""
+    base = spark.range(n_parts - 1).select(F.col("id").alias("i"))
+    supp = -(F.col("i") + 9_000_001)
+    return base.select(
+        (F.col("i") + 30_000_000).alias("src"), supp.alias("dst")
+    ).unionByName(base.select((F.col("i") + 30_000_001).alias("src"), supp.alias("dst")))
+
+
+@pytest.mark.parametrize("n_parts", [5, 9, 17])
+def test_connected_components_chain_rounds_halve_diameter(spark, n_parts):
+    """Each CC round performs two propagation hops, so a chain of
+    diameter d converges in exactly d // 2 + 1 rounds (the +1 confirms
+    the fixpoint) with every node labelled by the chain's min id."""
+    diameter = 2 * (n_parts - 1)
+    rounds: list = []
+    labels = connected_components(
+        _chain_edges(spark, n_parts).localCheckpoint(eager=True), max_iter=80, rounds_out=rounds
+    ).collect()
+    assert rounds == [diameter // 2 + 1]
+    assert len(labels) == 2 * n_parts - 1
+    assert {r["component"] for r in labels} == {min(r["node"] for r in labels)}
+
+
+def test_connected_components_refuses_past_max_iter(spark):
+    """No silent partial labels: a chain whose diameter needs more than
+    2 * max_iter hops raises instead of returning a half-propagated
+    labelling."""
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(_chain_edges(spark, 60), max_iter=5).count()
+
+
 def test_imageprocess_fixture_matches_kernels(spark):
     """The committed kernel-output fixtures behind imageprocess_tail
     must equal the LIVE kernel outputs at their pinned scale (sf0.01)

@@ -172,7 +172,7 @@ def test_lsh_skew_fixture_is_deterministic_and_hot(spark, tmp_path):
     sys.path.insert(0, str(__import__("pathlib").Path(__file__).resolve().parent.parent))
     from pyspark.sql import functions as F
 
-    from tools.lsh_skew_check import BOILERPLATE, build_template_fixture
+    from tools.skew_audit import BOILERPLATE, build_template_fixture
 
     assert len(BOILERPLATE.split()) == 25
     d1 = build_template_fixture(spark, sf_dir, str(tmp_path / "a"))

@@ -55,3 +55,47 @@ def test_tool_imports_cleanly(imported, tool):
 
 def test_tool_imports_start_no_spark(imported):
     assert not imported["spark"]
+
+
+def test_skew_audit_table_names_live_callables():
+    """Every case label in ``skew_audit.AUDITS`` names a registry query
+    or an ``acuvate_spark.operators`` function, and every bound is
+    positive: a renamed query fails here, not in the next audit run."""
+    import importlib
+
+    from acuvate_spark.queries import REGISTRY
+
+    sys.path.insert(0, str(ROOT / "tools"))
+    from skew_audit import AUDITS
+
+    for audit, row in AUDITS.items():
+        for label, bound in row.bounds.items():
+            module, _, name = label.split()[0].rpartition(".")
+            if module:
+                ops = importlib.import_module(f"acuvate_spark.operators.{module}")
+                assert hasattr(ops, name), (audit, label)
+            else:
+                assert name in REGISTRY, (audit, label)
+            assert bound > 0, (audit, label)
+
+
+def test_skew_audit_assign_override_is_restored():
+    """One process runs several audits: the forced assign routing of
+    one case must not reach the next, even when its build raises."""
+    from acuvate_spark.operators import assign
+
+    sys.path.insert(0, str(ROOT / "tools"))
+    from skew_audit import _routed
+
+    def limits():
+        return assign.AUTO_SHUFFLE_MIN_K, assign.BROADCAST_MAX_K
+
+    before = limits()
+    assert _routed(limits, AUTO_SHUFFLE_MIN_K=-1, BROADCAST_MAX_K=-1)() == (-1, -1)
+
+    def boom():
+        raise ValueError("build failed")
+
+    with pytest.raises(ValueError):
+        _routed(boom, AUTO_SHUFFLE_MIN_K=-1)()
+    assert limits() == before

@@ -1,7 +1,7 @@
 """Hot-entity window-family fixes (r12): the running_totals adaptive
 two-level cumsum is a PLAN lever, never a result lever — both routes
 are pinned row-identical on uniform and hot-key fixtures (the
-throughput halves live in SCALING.md via tools/window_skew_check.py).
+throughput halves live in SCALING.md via tools/skew_audit.py window_skew).
 """
 
 from __future__ import annotations
@@ -20,7 +20,7 @@ sys.path.insert(0, str(ROOT / "tools"))
 
 @pytest.fixture(scope="module")
 def hot_dir(tmp_path_factory):
-    import window_skew_check as w
+    import skew_audit as w
 
     from acuvate_spark.session import get_spark
 

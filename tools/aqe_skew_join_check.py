@@ -60,6 +60,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import warm_up  # noqa: E402
+
 _SALT = 8
 
 
@@ -134,7 +136,7 @@ def main() -> None:
     from acuvate_spark.session import get_spark
 
     spark = get_spark("aqe-skew-join-check")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    warm_up(spark, d)
     c = spark.conf
     # defeat broadcast so shuffle-join skew exists at bench scale (the
     # dim that needs skew handling at 100 TB is broadcast-ineligible)

@@ -1,183 +1,5 @@
-#!/usr/bin/env python3
-"""Hub-skew audit for the wedge-join graph family (VERDICT r11 item 1):
-``triangle_count`` and ``link_prediction_jaccard`` were measured on the
-near-uniform TPC-H-ish projections, but a natural graph is power-law —
-one hub vertex can dominate the wedge join. This tool measures both
-queries on a deliberately hub-heavy lineitem, the way r11's
-``lsh_skew_check.py`` audited the banded-LSH family.
-
-Fixture (deterministic, engine-built from a scaled dir; only
-``lineitem.parquet`` is written — both audited queries read nothing
-else):
-
-* triangle hub: one part co-purchased (2-item orders, qty 1) with
-  ``HUB_DEG`` fresh parts whose ids straddle the hub's id — the WORST
-  case for the id-oriented wedge join, since the pivot's wedge count is
-  in(id<hub) x out(id>hub) = (D/2)^2 pair rows at ONE join key. Every
-  50th consecutive neighbor pair also shares an order, so the hub
-  closes real triangles and the orientation-identity check is
-  non-trivial.
-* hot supplier: one supplier linked (qty 1) to ``HOT_SUPP_DEG`` fresh
-  parts. The common-neighbor wedge join pivots on the supplier, so the
-  hot key emits deg^2/2 candidate pairs, ALL of which fail the
-  ``n_common >= 2`` filter — pure wasted work, the worst case for the
-  plan (mirrors the blended-embedding design in lsh_skew_check).
-
-Protocol: min-of-2 wall clocks per (query, corpus); uniform corpus =
-the dir as-is. Pass: each query within BOUND x of uniform. The
-triangle closing count is also recomputed on the hub fixture via the
-brute id-oriented wedge join (the oracle's shape) and must equal the
-production result — orientation is a plan lever, never a result lever.
-
-    python tools/graph_skew_check.py [--dir /tmp/scaled_sf/sf0.2]
-        [--out /tmp/graph_skew]
-"""
-
-from __future__ import annotations
-
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pyspark.sql import functions as F
-
-HUB_DEG = 16000  # triangle hub: (D/2)^2 = 64M wedge rows at one pivot key
-HOT_SUPP_DEG = 6000  # link-pred hot supplier: D^2/2 = 18M candidate pairs
-QUERIES = ("triangle_count", "link_prediction_jaccard")
-BOUNDS = {"triangle_count": 3.0, "link_prediction_jaccard": 3.0}
-
-_TRI_PART0 = 10_000_000  # fresh id space for hub + neighbors
-_TRI_ORDER0 = 900_000_000
-_HOT_SUPP = 8_000_000
-_HOT_PART0 = 20_000_000
-_HOT_ORDER0 = 910_000_000
-
-
-def build_hub_fixture(spark, src: str, out: str) -> str:
-    """Write the hub-heavy twin of ``src`` (lineitem only)."""
-    from acuvate_spark.tables import load_table
-
-    os.makedirs(out, exist_ok=True)
-    li = load_table(spark, src, "lineitem")
-    # one template row supplies every column the queries don't read
-    tpl = F.broadcast(li.limit(1).drop("l_orderkey", "l_partkey", "l_suppkey", "l_quantity"))
-
-    def synth(rows_df):
-        """(l_orderkey, l_partkey, l_suppkey, l_quantity) + template."""
-        return rows_df.crossJoin(tpl).select(*li.columns)
-
-    d = HUB_DEG
-    hub_id = _TRI_PART0 + d + 1  # odd, mid-range among even neighbor ids
-    nbr = F.col("i") * 2 + _TRI_PART0  # even ids 0..2(D-1), straddling hub
-    base = spark.range(d).select(F.col("id").cast("int").alias("i"))
-    # 2-item orders (hub, neighbor_i): D hub edges, ids split D/2 below /
-    # D/2 above the hub id
-    tri_rows = base.select(
-        (F.col("i") + _TRI_ORDER0).alias("l_orderkey"),
-        F.explode(F.array(F.lit(hub_id), nbr)).alias("l_partkey"),
-        F.lit(1).alias("l_suppkey"),
-        F.lit(1.0).alias("l_quantity"),
-    )
-    # every 50th consecutive neighbor pair shares an order -> real
-    # triangles (hub, n_i, n_{i+1}) close through the hub
-    closer = base.where((F.col("i") % 50 == 0) & (F.col("i") + 1 < d))
-    tri_close = closer.select(
-        (F.col("i") + _TRI_ORDER0 + d).alias("l_orderkey"),
-        F.explode(F.array(nbr, nbr + 2)).alias("l_partkey"),
-        F.lit(1).alias("l_suppkey"),
-        F.lit(1.0).alias("l_quantity"),
-    )
-    hot = spark.range(HOT_SUPP_DEG).select(
-        (F.col("id") + _HOT_ORDER0).alias("l_orderkey"),
-        (F.col("id") + _HOT_PART0).cast("int").alias("l_partkey"),
-        F.lit(_HOT_SUPP).alias("l_suppkey"),
-        F.lit(1.0).alias("l_quantity"),
-    )
-    extra = synth(tri_rows).unionByName(synth(tri_close)).unionByName(synth(hot))
-    li.unionByName(extra).write.mode("overwrite").parquet(f"{out}/lineitem.parquet")
-    return out
-
-
-def brute_triangles(spark, sf_dir: str) -> tuple[int, int]:
-    """(n_edges, n_triangles) via the id-oriented wedge join — the
-    oracle's shape, independent of the production orientation."""
-    from acuvate_spark.tables import load_table
-
-    li = load_table(spark, sf_dir, "lineitem")
-    items = (
-        li.where(F.col("l_quantity") <= 10).select("l_orderkey", "l_partkey").distinct()
-    )
-    a = items.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("u"))
-    b = items.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("v"))
-    edges = (
-        a.join(b, "k").where(F.col("u") < F.col("v")).select("u", "v").distinct()
-        .localCheckpoint(eager=True)
-    )
-    e1 = edges.select(F.col("u").alias("x"), F.col("v").alias("y"))
-    e2 = edges.select(F.col("u").alias("y2"), F.col("v").alias("z"))
-    tri = (
-        e1.join(e2, F.col("y") == F.col("y2"))
-        .join(edges, (F.col("x") == F.col("u")) & (F.col("z") == F.col("v")))
-        .count()
-    )
-    return edges.count(), tri
-
-
-def main() -> None:
-    src = (
-        sys.argv[sys.argv.index("--dir") + 1]
-        if "--dir" in sys.argv
-        else "/tmp/scaled_sf/sf0.2"
-    )
-    out_root = (
-        sys.argv[sys.argv.index("--out") + 1] if "--out" in sys.argv else "/tmp/graph_skew"
-    )
-    from acuvate_spark.queries import REGISTRY
-    from acuvate_spark.session import get_spark
-
-    spark = get_spark("graph-skew-check")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JIT warmup
-    hub_dir = build_hub_fixture(spark, src, os.path.join(out_root, "hub"))
-    corpora = {"uniform": src, "hub": hub_dir}
-    result: dict[str, object] = {"dir": src, "hub_deg": HUB_DEG, "hot_supp_deg": HOT_SUPP_DEG}
-    ok = True
-    for name in QUERIES:
-        fn = REGISTRY[name].fn
-        times, rows = {}, {}
-        for label, d in corpora.items():
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                out = fn(spark, d).collect()
-                el = time.perf_counter() - t0
-                best = el if best is None or el < best else best
-            rows[label] = out[0].asDict() if name == "triangle_count" else len(out)
-            print(f"  {name} {label}: {best:.2f}s ({rows[label]})", file=sys.stderr)
-            times[label] = round(best, 2)
-        ratio = round(times["hub"] / times["uniform"], 2)
-        ok = ok and ratio <= BOUNDS[name]
-        result[name] = {
-            **{f"{k}_s": v for k, v in times.items()},
-            "ratio": ratio,
-            "bound": BOUNDS[name],
-            "rows": rows,
-        }
-    # the id-oriented form on the hub dir: identity evidence AND the
-    # "what the r11 plan would have cost" datum for SCALING.md
-    t0 = time.perf_counter()
-    n_edges, n_tri = brute_triangles(spark, hub_dir)
-    id_oriented_s = round(time.perf_counter() - t0, 2)
-    print(f"  id-oriented triangle hub: {id_oriented_s}s", file=sys.stderr)
-    prod = result["triangle_count"]["rows"]["hub"]
-    ident = prod == {"n_edges": n_edges, "n_triangles": n_tri}
-    result["triangle_identity_vs_id_oriented"] = ident
-    result["id_oriented_triangle_hub_s"] = id_oriented_s
-    result["pass"] = ok and ident
-    print(json.dumps(result))
-
-
+"""Former name of ``python tools/skew_audit.py graph_skew``, kept for the comments that cite it."""
 if __name__ == "__main__":
-    main()
+    import skew_audit
+
+    skew_audit.main("graph_skew")

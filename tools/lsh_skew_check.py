@@ -1,180 +1,5 @@
-#!/usr/bin/env python3
-"""Hot-band skew audit for the banded-LSH candidate joins (VERDICT r10
-item 7): the LSH families were measured on near-uniform corpora, but a
-natural corpus has hot bands — boilerplate prefixes, templates, legal
-headers — and a hot band emits candidate pairs QUADRATIC in its bucket
-size. This tool measures the three banded-LSH queries on a
-deliberately template-heavy corpus, the way r10's
-``assign_skew_check.py`` audited the nearest-centroid assign.
-
-Fixture (deterministic, engine-built from a scaled dir):
-
-* documents: 30% of docs (doc_id % 10 < 3) get a FIXED 25-word
-  boilerplate prefix — their shingle sets share a large common block,
-  so MinHash band keys and SimHash band values go hot;
-* embeddings: 30% of vectors are blended toward one fixed direction
-  (v' = normalize(u + 0.35 v)): pairwise cosine between blended
-  vectors lands at ~1/(1+0.35^2) = 0.89, BELOW the 0.95 verify
-  threshold — every extra candidate the hot hyperplane buckets emit
-  is pure wasted verify work, the worst case for the plan.
-
-Protocol: min-of-2 wall clocks per (query, corpus), uniform corpus =
-the dir as-is. For ``dedup_minhash_lsh`` the tool also counts
-candidate pairs before and after the exact set-size filter
-(J <= min/max, so J >= 0.7 requires 10*min(na,nb) >= 7*max(na,nb)) —
-the residual template/uniform ratio must be explained by SURVIVING
-candidates, not by plan degradation. Pass: adaptive-banded families
-(simhash, embedding) within 2x of uniform; minhash within 6x with the
-post-filter candidate count carrying the justification.
-
-    python tools/lsh_skew_check.py [--dir /tmp/scaled_sf/sf0.2]
-        [--out /tmp/lsh_skew]
-"""
-
-from __future__ import annotations
-
-import json
-import os
-import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pyspark.sql import functions as F
-
-# exactly 25 words
-BOILERPLATE = (
-    "this document is provided under the standard corporate information "
-    "classification policy and may not be redistributed copied or disclosed "
-    "without prior written permission from the"
-)
-
-QUERIES = ("dedup_minhash_lsh", "dedup_simhash", "dedup_embedding_cosine")
-BOUNDS = {"dedup_minhash_lsh": 6.0, "dedup_simhash": 2.0, "dedup_embedding_cosine": 2.0}
-
-
-def build_template_fixture(spark, src: str, out: str) -> str:
-    """Write the template-heavy twin of ``src`` (documents +
-    embeddings only — all three audited queries read nothing else)."""
-    from acuvate_spark.tables import load_table
-
-    os.makedirs(out, exist_ok=True)
-    docs = load_table(spark, src, "documents")
-    templated = docs.withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 10 < 3,
-            F.concat(F.lit(BOILERPLATE + " "), F.col("text")),
-        ).otherwise(F.col("text")),
-    )
-    templated.write.mode("overwrite").parquet(f"{out}/documents.parquet")
-
-    emb = load_table(spark, src, "embeddings")
-    base = (
-        emb.orderBy("vec_id")
-        .limit(1)
-        .select(F.col("embedding").alias("be"))
-    )
-    mix = emb.crossJoin(F.broadcast(base))
-    blended = F.zip_with(F.col("be"), F.col("embedding"), lambda b, v: b + 0.35 * v)
-    norm = F.sqrt(F.aggregate(blended, F.lit(0.0), lambda a, x: a + x * x))
-    hot = mix.select(
-        *[c for c in emb.columns if c != "embedding"],
-        F.when(
-            F.col("vec_id") % 10 < 3,
-            F.transform(blended, lambda x: (x / norm).cast("float")),
-        )
-        .otherwise(F.col("embedding"))
-        .alias("embedding"),
-    )
-    hot.write.mode("overwrite").parquet(f"{out}/embeddings.parquet")
-    return out
-
-
-def minhash_candidate_counts(spark, sf_dir: str) -> dict[str, int]:
-    """Band-collision candidate pairs before/after the exact size
-    filter, computed with the engine's own operators (same shingles,
-    signature, and banding as the production query)."""
-    from acuvate_spark.operators import dedup as dedup_ops
-    from acuvate_spark.queries import dedup as qd
-
-    docs = qd._docs_plus_clones(spark, sf_dir)
-    sh = qd._doc_shingles(docs)
-    sig = dedup_ops.minhash_signature(
-        sh, "doc_id", "shingle", qd._N_HASHES, with_count=True
-    ).localCheckpoint(eager=True)
-    sh.unpersist()
-    counts = sig.select("doc_id", "n")
-    bands = dedup_ops.band_keys(sig.drop("n"), "doc_id", qd._N_HASHES, qd._BAND_SIZE)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    pre = cand.count()
-    ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    cb = counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    post = (
-        cand.join(ca, "doc_a")
-        .join(cb, "doc_b")
-        .where(F.lit(10) * F.least("na", "nb") >= F.lit(7) * F.greatest("na", "nb"))
-        .count()
-    )
-    return {"candidates_pre_size_filter": pre, "candidates_post_size_filter": post}
-
-
-def main() -> None:
-    src = (
-        sys.argv[sys.argv.index("--dir") + 1]
-        if "--dir" in sys.argv
-        else "/tmp/scaled_sf/sf0.2"
-    )
-    out_root = (
-        sys.argv[sys.argv.index("--out") + 1]
-        if "--out" in sys.argv
-        else "/tmp/lsh_skew"
-    )
-    from acuvate_spark.queries import REGISTRY
-    from acuvate_spark.session import get_spark
-
-    spark = get_spark("lsh-skew-check")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JIT warmup
-    template_dir = build_template_fixture(
-        spark, src, os.path.join(out_root, "template")
-    )
-    corpora = {"uniform": src, "template": template_dir}
-    result: dict[str, object] = {"dir": src}
-    ok = True
-    for name in QUERIES:
-        fn = REGISTRY[name].fn
-        times = {}
-        rows = {}
-        for label, d in corpora.items():
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                rows[label] = fn(spark, d).count()
-                el = time.perf_counter() - t0
-                best = el if best is None or el < best else best
-            times[label] = round(best, 2)
-            print(f"  {name} {label}: {best:.2f}s ({rows[label]} rows)", file=sys.stderr)
-        ratio = round(times["template"] / times["uniform"], 2)
-        ok = ok and ratio <= BOUNDS[name]
-        result[name] = {**{f"{k}_s": v for k, v in times.items()}, "ratio": ratio,
-                        "bound": BOUNDS[name], "rows": rows}
-    result["minhash_template_candidates"] = minhash_candidate_counts(
-        spark, template_dir
-    )
-    result["pass"] = ok
-    print(json.dumps(result))
-
-
+"""Former name of ``python tools/skew_audit.py lsh_skew``, kept for the comments that cite it."""
 if __name__ == "__main__":
-    main()
+    import skew_audit
+
+    skew_audit.main("lsh_skew")

@@ -23,6 +23,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import warm_up  # noqa: E402
+
 
 def main() -> None:
     d = (
@@ -36,7 +38,7 @@ def main() -> None:
     from acuvate_spark.session import get_spark
 
     spark = get_spark("simhash-band-check")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JIT warmup
+    warm_up(spark, d)
     n = _doc_corpus_n(spark, d)
     docs = _docs_plus_clones(spark, d)
     tokens = docs.select(
