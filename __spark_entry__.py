@@ -27,8 +27,9 @@ exactly that with dedup_embedding_cosine's LSH rewrite). Since round
 6 the hash also covers every package symbol the query transitively
 references, so a shared-helper edit outside the decorated function
 re-front-loads its dependents too (the r05 verdict's item-2 blind
-spot). ``tests/test_docs.py`` pins the rotation, the manifest
-freshness, and the helper-bump behavior so none can regress.
+spot). The hash covers code, not text: a comment or docstring edit
+re-front-loads nothing. ``tests/test_docs.py`` pins the rotation, the
+manifest freshness, and the helper-bump behavior so none can regress.
 """
 
 from __future__ import annotations

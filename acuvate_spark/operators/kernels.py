@@ -86,7 +86,7 @@ def nms(detections: DataFrame, iou_threshold: float = 0.5) -> DataFrame:
     OVERSIZED boxes get a second tier (r13 kernel payload-skew audit):
     with cells sized to the group max, ONE page-border box on a
     20k-symbol sheet made the cell page-sized and the prescreen
-    degraded to the quadratic scan (tools/kernel_skew_check.py). Boxes
+    degraded to the quadratic scan (tools/skew_audit.py kernel_skew). Boxes
     wider than 4x the median dimension are held out of the grid: every
     candidate checks the oversized kept set, and an oversized
     CANDIDATE sweeps the full kept set — so the cell stays sized to

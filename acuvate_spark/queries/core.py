@@ -672,7 +672,7 @@ def collect_list_per_group(spark, sf_dir):
     spill — and in the output ROW itself, so cost and memory are
     output-proportional by SEMANTICS (the graph_two_hop class). Order
     keys are data-model-bounded (7 lines/order); a corpus with a
-    degenerate key (tools/agg_state_skew_check.py plants one key
+    degenerate key (tools/skew_audit.py agg_state_skew plants one key
     owning 30% of lineitem: 1.06x wall at the 5x dir, the map-side
     partials parallelize) scales linearly until the single merged
     buffer approaches executor memory — at which point the mitigation
@@ -1330,7 +1330,7 @@ def running_totals(spark, sf_dir):
     out of the money domain — NULL, skipped by the running sum —
     where a plain cast ANSI-crashed Spark and errored DuckDB alike.
 
-    ADAPTIVE TWO-LEVEL CUMSUM (r12, tools/window_skew_check.py): the
+    ADAPTIVE TWO-LEVEL CUMSUM (r12, tools/skew_audit.py window_skew): the
     single `partitionBy(custkey)` window serializes each customer into
     one task — a hot customer owning 30% of a 15M-row log measured
     4.25x uniform at the 100x dir. The always-two-level form is no

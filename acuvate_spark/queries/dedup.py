@@ -18,7 +18,12 @@ from pyspark.sql.window import Window
 from ..functions import textual, vectors
 from ..operators import assign
 from ..operators import dedup as dedup_ops
-from ..tables import load_embeddings, load_table, repartition_for_compute
+from ..tables import (
+    load_embeddings,
+    load_table,
+    materialize_and_release,
+    repartition_for_compute,
+)
 from .registry import register
 
 # --- shared planted-clone inputs -------------------------------------------
@@ -66,15 +71,6 @@ def _doc_shingles(docs, n=3):
         .select("doc_id", F.explode(shingles).alias("shingle"))
         .persist()
     )
-
-
-def _materialize_and_release(result, cached):
-    """Run the query now (eager localCheckpoint — the pair results are
-    tiny), then drop the big shingle cache so back-to-back dedup
-    queries never accumulate cached blocks across a long run."""
-    out = result.localCheckpoint(eager=True)
-    cached.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -162,7 +158,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
         .where(jac >= 0.3)
         .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
     )
-    return _materialize_and_release(result, sh)
+    return materialize_and_release(result, sh)
 
 
 # ---------------------------------------------------------------------------
@@ -277,7 +273,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     # a hot band emits candidates quadratic in bucket size and most are
     # length-mismatched boilerplate — pruning them before their
     # shingles are ever joined keeps the verify step proportional to
-    # the SURVIVING candidates (measured: tools/lsh_skew_check.py,
+    # the SURVIVING candidates (measured: tools/skew_audit.py lsh_skew,
     # SCALING.md r11).
     ca = counts.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     cb = counts.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
@@ -316,7 +312,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     result = common.where(jac >= 0.7).select(
         "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
     )
-    return _materialize_and_release(result, sh)
+    return materialize_and_release(result, sh)
 
 
 @register(
@@ -633,7 +629,7 @@ def _emb_near_dup_pairs(
     28.2 -> 6.2 s uniform), and concentrated corpora — boilerplate
     embeddings packed into one cone, the case the r11 skew audit
     caught at 6.18x — collapse to ~1.02x of uniform
-    (tools/lsh_skew_check.py, SCALING.md r11)."""
+    (tools/skew_audit.py lsh_skew, SCALING.md r11)."""
     sig = emb.withColumn("sig", vectors.hyperplane_signature(F.col("embedding"), planes))
     # materialize the tiny (vec_id, band, bkey) frame before the
     # self-join: each signature is bits*bands dot products over the
@@ -1047,7 +1043,7 @@ def dedup_incremental(spark, sf_dir):
             F.col("doc_id").isNotNull().alias("is_duplicate"),
         )
     )
-    out = _materialize_and_release(result, csh)
+    out = materialize_and_release(result, csh)
     bsh.unpersist()
     return out
 
@@ -1379,7 +1375,7 @@ def semdedup_clusters(spark, sf_dir):
         F.col("vd").isNotNull().alias("is_dup"),
         "dup_of",
     )
-    return _materialize_and_release(result, cell)
+    return materialize_and_release(result, cell)
 
 
 # --- KMV bottom-k sketch: cross-source overlap estimation -------------------
@@ -1717,4 +1713,4 @@ def dedup_span_removal(spark, sf_dir):
             F.md5(F.coalesce("cleaned", F.lit(""))).alias("clean_md5"),
         )
     )
-    return _materialize_and_release(out, base)
+    return materialize_and_release(out, base)

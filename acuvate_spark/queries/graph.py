@@ -290,7 +290,7 @@ def triangle_count(spark, sf_dir):
     that vertex. Out-degree under degree orientation is O(sqrt(m)), so
     wedge rows are bounded by m^(3/2) REGARDLESS of hubs — the
     id-oriented form measured 3.4x slower on a deg-16k mid-id hub at
-    sf0.2 (tools/graph_skew_check.py; the gap grows quadratically in
+    sf0.2 (tools/skew_audit.py graph_skew; the gap grows quadratically in
     hub degree), because a hub whose id splits its neighbors emits
     in*out = (deg/2)^2 pair rows at one join key.
     Orientation is a plan lever, never a result lever: the count is
@@ -517,7 +517,7 @@ def link_prediction_jaccard(spark, sf_dir):
     supplier whose parts share nothing else emits ZERO candidates
     (its parts have no second shared supplier), where the wedge join
     emitted deg^2/2 doomed pair rows at one key — measured 10x slower
-    on a deg-6k hot supplier (tools/graph_skew_check.py); the rewrite
+    on a deg-6k hot supplier (tools/skew_audit.py graph_skew); the rewrite
     measures 1.35x there and is FASTER on the uniform corpus too
     (1.9 -> 1.1 s at sf0.2). Exact n_common is then recomputed on the
     ~output-sized

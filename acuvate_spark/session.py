@@ -59,7 +59,9 @@ _RUNTIME_CONFS = {
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable compatibility/perf confs; never raises."""
+    """Apply runtime-settable compatibility/perf confs; never raises.
+    Static confs such as ``spark.python.daemon.module`` cannot reach a
+    running session; ``get_spark`` sets those when it builds one."""
     for key, value in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)

@@ -104,9 +104,7 @@ def materialize_and_release(result: DataFrame, *cached: DataFrame) -> DataFrame:
     registry queries never accumulate cached blocks across a long
     session. The standard epilogue for any registry query that persists
     a mid-plan frame (``scanner_tag_etl`` since r12 — VERDICT r11
-    'what's wrong' #1; the dedup family keeps its r02-era private twin
-    ``queries/dedup._materialize_and_release`` so adopting this helper
-    didn't hash-bump six long-green queries). The plan audit stubs
+    'what's wrong' #1 — and the dedup family). The plan audit stubs
     ``localCheckpoint`` to a no-op, so full lineage stays auditable."""
     out = result.localCheckpoint(eager=True)
     for df in cached:

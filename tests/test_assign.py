@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from acuvate_spark.operators import assign
 from acuvate_spark.queries import REGISTRY
 from acuvate_spark.tables import load_table
+from tools.dump_plans import plan_text
 
 
 # (AUTO_SHUFFLE_MIN_K, BROADCAST_MAX_K) that route every k_hint to one
@@ -83,12 +84,6 @@ def test_swapped_queries_identical_on_fixture(spark, sf_dir, name):
     assert got["broadcast"] == got["shuffled"] == got["blas"]
 
 
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def _node_count(plan: str, name: str) -> int:
     """Count physical nodes by their detail-section header — the tree
     rendering repeats each node name once more."""
@@ -108,7 +103,7 @@ def test_shuffled_plan_has_no_krow_broadcast_nested_loop(spark, sf_dir):
     loop IS the K-row cross — the shape the swap removes."""
     e, cent = _frames(spark, sf_dir, 16)
     with _mode("shuffled"):
-        plan = _plan(assign.nearest_centroids(e, cent, k_hint=16))
+        plan = plan_text(assign.nearest_centroids(e, cent, k_hint=16))
     assert "CartesianProduct" not in plan
     assert _node_count(plan, "BroadcastNestedLoopJoin") == 3
     # both nested-loop build sides are the 1-row collect_list frames
@@ -118,21 +113,21 @@ def test_shuffled_plan_has_no_krow_broadcast_nested_loop(spark, sf_dir):
         m in plan for m in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
     )
     with _mode("broadcast"):
-        bplan = _plan(assign.nearest_centroids(e, cent, k_hint=16))
+        bplan = plan_text(assign.nearest_centroids(e, cent, k_hint=16))
     assert _node_count(bplan, "BroadcastNestedLoopJoin") == 1
 
 
 def test_auto_mode_threshold(spark, sf_dir):
     e, cent = _frames(spark, sf_dir, 4)
-    plan_small = _plan(assign.nearest_centroids(e, cent, k_hint=4))
+    plan_small = plan_text(assign.nearest_centroids(e, cent, k_hint=4))
     # k_hint <= threshold: broadcast shape (one K-row nested loop)
     assert _node_count(plan_small, "BroadcastNestedLoopJoin") == 1
-    plan_mid = _plan(
+    plan_mid = plan_text(
         assign.nearest_centroids(e, cent, k_hint=assign.AUTO_SHUFFLE_MIN_K)
     )
     # at the crossover: still broadcast
     assert _node_count(plan_mid, "BroadcastNestedLoopJoin") == 1
-    plan_big = _plan(
+    plan_big = plan_text(
         assign.nearest_centroids(e, cent, k_hint=assign.AUTO_SHUFFLE_MIN_K + 1)
     )
     # past the measured crossover (r11): the cogrouped-matmul shape —
@@ -140,7 +135,7 @@ def test_auto_mode_threshold(spark, sf_dir):
     # meet the K-row frame on a hash equi-join for the exact ccos
     assert _node_count(plan_big, "BroadcastNestedLoopJoin") == 0
     assert "FlatMapCoGroupsInPandas" in plan_big
-    plan_huge = _plan(
+    plan_huge = plan_text(
         assign.nearest_centroids(e, cent, k_hint=assign.BROADCAST_MAX_K + 1)
     )
     # past the broadcast CAPACITY bound: the two-level shuffled shape
@@ -204,7 +199,7 @@ def test_blas_plan_shape(spark, sf_dir):
     cartesian appears anywhere."""
     e, cent = _frames(spark, sf_dir, 16)
     with _mode("blas"):
-        plan = _plan(assign.nearest_centroids(e, cent, k_hint=16))
+        plan = plan_text(assign.nearest_centroids(e, cent, k_hint=16))
     assert "FlatMapCoGroupsInPandas" in plan
     assert "CartesianProduct" not in plan
     assert _node_count(plan, "BroadcastNestedLoopJoin") == 0

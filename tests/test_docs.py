@@ -150,14 +150,10 @@ def test_extended_baseline_guards_full_registry():
     )
 
 
-def test_helper_edit_bumps_dependent_query_versions(tmp_path):
-    """VERDICT r05 item 2: the version gate's helper blind spot. A
-    query's hash must cover the package symbols its segment
-    TRANSITIVELY references, so editing a shared helper (here
-    functions/tags.py's classify_tag_type) re-front-loads every query
-    it feeds in the driver rotation — while queries that never touch
-    it keep their hash."""
-    import ast
+def _hash_change(tmp_path, edits):
+    """Names whose version hash changes when ``edits`` — {package-relative
+    path: function(source) -> edited source} — are applied to a copy of
+    the package."""
     import shutil
     import sys
 
@@ -168,25 +164,67 @@ def test_helper_edit_bumps_dependent_query_versions(tmp_path):
     root = tmp_path / "repo"
     root.mkdir()
     shutil.copytree(ROOT / "acuvate_spark", root / "acuvate_spark")
-    tags = root / "acuvate_spark" / "functions" / "tags.py"
-    lines = tags.read_text().splitlines()
-    fn = next(
-        n
-        for n in ast.parse("\n".join(lines)).body
-        if isinstance(n, ast.FunctionDef) and n.name == "classify_tag_type"
-    )
-    # a comment inside the helper's body: syntactically inert, but a
-    # source-segment change like any real edit
-    lines.insert(fn.body[0].lineno - 1, "    # simulated helper edit")
-    tags.write_text("\n".join(lines))
+    for rel, edit in edits.items():
+        path = root / "acuvate_spark" / rel
+        src = path.read_text()
+        edited = edit(src)
+        assert edited != src, f"edit left {rel} unchanged"
+        path.write_text(edited)
+    after = query_hashes(root)
+    return base, {n for n in base if base[n] != after[n]}
 
-    edited = query_hashes(root)
-    changed = {n for n in base if base[n] != edited[n]}
+
+def _in_classify_tag_type(line):
+    """Edit inserting ``line`` after classify_tag_type's docstring."""
+    import ast
+
+    def edit(src):
+        lines = src.splitlines()
+        fn = next(
+            n
+            for n in ast.parse(src).body
+            if isinstance(n, ast.FunctionDef) and n.name == "classify_tag_type"
+        )
+        lines.insert(fn.body[1].lineno - 1, line)
+        return "\n".join(lines)
+
+    return edit
+
+
+def test_helper_edit_bumps_dependent_query_versions(tmp_path):
+    """VERDICT r05 item 2: the version gate's helper blind spot. A
+    query's hash must cover the package symbols its segment
+    TRANSITIVELY references, so editing a shared helper (here
+    functions/tags.py's classify_tag_type) re-front-loads every query
+    it feeds in the driver rotation — while queries that never touch
+    it keep their hash."""
+    base, changed = _hash_change(
+        tmp_path,
+        {"functions/tags.py": _in_classify_tag_type("    _edit = None")},
+    )
     assert {"scanner_tag_etl", "classify_tags"} <= changed, (
         f"helper edit did not bump its dependents: {sorted(changed)}"
     )
     assert "pricing_summary" not in changed, "bumped a query with no tags dep"
     assert changed < set(base), "a helper edit must never bump the whole registry"
+
+
+def test_comment_and_docstring_edits_bump_no_query_version(tmp_path):
+    """Versions hash code, not text: a comment or docstring edit to a
+    helper or to a query leaves every hash as it was, so fixing a stale
+    citation never re-front-loads a query."""
+
+    def helper(src):
+        src = _in_classify_tag_type("    # simulated comment edit")(src)
+        return src.replace("Rule cascade: invalid", "Cascade: invalid", 1)
+
+    def query(src):
+        return src.replace("The reference's classify_tag_type", "The cascade", 1)
+
+    _, changed = _hash_change(
+        tmp_path, {"functions/tags.py": helper, "queries/core.py": query}
+    )
+    assert not changed, f"text-only edits bumped: {sorted(changed)}"
 
 
 def test_coverage_rows_track_rewritten_query_strategies():

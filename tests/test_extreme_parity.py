@@ -5,7 +5,7 @@ unicode rings. At 100 TB a telemetry or money column WILL contain a
 few poisoned cells (sensor glitches, upstream float bugs), and the
 engines' defaults disagree violently about them.
 
-What the probe (tools/extreme_probe.py) found, all fixed:
+What the ring found when first run, all fixed:
 
 * The fixed-point cents idiom silently corrupted out-of-domain cells
   on the Spark side — floor(double)->long SATURATES (±Inf ->

@@ -19,6 +19,7 @@ from __future__ import annotations
 import pytest
 
 from acuvate_spark.queries import REGISTRY
+from tools.dump_plans import plan_text
 
 # Queries allowed to contain a nested-loop/cartesian join because the
 # streamed side is bounded by construction (broadcast of a tiny,
@@ -76,14 +77,10 @@ ALLOWED_UNBOUNDED = {
 _UNBOUNDED_MARKERS = ("CartesianProduct", "BroadcastNestedLoopJoin")
 
 
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-
-
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_no_unbounded_join_in_plan(name, spark, sf_dir, monkeypatch):
     df = REGISTRY[name].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     if "Scan ExistingRDD" in plan and not any(m in plan for m in _UNBOUNDED_MARKERS):
         # materialized result: localCheckpoint hides the stages BEFORE
         # the checkpoint from this scan. Rebuild the query with the
@@ -104,7 +101,7 @@ def test_no_unbounded_join_in_plan(name, spark, sf_dir, monkeypatch):
             # the distributed round body is pinned separately in
             # test_plans.py::test_kcenter_round_argmax_is_distributed_topk
             pytest.skip("driver-assembled k-row result; round plan pinned in test_plans.py")
-        plan = _plan(REGISTRY[name].fn(spark, sf_dir))
+        plan = plan_text(REGISTRY[name].fn(spark, sf_dir))
         assert "Scan ExistingRDD" not in plan, (
             f"{name} still materializes with localCheckpoint stubbed — "
             "audit cannot see its full plan"
@@ -161,7 +158,7 @@ def test_semdedup_large_k_plans_no_bnl(spark, sf_dir, tmp_path, monkeypatch):
         return len(re.findall(r"^\(\d+\) BroadcastNestedLoopJoin", plan, re.M))
 
     df = REGISTRY["semdedup_clusters"].fn(spark, str(tmp_path))
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "CartesianProduct" not in plan
     # auto routes K > crossover (and <= 64k capacity) to the blas
     # assign: the cogrouped kernel appears, and NO nested loop does —
@@ -174,5 +171,5 @@ def test_semdedup_large_k_plans_no_bnl(spark, sf_dir, tmp_path, monkeypatch):
     from acuvate_spark.operators import assign
 
     monkeypatch.setattr(assign, "AUTO_SHUFFLE_MIN_K", 1 << 62)
-    forced = _plan(REGISTRY["semdedup_clusters"].fn(spark, str(tmp_path)))
+    forced = plan_text(REGISTRY["semdedup_clusters"].fn(spark, str(tmp_path)))
     assert bnl_count(forced) == 3  # the K-row cross, once per inlining

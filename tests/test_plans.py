@@ -11,15 +11,12 @@ from pyspark.sql import functions as F
 
 from acuvate_spark.queries import REGISTRY
 from acuvate_spark.tables import load_table
-
-
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+from tools.dump_plans import plan_text
 
 
 def test_filter_pushdown_reaches_parquet_scan(spark, sf_dir):
     df = REGISTRY["filter_like_family"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "PushedFilters" in plan
     # the IN filter must be pushed, not evaluated post-scan
     assert "In(o_orderstatus" in plan or "o_orderstatus" in plan.split("PushedFilters")[1][:400]
@@ -27,7 +24,7 @@ def test_filter_pushdown_reaches_parquet_scan(spark, sf_dir):
 
 def test_column_pruning_reads_only_needed_columns(spark, sf_dir):
     df = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    plan = _plan(df)
+    plan = plan_text(df)
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "l_orderkey" in read_schema and "l_quantity" in read_schema
     assert "l_extendedprice" not in read_schema, "scan must prune unused columns"
@@ -40,7 +37,7 @@ def test_getdata_page_has_no_single_partition_window(spark, sf_dir):
     (per-partition top-k, offset applied at the merge) and the total a
     1-row broadcast aggregate."""
     df = REGISTRY["getdata_page"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "Window" not in plan, "pagination must not use a partition-less Window"
     assert "TakeOrderedAndProject" in plan
     # no global Sort node: the top-k heap merge replaces it
@@ -50,14 +47,14 @@ def test_getdata_page_has_no_single_partition_window(spark, sf_dir):
 
 def test_small_dim_join_is_broadcast(spark, sf_dir):
     df = REGISTRY["nearest_tag_join"].fn(spark, sf_dir)
-    assert "Broadcast" in _plan(df), "tag side must broadcast, not shuffle"
+    assert "Broadcast" in plan_text(df), "tag side must broadcast, not shuffle"
 
 
 def test_embedding_dedup_is_banded_equijoin_not_all_pairs(spark, sf_dir):
     """VERDICT r02 item 5: embedding near-dup must meet on LSH band
     keys (equi-join), never as the vec_a < vec_b all-pairs stream."""
     df = REGISTRY["dedup_embedding_cosine"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "bkey" in plan
 
@@ -66,21 +63,21 @@ def test_nearest_tag_is_grid_equijoin_not_cross(spark, sf_dir):
     """VERDICT r02 item 4: the nearest-tag join must meet on the 2D
     grid cell (equi-join), never as a cross/nested-loop pair stream."""
     df = REGISTRY["nearest_tag_join"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "BroadcastHashJoin" in plan and "cellx" in plan
 
 
 def test_anti_join_is_hash_join_not_nested_loop(spark, sf_dir):
     df = REGISTRY["anti_join_customers"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "LeftAnti" in plan
     assert "HashJoin" in plan
 
 
 def test_aggregation_has_partial_combine(spark, sf_dir):
     df = REGISTRY["pricing_summary"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     # partial (map-side) + final aggregate = combiner before the shuffle
     assert plan.count("HashAggregate") >= 2
     assert "partial_sum" in plan or "partial_count" in plan
@@ -89,19 +86,19 @@ def test_aggregation_has_partial_combine(spark, sf_dir):
 def test_scan_agg_stays_in_codegen(spark, sf_dir):
     df = REGISTRY["agg_order_stats"].fn(spark, sf_dir)
     df.collect()  # AQE only annotates codegen ids on the executed final plan
-    assert "codegen id" in _plan(df)
+    assert "codegen id" in plan_text(df)
 
 
 def test_edge_snap_is_grid_equijoin_not_nested_loop(spark, sf_dir):
     df = REGISTRY["edge_snap_join"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "BroadcastNestedLoopJoin" not in plan, "snap must use the cell grid equi-join"
     assert "BroadcastHashJoin" in plan
 
 
 def test_ivf_probe_side_is_broadcast(spark, sf_dir):
     df = REGISTRY["ann_ivf_flat"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     # centroid assign + probe joins broadcast the tiny sides; the
     # corpus never shuffles for candidate generation
     assert "Broadcast" in plan
@@ -109,14 +106,14 @@ def test_ivf_probe_side_is_broadcast(spark, sf_dir):
 
 def test_curation_pipeline_no_nested_loop(spark, sf_dir):
     df = REGISTRY["curation_pipeline"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "Window" in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
 def test_fuzzy_match_block_key_is_hash_join(spark, sf_dir):
     df = REGISTRY["fuzzy_match_blocked"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     # blocking must turn the edit-distance theta join into a
     # broadcast-hash equi-join on the block key; levenshtein runs
     # only on block-collision candidates
@@ -126,7 +123,7 @@ def test_fuzzy_match_block_key_is_hash_join(spark, sf_dir):
 
 def test_heavy_hitters_topk_has_no_global_sort(spark, sf_dir):
     df = REGISTRY["heavy_hitters"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     # counts must partial-aggregate before the shuffle and the top-k
     # must be a per-partition heap merge, not a full Sort
     assert "TakeOrderedAndProject" in plan
@@ -138,7 +135,7 @@ def test_contamination_join_is_broadcast_single_pass(spark, sf_dir):
     # join + ONE grouping aggregate — two aggregates would mean the
     # r03 two-scan shape crept back
     df = REGISTRY["contamination_check"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "BroadcastHashJoin" in plan and "LeftOuter" in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     # at most three shuffle exchanges — the explicit compute
@@ -160,7 +157,7 @@ def test_salted_join_keys_include_salt(spark, sf_dir):
     import re
 
     df = REGISTRY["salted_skew_join"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     key_lines = re.findall(r"(?:Left|Right) keys \[\d+\]: \[([^\]]*)\]", plan)
     assert key_lines, f"no join key lists found in plan:\n{plan}"
@@ -173,7 +170,7 @@ def test_zorder_key_is_shuffle_free_codegen(spark, sf_dir):
     """The Morton key is pure projection arithmetic: no Exchange, no
     UDF (BatchEvalPython), and the % 97 sample pushes into the scan."""
     df = REGISTRY["zorder_orders"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "PushedFilters" in plan
@@ -184,7 +181,7 @@ def test_corpus_report_is_two_hash_aggregate_shuffles(spark, sf_dir):
     into the scan, then (source,fp) partial agg -> source rollup.
     Exactly two exchanges, both hash aggregates, no sorts."""
     df = REGISTRY["corpus_report_by_source"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     # node markers, not expression names (array_sort/array_join appear
     # inside the fingerprint projection)
     for node in ("SortMergeJoin", "BroadcastHashJoin", "BroadcastNestedLoopJoin", "Sort ["):
@@ -199,7 +196,7 @@ def test_kmv_sketch_text_never_joins(spark, sf_dir):
     rows per side), never corpus text: the only join input is the
     post-aggregate sketch frame."""
     df = REGISTRY["source_overlap_kmv"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     join_idx = plan.find("Join")
     assert join_idx != -1
     # the join consumes ObjectHashAggregate (collect_list slice) output,
@@ -211,7 +208,7 @@ def test_line_dedup_reassembly_is_two_bounded_shuffles(spark, sf_dir):
     """Line dedup: one hash-partitioned window (keep-first) + one
     doc_id aggregate. No joins, no global sort over the corpus."""
     df = REGISTRY["line_dedup_docs"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "Join" not in plan.replace("union", "")  # the clone UNION is not a join
     # window sort is within hash partitions only: every Sort node must
     # be non-global
@@ -225,7 +222,7 @@ def test_gapfill_window_is_per_user_not_global(spark, sf_dir):
     partitions (partitionBy user), never globally; no nested-loop
     join anywhere in the densify-join."""
     df = REGISTRY["gapfill_daily"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     for seg in plan.split("Sort [")[1:]:
         assert "false, 0" in seg[:160], f"global sort in gapfill plan: {seg[:160]}"
@@ -237,7 +234,7 @@ def test_token_budget_mix_is_two_level_prefix_sum(spark, sf_dir):
     in-bucket window partitions by (source, bucket), the bucket-base
     frame joins back as a broadcast, and every Sort is non-global."""
     df = REGISTRY["token_budget_mix"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "BroadcastExchange" in plan, "bucket bases must broadcast"
     for seg in plan.split("Sort [")[1:]:
         assert "false, 0" in seg[:160], f"global sort in mix plan: {seg[:160]}"
@@ -260,7 +257,7 @@ def test_hashed_classifier_is_single_agg_exchange_codegen(spark, sf_dir):
     round-robin spread from repartition_for_compute — at real scale
     inputs arrive pre-split), no joins, no Python eval."""
     df = REGISTRY["hashed_text_classifier"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "RoundRobinPartitioning" in plan and "hashpartitioning(" in plan
     assert plan.count("- Exchange (") == 2, plan
     assert "Join" not in plan
@@ -286,7 +283,7 @@ def test_kcenter_round_argmax_is_distributed_topk(spark, sf_dir):
         .alias("mind"),
     )
     top1 = mind.orderBy(F.col("mind").desc(), F.col("vec_id").asc()).limit(1)
-    plan = _plan(top1)
+    plan = plan_text(top1)
     assert "TakeOrderedAndProject" in plan
     assert "Exchange" not in plan, "argmax must not shuffle the distance frame"
 
@@ -303,7 +300,7 @@ def test_semdedup_k_derivation_is_single_scan_no_union(spark, sf_dir):
     import re
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    plan = _plan(_sem_k_agg(e))
+    plan = plan_text(_sem_k_agg(e))
     # node-header count (the tree rendering repeats each node name)
     assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1
     assert "Union" not in plan
@@ -318,7 +315,7 @@ def test_getdata_keyset_is_windowless_double_topk(spark, sf_dir):
     both plan as distributed TakeOrderedAndProject — no Window, no
     global Sort, ILIKE filter pushed to both scans."""
     df = REGISTRY["getdata_keyset"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "Window" not in plan
     assert plan.count("TakeOrderedAndProject") >= 2
     assert " Sort [" not in plan
@@ -330,7 +327,7 @@ def test_link_prediction_wedge_join_is_hash_equi(spark, sf_dir):
     filter prunes on the aggregate (partial counts before the
     exchange)."""
     df = REGISTRY["link_prediction_jaccard"].fn(spark, sf_dir)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "partial_count" in plan
 
@@ -357,7 +354,7 @@ def test_label_propagation_round_is_join_plus_argmax_agg(spark, sf_dir):
         .agg(F.min(F.struct((-F.col("c")).alias("nc"), F.col("label"))).alias("b"))
         .select("node", F.col("b.label").alias("label"))
     )
-    plan = _plan(new_labels)
+    plan = plan_text(new_labels)
     assert "Window" not in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "partial_count" in plan and "partial_min" in plan
@@ -416,7 +413,7 @@ def test_simhash_verify_is_band_equijoin_with_bitcount(spark, sf_dir):
         .where(F.col("hamming") <= 3)
         .distinct()
     )
-    plan = _plan(pairs)
+    plan = plan_text(pairs)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "bit_count" in plan
     # the TOKEN-stream aggregate (the hot one) is 16 packed-lane sums
@@ -443,7 +440,7 @@ def test_kcore_round_is_degree_agg_plus_semijoins(spark, sf_dir):
     peeled = ue.join(keep, "a", "left_semi").join(
         keep.withColumnRenamed("a", "b"), "b", "left_semi"
     )
-    plan = _plan(peeled)
+    plan = plan_text(peeled)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "LeftSemi" in plan and "partial_count" in plan and "Window" not in plan
 
@@ -482,7 +479,7 @@ def test_embedding_lsh_verify_is_band_equijoin(spark, sf_dir):
         .select("vec_a", "vec_b")
         .distinct()
     )
-    plan = _plan(cand)
+    plan = plan_text(cand)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
@@ -502,8 +499,8 @@ def test_gapfill_corrections_prunes_scan_via_broadcast_semijoin(spark, sf_dir):
     events = load_table(spark, sf_dir, "events")
     late = events.where(F.col("user_id") % 500 == 0).select("user_id", "ts", "value")
     corr = gapfill_corrections(events, late)
-    plan = _plan(corr)
+    plan = plan_text(corr)
     assert "BroadcastExchange" in plan and "LeftSemi" in plan
     merged = merge_corrections(corr, corr)
-    mplan = _plan(merged)
+    mplan = plan_text(merged)
     assert "LeftAnti" in mplan and "Union" in mplan

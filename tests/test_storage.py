@@ -8,10 +8,7 @@ from pyspark.sql import functions as F
 
 from acuvate_spark.operators import storage
 from acuvate_spark.tables import load_table
-
-
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+from tools.dump_plans import plan_text
 
 
 @pytest.fixture(scope="module")
@@ -34,7 +31,7 @@ def test_bucketed_join_has_no_exchange(spark, warehouse):
     a = spark.table("b_orders")
     b = spark.table("b_lineitem")
     joined = a.join(b, "o_orderkey").groupBy("o_orderstatus").count()
-    plan = _plan(joined)
+    plan = plan_text(joined)
     join_section = plan.split("SortMergeJoin")[0] if "SortMergeJoin" in plan else plan
     # co-bucketed join: no shuffle exchange feeding the join
     assert "hashpartitioning" not in join_section, plan
@@ -45,7 +42,7 @@ def test_unbucketed_join_does_shuffle(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     joined = o.join(li, o.o_orderkey == li.l_orderkey).groupBy("o_orderstatus").count()
-    plan = _plan(joined)
+    plan = plan_text(joined)
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert "hashpartitioning" in plan  # the baseline the buckets remove
 
@@ -57,7 +54,7 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     path = str(tmp_path / "orders_part")
     storage.write_partitioned(o, path, ["status"])
     back = spark.read.parquet(path).where(F.col("status") == "O")
-    plan = _plan(back)
+    plan = plan_text(back)
     assert "PartitionFilters" in plan and "status" in plan.split("PartitionFilters")[1][:200]
     assert back.count() == o.where(F.col("o_orderstatus") == "O").count()
 

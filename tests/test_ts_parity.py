@@ -4,7 +4,7 @@ edges (1677-09-22 / 2262-04-10), and the 1752 calendar-switch date —
 injected into events.ts / orders.o_orderdate / lineitem.l_shipdate,
 with the ALL-AGREE contract over every timestamp-consuming family.
 
-Probe outcome (tools/ts_extreme_probe.py): the ENGINES already agree
+Outcome when the ring was first run: the ENGINES already agree
 on every case — both use the proleptic Gregorian calendar over
 microsecond instants — so this ring pins guarantees rather than fixes
 (zero code changes, zero version bumps). Two boundaries it documents:
@@ -26,16 +26,15 @@ microsecond instants — so this ring pins guarantees rather than fixes
 
 from __future__ import annotations
 
-import sys
-from pathlib import Path
+import os
 
+import duckdb
 import pytest
 
 from acuvate_spark.queries import REGISTRY
 
 from .oracle_harness import compare, duck_con
-
-ROOT = Path(__file__).resolve().parent.parent
+from .test_extreme_parity import SRC
 
 TS_QUERIES = [
     "latest_event_per_user", "sessionize_events", "tumbling_event_counts",
@@ -47,12 +46,63 @@ TS_QUERIES = [
 ]
 
 
+def build_ts_dir(out: str) -> str:
+    """Poisoned copies are written as microsecond TIMESTAMP (DuckDB's
+    default): int64 nanosecond timestamps only span 1677-2262, and
+    Spark reads micros directly (the nanos compat tune simply doesn't
+    trigger)."""
+    con = duckdb.connect()
+    # events.ts extremes stay inside the int64-NANOSECOND window
+    # [1677-09-21, 2262-04-11]: results cross the Arrow/pandas bridge
+    # (both the oracle harness and any toPandas consumer), and the
+    # bridge — not the engine — rejects earlier instants (ArrowInvalid
+    # on collect; the Spark plans themselves ran). 1677/2262 edges, the
+    # epoch, a leap day and a DST-gap instant are the hostile cases
+    # that remain representable.
+    con.execute(f"""
+        COPY (
+          SELECT * REPLACE (CAST(
+            CASE WHEN event_id % 17 = 0 THEN TIMESTAMP '1970-01-01 00:00:00'
+                 WHEN event_id % 19 = 0 THEN TIMESTAMP '2024-02-29 12:00:00'
+                 WHEN event_id % 23 = 0 THEN TIMESTAMP '2026-03-08 07:30:00'
+                 WHEN event_id = 29 THEN TIMESTAMP '1677-09-22 00:00:00'
+                 WHEN event_id = 31 THEN TIMESTAMP '2262-04-10 00:00:00'
+                 ELSE ts END AS TIMESTAMP) AS ts
+          ) FROM read_parquet('{SRC}/events.parquet')
+        ) TO '{out}/events.parquet' (FORMAT PARQUET)
+    """)
+    # same ns-window bound for the date columns: date_functions /
+    # running_totals / scd2_history RETURN the raw timestamp, so a
+    # year-0001 cell dies at the bridge, not in the plan. (A one-off
+    # run with 0001/9999 here confirmed the year-level queries —
+    # cube_order_year, pivot, zorder — agree on the full range.)
+    con.execute(f"""
+        COPY (
+          SELECT * REPLACE (CAST(
+            CASE WHEN o_orderkey % 41 = 0 THEN TIMESTAMP '1680-01-01 00:00:00'
+                 WHEN o_orderkey % 43 = 0 THEN TIMESTAMP '2260-12-31 00:00:00'
+                 WHEN o_orderkey % 47 = 0 THEN TIMESTAMP '1752-09-02 00:00:00'
+                 ELSE o_orderdate END AS TIMESTAMP) AS o_orderdate
+          ) FROM read_parquet('{SRC}/orders.parquet')
+        ) TO '{out}/orders.parquet' (FORMAT PARQUET)
+    """)
+    con.execute(f"""
+        COPY (
+          SELECT * REPLACE (CAST(
+            CASE WHEN l_orderkey % 53 = 0 THEN TIMESTAMP '1677-09-22 00:00:00'
+                 WHEN l_orderkey % 59 = 0 THEN TIMESTAMP '2262-04-10 00:00:00'
+                 ELSE l_shipdate END AS TIMESTAMP) AS l_shipdate
+          ) FROM read_parquet('{SRC}/lineitem.parquet')
+        ) TO '{out}/lineitem.parquet' (FORMAT PARQUET)
+    """)
+    for t in "region nation customer supplier part documents embeddings".split():
+        os.symlink(f"{SRC}/{t}.parquet", f"{out}/{t}.parquet")
+    return out
+
+
 @pytest.fixture(scope="module")
 def ts_dir(tmp_path_factory):
-    sys.path.insert(0, str(ROOT / "tools"))
-    import ts_extreme_probe as probe
-
-    return probe.build_fixture(str(tmp_path_factory.mktemp("tsx")))
+    return build_ts_dir(str(tmp_path_factory.mktemp("tsx")))
 
 
 @pytest.mark.parametrize("name", TS_QUERIES)

@@ -172,7 +172,8 @@ COMMENTARY = {
 }
 
 
-def _plan(df) -> str:
+def plan_text(df) -> str:
+    """The formatted physical plan of ``df``."""
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
@@ -188,7 +189,7 @@ def write_plans_md(spark, registry) -> None:
         "",
     ]
     for name, note in COMMENTARY.items():
-        plan = _plan(registry[name].fn(spark, SF_DIR))
+        plan = plan_text(registry[name].fn(spark, SF_DIR))
         lines += [f"## {name}", "", note, "", "```", plan.strip(), "```", ""]
     with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(lines))
@@ -199,7 +200,7 @@ def write_round_plans(spark, registry, rnd: str, tag: str, names: list[str]) -> 
     out = os.path.join(ROOT, "plans", rnd)
     os.makedirs(out, exist_ok=True)
     for name in names:
-        plan = _plan(registry[name].fn(spark, SF_DIR))
+        plan = plan_text(registry[name].fn(spark, SF_DIR))
         path = os.path.join(out, f"{name}_{tag}.txt")
         with open(path, "w") as f:
             f.write(f"== {name} ({tag}) @ {SF_DIR} ==\n\n" + plan)

@@ -1,8 +1,8 @@
 """Per-query version hashes — the driver-rotation staleness signal.
 
-Each registry query's identity is the md5 of its SOURCE SEGMENT (the
+Each registry query's identity is the md5 of its CODE (the
 ``@register(...)`` decorator — which embeds the oracle SQL — plus the
-function body) **and of every package symbol the segment transitively
+function body) **and of the code of every package symbol it transitively
 references** (helper functions in ``functions/`` / ``operators/`` /
 ``streaming/``, shared ``_*_SQL`` constants, sibling query-module
 helpers, ``tables.py`` / ``session.py`` utilities), extracted by AST
@@ -23,12 +23,19 @@ a query, its oracle, OR any helper it uses automatically
 re-front-loads it into the ~50-query verification window.
 
 Dependency resolution, conservatively: a query's closure seeds from
-its segment and expands through module-level and function-local
+the decorated function and expands through module-level and function-local
 ``import``/``from-import`` aliases. ``mod.attr`` on a module alias
 pulls that one symbol; a bare module-alias reference (e.g. a module
 object passed around) pulls the whole module digest; an unresolvable
 attribute falls back to the whole module digest too — over-inclusion
 can only cause an unnecessary re-verification, never a missed one.
+
+"Code" is ``ast.unparse`` of the symbol's AST node with every
+docstring removed (a body that held only a docstring becomes ``pass``);
+comments never reach the AST. Editing a comment or a docstring therefore
+bumps no version, while any change to a statement, an expression, a
+decorator argument or a constant does. The whole-module fallback digest
+is computed the same way.
 
 ``tests/test_docs.py`` asserts every registry query's current hash
 matches the manifest; editing a query or a helper without
@@ -42,12 +49,20 @@ the formula change itself alters every hash without altering any
 code, and voiding 134 green rows for a hashing-scheme change would
 have reset the rotation guarantee the gate exists to provide. The
 adoption baseline was computed at the pre-edit commit, so the same
-round's real helper edits still bumped their dependents normally.
+round's real helper edits still bumped their dependents normally. The
+move from hashing source text to hashing code was adopted the same way:
+``--adopt`` ran right after the formula change and before any other edit.
+
+``ast.unparse`` output can differ between Python minor versions (the
+manifest was computed on 3.11). A Python upgrade that changes it alters
+every hash without altering any code, so it needs the same one-off
+``--adopt`` run, on an otherwise unedited tree.
 """
 
 from __future__ import annotations
 
 import ast
+import copy
 import hashlib
 import json
 import re
@@ -68,10 +83,9 @@ class _Module:
     def __init__(self, name: str, source: str, is_pkg: bool = False):
         self.name = name
         self.is_pkg = is_pkg
-        self.digest = hashlib.md5(source.encode()).hexdigest()
-        self.lines = source.splitlines()
         self.tree = ast.parse(source)
-        self.symbols: dict[str, str] = {}  # top-level name -> source segment
+        self.digest = hashlib.md5(_code(self.tree).encode()).hexdigest()
+        self.symbols: dict[str, str] = {}  # top-level name -> code (see _code)
         self.symbol_nodes: dict[str, ast.AST] = {}
         self.imports: dict[str, tuple] = {}  # alias -> descriptor (see _aliases)
 
@@ -84,12 +98,16 @@ def _module_name(py: Path, pkg_root: Path) -> str:
     return ".".join(parts)
 
 
-def _segment(lines: list[str], node: ast.AST) -> str:
-    start = node.lineno - 1
-    deco = getattr(node, "decorator_list", None)
-    if deco:
-        start = min(start, min(d.lineno for d in deco) - 1)
-    return "\n".join(lines[start : node.end_lineno])
+def _code(node: ast.AST) -> str:
+    """``ast.unparse`` of a copy of ``node`` with every docstring removed
+    (a body that held only one becomes ``pass``). Comments never reach
+    the AST, so neither comments nor docstrings change a hash."""
+    node = copy.deepcopy(node)
+    scopes = (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    for n in [n for n in ast.walk(node) if isinstance(n, scopes)]:
+        if ast.get_docstring(n, clean=False) is not None:
+            n.body = n.body[1:] or [ast.Pass()]
+    return ast.unparse(node)
 
 
 def _resolve_from(mod_name: str, level: int, target: str | None, is_pkg: bool = False) -> str:
@@ -200,7 +218,7 @@ def _load_modules(repo_root: Path) -> dict[str, _Module]:
         m = _Module(_module_name(py, pkg_root), py.read_text(), is_pkg=py.name == "__init__.py")
         for node in m.tree.body:
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                m.symbols[node.name] = _segment(m.lines, node)
+                m.symbols[node.name] = _code(node)
                 m.symbol_nodes[node.name] = node
             elif isinstance(node, (ast.Assign, ast.AnnAssign)):
                 targets = node.targets if isinstance(node, ast.Assign) else [node.target]
@@ -209,7 +227,7 @@ def _load_modules(repo_root: Path) -> dict[str, _Module]:
                     # targets (`A, B = ...`), which must version too
                     for n in ast.walk(t):
                         if isinstance(n, ast.Name):
-                            m.symbols[n.id] = _segment(m.lines, node)
+                            m.symbols[n.id] = _code(node)
                             m.symbol_nodes[n.id] = node
         m.imports = _aliases(m.tree.body, m.name, names, m.is_pkg)
         mods[m.name] = m
@@ -229,7 +247,7 @@ def _symbol_refs(mods: dict[str, _Module], mod: str, sym: str) -> set[tuple]:
 
 def _closure(mods: dict[str, _Module], seed_refs: set[tuple]) -> dict[str, str]:
     """Transitive {dep_key: content} over symbol refs. Key
-    'mod.sym' maps to the symbol segment; 'mod.*' (bare-module or
+    'mod.sym' maps to the symbol's code; 'mod.*' (bare-module or
     unresolvable-attr fallback) maps to the whole-module digest."""
     out: dict[str, str] = {}
     todo = list(seed_refs)
@@ -281,7 +299,7 @@ def _register_name(dec: ast.expr) -> str | None:
 
 
 def query_hashes(repo_root: Path = REPO) -> dict[str, str]:
-    """name -> md5 over the decorator+function source segment plus the
+    """name -> md5 over the decorator+function code plus the
     sorted transitive dependency contents."""
     mods = _load_modules(repo_root)
     out: dict[str, str] = {}

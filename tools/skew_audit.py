@@ -537,10 +537,11 @@ META_BLEND = 0.30  # cluster-center spread around its meta-direction
 NOISE_BLEND = 0.15  # vector spread around its cluster center
 
 
-def _u01(expr, salt: str):
-    """Deterministic uniform(0,1) from md5 — engine-side, seedable."""
+def _u01(expr, salt):
+    """Deterministic uniform(0,1) from md5 of ``salt`` (a string column)
+    and ``expr`` — engine-side, seedable."""
     return (
-        F.conv(F.substring(F.md5(F.concat(F.lit(salt), expr.cast("string"))), 1, 8), 16, 10)
+        F.conv(F.substring(F.md5(F.concat(salt, expr.cast("string"))), 1, 8), 16, 10)
         .cast("double")
         / F.lit(float(1 << 32))
     )
@@ -562,15 +563,17 @@ def build_hierarchical(spark, n: int, out: str) -> int:
     n_clusters = max(n // 125, 1)
     c = (F.col("vec_id") % F.lit(n_clusters)).alias("c")
     m = (F.col("c") % F.lit(s_est)).alias("m")
-    dims = F.array(
-        *[
-            (
-                (_u01(F.col("m"), f"m{d}|") - 0.5)
-                + F.lit(META_BLEND) * (_u01(F.col("c"), f"c{d}|") - 0.5)
-                + F.lit(NOISE_BLEND) * (_u01(F.col("vec_id"), f"n{d}|") - 0.5)
-            ).alias(f"d{d}")
-            for d in range(64)
-        ]
+
+    def salt(tag, d):  # "m5|" for tag "m", dimension 5
+        return F.concat(F.lit(tag), d.cast("string"), F.lit("|"))
+
+    # one lambda over the 64 dimensions: a 64-element F.array of md5
+    # terms generated past whole-stage codegen's 64 KB method limit
+    dims = F.transform(
+        F.sequence(F.lit(0), F.lit(63)),
+        lambda d: (_u01(F.col("m"), salt("m", d)) - 0.5)
+        + F.lit(META_BLEND) * (_u01(F.col("c"), salt("c", d)) - 0.5)
+        + F.lit(NOISE_BLEND) * (_u01(F.col("vec_id"), salt("n", d)) - 0.5),
     )
     norm = F.sqrt(F.aggregate(F.col("raw"), F.lit(0.0), lambda a, x: a + x * x))
     vecs = (
