@@ -38,7 +38,7 @@ import os
 import sys
 
 
-def main(argv: list[str] | None = None) -> int:
+def main() -> int:
     parser = argparse.ArgumentParser(prog="acuvate_spark")
     sub = parser.add_subparsers(dest="cmd", required=True)
 
@@ -78,7 +78,7 @@ def main(argv: list[str] | None = None) -> int:
         p.add_argument("--limit", type=int, default=20)
         p.add_argument("--out", default=None, help="write full result as parquet here")
         p.add_argument("--explain", action="store_true")
-    args = parser.parse_args(argv)
+    args = parser.parse_args()
 
     if args.cmd == "schedule":
         from acuvate_spark.streaming.schedule import SyncScheduler

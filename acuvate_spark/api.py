@@ -82,11 +82,7 @@ class TagRegistry:
     def table(self, register: str) -> DataFrame:
         path = self._current_path(register)
         if path is None:
-            # JVM-only empty relation: an empty createDataFrame still
-            # runs a Python-worker task per partition on every read
-            return self.spark.range(0).select(
-                *[F.lit(None).cast(t).alias(c) for c, t in REGISTER_COLUMNS.items()]
-            )
+            return sinks.empty_frame(self.spark, REGISTER_COLUMNS)
         return sinks._read_version(self.spark, path)
 
     # --- reads -------------------------------------------------------------

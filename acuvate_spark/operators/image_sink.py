@@ -17,7 +17,7 @@ order is preserved.
 
 Two sink shapes:
 
-- :func:`encode_png` — rows ``(id, width, height, channels, pixels)``
+- :func:`encode_png` — rows ``(doc_id, width, height, channels, pixels)``
   -> ``(id, png binary, png_len)``; compose with ``append_parquet``
   for the warehouse form (PNG blobs as an opaque binary column).
 - :func:`write_png_files` — executor-side ``foreachPartition`` write
@@ -69,7 +69,6 @@ def png_encode(
     pixels: bytes,
     *,
     bgr: bool = False,
-    compress_level: int = 6,
 ) -> bytes:
     """Encode one row-major 8-bit raster as a standards-compliant PNG.
 
@@ -106,36 +105,25 @@ def png_encode(
     return (
         PNG_SIGNATURE
         + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(bytes(raw), compress_level))
+        + _chunk(b"IDAT", zlib.compress(bytes(raw)))
         + _chunk(b"IEND", b"")
     )
 
 
-def encode_png(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    *,
-    bgr: bool = False,
-    compress_level: int = 6,
-) -> DataFrame:
+def encode_png(df: DataFrame) -> DataFrame:
     """Raster rows -> PNG blob rows via an Arrow-batched kernel.
 
-    Input columns: ``id_col`` (long), ``width`` (int), ``height``
+    Input columns: ``doc_id`` (long), ``width`` (int), ``height``
     (int), ``channels`` (int), ``pixels`` (binary, row-major 8-bit).
     Output: ``(id, png binary, png_len long)`` — ``png_len`` rides
     along so downstream size audits never re-read the blobs.
     """
-    cols = df.select(
-        df[id_col].alias("id"), "width", "height", "channels", "pixels"
-    )
+    cols = df.select(df["doc_id"].alias("id"), "width", "height", "channels", "pixels")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             blobs = [
-                png_encode(
-                    int(w), int(h), int(c), bytes(p),
-                    bgr=bgr, compress_level=compress_level,
-                )
+                png_encode(int(w), int(h), int(c), bytes(p))
                 for w, h, c, p in zip(
                     pdf["width"], pdf["height"], pdf["channels"], pdf["pixels"]
                 )

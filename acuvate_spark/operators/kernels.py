@@ -32,15 +32,15 @@ def llm_label_stub_expr(md5_col):
     return F.concat(F.lit("LBL-"), F.upper(F.substring(md5_col, 1, 6)))
 
 
-def llm_label_with_cache(items: DataFrame, cache: DataFrame, key_col: str = "content_md5") -> DataFrame:
+def llm_label_with_cache(items: DataFrame, cache: DataFrame) -> DataFrame:
     """MD5-cache join (O8): items(key, content_md5) ⟕ cache(content_md5,
     label); misses get the (stub) model call; result unions hits and
     computed misses. The cache join replaces the reference's in-memory
     dict so it scales past one process."""
-    hits = items.join(cache, key_col, "inner").withColumn("from_cache", F.lit(True))
+    hits = items.join(cache, "content_md5", "inner").withColumn("from_cache", F.lit(True))
     misses = (
-        items.join(cache, key_col, "left_anti")
-        .withColumn("label", llm_label_stub_expr(F.col(key_col)))
+        items.join(cache, "content_md5", "left_anti")
+        .withColumn("label", llm_label_stub_expr(F.col("content_md5")))
         .withColumn("from_cache", F.lit(False))
     )
     return hits.unionByName(misses)
@@ -202,18 +202,14 @@ def ocr_words_stub(pages: DataFrame, passthrough: tuple[str, ...] = ()) -> DataF
     schema = OCR_WORDS_SCHEMA + "".join(f", {c} string" for c in passthrough)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # adaptive token explosion (r14, guide §4.2): the old form
-        # always appended one Python tuple per WORD and built the batch
-        # frame from that row list — a per-token interpreter loop. On
-        # token-HEAVY pages (real OCR output: hundreds of words each)
-        # the explosion is now numpy: repeat page ids/metadata by token
-        # count, one arange subtraction for word_idx, one fromiter for
-        # the flat word array. On token-sparse batches (the synthetic
-        # one-token pages of the ETL fixtures) the numpy constants
-        # exceed the loop cost — measured +3-9% on the two consumer
-        # queries — so those keep the row loop. Values are identical on
-        # both paths — including None text -> no tokens and the
-        # NaN-as-null polygon cells pandas' float64 coercion produces.
+        # one numpy explosion for every batch: repeat page ids/metadata
+        # by token count, one arange subtraction for word_idx, one
+        # fromiter for the flat word array. No per-token row loop for
+        # token-sparse batches: on one-token pages it saves at most
+        # ~0.5 ms of CPU per Arrow batch and takes about twice as long
+        # from ~1,000 pages per batch (micro-benchmark of both bodies,
+        # CHANGES.md). None text yields no tokens; a 1-char word's
+        # polygon cells are NaN, which Arrow writes as null.
         import itertools
 
         import numpy as np
@@ -224,24 +220,6 @@ def ocr_words_stub(pages: DataFrame, passthrough: tuple[str, ...] = ()) -> DataF
             ]
             lens = np.fromiter((len(t) for t in toks), dtype=np.int64, count=len(toks))
             total = int(lens.sum())
-            if total < 8 * len(toks):
-                rows = []
-                extras = [pdf[c] for c in passthrough]
-                for page_id, tk, *meta in zip(pdf["page_id"], toks, *extras):
-                    for i, w in enumerate(tk):
-                        has_poly = len(w) >= 2
-                        rows.append(
-                            (
-                                page_id,
-                                i,
-                                w,
-                                float(10 * i) if has_poly else None,
-                                float(page_id % 100) if has_poly else None,
-                                *meta,
-                            )
-                        )
-                yield pd.DataFrame(rows, columns=cols)
-                continue
             words = np.fromiter(
                 itertools.chain.from_iterable(toks), dtype=object, count=total
             )

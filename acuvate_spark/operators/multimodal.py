@@ -49,12 +49,12 @@ def _fake_decode(raw: bytes) -> tuple[int, int]:
     return 64 + h[0] % 192, 64 + h[1] % 192
 
 
-def attach_binary(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Fixture adapter: treat a text column's UTF-8 bytes as the opaque
-    media payload (the test tables carry no real media)."""
+def attach_binary(df: DataFrame) -> DataFrame:
+    """Fixture adapter: treat the ``text`` column's UTF-8 bytes as the
+    opaque media payload (the test tables carry no real media)."""
     return df.select(
         "doc_id",
-        F.encode(F.col(text_col), "UTF-8").alias("media"),
+        F.encode(F.col("text"), "UTF-8").alias("media"),
         F.lit("image/fake").alias("media_type"),
     )
 
@@ -129,11 +129,10 @@ AUDIO_SCHEMA = (
 )
 
 
-def sample_audio_windows(
-    df: DataFrame, window_ms: int = AUDIO_WINDOW_MS, hop_ms: int = AUDIO_HOP_MS
-) -> DataFrame:
-    """'Audio' sliding windows: one media row -> overlapping fixed
-    windows (the STFT/VAD framing every speech pipeline starts with).
+def sample_audio_windows(df: DataFrame) -> DataFrame:
+    """'Audio' sliding windows: one media row -> overlapping
+    ``AUDIO_WINDOW_MS`` windows every ``AUDIO_HOP_MS`` (the STFT/VAD
+    framing every speech pipeline starts with).
     Duration is faked at 1 byte = 1 ms (a real decoder divides by
     sample_rate * bytes_per_sample); the per-window hash and the
     md5-derived fake energy stand in for the frame content, keeping
@@ -147,9 +146,9 @@ def sample_audio_windows(
             for doc_id, b in zip(pdf["doc_id"], pdf["media"]):
                 raw = bytes(b)
                 duration_ms = len(raw)
-                if duration_ms < window_ms:
+                if duration_ms < AUDIO_WINDOW_MS:
                     continue
-                n = (duration_ms - window_ms) // hop_ms + 1
+                n = (duration_ms - AUDIO_WINDOW_MS) // AUDIO_HOP_MS + 1
                 # hash the payload ONCE and clone the digest state per
                 # window (r13 kernel payload-skew audit: md5(raw+i)
                 # recomputed per window is O(windows x bytes) — a
@@ -162,9 +161,8 @@ def sample_audio_windows(
                     hh.update(str(i).encode())
                     h = hh.hexdigest()
                     energy = int(h[:2], 16)
-                    rows.append(
-                        (doc_id, i, i * hop_ms, i * hop_ms + window_ms, h, energy)
-                    )
+                    start = i * AUDIO_HOP_MS
+                    rows.append((doc_id, i, start, start + AUDIO_WINDOW_MS, h, energy))
             yield pd.DataFrame(
                 rows,
                 columns=[

@@ -32,6 +32,7 @@ import time
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from .merge import first_per_key
@@ -216,12 +217,9 @@ def register_lease(main_path: str, purpose: str):
                 os.remove(lease)
 
 
-def append_parquet(df: DataFrame, path: str, partition_cols: list[str] | None = None) -> None:
+def append_parquet(df: DataFrame, path: str) -> None:
     """S7/S8 — append-mode warehouse write."""
-    writer = df.write.mode("append")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(path)
+    df.write.mode("append").parquet(path)
 
 
 def rest_sink(df: DataFrame, poster: Callable[[list[dict]], None], batch_size: int = 100) -> None:
@@ -244,19 +242,29 @@ def rest_sink(df: DataFrame, poster: Callable[[list[dict]], None], batch_size: i
     df.foreachPartition(send_partition)
 
 
+EXPORT_MAX_ROWS = 100_000
+
+
 def export_excel(df: DataFrame, path: str, header_map: dict[str, str] | None = None,
-                 exclude: list[str] | None = None, max_rows: int = 100_000) -> str:
+                 exclude: list[str] | None = None) -> str:
     """S11 — styled-export shape (reference export_to_excel_endpoint
     app.py:7379-7483): column exclusion (P4) + human header rename
     (P3) + driver-side export. Falls back to CSV when no Excel engine
-    is installed; returns the path written. Guarded by ``max_rows`` —
-    this is a presentation sink, not a data path."""
+    is installed; returns the path written. Guarded by
+    ``EXPORT_MAX_ROWS`` — this is a presentation sink, not a data
+    path: a frame with more rows raises ``ValueError`` and writes
+    nothing."""
     out = df
     if exclude:
         out = out.drop(*exclude)
     if header_map:
         out = out.withColumnsRenamed(header_map)
-    pdf = out.limit(max_rows).toPandas()
+    pdf = out.limit(EXPORT_MAX_ROWS + 1).toPandas()
+    if len(pdf) > EXPORT_MAX_ROWS:
+        raise ValueError(
+            f"export_excel: more than {EXPORT_MAX_ROWS} rows; "
+            "filter or page the frame before exporting"
+        )
     try:
         pdf.to_excel(path, index=False)  # needs openpyxl
         return path
@@ -265,6 +273,13 @@ def export_excel(df: DataFrame, path: str, header_map: dict[str, str] | None = N
         csv_path = root + ".csv"
         pdf.to_csv(csv_path, index=False)
         return csv_path
+
+
+def empty_frame(spark: SparkSession, types: dict[str, str]) -> DataFrame:
+    """An empty frame of the given column types, planned in the JVM:
+    reading it runs no task (an empty ``createDataFrame`` runs a Python
+    worker per partition)."""
+    return spark.range(0).select(*[F.lit(None).cast(t).alias(c) for c, t in types.items()])
 
 
 @contextlib.contextmanager

@@ -18,11 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def with_salt(df: DataFrame, n_salts: int, key_col: str = "__salt") -> DataFrame:
-    """Uniform random salt in [0, n_salts). rand() is fine here: the
-    salt never affects results, only placement (re-aggregation removes
-    it)."""
-    return df.withColumn(key_col, (F.rand(seed=42) * n_salts).cast("int"))
+N_SALTS = 16
 
 
 def salted_agg(
@@ -30,13 +26,14 @@ def salted_agg(
     group_cols: list[str],
     partial_aggs: list[Column],
     final_aggs: list[Column],
-    n_salts: int = 16,
 ) -> DataFrame:
     """Two-phase skew-safe aggregation:
     phase 1 groups on (group_cols + salt) with ``partial_aggs``
     (e.g. sum(x) as s, count(*) as c);
     phase 2 groups on group_cols with ``final_aggs`` over the partials
-    (e.g. sum(s), sum(c))."""
-    salted = with_salt(df, n_salts)
+    (e.g. sum(s), sum(c)). The salt is uniform random in
+    [0, N_SALTS): rand() is fine here, because the salt never affects
+    results, only placement (re-aggregation removes it)."""
+    salted = df.withColumn("__salt", (F.rand(seed=42) * N_SALTS).cast("int"))
     phase1 = salted.groupBy(*group_cols, "__salt").agg(*partial_aggs)
     return phase1.groupBy(*group_cols).agg(*final_aggs)

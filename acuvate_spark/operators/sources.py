@@ -123,10 +123,10 @@ def _shared_strings(z) -> list[str]:
     ]
 
 
-def _sheet_zip_path(z, sheet_index: int) -> str:
-    """Resolve the Nth workbook sheet to its zip member via the
+def _sheet_zip_path(z) -> str:
+    """Resolve the first workbook sheet to its zip member via the
     workbook relationships (sheet order in workbook.xml is the user-
-    visible order; the part name need not be sheetN.xml)."""
+    visible order; the part name need not be sheet1.xml)."""
     import xml.etree.ElementTree as ET
 
     wb = ET.fromstring(z.read("xl/workbook.xml"))
@@ -135,9 +135,9 @@ def _sheet_zip_path(z, sheet_index: int) -> str:
         r.get("Id"): r.get("Target") for r in rels.findall(f"{_RELS_NS}Relationship")
     }
     sheets = wb.findall(f"{_XLSX_NS}sheets/{_XLSX_NS}sheet")
-    if not sheets or sheet_index >= len(sheets):
-        raise ValueError(f"workbook has {len(sheets)} sheet(s), wanted {sheet_index}")
-    target = targets[sheets[sheet_index].get(_RID_ATTR)]
+    if not sheets:
+        raise ValueError("workbook has no sheets")
+    target = targets[sheets[0].get(_RID_ATTR)]
     return target.lstrip("/") if target.startswith("/") else f"xl/{target}"
 
 
@@ -164,8 +164,9 @@ def _cell_value(c, shared: list[str]):
     return num
 
 
-def read_xlsx(path: str, sheet_index: int = 0) -> tuple[list[str], list[list]]:
-    """Decode one worksheet to (header, data_rows) with stdlib only.
+def read_xlsx(path: str) -> tuple[list[str], list[list]]:
+    """Decode the first worksheet to (header, data_rows) with stdlib
+    only, as the reference's ``pd.read_excel`` reads one sheet.
     Row 1 is the header; data rows are None-padded to the header
     width; cells beyond the header width are dropped (pandas
     behavior for ragged sheets)."""
@@ -174,7 +175,7 @@ def read_xlsx(path: str, sheet_index: int = 0) -> tuple[list[str], list[list]]:
 
     with zipfile.ZipFile(path) as z:
         shared = _shared_strings(z)
-        root = ET.fromstring(z.read(_sheet_zip_path(z, sheet_index)))
+        root = ET.fromstring(z.read(_sheet_zip_path(z)))
         raw: list[dict[int, object]] = []
         for row in root.iter(f"{_XLSX_NS}row"):
             cells: dict[int, object] = {}
@@ -193,94 +194,18 @@ def read_xlsx(path: str, sheet_index: int = 0) -> tuple[list[str], list[list]]:
     return header, data
 
 
-def read_excel_rows(spark: SparkSession, path: str, sheet_index: int = 0) -> DataFrame:
+def read_excel_rows(spark: SparkSession, path: str) -> DataFrame:
     """Excel scan (S2, reference pd.read_excel app.py:6062-6063):
-    stdlib xlsx decode -> pandas frame -> normalized Spark rows. No
-    optional engine required. All-NULL columns are typed string so
-    createDataFrame never hits an undeterminable-type error."""
+    stdlib decode of the first sheet -> pandas frame -> normalized
+    Spark rows. No optional engine required. All-NULL columns are
+    typed string so createDataFrame never hits an undeterminable-type
+    error."""
     import pandas as pd
 
-    header, data = read_xlsx(path, sheet_index)
+    header, data = read_xlsx(path)
     pdf = pd.DataFrame(data, columns=header)
     for col in pdf.columns:
         if pdf[col].isna().all():
             pdf[col] = pdf[col].astype("string")
     return sheet_frame_to_rows(spark, pdf)
 
-
-# --- S2 as a first-class scan: PySpark 4 Python Data Source ----------------
-# spark.read.format("xlsx").load(path) — the idiomatic Spark shape of
-# the reference's pd.read_excel ingest (app.py:6062-6063). The driver
-# infers the schema from sheet 0's header; each SHEET is an
-# InputPartition, so a many-sheet workbook decodes in parallel across
-# executors (the stdlib decode runs where the task runs, not on the
-# driver). All columns surface as nullable strings — the same
-# contract as a CSV scan without inferSchema; typed casts belong to
-# the query layer (excel_validate_etl does exactly that).
-
-
-def _sheet_count(path: str) -> int:
-    import xml.etree.ElementTree as ET
-    import zipfile
-
-    with zipfile.ZipFile(path) as z:
-        wb = ET.fromstring(z.read("xl/workbook.xml"))
-    return len(wb.findall(f"{_XLSX_NS}sheets/{_XLSX_NS}sheet"))
-
-
-def _render_cell(v) -> str | None:
-    """Stable string rendering for the all-string scan schema: bools
-    lowercase (JSON-style), numbers via str, text verbatim."""
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    return str(v)
-
-
-def make_xlsx_datasource():
-    """Build the DataSource class lazily so importing this module
-    never requires pyspark.sql.datasource (present in Spark 4+)."""
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    class XlsxReader(DataSourceReader):
-        def __init__(self, path: str, fields: list[str]):
-            self._path = path
-            self._fields = fields
-
-        def partitions(self):
-            return [InputPartition(i) for i in range(_sheet_count(self._path))]
-
-        def read(self, partition):
-            header, data = read_xlsx(self._path, sheet_index=partition.value)
-            # map by header NAME so later sheets may permute or drop
-            # columns; absent columns surface as NULL
-            idx = {h: i for i, h in enumerate(header)}
-            cols = [idx.get(f) for f in self._fields]
-            for row in data:
-                yield tuple(
-                    _render_cell(row[c]) if c is not None and c < len(row) else None
-                    for c in cols
-                )
-
-    class XlsxDataSource(DataSource):
-        """format("xlsx"): partition-per-sheet stdlib SpreadsheetML scan."""
-
-        @classmethod
-        def name(cls):
-            return "xlsx"
-
-        def schema(self):
-            header, _ = read_xlsx(self.options["path"], sheet_index=0)
-            return StructType([StructField(h, StringType()) for h in header])
-
-        def reader(self, schema):
-            return XlsxReader(self.options["path"], [f.name for f in schema.fields])
-
-    return XlsxDataSource
-
-
-def register_xlsx_source(spark: SparkSession) -> None:
-    """Idempotent per-session registration of format('xlsx')."""
-    spark.dataSource.register(make_xlsx_datasource())

@@ -31,11 +31,11 @@ def grid_containment_join(
     margin: float = 1.0,
     cell: int = 10,
     keys: tuple[str, ...] = (),
-    broadcast_boxes: bool = True,
 ) -> DataFrame:
     """All (point, box) pairs with the point inside the margin-expanded
     box. Returns points' columns + boxes' columns (one row per pair;
-    callers project/distinct as needed). The single ``margin`` value
+    callers project/distinct as needed). The exploded box side is
+    broadcast. The single ``margin`` value
     drives BOTH the cell-coverage bounds and the exact predicate, so
     they cannot drift apart.
 
@@ -49,13 +49,13 @@ def grid_containment_join(
     r06 sf1-smoke cliff)."""
     lo_x, hi_x = F.col(bx1) - margin, F.col(bx2) + margin
     lo_y, hi_y = F.col(by1) - margin, F.col(by2) + margin
-    box_cells = boxes.withColumn(
-        "cx", F.explode(F.sequence(F.floor(lo_x / cell), F.floor(hi_x / cell)))
-    ).withColumn(
-        "cy", F.explode(F.sequence(F.floor(lo_y / cell), F.floor(hi_y / cell)))
+    box_cells = F.broadcast(
+        boxes.withColumn(
+            "cx", F.explode(F.sequence(F.floor(lo_x / cell), F.floor(hi_x / cell)))
+        ).withColumn(
+            "cy", F.explode(F.sequence(F.floor(lo_y / cell), F.floor(hi_y / cell)))
+        )
     )
-    if broadcast_boxes:
-        box_cells = F.broadcast(box_cells)
     pts = points.withColumn("cx", F.floor(F.col(px) / cell)).withColumn(
         "cy", F.floor(F.col(py) / cell)
     )

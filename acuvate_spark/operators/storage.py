@@ -19,8 +19,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite") -> None:
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def write_bucketed(
@@ -29,11 +29,10 @@ def write_bucketed(
     bucket_col: str,
     n_buckets: int,
     sort_col: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Persist as a bucketed managed table (saveAsTable is required —
     plain parquet paths carry no bucket metadata)."""
-    writer = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
+    writer = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col)
     if sort_col:
         writer = writer.sortBy(sort_col)
     writer.format("parquet").saveAsTable(table)
@@ -72,7 +71,6 @@ def write_zordered(
     cols: list[str],
     bits: int = 8,
     n_files: int = 16,
-    mode: str = "overwrite",
 ) -> None:
     """Rewrite ``df`` in Z-order layout over ``cols`` (numeric).
 
@@ -114,7 +112,7 @@ def write_zordered(
         .sortWithinPartitions("__zkey")
         .select(*df.columns)
     )
-    out.write.mode(mode).parquet(path)
+    out.write.mode("overwrite").parquet(path)
 
 
 def write_sharded(
@@ -122,7 +120,6 @@ def write_sharded(
     path: str,
     n_shards: int = 16,
     key_col: str = "doc_id",
-    mode: str = "overwrite",
 ) -> None:
     """Deterministic global-shuffle sharded export — the last mile of
     a training-data pipeline: every row gets a stable md5 shuffle key,
@@ -148,7 +145,7 @@ def write_sharded(
         .sortWithinPartitions("shard", "__h")
         .drop("__h")
     )
-    out.write.mode(mode).partitionBy("shard").parquet(path)
+    out.write.mode("overwrite").partitionBy("shard").parquet(path)
 
 
 def scan_stats(spark: SparkSession, path: str, columns: list[str]) -> DataFrame:

@@ -351,13 +351,12 @@ def test_nms_identical_to_linear_scan_reference(spark, shape):
     assert got == want
 
 
-def test_ocr_words_stub_sparse_and_dense_paths_agree(spark):
-    """r14: the OCR word-explosion kernel picks a row-loop or a numpy
-    path per batch by token density (threshold: 8 tokens/page). Both
-    paths must emit the identical word rows — pinned against a naive
-    reference on one sparse batch (1 token/page, loop path) and one
-    dense batch (40 tokens/page, numpy path), None text and 1-char
-    no-polygon words included."""
+def test_ocr_words_stub_one_path_matches_reference_on_sparse_and_dense_pages(spark):
+    """The OCR word-explosion kernel runs one numpy path for every
+    batch. It must emit the word rows of a naive per-token reference
+    on a token-sparse batch (at most 1 token/page) and a dense batch
+    (40 tokens/page), None text and 1-char no-polygon words
+    included."""
     from acuvate_spark.operators.kernels import ocr_words_stub
 
     def reference(rows):

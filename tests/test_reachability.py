@@ -25,6 +25,15 @@ Every module-qualified name there (``storage.write_zordered``,
 ``operators/sinks.rest_sink``) must resolve to a top-level name of its
 module, so a row cannot keep a deleted callable allowed.
 
+A second check keeps options honest: every optional parameter of a
+top-level function or method in ``acuvate_spark/`` must be passed by
+some call site in the package, ``tests/``, ``tools/`` or an entry-point
+file, by keyword, by position or through ``*``/``**`` unpacking. An
+option no caller sets has one value in use and belongs in the body as
+a constant. Calls match the callee by name alone (``f(...)``,
+``obj.f(...)``; a class name stands for its ``__init__``), so this
+check too can only miss an offender.
+
 AST only: these tests start no Spark.
 """
 
@@ -136,3 +145,62 @@ def test_coverage_module_qualified_names_resolve():
         if homes and not any(name in names_by_module[k] for k in homes):
             stale.append(f"COVERAGE.md:{line} {module}.{name}")
     assert not stale, "COVERAGE.md names callables its modules do not define:\n" + "\n".join(stale)
+
+
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _callables(tree: ast.Module):
+    """(called name, def, is method) of every top-level function and
+    method; a class's ``__init__`` is called by the class name."""
+    for stmt in tree.body:
+        if isinstance(stmt, ast.ClassDef):
+            for m in stmt.body:
+                if isinstance(m, _FUNCS):
+                    yield (stmt.name if m.name == "__init__" else m.name), m, True
+        elif isinstance(stmt, _FUNCS):
+            yield stmt.name, stmt, False
+
+
+def _options(fn: ast.FunctionDef | ast.AsyncFunctionDef, method: bool) -> list[tuple[str, int | None]]:
+    """(name, positional index or None) of every parameter with a
+    default; a method's index skips ``self``/``cls``."""
+    a = fn.args
+    pos = [*a.posonlyargs, *a.args]
+    if method and pos and pos[0].arg in ("self", "cls"):
+        pos = pos[1:]
+    first = len(pos) - len(a.defaults)
+    return [(arg.arg, i) for i, arg in enumerate(pos) if i >= first] + [
+        (arg.arg, None) for arg, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+    ]
+
+
+def _sets(call: ast.Call, name: str, index: int | None) -> bool:
+    return (
+        any(k.arg in (None, name) for k in call.keywords)
+        or any(isinstance(a, ast.Starred) for a in call.args)
+        or (index is not None and len(call.args) > index)
+    )
+
+
+def test_every_option_is_set_by_some_call_site():
+    modules = _modules()
+    others = [*(ROOT / "tests").rglob("*.py"), *(ROOT / "tools").rglob("*.py"), *ENTRY_FILES]
+    calls: dict[str, list[ast.Call]] = {}
+    for tree in [*modules.values(), *(ast.parse(p.read_text()) for p in others)]:
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                calls.setdefault(name, []).append(n)
+    offenders = [
+        f"{path.relative_to(ROOT)}:{fn.lineno} {name}({param})"
+        for path, tree in modules.items()
+        for name, fn, method in _callables(tree)
+        for param, index in _options(fn, method)
+        if not any(_sets(c, param, index) for c in calls.get(name, ()))
+    ]
+    assert not offenders, (
+        "optional parameters no call site sets (make each a constant in "
+        "the body, or pass it where it is needed):\n" + "\n".join(offenders)
+    )

@@ -5,6 +5,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from acuvate_spark.operators import sinks
 from acuvate_spark.tables import load_table
 
@@ -44,6 +46,21 @@ def test_export_excel_falls_back_to_csv(spark, sf_dir, tmp_path):
     assert os.path.exists(path)
     header = open(path).readline().strip()
     assert "Region Key" in header and "Region" in header
+
+
+def test_export_excel_refuses_rows_above_cap(spark, tmp_path, monkeypatch):
+    """A frame larger than the export cap raises instead of exporting
+    its first cap rows as if they were all of it."""
+    monkeypatch.setattr(sinks, "EXPORT_MAX_ROWS", 2)
+    df = spark.createDataFrame([(1,), (2,), (3,)], "k long")
+    with pytest.raises(ValueError, match="more than 2 rows"):
+        sinks.export_excel(df, str(tmp_path / "big.xlsx"))
+    assert not list(tmp_path.iterdir())
+    path = sinks.export_excel(df.where("k <= 2"), str(tmp_path / "ok.xlsx"))
+    if path.endswith(".csv"):
+        header, *rows = open(path).read().split()
+        assert header == "k" and sorted(rows) == ["1", "2"]
+    assert os.path.exists(path)
 
 
 def test_append_ledger(tmp_path):

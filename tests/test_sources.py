@@ -210,113 +210,3 @@ def test_schema_evolution_merge_reads_old_and_new(spark, sf_dir, tmp_path):
     # pre-evolution rows surface as NULL, not as an error
     assert merged.where(F.col("ingest_batch").isNull()).count() == v1.count()
 
-
-def _two_sheet_xlsx(path) -> None:
-    """Hand-zip a TWO-sheet workbook: sheet2 has the same columns as
-    sheet1 but PERMUTED (and one missing), to prove the xlsx data
-    source maps cells by header name per sheet."""
-    import zipfile
-
-    ns = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
-    rns = "http://schemas.openxmlformats.org/package/2006/relationships"
-
-    def sheet(rows):
-        body = "".join(
-            "<row r=\"%d\">%s</row>"
-            % (
-                ri + 1,
-                "".join(
-                    f'<c r="{chr(65 + ci)}{ri + 1}" t="inlineStr"><is><t>{v}</t></is></c>'
-                    for ci, v in enumerate(cells)
-                    if v is not None
-                ),
-            )
-            for ri, cells in enumerate(rows)
-        )
-        return f'<?xml version="1.0"?><worksheet xmlns="{ns}"><sheetData>{body}</sheetData></worksheet>'
-
-    parts = {
-        "[Content_Types].xml": (
-            '<?xml version="1.0"?><Types xmlns="http://schemas.openxmlformats.org/'
-            'package/2006/content-types">'
-            '<Default Extension="rels" ContentType="application/vnd.openxmlformats-'
-            'package.relationships+xml"/><Default Extension="xml" ContentType='
-            '"application/xml"/><Override PartName="/xl/workbook.xml" ContentType='
-            '"application/vnd.openxmlformats-officedocument.spreadsheetml.sheet.main+xml"/>'
-            '<Override PartName="/xl/worksheets/sheet1.xml" ContentType="application/'
-            'vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>'
-            '<Override PartName="/xl/worksheets/sheet2.xml" ContentType="application/'
-            'vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/></Types>'
-        ),
-        "_rels/.rels": (
-            f'<?xml version="1.0"?><Relationships xmlns="{rns}">'
-            '<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/'
-            'officeDocument/2006/relationships/officeDocument" Target="xl/workbook.xml"/>'
-            "</Relationships>"
-        ),
-        "xl/workbook.xml": (
-            f'<?xml version="1.0"?><workbook xmlns="{ns}" xmlns:r='
-            '"http://schemas.openxmlformats.org/officeDocument/2006/relationships">'
-            '<sheets><sheet name="S1" sheetId="1" r:id="rId1"/>'
-            '<sheet name="S2" sheetId="2" r:id="rId2"/></sheets></workbook>'
-        ),
-        "xl/_rels/workbook.xml.rels": (
-            f'<?xml version="1.0"?><Relationships xmlns="{rns}">'
-            '<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/'
-            'officeDocument/2006/relationships/worksheet" Target="worksheets/sheet1.xml"/>'
-            '<Relationship Id="rId2" Type="http://schemas.openxmlformats.org/'
-            'officeDocument/2006/relationships/worksheet" Target="worksheets/sheet2.xml"/>'
-            "</Relationships>"
-        ),
-        "xl/worksheets/sheet1.xml": sheet(
-            [["TagNo", "Area"], ["P-1001", "A1"], ["P-1002", "A2"]]
-        ),
-        # permuted header; Area column absent for the second data row
-        "xl/worksheets/sheet2.xml": sheet(
-            [["Area", "TagNo"], ["B1", "V-2001"], [None, "V-2002"]]
-        ),
-    }
-    with zipfile.ZipFile(path, "w") as z:
-        for name, data in parts.items():
-            z.writestr(name, data)
-
-
-def test_xlsx_datasource_partition_per_sheet(spark, tmp_path):
-    """spark.read.format('xlsx') — the PySpark 4 Python Data Source
-    over the stdlib decoder: schema from sheet 0's header, one input
-    partition PER SHEET, per-sheet by-name column mapping."""
-    p = tmp_path / "wb.xlsx"
-    _two_sheet_xlsx(p)
-    sources.register_xlsx_source(spark)
-    df = spark.read.format("xlsx").load(str(p))
-    assert df.columns == ["TagNo", "Area"]
-    assert df.rdd.getNumPartitions() == 2
-    rows = {(r["TagNo"], r["Area"]) for r in df.collect()}
-    assert rows == {
-        ("P-1001", "A1"),
-        ("P-1002", "A2"),
-        ("V-2001", "B1"),
-        ("V-2002", None),
-    }
-
-
-def test_xlsx_datasource_reads_committed_fixture(spark):
-    """The format('xlsx') scan agrees with the direct stdlib decode on
-    the committed fixture (shared strings, numerics, missing cell)."""
-    from pathlib import Path
-
-    fixture = (
-        Path(__file__).resolve().parent.parent
-        / "acuvate_spark"
-        / "resources"
-        / "tags_import.xlsx"
-    )
-    sources.register_xlsx_source(spark)
-    df = spark.read.format("xlsx").load(str(fixture))
-    header, data = sources.read_xlsx(str(fixture))
-    assert df.columns == header
-    got = sorted(tuple(r) for r in df.collect())
-    want = sorted(
-        tuple(sources._render_cell(v) for v in row) for row in data
-    )
-    assert got == want
