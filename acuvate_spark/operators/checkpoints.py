@@ -1,94 +1,40 @@
-"""Deterministic release of per-round ``localCheckpoint`` blocks in
-iterative plans (r14).
+"""One lifetime rule for eager ``localCheckpoint``s: the code that makes
+an eager checkpoint releases it after its last reader has run. A lazy
+result keeps the checkpoints it reads.
 
-Every iterative operator here (min-label connected components, greedy
-k-center) cuts lineage once per round with ``localCheckpoint``
-— without it Catalyst planning cost doubles per iteration. But a
-DataFrame ``localCheckpoint`` has no public release API: the blocks
-of SUPERSEDED rounds stay pinned in the block manager until the
-Python wrapper happens to be garbage-collected and the async
-ContextCleaner gets around to them. Measured on this box: one
-25-round connected-components run left 24 dead label snapshots
-persisted; a following query in the same session ran 3.5x slower
-until an explicit ``gc.collect()`` (r14 bench investigation). At
-cluster scale that is O(rounds x table-size) executor memory held for
-no reason — on a 1000-executor job the dead rounds of a long-diameter
-graph are the difference between fitting in memory and spilling every
-subsequent stage.
+The iterative operators (min-label connected components, greedy
+k-center, the fixed-round BFS and label propagation, the dedup
+candidate chains) cut lineage with ``localCheckpoint`` — without it
+Catalyst planning cost doubles per iteration. But a DataFrame
+``localCheckpoint`` has no public release API: the blocks of a
+superseded round stay pinned in the block manager until the Python
+wrapper happens to be garbage-collected and the async ContextCleaner
+gets around to them. One 25-round connected-components run left 24
+dead label snapshots persisted, and a following query in the same
+session ran 3.5x slower until an explicit ``gc.collect()``.
 
-:class:`CheckpointRing` frees each superseded round's blocks
-deterministically, as soon as the round that replaces it has
-materialized. It attributes persistent-RDD ids by diffing
-``JavaSparkContext.getPersistentRDDs()`` around each round — the only
-handle Spark exposes for a DataFrame local checkpoint (the checkpoint
-registers its RDD in that map at creation time; ``df.rdd`` /
-``queryExecution().toRdd()`` both return fresh derived RDDs whose
-``unpersist`` is a no-op, verified empirically).
-
-Contract: rounds run driver-synchronously in this session (true of
-every registry operator); ids created between ``rotate()`` calls
-belong to the round that just materialized. The newest round is never
-freed — it IS the operator's result. Freeing a round only after its
-successor is materialized keeps the ``localCheckpoint`` durability
-contract unchanged (it was already non-fault-tolerant to executor
-loss).
+:func:`release` frees a checkpoint through its own frame: the frame
+``localCheckpoint`` returns has a ``LogicalRDD`` as its logical plan,
+and that node's RDD is the persisted checkpoint RDD itself. So each
+caller frees exactly what it made, and a checkpoint some other caller
+takes in the meantime is never touched. Release a round only after the
+frame that replaces it has materialized, and keep the handle that
+``localCheckpoint`` returned: ``release`` on a projection of a
+checkpoint (for example ``new_labels.drop("changed")``) frees nothing,
+because its plan is a ``Project`` over the ``LogicalRDD``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame
 
 
-def _persistent_rdds(spark: SparkSession):
-    """The JVM ``id -> RDD`` map of every persisted RDD — the one
-    py4j reach-through this module isolates."""
-    return spark.sparkContext._jsc.getPersistentRDDs()
-
-
-def _persistent_ids(spark: SparkSession) -> set[int]:
-    out: set[int] = set()
-    it = _persistent_rdds(spark).keySet().iterator()
-    while it.hasNext():
-        out.add(it.next())
-    return out
-
-
-def unpersist_ids(spark: SparkSession, ids: set[int]) -> None:
-    """Free the persisted RDDs with these ids now (ids no longer
-    persisted are skipped)."""
-    if not ids:
-        return
-    jmap = _persistent_rdds(spark)
-    for rid in ids:
-        jrdd = jmap.get(rid)
-        if jrdd is not None:
-            jrdd.unpersist(False)
-
-
-class CheckpointRing:
-    """Track per-round checkpoint RDDs; free each round once its
-    successor has materialized.
-
-    Usage::
-
-        ring = CheckpointRing(spark)          # AFTER loop-invariant
-                                              # checkpoints (never freed)
-        for ...:
-            frame = (...).localCheckpoint(...)
-            <action that materializes frame>
-            ring.rotate()                     # frees the previous round
-    """
-
-    def __init__(self, spark: SparkSession):
-        self._spark = spark
-        self._seen = _persistent_ids(spark)
-        self._newest: set[int] = set()
-
-    def rotate(self) -> None:
-        """Attribute ids persisted since the last call to the round
-        that just materialized, then free the round before it."""
-        now = _persistent_ids(self._spark)
-        fresh = now - self._seen
-        unpersist_ids(self._spark, self._newest)
-        self._seen = now - self._newest
-        self._newest = fresh
+def release(*frames: DataFrame) -> None:
+    """``unpersist()`` each frame and, when it is a checkpoint, free the
+    checkpoint's blocks now. A frame that is neither persisted nor a
+    checkpoint frees nothing. Submits no Spark job."""
+    for df in frames:
+        df.unpersist()
+        plan = df._jdf.queryExecution().logical()
+        if plan.nodeName() == "LogicalRDD":
+            plan.rdd().unpersist(False)

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpoints import CheckpointRing, _persistent_ids, unpersist_ids
+from .checkpoints import release
 
 
 def _broadcast_threshold_bytes(spark) -> int:
@@ -88,11 +88,9 @@ def connected_components(
     # localCheckpoint cuts the lineage each round: without it the plan
     # doubles per iteration (joins reference the previous labels) and
     # Catalyst planning cost explodes long before the data does. sym is
-    # loop-invariant (checkpointed BEFORE the ring so it is never
-    # freed); superseded label rounds are freed deterministically by
-    # the ring — without it a 25-round run leaves 24 dead snapshots
-    # pinned until the async ContextCleaner notices (see checkpoints.py).
-    seen_before_sym = _persistent_ids(edges.sparkSession)
+    # loop-invariant and read by the result; each superseded label
+    # round is released once its successor has materialized (see
+    # checkpoints.py).
     sym = sym.localCheckpoint(eager=True)
     # At scale, hash-partition sym on the JOIN key once before the loop
     # (r14, guide §2.4 "two operations keyed the same way can share one
@@ -121,26 +119,23 @@ def connected_components(
         n_nodes = sym.where(F.col("a").eqNullSafe(F.col("b"))).count()
         if n_nodes * 32 > _broadcast_threshold_bytes(edges.sparkSession):
             gate_fired = True
-            first_ckpt_ids = _persistent_ids(edges.sparkSession) - seen_before_sym
             n_part = sym.sparkSession.sparkContext.defaultParallelism * 2
+            first = sym
             sym = sym.repartition(n_part, F.col("b")).localCheckpoint(eager=True)
-            # free the superseded first checkpoint NOW (ADVICE r14):
-            # its blocks otherwise stay pinned until Python GC plus the
-            # async ContextCleaner — the dead-snapshot failure mode
-            # checkpoints.py documents as a measured 3.5x slowdown, and
-            # at scale a transient DOUBLING of edge-set storage.
-            unpersist_ids(edges.sparkSession, first_ckpt_ids)
+            # free the superseded first checkpoint now: at scale it is
+            # a transient DOUBLING of edge-set storage
+            release(first)
     if gate_out is not None:
         gate_out.append(gate_fired)
     # seed labels: the self-loop rows of the MATERIALIZED edge set are
     # exactly one row per node, so the old distinct-over-sym shuffle
     # for the label seed is a filter over cached blocks instead.
-    labels = sym.where(F.col("a").eqNullSafe(F.col("b"))).select(
-        F.col("a").alias("node"), F.col("a").alias("component")
+    labels = (
+        sym.where(F.col("a").eqNullSafe(F.col("b")))
+        .select(F.col("a").alias("node"), F.col("a").alias("component"))
+        .localCheckpoint(eager=True)
     )
-    ring = CheckpointRing(labels.sparkSession)
-    labels = labels.localCheckpoint(eager=True)
-    ring.rotate()  # round 0: the seed labels
+    held = labels  # the checkpoint handle of the current round
     rounds = 0
     for _ in range(max_iter):
         rounds += 1
@@ -195,7 +190,8 @@ def connected_components(
             .localCheckpoint(eager=False)
         )
         n_changed = new_labels.agg(F.sum("changed")).collect()[0][0]
-        ring.rotate()  # new_labels is materialized: free the old round
+        release(held)  # new_labels is materialized: free the old round
+        held = new_labels
         labels = new_labels.drop("changed")
         if not n_changed:
             break

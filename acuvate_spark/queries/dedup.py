@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 from ..functions import textual, vectors
 from ..operators import assign
 from ..operators import dedup as dedup_ops
+from ..operators.checkpoints import release
 from ..tables import (
     load_embeddings,
     load_table,
@@ -312,7 +313,7 @@ def dedup_minhash_lsh(spark, sf_dir):
     result = common.where(jac >= 0.7).select(
         "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
     )
-    return materialize_and_release(result, sh)
+    return materialize_and_release(result, sh, sig, cand)
 
 
 @register(
@@ -349,6 +350,7 @@ def dedup_clusters(spark, sf_dir):
 
     pairs = dedup_minhash_lsh(spark, sf_dir)  # localCheckpointed: bounded lineage for CC
     cc = connected_components(pairs, src="doc_a", dst="doc_b")
+    release(pairs)  # CC's checkpointed edge set is all the result reads
     docs = _docs_plus_clones(spark, sf_dir).select("doc_id")
     cluster = F.coalesce(F.col("component"), F.col("doc_id"))
     return (
@@ -1043,9 +1045,7 @@ def dedup_incremental(spark, sf_dir):
             F.col("doc_id").isNotNull().alias("is_duplicate"),
         )
     )
-    out = materialize_and_release(result, csh)
-    bsh.unpersist()
-    return out
+    return materialize_and_release(result, csh, bsh, csig, bsig, cand)
 
 
 # ---------------------------------------------------------------------------

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.checkpoints import release
 from ..operators.graph import connected_components
 from ..operators.spatial import grid_containment_join
 from ..tables import load_table, repartition_for_compute
@@ -409,12 +410,15 @@ def graph_bfs_levels(spark, sf_dir):
         expanded = ue.join(levels, ue.a == levels.n).select(
             F.col("b").alias("n"), (F.col("lvl") + 1).alias("lvl")
         )
+        done = levels
         levels = (
             levels.unionByName(expanded)
             .groupBy("n")
             .agg(F.min("lvl").alias("lvl"))
             .localCheckpoint(eager=True)
         )
+        release(done)
+    release(ue)
     return levels.select(F.col("n").alias("node"), F.col("lvl").cast("long").alias("level"))
 
 
@@ -451,6 +455,12 @@ def kcore_peel(spark, sf_dir):
     production fixpoint loop adds the same localCheckpoint +
     1-row-convergence-guard scaffolding as operators/graph.py's
     connected_components.
+
+    Its round checkpoints are lazy, the one exception to the release
+    rule in operators/checkpoints.py: they materialize inside the
+    caller's action, after this function has returned, so no code here
+    can release them once their last reader has run. They stay pinned
+    until the ContextCleaner frees them.
     """
     edges = _edges(spark, sf_dir)
     ue = edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).unionByName(
@@ -632,12 +642,15 @@ def label_propagation_communities(spark, sf_dir):
             .groupBy("node", "label")
             .agg(F.count("*").cast("long").alias("c"))
         )
+        done = labels
         labels = (
             counts.groupBy("node")
             .agg(F.min(F.struct((-F.col("c")).alias("nc"), F.col("label"))).alias("b"))
             .select("node", F.col("b.label").alias("label"))
             .localCheckpoint(eager=True)
         )
+        release(done)
+    release(ue)
     return labels.select(
         F.col("node").cast("long").alias("node"),
         F.col("label").cast("long").alias("community"),

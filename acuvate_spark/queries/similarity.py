@@ -12,6 +12,7 @@ from pyspark.sql.window import Window
 
 from ..functions import vectors
 from ..operators import assign
+from ..operators.checkpoints import release
 from ..tables import load_embeddings, load_table, repartition_for_compute
 from .registry import register
 
@@ -641,15 +642,7 @@ def coreset_kcenter(spark, sf_dir):
         # same zero rows the EXISTS-guarded oracle produces
         return spark.createDataFrame([], "sel_rank long, vec_id long, dist_micro long")
     seed = seed_row[0]
-    # superseded mind rounds are freed deterministically (the eager
-    # checkpoint that replaces a round materializes before rotate() —
-    # see operators/checkpoints.py); without the ring k-1 dead
-    # distance snapshots stay pinned in the block manager
-    from ..operators.checkpoints import CheckpointRing
-
-    ring = CheckpointRing(spark)
     mind = e.select("vec_id", "embedding", dist_to(seed).alias("mind")).localCheckpoint()
-    ring.rotate()
     rows = [(1, 0, 0)]
     for r in range(2, _KCENTER_K + 1):
         top = (
@@ -658,13 +651,14 @@ def coreset_kcenter(spark, sf_dir):
             .first()
         )
         rows.append((r, top["vec_id"], top["mind"]))
+        done = mind
         if r < _KCENTER_K:
             mind = mind.select(
                 "vec_id",
                 "embedding",
                 F.least(F.col("mind"), dist_to(list(top["embedding"]))).alias("mind"),
             ).localCheckpoint()
-            ring.rotate()
+        release(done)  # its successor (if any) is materialized
     return spark.createDataFrame(
         rows, "sel_rank long, vec_id long, dist_micro long"
     )

@@ -29,6 +29,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.checkpoints import release
 from ..operators.sinks import empty_frame
 from ..session import tune
 
@@ -71,7 +72,8 @@ def _write_retry_state(state: DataFrame, retry_dir: str) -> None:
     the previous committed version serves until the new ``_SUCCESS``
     lands), then best-effort prune older committed versions — safe in
     any crash position because readers always pick the max COMMITTED
-    version."""
+    version. ``state`` is the caller's eager checkpoint; the write is
+    its last reader, so it is released once committed."""
     import shutil
 
     from ..operators.sinks import _current_version, _version_num, _write_version
@@ -79,6 +81,7 @@ def _write_retry_state(state: DataFrame, retry_dir: str) -> None:
     cur = _current_version(retry_dir)
     n = (_version_num(os.path.basename(cur)) if cur else 0) + 1
     _write_version(state, os.path.join(retry_dir, f"v{n:010d}"))
+    release(state)
     if cur is not None:
         shutil.rmtree(cur, ignore_errors=True)
 

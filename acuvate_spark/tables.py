@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.checkpoints import release
 from .session import tune
 
 TABLES = (
@@ -98,17 +99,17 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def materialize_and_release(result: DataFrame, *cached: DataFrame) -> DataFrame:
+def materialize_and_release(result: DataFrame, *frames: DataFrame) -> DataFrame:
     """Run the query now (eager ``localCheckpoint`` — registry results
-    are small), then drop the given persisted frames so back-to-back
-    registry queries never accumulate cached blocks across a long
-    session. The standard epilogue for any registry query that persists
-    a mid-plan frame (``scanner_tag_etl`` since r12 — VERDICT r11
-    'what's wrong' #1 — and the dedup family). The plan audit stubs
+    are small), then :func:`~acuvate_spark.operators.checkpoints.release`
+    the given persisted frames and checkpoints, which the materialized
+    result no longer reads, so back-to-back registry queries never
+    accumulate blocks across a long session. The standard epilogue for
+    any registry query that persists or checkpoints a mid-plan frame
+    (``scanner_tag_etl`` and the dedup family). The plan audit stubs
     ``localCheckpoint`` to a no-op, so full lineage stays auditable."""
     out = result.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist()
+    release(*frames)
     return out
 
 

@@ -21,3 +21,9 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def persisted_ids(spark) -> set[int]:
+    """ids of every RDD the session has persisted: ``.persist()``
+    blocks and ``localCheckpoint`` RDDs alike."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())

@@ -10,9 +10,32 @@ import pytest
 
 from acuvate_spark.queries import REGISTRY
 
+from .conftest import persisted_ids
 from .oracle_harness import compare, duck_con
 
 ALL = sorted(REGISTRY)
+
+# Queries whose fn() cannot release every checkpoint it takes: kcore_peel's
+# rounds are lazy and materialize inside the caller's action, after fn()
+# has returned.
+DEAD_CHECKPOINTS_ALLOWED = {"kcore_peel"}
+
+
+def _read_rdd_ids(df) -> set[int]:
+    """ids of the RDDs behind every ``LogicalRDD`` (checkpoint) leaf of
+    ``df``'s analyzed plan, subqueries included."""
+    root = df._jdf.queryExecution().analyzed()
+    plans = [root, *_seq(root.subqueriesAll())]
+    return {
+        leaf.rdd().id()
+        for plan in plans
+        for leaf in _seq(plan.collectLeaves())
+        if leaf.nodeName() == "LogicalRDD"
+    }
+
+
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
 
 
 @pytest.mark.parametrize("name", ALL)
@@ -26,9 +49,16 @@ def test_query_matches_oracle(spark, sf_dir, name):
     # an EARLIER test must not be pinned on this query.
     spark.catalog.clearCache()
     cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+    before = persisted_ids(spark)
     sdf = spec.fn(spark, sf_dir)
     spark_pdf = sdf.toPandas()
     assert cache_mgr.isEmpty(), f"{name} left persisted frames cached after returning"
+    # Dead-checkpoint guard: the code that makes an eager checkpoint
+    # releases it after its last reader has run, so every RDD the query
+    # added to the persisted set must still be read by its result.
+    dead = persisted_ids(spark) - before - _read_rdd_ids(sdf)
+    if name not in DEAD_CHECKPOINTS_ALLOWED:
+        assert not dead, f"{name} left {len(dead)} checkpoint RDDs its result never reads"
     if spec.oracle is None:
         # rows-only: must execute and have at least one column
         assert len(spark_pdf.columns) > 0

@@ -34,6 +34,10 @@ a constant. Calls match the callee by name alone (``f(...)``,
 ``obj.f(...)``; a class name stands for its ``__init__``), so this
 check too can only miss an offender.
 
+A third check keeps py4j reaches behind one helper: the attributes
+``_jsc``, ``_jvm``, ``_jdf``, ``_jsparkSession`` and ``_gateway`` appear
+in ``acuvate_spark/`` only inside ``operators/checkpoints.py::release``.
+
 AST only: these tests start no Spark.
 """
 
@@ -203,4 +207,28 @@ def test_every_option_is_set_by_some_call_site():
     assert not offenders, (
         "optional parameters no call site sets (make each a constant in "
         "the body, or pass it where it is needed):\n" + "\n".join(offenders)
+    )
+
+
+_PY4J_ATTRS = {"_jsc", "_jvm", "_jdf", "_jsparkSession", "_gateway"}
+_PY4J_HOME = (PKG / "operators" / "checkpoints.py", "release")
+
+
+def test_py4j_reaches_sit_behind_one_helper():
+    """The package reaches into py4j internals in one place only,
+    ``operators/checkpoints.py::release``."""
+    offenders = []
+    for path, tree in _modules().items():
+        allowed: set[int] = set()
+        for stmt in tree.body:
+            if isinstance(stmt, _FUNCS) and (path, stmt.name) == _PY4J_HOME:
+                allowed = {id(n) for n in ast.walk(stmt)}
+        offenders += [
+            f"{path.relative_to(ROOT)}:{n.lineno} {n.attr}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Attribute) and n.attr in _PY4J_ATTRS and id(n) not in allowed
+        ]
+    assert not offenders, (
+        "py4j internals reached outside checkpoints.release (route the reach "
+        "through one helper):\n" + "\n".join(offenders)
     )

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from acuvate_spark.streaming import blob_ingest, windows
+from tests.conftest import persisted_ids
 from tests.test_api import _work
 
 
@@ -50,8 +51,14 @@ def test_blob_ingest_checkpoint_and_dlq(spark, tmp_path):
     _touch(str(input_dir / "E17-C_B5-0003.pdf"))
     _touch(str(input_dir / "bad.corrupt.pdf"))
 
+    # every pass commits its retry state through an eager checkpoint,
+    # released once committed: the persisted set must not grow per pass
+    base = persisted_ids(spark)
+    pinned = []
+
     q = blob_ingest.start_blob_ingest(spark, str(input_dir), str(ckpt), str(out_dir))
     q.awaitTermination()
+    pinned.append(len(persisted_ids(spark) - base))
 
     routed = blob_ingest.routed_files(spark, str(out_dir))
     paths = {os.path.basename(r["path"]) for r in routed.collect()}
@@ -64,6 +71,7 @@ def test_blob_ingest_checkpoint_and_dlq(spark, tmp_path):
     _touch(str(input_dir / "E17-D_A6-0004.png"))
     q = blob_ingest.start_blob_ingest(spark, str(input_dir), str(ckpt), str(out_dir))
     q.awaitTermination()
+    pinned.append(len(persisted_ids(spark) - base))
     routed = blob_ingest.routed_files(spark, str(out_dir))
     assert routed.count() == 3  # 2 + 1, no reprocessing of succeeded files
     pend = blob_ingest.retry_pending(spark, str(out_dir)).collect()
@@ -74,6 +82,8 @@ def test_blob_ingest_checkpoint_and_dlq(spark, tmp_path):
     for _ in range(blob_ingest.MAX_RETRIES - 2):
         q = blob_ingest.start_blob_ingest(spark, str(input_dir), str(ckpt), str(out_dir))
         q.awaitTermination()
+        pinned.append(len(persisted_ids(spark) - base))
+    assert all(b <= a for a, b in zip(pinned, pinned[1:])), pinned
     assert blob_ingest.retry_pending(spark, str(out_dir)).count() == 0
     dlq = blob_ingest.dead_letters(spark, str(out_dir)).collect()
     assert len(dlq) == 1 and "bad.corrupt.pdf" in dlq[0]["path"]
