@@ -43,6 +43,18 @@ def _edges(spark, sf_dir):
     )
 
 
+def _undirected(spark, sf_dir, x, y):
+    """Both orientations of every edge as columns ``(x, y)``, exploded
+    from one edge scan (a two-branch union would scan ``lineitem`` and
+    run the edge ``distinct`` twice)."""
+    src, dst = F.col("src"), F.col("dst")
+    return _edges(spark, sf_dir).select(
+        F.inline(
+            F.array(F.struct(src.alias(x), dst.alias(y)), F.struct(dst.alias(x), src.alias(y)))
+        )
+    )
+
+
 @register(
     "graph_connected_components",
     oracle=f"""
@@ -395,13 +407,7 @@ def graph_bfs_levels(spark, sf_dir):
     fixed unroll keeps the oracle expressible (the convergence-loop
     variant is operators.graph.connected_components). Integer levels,
     so the oracle is exact."""
-    e = _edges(spark, sf_dir)
-    ue = (
-        e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .union(e.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    ue = _undirected(spark, sf_dir, "a", "b").distinct().localCheckpoint(eager=True)
     nodes = ue.select(F.col("a").alias("n")).distinct()
     levels = nodes.where((F.col("n") % 100 == 0) & (F.col("n") > 0)).select(
         "n", F.lit(0).alias("lvl")
@@ -447,41 +453,33 @@ def kcore_peel(spark, sf_dir):
     survivors with their post-peel degree. The dense-subgraph filter a
     graph-curation pass runs before community/embedding steps.
 
-    Each round is one map-side-combinable degree aggregate plus two
-    LEFT SEMI joins of the edge list against the kept-node set — no
-    node ever carries neighbor lists, so state is O(1) per row and
-    every step shuffles on a single integer key. Rounds are FIXED here
-    (which keeps the oracle expressible as unrolled SQL CTEs); the
-    production fixpoint loop adds the same localCheckpoint +
-    1-row-convergence-guard scaffolding as operators/graph.py's
-    connected_components.
+    The undirected edge list is symmetric, so a row's endpoint degrees
+    are window counts over it: each round adds ``count(*)`` over
+    ``b``, then over ``a``, and keeps the rows where both reach k. A
+    round reads the previous round once, so lineage grows linearly with
+    the round count and needs no checkpoint. State is O(1) per row and
+    every shuffle is on a single integer key. Windowing ``b`` first
+    leaves the frame partitioned by ``a``, so the final per-node count
+    adds no shuffle. Rounds are FIXED here (which keeps the oracle
+    expressible as unrolled SQL CTEs).
 
-    Its round checkpoints are lazy, the one exception to the release
-    rule in operators/checkpoints.py: they materialize inside the
-    caller's action, after this function has returned, so no code here
-    can release them once their last reader has run. They stay pinned
-    until the ContextCleaner frees them.
+    NULL endpoints: the oracle's first degree counts an edge to a NULL
+    neighbor, and its inner joins then drop every edge with a NULL
+    endpoint. Round 1 does the same: its counts see those rows, its
+    filter drops them (a NULL partition's count is never a degree).
     """
-    edges = _edges(spark, sf_dir)
-    ue = edges.select(F.col("src").alias("a"), F.col("dst").alias("b")).unionByName(
-        edges.select(F.col("dst").alias("a"), F.col("src").alias("b"))
-    )
-    # per-round materialization: each round references the previous
-    # edge set THREE times (degree agg + two semi-joins) and the kept
-    # set twice — without the checkpoints the plan re-evaluates the
-    # whole peel history ~3^rounds times (this was the registry's
-    # 4th-most-expensive query for a graph of a few thousand edges)
+    ue = _undirected(spark, sf_dir, "a", "b")
     for _ in range(_KCORE_ROUNDS):
-        keep = (
-            ue.groupBy("a").agg(F.count("*").alias("deg"))
-            .where(F.col("deg") >= _KCORE_K)
-            .select("a")
-            .localCheckpoint(eager=False)
-        )
         ue = (
-            ue.join(keep, "a", "left_semi")
-            .join(keep.withColumnRenamed("a", "b"), "b", "left_semi")
-            .localCheckpoint(eager=False)
+            ue.withColumn("db", F.count("*").over(Window.partitionBy("b")))
+            .withColumn("da", F.count("*").over(Window.partitionBy("a")))
+            .where(
+                (F.col("da") >= _KCORE_K)
+                & (F.col("db") >= _KCORE_K)
+                & F.col("a").isNotNull()
+                & F.col("b").isNotNull()
+            )
+            .select("a", "b")
         )
     return ue.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("degree"))
 
@@ -630,11 +628,7 @@ def label_propagation_communities(spark, sf_dir):
     ``min(struct(-count, label))`` argmax — the same per-round cost
     envelope as connected components, with localCheckpoint bounding
     lineage; rounds are fixed (3), so the driver loop is bounded."""
-    e = _edges(spark, sf_dir)
-    ue = e.select(F.col("src").alias("node"), F.col("dst").alias("nbr")).unionAll(
-        e.select(F.col("dst").alias("node"), F.col("src").alias("nbr"))
-    )
-    ue = ue.localCheckpoint(eager=True)
+    ue = _undirected(spark, sf_dir, "node", "nbr").localCheckpoint(eager=True)
     labels = ue.select("node").distinct().select("node", F.col("node").alias("label"))
     for _ in range(_LP_ROUNDS):
         counts = (

@@ -75,17 +75,15 @@ def default_parallelism() -> int:
 
 
 def get_spark(app_name: str = "acuvate-spark", cpus: int | None = None) -> SparkSession:
-    """Local session for tests and bench runs.
-
-    Shuffle partitions default to the core count: at local scale the
-    data fits easily, and AQE coalesces further; on a real cluster this
+    """Local session for tests and bench runs on ``cpus`` cores
+    (default ``SPARK_GRAFT_CPUS``). Shuffle partitions are ``tune()``'s
+    64, which AQE coalesces at local scale; on a real cluster they
     would be sized to ~2-3x total cores (see README scale notes).
     """
     n = cpus or default_parallelism()
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(n))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -240,6 +240,7 @@ def test_coverage_rows_track_rewritten_query_strategies():
         "link_prediction_jaccard": (["supplier-PAIR"], ["wedge"]),
         "running_totals": (["two-level"], []),
         "pid_connections": ([], ["dense fallback"]),
+        "kcore_peel": (["window degree counts"], ["semi-join"]),
     }
     cov = (ROOT / "COVERAGE.md").read_text()
     for query, (required, forbidden) in _PINS.items():

@@ -200,3 +200,28 @@ def test_connected_components_null_contract_matches_oracle(spark, edges):
     assert oracle != REGISTRY["graph_connected_components"].oracle
     du = duckdb.connect().execute(oracle).fetchdf()
     assert not compare(sp, du, "graph_connected_components")
+
+
+def test_kcore_peel_counts_a_null_neighbor_in_round_one_only(spark, tmp_path):
+    """kcore_peel's NULL contract (its docstring): the oracle's first
+    degree counts an edge to a NULL neighbor, and its inner joins then
+    drop that edge. On the 11-node path p1-s1-p2-...-s5-p6 with a NULL
+    supplier on p1, peeling from the p1 end lags one round, so three
+    rounds leave p2-s2-p3-s3-p4-s4. Dropping NULL edges before the
+    first count would peel p2 as well."""
+    import pandas as pd
+
+    pairs = [(p, s) for s in range(1, 6) for p in (s, s + 1)] + [(1, None)]
+    pd.DataFrame(
+        {
+            "l_partkey": pd.array([p for p, _ in pairs], dtype="Int64"),
+            "l_suppkey": pd.array([s for _, s in pairs], dtype="Int64"),
+            "l_quantity": [1.0] * len(pairs),
+        }
+    ).to_parquet(tmp_path / "lineitem.parquet", index=False)
+    sp = REGISTRY["kcore_peel"].fn(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{tmp_path}/lineitem.parquet'")
+    du = con.execute(REGISTRY["kcore_peel"].oracle).fetchdf()
+    assert not compare(sp, du, "kcore_peel")
+    assert dict(zip(sp["node"], sp["degree"])) == {2: 1, -3: 2, 3: 2, -4: 2, 4: 2, -5: 1}

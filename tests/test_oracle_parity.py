@@ -15,11 +15,6 @@ from .oracle_harness import compare, duck_con
 
 ALL = sorted(REGISTRY)
 
-# Queries whose fn() cannot release every checkpoint it takes: kcore_peel's
-# rounds are lazy and materialize inside the caller's action, after fn()
-# has returned.
-DEAD_CHECKPOINTS_ALLOWED = {"kcore_peel"}
-
 
 def _read_rdd_ids(df) -> set[int]:
     """ids of the RDDs behind every ``LogicalRDD`` (checkpoint) leaf of
@@ -57,8 +52,7 @@ def test_query_matches_oracle(spark, sf_dir, name):
     # releases it after its last reader has run, so every RDD the query
     # added to the persisted set must still be read by its result.
     dead = persisted_ids(spark) - before - _read_rdd_ids(sdf)
-    if name not in DEAD_CHECKPOINTS_ALLOWED:
-        assert not dead, f"{name} left {len(dead)} checkpoint RDDs its result never reads"
+    assert not dead, f"{name} left {len(dead)} checkpoint RDDs its result never reads"
     if spec.oracle is None:
         # rows-only: must execute and have at least one column
         assert len(spark_pdf.columns) > 0

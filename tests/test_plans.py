@@ -337,12 +337,9 @@ def test_label_propagation_round_is_join_plus_argmax_agg(spark, sf_dir):
     aggregate + min(struct) argmax — no row_number window, no nested
     loop. Pinned on an unmaterialized round (the registry query
     localCheckpoints, which the plan audit skips)."""
-    from acuvate_spark.queries.graph import _edges
+    from acuvate_spark.queries.graph import _undirected
 
-    e = _edges(spark, sf_dir)
-    ue = e.select(F.col("src").alias("node"), F.col("dst").alias("nbr")).unionAll(
-        e.select(F.col("dst").alias("node"), F.col("src").alias("nbr"))
-    )
+    ue = _undirected(spark, sf_dir, "node", "nbr")
     labels = ue.select("node").distinct().select("node", F.col("node").alias("label"))
     counts = (
         ue.join(labels.select(F.col("node").alias("nbr"), "label"), "nbr")
@@ -423,26 +420,21 @@ def test_simhash_verify_is_band_equijoin_with_bitcount(spark, sf_dir):
     assert "CASE WHEN (substring" not in plan.split("Functions [17]")[0]
 
 
-def test_kcore_round_is_degree_agg_plus_semijoins(spark, sf_dir):
-    """One unmaterialized peel round (the registry query checkpoints
-    per round, which the plan audit skips): map-side-combinable degree
-    aggregate + two LEFT SEMI hash joins on a single integer key — no
-    nested loop, no window."""
-    from acuvate_spark.queries.graph import _edges
+def test_kcore_peel_is_checkpoint_free_window_rounds(spark, sf_dir):
+    """The registry query's own plan: each peel round is two window
+    degree counts (by ``b``, then ``a``) over the undirected edge list,
+    with no checkpoint leaf and no nested loop, and the last window
+    leaves the frame partitioned by ``a``, so the final per-node count
+    adds no Exchange."""
+    from acuvate_spark.queries.graph import _KCORE_ROUNDS
 
-    e = _edges(spark, sf_dir)
-    ue = e.select(F.col("src").alias("a"), F.col("dst").alias("b")).unionByName(
-        e.select(F.col("dst").alias("a"), F.col("src").alias("b"))
-    )
-    keep = (
-        ue.groupBy("a").agg(F.count("*").alias("deg")).where(F.col("deg") >= 2).select("a")
-    )
-    peeled = ue.join(keep, "a", "left_semi").join(
-        keep.withColumnRenamed("a", "b"), "b", "left_semi"
-    )
-    plan = plan_text(peeled)
+    plan = plan_text(REGISTRY["kcore_peel"].fn(spark, sf_dir))
+    tree = plan.split("\n\n")[0]
+    assert "Scan ExistingRDD" not in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-    assert "LeftSemi" in plan and "partial_count" in plan and "Window" not in plan
+    assert tree.count("Window (") == 2 * _KCORE_ROUNDS
+    above_last_window = tree[: tree.index("Window (")]
+    assert "HashAggregate" in above_last_window and "Exchange" not in above_last_window
 
 
 def test_embedding_lsh_verify_is_band_equijoin(spark, sf_dir):

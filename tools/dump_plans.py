@@ -138,9 +138,11 @@ COMMENTARY = {
         "plus a map-side CASE assign feeding a 4-group hash aggregate."
     ),
     "kcore_peel": (
-        "Each peel round is a degree partial-aggregate plus two LEFT SEMI "
-        "hash joins on a single integer key — no neighbor lists, O(1) row "
-        "state, lineage bounded by the fixed round count."
+        "The undirected edges are exploded from one edge scan; each peel "
+        "round is two window counts (over b, then a) and a filter — no "
+        "join, no checkpoint, O(1) row state, one single-integer-key "
+        "shuffle per window. The last window leaves the frame partitioned "
+        "by a, so the final per-node count adds no Exchange."
     ),
     "token_budget_mix": (
         "The per-source prefix sum is a DISTRIBUTED two-level cumsum: the "

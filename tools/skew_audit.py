@@ -339,7 +339,7 @@ def lsh_skew(spark, src, out, bounds):
 def graph_octave(spark, src, out, bounds):
     """``pagerank_fixed``, ``label_propagation_communities``,
     ``kcore_peel`` and ``graph_connected_components`` are node-keyed
-    join + partial aggregate per round, so one supplier with
+    joins, windows or partial aggregates per round, so one supplier with
     OCTAVE_HUB_DEG fresh parts must cost ~1x: unlike the wedge joins
     there is no pair materialization to blow up. (Rounds-track-diameter
     and the refusal past ``max_iter`` are pinned in tier-1.)"""
