@@ -16,7 +16,7 @@ from ..functions import tags
 from ..operators import kernels, multimodal
 from ..operators.spatial import grid_containment_join
 from .synth import SYNTH_BOXES_SQL, synth_boxes, synth_detections, synth_dets_sql
-from ..tables import load_table, read_parquet, repartition_for_compute
+from ..tables import load_table, repartition_for_compute
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -650,8 +650,8 @@ def imageprocess_tail(spark, sf_dir):
     remain rows-only. The grid-bucketed containment join is proven
     equivalent to the oracle's plain theta join for any cell size —
     the margin drives both the cell cover and the exact predicate."""
-    boxes = read_parquet(spark, _IP_BOXES_FIX)
-    segments = read_parquet(spark, _IP_SEGMENTS_FIX)
+    boxes = spark.read.parquet(_IP_BOXES_FIX)
+    segments = spark.read.parquet(_IP_SEGMENTS_FIX)
     return _ip_tail(boxes, segments)
 
 

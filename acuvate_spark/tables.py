@@ -15,11 +15,8 @@ All queries go through ``load_table`` so that:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from .operators.checkpoints import release
 from .session import tune
@@ -38,34 +35,6 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
-# Without a schema, ``spark.read.parquet`` runs a Spark job to read the
-# file's footer on every call. One (file identity, schema) entry per path
-# keeps the memo bounded; the identity is ``(st_ino, st_size,
-# st_mtime_ns)``, so a rewritten file is inferred again. ``tune()`` runs
-# before every read, so the confs that steer inference (``nanosAsLong``,
-# ``inferTimestampNTZ``) are the same for every entry. The file source
-# forces a given schema to nullable, as inference does, so both reads
-# yield the same schema. A lost update between threads costs one
-# inference. ``load_table`` does not read through it yet (ROADMAP
-# direction 5): the switch changes the version hash of every query.
-_FILE_SCHEMAS: dict[str, tuple[tuple[int, int, int], StructType]] = {}
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` of a local file on a tuned session,
-    inferring the schema only the first time this process sees the file
-    as it is."""
-    tune(spark)
-    st = os.stat(path)
-    ident = (st.st_ino, st.st_size, st.st_mtime_ns)
-    known = _FILE_SCHEMAS.get(path)
-    if known is not None and known[0] == ident:
-        return spark.read.schema(known[1]).parquet(path)
-    df = spark.read.parquet(path)
-    _FILE_SCHEMAS[path] = (ident, df.schema)
-    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

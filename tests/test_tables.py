@@ -1,44 +1,11 @@
-"""Work counters for ``tables.read_parquet``'s schema memo and for the
-job-free build of ``kcore_peel``."""
+"""Work counter for the job-free build of ``kcore_peel``."""
 
 from __future__ import annotations
-
-import pandas as pd
-import pytest
 
 from acuvate_spark import tables
 from acuvate_spark.queries import REGISTRY
 
 from .test_api import _work
-
-
-@pytest.fixture()
-def fresh_memo(monkeypatch):
-    monkeypatch.setattr(tables, "_FILE_SCHEMAS", {})
-
-
-def test_second_read_submits_no_job_and_keeps_the_schema(spark, sf_dir, fresh_memo):
-    """The remembered schema is the inferred one, ``events.ts`` (INT64
-    nanos, read as a long under ``nanosAsLong``) included."""
-    path = f"{sf_dir}/events.parquet"
-    first, jobs, _ = _work(spark, lambda: tables.read_parquet(spark, path))
-    assert jobs >= 1
-    second, jobs, _ = _work(spark, lambda: tables.read_parquet(spark, path))
-    assert jobs == 0
-    assert second.schema == first.schema
-    assert second.schema["ts"].dataType == first.schema["ts"].dataType
-    assert second.count() == first.count()
-
-
-def test_rewritten_file_is_inferred_again(spark, tmp_path, fresh_memo):
-    path = str(tmp_path / "t.parquet")
-    pd.DataFrame({"x": [1, 2]}).to_parquet(path, index=False)
-    assert tables.read_parquet(spark, path).columns == ["x"]
-    pd.DataFrame({"y": ["a"], "z": [0.5]}).to_parquet(path, index=False)
-    df, jobs, _ = _work(spark, lambda: tables.read_parquet(spark, path))
-    assert jobs >= 1
-    assert df.columns == ["y", "z"]
-    assert [tuple(r) for r in df.collect()] == [("a", 0.5)]
 
 
 def test_kcore_peel_build_submits_only_the_table_read(spark, sf_dir):
